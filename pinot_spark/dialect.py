@@ -1902,35 +1902,118 @@ def rewrite_functions(sql: str) -> str:
 
 
 # ---------------------------------------------------------------------------
+# table references and their schemas
+# ---------------------------------------------------------------------------
+
+# Words that may follow a table reference but never alias it: clause,
+# join and set-operator keywords.  LATERAL is left out so the MV-distinct
+# rewrite's ``FROM <table> LATERAL VIEW ...`` keeps its translated text
+# (tests/test_translate_golden.py).
+_SQL_KEYWORDS = frozenset({
+    "ON", "USING", "WHERE", "GROUP", "ORDER", "LIMIT", "OFFSET", "HAVING",
+    "QUALIFY", "WINDOW", "TABLESAMPLE", "NATURAL", "LEFT", "RIGHT", "INNER",
+    "OUTER", "CROSS", "FULL", "SEMI", "ANTI", "JOIN", "ASOF",
+    "MATCH_CONDITION", "UNION", "INTERSECT", "EXCEPT", "MINUS", "SET", "AS",
+    "SORT", "CLUSTER", "DISTRIBUTE", "PIVOT", "UNPIVOT",
+})
+# FROM|JOIN <table> [TABLESAMPLE (...)] [[AS] <alias>] — Spark's grammar
+# puts the sample clause before the alias
+_TABLE_REF_RE = re.compile(
+    r"\b(?P<kw>FROM|JOIN)\s+(?P<table>[A-Za-z_]\w*)"
+    r"(?:\s+TABLESAMPLE\s*\((?:[^()]|\([^()]*\))*\)"
+    r"(?:\s*REPEATABLE\s*\(\s*\d+\s*\))?)?"
+    r"(?:\s+(?:AS\s+)?(?!(?:" + "|".join(sorted(_SQL_KEYWORDS)) + r")\b)"
+    r"(?P<alias>[A-Za-z_]\w*))?",
+    re.IGNORECASE,
+)
+
+
+def _table_refs(sql: str) -> list[re.Match]:
+    """Every ``FROM|JOIN <table> [[AS] <alias>]`` reference outside
+    string literals, in order, as matches on ``sql`` itself (``alias``
+    is None for an unaliased reference)."""
+    refs, pos = [], 0
+    for is_lit, seg in _scan_strings(sql):
+        if not is_lit:
+            refs.extend(_TABLE_REF_RE.finditer(sql, pos, pos + len(seg)))
+        pos += len(seg)
+    return refs
+
+
+# Schemas resolved so far in the current statement: translate opens a
+# fresh memo per statement (dynamically scoped like _NO_DEFAULT_LIMIT, so
+# threads never share one); outside translate lookups are not cached.
+_SCHEMA_MEMO: contextvars.ContextVar[dict[str, T.StructType] | None] = contextvars.ContextVar(
+    "pinot_spark_schema_memo", default=None
+)
+
+
+def _table_schema(spark: SparkSession, table: str) -> T.StructType:
+    """Schema of the catalog table or view ``table``; empty when the
+    name does not resolve (a CTE or derived-table name, a keyword)."""
+    memo = _SCHEMA_MEMO.get()
+    if memo is not None and table in memo:
+        return memo[table]
+    try:
+        schema = spark.table(table).schema
+    except Exception:
+        schema = T.StructType([])
+    if memo is not None:
+        memo[table] = schema
+    return schema
+
+
+def _substitute_views(sql: str, view_of: Callable[[str], str | None]) -> str:
+    """Point every table reference (outside string literals) for which
+    ``view_of(table)`` names a view at that view; an unaliased reference
+    is aliased with the original name so qualified column references
+    (``t.col``) keep resolving."""
+    views: dict[str, str | None] = {}
+    out, last = [], 0
+    for ref in _table_refs(sql):
+        t = ref["table"]
+        if t not in views:
+            views[t] = view_of(t)
+        if views[t] is None:
+            continue
+        out += [sql[last : ref.start()], f"{ref['kw']} {views[t]}",
+                sql[ref.end("table") : ref.end()]]
+        if ref["alias"] is None:
+            out.append(f" AS {t}")
+        last = ref.end()
+    return "".join(out) + sql[last:]
+
+
+def _typed_columns(spark: SparkSession, sql: str, types: tuple) -> set[str]:
+    """Lowercased column names of the given Spark types across every
+    referenced table."""
+    cols: set[str] = set()
+    for t in {ref["table"] for ref in _table_refs(sql)}:
+        for f in _table_schema(spark, t).fields:
+            if isinstance(f.dataType, types):
+                cols.add(f.name.lower())
+    return cols
+
+
+# ---------------------------------------------------------------------------
 # MV (multi-value) predicate rewrite — §2.3 any/all-match semantics
 # ---------------------------------------------------------------------------
 
 
 def _mv_columns(spark: SparkSession, sql: str) -> dict[str, str]:
-    """Array-typed columns of every table referenced in FROM/JOIN:
-    lowercased name → element type DDL string (the rewrites cast numeric
-    literals to it — a bare 25.0 parses as DECIMAL(3,1), which Spark
-    refuses to compare against ARRAY<FLOAT> elements).
+    """Array-typed columns of every referenced table: lowercased name →
+    element type DDL string (the rewrites cast numeric literals to it —
+    a bare 25.0 parses as DECIMAL(3,1), which Spark refuses to compare
+    against ARRAY<FLOAT> elements).
 
     Keys carry BOTH forms: ``"col"`` (unqualified — last-scanned table
     wins on a cross-table name clash) and ``"tbl.col"`` / ``"alias.col"``
     so a qualified predicate resolves against its own table's element
     type even when two tables share a column name (ADVICE r7)."""
-    refs = re.findall(
-        r"\b(?:FROM|JOIN)\s+([A-Za-z_][A-Za-z0-9_]*)"
-        r"(?:\s+(?:AS\s+)?((?!ON\b|WHERE\b|GROUP\b|ORDER\b|LIMIT\b|LEFT\b|"
-        r"RIGHT\b|FULL\b|INNER\b|CROSS\b|JOIN\b|ASOF\b|HAVING\b|USING\b|"
-        r"SET\b|UNION\b|INTERSECT\b|EXCEPT\b)[A-Za-z_][A-Za-z0-9_]*))?",
-        sql,
-        re.IGNORECASE,
-    )
     cols: dict[str, str] = {}
-    for t, alias in refs:
-        try:
-            schema = spark.table(t).schema
-        except Exception:
-            continue
-        for f in schema.fields:
+    for ref in _table_refs(sql):
+        t, alias = ref["table"], ref["alias"]
+        for f in _table_schema(spark, t).fields:
             if isinstance(f.dataType, T.ArrayType):
                 el = f.dataType.elementType.simpleString()
                 cols[f.name.lower()] = el
@@ -2243,24 +2326,6 @@ def rewrite_unnest(sql: str) -> str:
             sql = sql[: m.start()] + repl + rest
 
 
-def _typed_columns(spark: SparkSession, sql: str, types: tuple) -> set[str]:
-    """Lowercased column names of the given Spark types across every
-    table referenced in FROM/JOIN."""
-    tables = set(
-        re.findall(r"\b(?:FROM|JOIN)\s+([A-Za-z_][A-Za-z0-9_]*)", sql, re.IGNORECASE)
-    )
-    cols: set[str] = set()
-    for t in tables:
-        try:
-            schema = spark.table(t).schema
-        except Exception:
-            continue
-        for f in schema.fields:
-            if isinstance(f.dataType, types):
-                cols.add(f.name.lower())
-    return cols
-
-
 _MAP_ACCESS_RE = re.compile(
     r"\b((?:[A-Za-z_]\w*\s*\.\s*)?)([A-Za-z_]\w*)\s*\[\s*('(?:[^']|'')*'|\d+)\s*\]"
 )
@@ -2288,33 +2353,19 @@ def rewrite_map_default_access(spark: SparkSession, sql: str) -> str:
     a QUALIFIED subscript resolves against that specific table's schema
     (r14 ADVICE: a same-named array column of another joined table must
     not inherit the map column's wrap)."""
-    kw = {
-        "where", "on", "group", "order", "having", "limit", "join",
-        "inner", "left", "right", "full", "cross", "using", "as",
-        "union", "except", "intersect", "natural", "semi", "anti",
-        "offset", "tablesample", "window", "lateral", "qualify",
-    }
     value_types: dict[str, str] = {}  # name-only fallback (single-table)
     by_qual: dict[str, dict[str, str]] = {}  # table/alias -> wrappable cols
-    for fm in re.finditer(
-        r"\b(?:FROM|JOIN)\s+([A-Za-z_]\w*)(?:\s+(?:AS\s+)?([A-Za-z_]\w*))?",
-        sql,
-        re.IGNORECASE,
-    ):
-        t, alias = fm.group(1), fm.group(2)
-        try:
-            schema = spark.table(t).schema
-        except Exception:
-            continue
+    for ref in _table_refs(sql):
+        t, alias = ref["table"], ref["alias"]
         per: dict[str, str] = {}
-        for f in schema.fields:
+        for f in _table_schema(spark, t).fields:
             if isinstance(f.dataType, T.MapType):
                 d = _MAP_DIM_DEFAULT_SQL.get(type(f.dataType.valueType))
                 if d is not None:
                     per[f.name.lower()] = d
                     value_types[f.name.lower()] = d
         by_qual[t.lower()] = per
-        if alias and alias.lower() not in kw:
+        if alias:
             by_qual[alias.lower()] = per
     if not value_types:
         return sql
@@ -3218,14 +3269,6 @@ def _null_default_literal(dt: T.DataType) -> str | None:
 # Calcite-style hint block right after SELECT: /*+ hintA(k=v, ...), ... */
 _HINT_BLOCK_RE = re.compile(r"/\*\+\s*(.*?)\s*\*/", re.DOTALL)
 _HINT_CALL_RE = re.compile(r"([A-Za-z_]\w*)\s*(?:\(([^()]*)\))?")
-_JOIN_TARGET_RE = re.compile(
-    r"\bJOIN\s+([A-Za-z_]\w*)(?:\s+(?:AS\s+)?([A-Za-z_]\w*))?", re.IGNORECASE
-)
-_SQL_KEYWORDS = {
-    "ON", "USING", "WHERE", "GROUP", "ORDER", "LIMIT", "HAVING",
-    "LEFT", "RIGHT", "INNER", "OUTER", "CROSS", "FULL", "JOIN",
-    "ASOF", "MATCH_CONDITION", "UNION", "INTERSECT", "EXCEPT",
-}
 
 
 def _parse_hint_kv(body: str) -> dict[str, str]:
@@ -3286,16 +3329,12 @@ def rewrite_pinot_hints(sql: str) -> str:
         kv = _parse_hint_kv(cm.group(2) or "")
         if name == "joinoptions":
             strategy = kv.get("join_strategy", "").lower()
-            jt = _JOIN_TARGET_RE.search(sql)  # hint may sit after the JOIN
+            # the hint may sit after the JOIN
+            jt = next((r for r in _table_refs(sql) if r["kw"].upper() == "JOIN"), None)
             if jt is None:
                 warnings.warn("joinOptions hint on a query with no JOIN; dropped")
             else:
-                alias = jt.group(2)
-                target = (
-                    alias
-                    if alias and alias.upper() not in _SQL_KEYWORDS
-                    else jt.group(1)
-                )
+                target = jt["alias"] or jt["table"]
                 if strategy in ("hash", "hash_table"):
                     spark_hints.append(f"SHUFFLE_HASH({target})")
                 elif strategy in ("lookup", "broadcast", "dynamic_broadcast"):
@@ -6629,71 +6668,10 @@ def _ensure_theta_sql_udfs(spark: SparkSession) -> None:
                 pairs.extend(int(x) for x in ps if x is not None)
         return cs_hllpp_from_pairs(pairs, pp, spp).serialize()
 
-    spark.udf.register("__theta_partial", __theta_partial)
-    spark.udf.register("__tuple_partial", __tuple_partial)
-    spark.udf.register("__tdigest_partial", __tdigest_partial)
-    spark.udf.register("__freq_long_partial", __freq_long_partial)
-    spark.udf.register("__freq_str_partial", __freq_str_partial)
-    spark.udf.register("__freq_long_merge", __freq_long_merge)
-    spark.udf.register("__freq_str_merge", __freq_str_merge)
-    spark.udf.register("__freq_long_estimate", __freq_long_estimate)
-    spark.udf.register("__freq_str_estimate", __freq_str_estimate)
-    spark.udf.register("__hll_mv_partial", __hll_mv_partial)
-    spark.udf.register("__theta_merge_blobs", __theta_merge_blobs)
-    spark.udf.register("__theta_union_blobs", __theta_union_blobs)
-    spark.udf.register("__theta_filtered", __theta_filtered)
-    spark.udf.register("__hll_merge_blobs", __hll_merge_blobs)
-    spark.udf.register("__cs_hll_pair", __cs_hll_pair)
-    spark.udf.register("__cs_hll_pairs_arr", __cs_hll_pairs_arr)
-    spark.udf.register("__cs_hllpp_pair", __cs_hllpp_pair)
-    spark.udf.register("__cs_hllpp_pair_long", __cs_hllpp_pair_long)
-    spark.udf.register("__cs_hllpp_pairs_arr", __cs_hllpp_pairs_arr)
-    spark.udf.register("__cs_hll_from_regs", __cs_hll_from_regs)
-    spark.udf.register("__cs_hllpp_from_regs", __cs_hllpp_from_regs)
-    spark.udf.register("__cs_hll_merge_blobs", __cs_hll_merge_blobs)
-    spark.udf.register("__cs_hll_mv_partial", __cs_hll_mv_partial)
-    spark.udf.register("__cs_hllpp_mv_partial", __cs_hllpp_mv_partial)
-    spark.udf.register("__cpc_coupon", __cpc_coupon)
-    spark.udf.register("__cpc_coupon_long", __cpc_coupon_long)
-    spark.udf.register("__cpc_from_coupons", __cpc_from_coupons)
-    spark.udf.register("__ds_cpc_single", __ds_cpc_single)
-    spark.udf.register("__ds_cpc_single_long", __ds_cpc_single_long)
-    spark.udf.register("__cpc_union", __cpc_union)
-    spark.udf.register("__tdigest_from_values", __tdigest_from_values)
-    spark.udf.register("__tdigest_from_quantiles", __tdigest_from_quantiles)
-    spark.udf.register("__tdigest_merge", __tdigest_merge)
-    spark.udf.register("__tdigest_quantile", __tdigest_quantile)
-    spark.udf.register("__json_all_keys", __json_all_keys)
-    spark.udf.register("__hll_from_hashes", __hll_from_hashes)
-    spark.udf.register("__hll_from_regs", __hll_from_regs)
-    spark.udf.register("__ull_from_regs", __ull_from_regs)
-    spark.udf.register("__ull_singleton", __ull_singleton)
-    spark.udf.register("__ull_estimate", __ull_estimate)
-    spark.udf.register("__hll_singleton", __hll_singleton)
-    spark.udf.register("__hll_estimate", __hll_estimate)
-    spark.udf.register("__cpc_estimate", __cpc_estimate)
-    spark.udf.register("__cs_hll_single", __cs_hll_single)
-    spark.udf.register("__cs_hllpp_single", __cs_hllpp_single)
-    spark.udf.register("__hll_union", __hll_union)
-    spark.udf.register("__ds_kll_single", __ds_kll_single)
-    spark.udf.register("__ds_kll_merge", __ds_kll_merge)
-    spark.udf.register("__ds_kll_quantile", __ds_kll_quantile)
-    spark.udf.register("__theta_from_hashes", __theta_from_hashes)
-    spark.udf.register("__theta_diff", __theta_diff)
-    spark.udf.register("__theta_union", __theta_union)
-    spark.udf.register("__theta_intersect", __theta_intersect)
-    spark.udf.register("__theta_estimate", __theta_estimate)
-    spark.udf.register("__theta_singleton", __theta_singleton)
-    spark.udf.register("__theta_to_string", __theta_to_string)
-    spark.udf.register("__ds_theta_single", __ds_theta_single)
-    spark.udf.register("__ds_tuple_single", __ds_tuple_single)
-    spark.udf.register("__tuple_singleton", __tuple_singleton)
-    spark.udf.register("__tuple_merge_sum", __tuple_merge_sum)
-    spark.udf.register("__tuple_estimate", __tuple_estimate)
-    spark.udf.register("__tuple_sum_values", __tuple_sum_values)
-    spark.udf.register("__tuple_avg_value", __tuple_avg_value)
-    spark.udf.register("__tuple_union", __tuple_union)
-    spark.udf.register("__tuple_intersect", __tuple_intersect)
+    # every ``__``-prefixed local above is a UDF, registered under its own name
+    for name, udf in list(locals().items()):
+        if name.startswith("__"):
+            spark.udf.register(name, udf)
     _THETA_UDF_SESSIONS.add(spark)
 
 
@@ -6770,32 +6748,36 @@ class PinotEngine:
                 + out[close_idx + 1 :]
             )
 
-    def _ensure_nulldef_view(self, table: str) -> str:
+    def _ensure_nulldef_view(self, table: str) -> str | None:
         """Default-value-mode scan wrapper: a temp view over ``table``
         with every nullable scalar column coalesced to its
         defaultNullValue (cast back to the column type, so schemas are
-        identical). Returns the original name when nothing is nullable
-        or no scalar default exists."""
-        from pyspark.sql import functions as F
+        identical), built as one SQL projection over the statement's
+        schema. Returns None for a table outside ``null_default_tables``
+        or one with nothing nullable to default."""
+        allowed = self.null_default_tables
+        if allowed is None:
+            from pinot_spark.catalog import TABLE_NAMES
 
-        df = self.spark.table(table)
+            allowed = TABLE_NAMES
+        if table not in allowed or table.startswith("__"):
+            return None
         cols, changed = [], False
-        for f_ in df.schema.fields:
+        for f_ in _table_schema(self.spark, table).fields:
+            name = "`" + f_.name.replace("`", "``") + "`"
             lit = _null_default_literal(f_.dataType) if f_.nullable else None
-            if lit is not None:
+            if lit is None:
+                cols.append(name)
+            else:
                 cols.append(
-                    F.expr(
-                        f"coalesce(`{f_.name}`, CAST({lit} AS "
-                        f"{f_.dataType.simpleString()}))"
-                    ).alias(f_.name)
+                    f"coalesce({name}, CAST({lit} AS "
+                    f"{f_.dataType.simpleString()})) AS {name}"
                 )
                 changed = True
-            else:
-                cols.append(F.col(f_.name))
         if not changed:
-            return table
+            return None
         view = f"__nulldef_{table}"
-        df.select(*cols).createOrReplaceTempView(view)
+        self.spark.sql(f"SELECT {', '.join(cols)} FROM `{table}`").createOrReplaceTempView(view)
         return view
 
     def register_upsert_table(
@@ -6818,68 +6800,6 @@ class PinotEngine:
         ).createOrReplaceTempView(view)
         self.upsert_tables[name] = view
 
-    def _apply_upsert_views(self, sql: str) -> str:
-        """Rewrite ``FROM/JOIN <upsert table>`` references (outside
-        string literals) to the registered latest-per-key views, alias
-        preserved like _apply_default_null_views."""
-        from_join = re.compile(r"\b(FROM|JOIN)\s+([A-Za-z_]\w*)", re.IGNORECASE)
-
-        def rewrite_segment(seg: str) -> str:
-            def repl(m: re.Match) -> str:
-                t = m.group(2)
-                view = self.upsert_tables.get(t)
-                if view is None:
-                    return m.group(0)
-                nxt = re.match(r"\s+(?:AS\s+)?([A-Za-z_]\w*)", seg[m.end() :])
-                has_alias = nxt is not None and nxt.group(1).upper() not in _SQL_KEYWORDS
-                suffix = "" if has_alias else f" AS {t}"
-                return f"{m.group(1)} {view}{suffix}"
-
-            return from_join.sub(repl, seg)
-
-        return "".join(
-            seg if is_lit else rewrite_segment(seg)
-            for is_lit, seg in _scan_strings(sql)
-        )
-
-    def _apply_default_null_views(self, sql: str) -> str:
-        """Rewrite ``FROM t`` / ``JOIN t`` references (outside string
-        literals) to the null-defaulted views. An ``AS <original>`` alias
-        is added when the reference has no alias, so qualified column
-        references (``t.col``) keep resolving."""
-        from_join = re.compile(r"\b(FROM|JOIN)\s+([A-Za-z_]\w*)", re.IGNORECASE)
-
-        allowed = self.null_default_tables
-        if allowed is None:
-            from pinot_spark.catalog import TABLE_NAMES
-
-            allowed = frozenset(TABLE_NAMES)
-
-        def rewrite_segment(seg: str) -> str:
-            def repl(m: re.Match) -> str:
-                t = m.group(2)
-                if t not in allowed or t.startswith("__"):
-                    return m.group(0)
-                try:
-                    if not self.spark.catalog.tableExists(t):
-                        return m.group(0)
-                except Exception:
-                    return m.group(0)
-                view = self._ensure_nulldef_view(t)
-                if view == t:
-                    return m.group(0)
-                nxt = re.match(r"\s+(?:AS\s+)?([A-Za-z_]\w*)", seg[m.end() :])
-                has_alias = nxt is not None and nxt.group(1).upper() not in _SQL_KEYWORDS
-                suffix = "" if has_alias else f" AS {t}"
-                return f"{m.group(1)} {view}{suffix}"
-
-            return from_join.sub(repl, seg)
-
-        return "".join(
-            seg if is_lit else rewrite_segment(seg)
-            for is_lit, seg in _scan_strings(sql)
-        )
-
     def _syntax_ok(self, sql: str) -> bool:
         """Does the text PARSE as a Spark SQL statement? (Catalyst's own
         parser, syntax only — no analysis/resolution, no execution.)"""
@@ -6892,98 +6812,104 @@ class PinotEngine:
     def translate(
         self, pinot_sql: str, *, _inject_default_limit: bool = True
     ) -> tuple[str, dict[str, str]]:
-        options, sql = split_options(pinot_sql)
-        consume_options(options)
-        sql = rewrite_pinot_hints(sql)
-        sql = rewrite_unicode_literals(sql)
-        sql = rewrite_quoted_identifiers(sql)
-        if "[" in sql:
-            sql = rewrite_map_default_access(self.spark, sql)
-        if _DISTINCT_WINDOW_RE.search(sql) and re.search(
-            r"\bOVER\s*\(", sql, re.IGNORECASE
-        ):
-            sql = rewrite_distinct_window_aggs(sql)
-        if _FUNNEL_WINDOW_RE.search(sql):
-            sql = rewrite_funnel_window(self.spark, sql)
-        if _FUNNEL_COUNT_RE.search(sql):
-            sql = rewrite_funnel_count(self.spark, sql)
-        if _VECTOR_SIM_RE.search(sql):
-            sql = rewrite_vector_similarity(sql, options)
-        if _SKETCH_AGG_FILTER_RE.search(sql) and re.search(
-            r"\bFILTER\s*\(", sql, re.IGNORECASE
-        ):
-            sql = rewrite_sketch_agg_filters(sql)
-        if _THETA_BLOB_CALL_RE.search(sql):
-            _ensure_theta_sql_udfs(self.spark)
-            sql = rewrite_theta_blob_calls(self.spark, sql)
-        if _THETA_VALUE_CALL_RE.search(sql):
-            _ensure_theta_sql_udfs(self.spark)
-            sql = rewrite_theta_value_calls(sql)
-        if _THETA_SQL_RE.search(sql):
-            _ensure_theta_sql_udfs(self.spark)
-            # Safety net for the regex-based restructuring (VERDICT r7:
-            # parsing SQL with a regex is inherently fragile): a
-            # restructured statement that no longer PARSES degrades to
-            # the original form's per-value fallback instead of erroring
-            # — any future canonical-shape extension that corrupts a
-            # rewrite fails safe. Syntax-only check, no execution.
-            for rewrite in (rewrite_raw_sketch_setop,
-                            rewrite_raw_sketch_two_phase,
-                            rewrite_raw_sketch_inexpr_udaf):
-                cand = rewrite(sql)
-                if cand != sql and not self._syntax_ok(cand):
-                    continue
-                sql = cand
-        if _search_outside_literals(_ST_UNION_CALL_RE, sql):
-            # bounded two-phase fold (same safety net as the raw-sketch
-            # restructures: a candidate that no longer parses degrades
-            # to the expression-level collect_list fallback)
-            _ensure_geo_sql_udfs(self.spark)
-            cand = rewrite_st_union_two_phase(sql)
-            if cand != sql and self._syntax_ok(cand):
-                sql = cand
-        if re.search(r"\bGROOVY\s*\(", sql, re.IGNORECASE):
-            sql = self._register_groovy_calls(sql)
-        while has_asof_join(sql):
-            rewritten = rewrite_asof_join(self.spark, sql)
-            if rewritten == sql:
-                raise PinotSqlError(
-                    "ASOF JOIN clause not in rewritable form "
-                    "(both sides must be named tables/views)"
+        # one schema memo per statement: every schema-aware pass
+        # resolves each referenced table once
+        memo_token = _SCHEMA_MEMO.set({})
+        try:
+            options, sql = split_options(pinot_sql)
+            consume_options(options)
+            sql = rewrite_pinot_hints(sql)
+            sql = rewrite_unicode_literals(sql)
+            sql = rewrite_quoted_identifiers(sql)
+            if "[" in sql:
+                sql = rewrite_map_default_access(self.spark, sql)
+            if _DISTINCT_WINDOW_RE.search(sql) and re.search(
+                r"\bOVER\s*\(", sql, re.IGNORECASE
+            ):
+                sql = rewrite_distinct_window_aggs(sql)
+            if _FUNNEL_WINDOW_RE.search(sql):
+                sql = rewrite_funnel_window(self.spark, sql)
+            if _FUNNEL_COUNT_RE.search(sql):
+                sql = rewrite_funnel_count(self.spark, sql)
+            if _VECTOR_SIM_RE.search(sql):
+                sql = rewrite_vector_similarity(sql, options)
+            if _SKETCH_AGG_FILTER_RE.search(sql) and re.search(
+                r"\bFILTER\s*\(", sql, re.IGNORECASE
+            ):
+                sql = rewrite_sketch_agg_filters(sql)
+            if _THETA_BLOB_CALL_RE.search(sql):
+                _ensure_theta_sql_udfs(self.spark)
+                sql = rewrite_theta_blob_calls(self.spark, sql)
+            if _THETA_VALUE_CALL_RE.search(sql):
+                _ensure_theta_sql_udfs(self.spark)
+                sql = rewrite_theta_value_calls(sql)
+            if _THETA_SQL_RE.search(sql):
+                _ensure_theta_sql_udfs(self.spark)
+                # Safety net for the regex-based restructuring (VERDICT r7:
+                # parsing SQL with a regex is inherently fragile): a
+                # restructured statement that no longer PARSES degrades to
+                # the original form's per-value fallback instead of erroring
+                # — any future canonical-shape extension that corrupts a
+                # rewrite fails safe. Syntax-only check, no execution.
+                for rewrite in (rewrite_raw_sketch_setop,
+                                rewrite_raw_sketch_two_phase,
+                                rewrite_raw_sketch_inexpr_udaf):
+                    cand = rewrite(sql)
+                    if cand != sql and not self._syntax_ok(cand):
+                        continue
+                    sql = cand
+            if _search_outside_literals(_ST_UNION_CALL_RE, sql):
+                # bounded two-phase fold (same safety net as the raw-sketch
+                # restructures: a candidate that no longer parses degrades
+                # to the expression-level collect_list fallback)
+                _ensure_geo_sql_udfs(self.spark)
+                cand = rewrite_st_union_two_phase(sql)
+                if cand != sql and self._syntax_ok(cand):
+                    sql = cand
+            if re.search(r"\bGROOVY\s*\(", sql, re.IGNORECASE):
+                sql = self._register_groovy_calls(sql)
+            while has_asof_join(sql):
+                rewritten = rewrite_asof_join(self.spark, sql)
+                if rewritten == sql:
+                    raise PinotSqlError(
+                        "ASOF JOIN clause not in rewritable form "
+                        "(both sides must be named tables/views)"
+                    )
+                sql = rewritten
+            sql = rewrite_array_constructor(sql)
+            if re.search(r"\)\s*(?:=|!=|<>|<=|>=|<|>)\s*(?:ROW\s*)?\(", sql, re.IGNORECASE):
+                sql = rewrite_row_comparisons(sql)
+            if re.search(r"\bUNNEST\s*\(", sql, re.IGNORECASE):
+                sql = rewrite_unnest(sql)
+            sql = rewrite_mv_distinct_aggs(sql)  # before fn rewrite (raw names)
+            sql = rewrite_functions(sql)  # literal-span-aware
+            if "collect_list" in sql:
+                sql = rewrite_mv_collect_aggs(self.spark, sql)
+            if re.search(r"\bAS\s+UUID\b", sql, re.IGNORECASE):
+                sql = rewrite_uuid_casts(sql)
+            sql = rewrite_cast_types(sql)
+            if "CAST" in sql.upper():
+                sql = rewrite_mv_scalar_casts(self.spark, sql)
+            sql = rewrite_timestamp_coercion(self.spark, sql)
+            sql = rewrite_mv_predicates(self.spark, sql)
+            # default-value null mode LAST: table-name substitution must not
+            # disturb the shape-sensitive rewrites above (MV-distinct scale,
+            # ASOF) which match plain `FROM <table>` forms
+            if not null_handling_enabled(options, self.null_handling_default):
+                sql = _substitute_views(sql, self._ensure_nulldef_view)
+            if self.upsert_tables and not any(
+                k.lower() == "skipupsert" and v.strip().lower() in _TRUE_VALUES
+                for k, v in options.items()
+            ):
+                sql = _substitute_views(sql, self.upsert_tables.get)
+            sql = self._hoist_heavy_agg_args(sql)
+            if _inject_default_limit and not _NO_DEFAULT_LIMIT.get():
+                sql = apply_default_limit(
+                    sql, int(options.get("limit", self.default_limit))
                 )
-            sql = rewritten
-        sql = rewrite_array_constructor(sql)
-        if re.search(r"\)\s*(?:=|!=|<>|<=|>=|<|>)\s*(?:ROW\s*)?\(", sql, re.IGNORECASE):
-            sql = rewrite_row_comparisons(sql)
-        if re.search(r"\bUNNEST\s*\(", sql, re.IGNORECASE):
-            sql = rewrite_unnest(sql)
-        sql = rewrite_mv_distinct_aggs(sql)  # before fn rewrite (raw names)
-        sql = rewrite_functions(sql)  # literal-span-aware
-        if "collect_list" in sql:
-            sql = rewrite_mv_collect_aggs(self.spark, sql)
-        if re.search(r"\bAS\s+UUID\b", sql, re.IGNORECASE):
-            sql = rewrite_uuid_casts(sql)
-        sql = rewrite_cast_types(sql)
-        if "CAST" in sql.upper():
-            sql = rewrite_mv_scalar_casts(self.spark, sql)
-        sql = rewrite_timestamp_coercion(self.spark, sql)
-        sql = rewrite_mv_predicates(self.spark, sql)
-        # default-value null mode LAST: table-name substitution must not
-        # disturb the shape-sensitive rewrites above (MV-distinct scale,
-        # ASOF) which match plain `FROM <table>` forms
-        if not null_handling_enabled(options, self.null_handling_default):
-            sql = self._apply_default_null_views(sql)
-        if self.upsert_tables and not any(
-            k.lower() == "skipupsert" and v.strip().lower() in _TRUE_VALUES
-            for k, v in options.items()
-        ):
-            sql = self._apply_upsert_views(sql)
-        sql = self._hoist_heavy_agg_args(sql)
-        if _inject_default_limit and not _NO_DEFAULT_LIMIT.get():
-            sql = apply_default_limit(
-                sql, int(options.get("limit", self.default_limit))
-            )
-        return sql, options
+            return sql, options
+        finally:
+            _SCHEMA_MEMO.reset(memo_token)
 
     # expressions longer than this inside collect_set/collect_list are
     # hoisted into a derived projection: TypedImperativeAggregate
@@ -7812,7 +7738,7 @@ class PinotEngine:
                 mini = rewrite_timestamp_coercion(self.spark, mini)
                 mini = rewrite_mv_predicates(self.spark, mini)
                 if not null_handling_enabled(options, self.null_handling_default):
-                    mini = self._apply_default_null_views(mini)
+                    mini = _substitute_views(mini, self._ensure_nulldef_view)
                 src = self.spark.sql(mini)
                 ok_key_types = ("string", "int", "smallint", "tinyint",
                                 "boolean", "date", "float", "double")

@@ -427,3 +427,123 @@ def test_exact_distinct_window_aggregates(engine, spark):
         "ORDER BY k LIMIT 10"
     ).collect()
     assert [(r.k, r.d) for r in grouped] == [(1, 2), (2, 1)]
+
+
+@pytest.mark.parametrize(
+    "stmt",
+    [
+        "SELECT nation.n_name, region.r_name FROM nation NATURAL JOIN region "
+        "ORDER BY 1, 2 LIMIT 3",
+        "SELECT nation.n_name, row_number() OVER w AS rn FROM nation "
+        "WINDOW w AS (ORDER BY n_name) ORDER BY rn LIMIT 3",
+        "SELECT region.r_name FROM region TABLESAMPLE (100 PERCENT) "
+        "ORDER BY 1 LIMIT 3",
+    ],
+    ids=["natural", "window", "tablesample"],
+)
+def test_null_default_views_keep_qualifier_before_keyword(engine, stmt):
+    """Default null mode swaps a base table for its null-defaulted view
+    and re-aliases it with the table's own name.  A keyword right after
+    the table (NATURAL, WINDOW, TABLESAMPLE) is not an alias, so the
+    qualifier ``table.col`` must still resolve and give the same rows as
+    the null-handling mode, which reads the table itself."""
+    default_rows = engine.sql(stmt).collect()
+    null_rows = engine.sql(f"SET enableNullHandling=true; {stmt}").collect()
+    assert default_rows == null_rows
+    assert len(default_rows) == 3
+
+
+def test_map_default_access_on_unaliased_join_side(engine, spark):
+    """In ``FROM a JOIN b`` the JOIN keyword is not ``a``'s alias, so the
+    scan goes on to ``b`` and its map column gets the materialized
+    default for a missing key."""
+    spark.createDataFrame([(1,)], "id int").createOrReplaceTempView("mapj_a")
+    spark.createDataFrame(
+        [(1, {"k": 5})], "id int, m map<string,int>"
+    ).createOrReplaceTempView("mapj_b")
+    rows = engine.sql(
+        "SELECT m['missing'] AS v FROM mapj_a JOIN mapj_b ON mapj_a.id = mapj_b.id"
+    ).collect()
+    assert [r.v for r in rows] == [-2147483648]
+
+
+def test_schema_memo_does_not_outlive_the_statement(engine, spark):
+    """Schemas are memoized per translated statement only: a view that
+    gains an array column between two statements is seen as MV by the
+    second, so its predicate becomes an element match."""
+    spark.createDataFrame([(1, 5), (2, 6)], "id int, tags int").createOrReplaceTempView(
+        "memo_scope_t"
+    )
+    stmt = "SELECT id FROM memo_scope_t WHERE tags = 5 ORDER BY id"
+    first, _ = engine.translate(stmt)
+    assert "array_contains" not in first
+    assert [r.id for r in engine.sql(stmt).collect()] == [1]
+    spark.createDataFrame(
+        [(1, [5, 7]), (2, [6])], "id int, tags array<int>"
+    ).createOrReplaceTempView("memo_scope_t")
+    second, _ = engine.translate(stmt)
+    assert "array_contains" in second
+    assert [r.id for r in engine.sql(stmt).collect()] == [1]
+
+
+def test_concurrent_translate_matches_serial(engine):
+    """Threads translating different statements on one engine each get
+    their own schema memo: the outputs equal a serial run."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    stmts = [
+        "SELECT COUNT(*) FROM events WHERE ts > 1700000000000",
+        "SELECT o_orderkey FROM orders WHERE o_orderdate < 1700000000000",
+        "SELECT vec_id FROM embeddings WHERE embedding = 0.5",
+        "SELECT CAST(embedding AS DOUBLE) FROM embeddings e JOIN nation n "
+        "ON e.vec_id = n.n_nationkey",
+        "SELECT n.n_name, r.r_name FROM nation n JOIN region r "
+        "ON n.n_regionkey = r.r_regionkey",
+        "SELECT CAST(ts AS BIGINT) AS ms FROM events",
+    ] * 4
+    serial = [engine.translate(s) for s in stmts]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futures = [pool.submit(engine.translate, s) for s in stmts]
+            parallel = [f.result(timeout=300) for f in futures]
+    finally:
+        sys.setswitchinterval(switch)
+    assert parallel == serial
+
+
+# every UDF the sketch SQL rewrites call, listed here so the loop over
+# _ensure_theta_sql_udfs's ``__``-prefixed locals cannot drop one unnoticed
+_THETA_SQL_UDF_NAMES = [
+    "__cpc_coupon", "__cpc_coupon_long", "__cpc_estimate", "__cpc_from_coupons",
+    "__cpc_union", "__cs_hll_from_regs", "__cs_hll_merge_blobs",
+    "__cs_hll_mv_partial", "__cs_hll_pair", "__cs_hll_pairs_arr",
+    "__cs_hll_single", "__cs_hllpp_from_regs", "__cs_hllpp_mv_partial",
+    "__cs_hllpp_pair", "__cs_hllpp_pair_long", "__cs_hllpp_pairs_arr",
+    "__cs_hllpp_single", "__ds_cpc_single", "__ds_cpc_single_long",
+    "__ds_kll_merge", "__ds_kll_quantile", "__ds_kll_single",
+    "__ds_theta_single", "__ds_tuple_single", "__freq_long_estimate",
+    "__freq_long_merge", "__freq_long_partial", "__freq_str_estimate",
+    "__freq_str_merge", "__freq_str_partial", "__hll_estimate",
+    "__hll_from_hashes", "__hll_from_regs", "__hll_merge_blobs",
+    "__hll_mv_partial", "__hll_singleton", "__hll_union", "__json_all_keys",
+    "__tdigest_from_quantiles", "__tdigest_from_values", "__tdigest_merge",
+    "__tdigest_partial", "__tdigest_quantile", "__theta_diff",
+    "__theta_estimate", "__theta_filtered", "__theta_from_hashes",
+    "__theta_intersect", "__theta_merge_blobs", "__theta_partial",
+    "__theta_singleton", "__theta_to_string", "__theta_union",
+    "__theta_union_blobs", "__tuple_avg_value", "__tuple_estimate",
+    "__tuple_intersect", "__tuple_merge_sum", "__tuple_partial",
+    "__tuple_singleton", "__tuple_sum_values", "__tuple_union",
+    "__ull_estimate", "__ull_from_regs", "__ull_singleton",
+]
+
+
+def test_theta_sql_udfs_all_registered(spark):
+    from pinot_spark.dialect import _ensure_theta_sql_udfs
+
+    _ensure_theta_sql_udfs(spark)
+    missing = [n for n in _THETA_SQL_UDF_NAMES if not spark.catalog.functionExists(n)]
+    assert not missing
