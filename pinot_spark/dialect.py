@@ -42,7 +42,6 @@ from __future__ import annotations
 
 import contextvars
 import math
-import os
 import re
 import weakref
 from collections.abc import Callable
@@ -567,7 +566,7 @@ def _percentile_mv_family() -> Callable[[list[str]], str]:
 def _hll_pair_expr(col: str, log2m: int) -> str:
     """Encode one value's HyperLogLog contribution as a single BIGINT
     ``register_index * 64 + rho`` — computed entirely JVM-side so the
-    raw-HLL SQL names can aggregate with a BOUNDED-domain collect_set
+    raw-ULL SQL names can aggregate with a BOUNDED-domain collect_set
     instead of collecting every value's hash (the 100 TB scale fix).
 
     Bit-for-bit identical to operators/hll.py HllSketch.from_hashes:
@@ -592,12 +591,6 @@ def _hll_pair_expr(col: str, log2m: int) -> str:
         f"ELSE {idx} * 64 + {rho} END"
     )
 
-
-# RAW-HLL wire format: 'clearspring' (default — the serialization the
-# reference actually ships, stream-lib bytes via ObjectSerDeUtils.
-# HYPER_LOG_LOG_SER_DE) or 'engine' (the pre-round-11 engine-own
-# xxhash64 register blob; GETHLLESTIMATE/HLL_UNION still read both).
-_HLL_WIRE = os.environ.get("PINOT_SPARK_HLL_WIRE", "clearspring").lower()
 
 # See PinotEngine's suppression-window comment: dynamically scoped so the
 # internal re-entrant sql() calls of the raw-window routes see it while
@@ -719,8 +712,6 @@ def _raw_hll_sql(a: list[str], default_log2m: int) -> str:
         if len(a) > 1 and a[1].strip().isdigit()
         else default_log2m
     )
-    if _HLL_WIRE == "engine":
-        return f"__hll_from_regs(collect_set({_hll_pair_expr(a[0], log2m)}), {log2m})"
     return (
         f"__cs_hll_from_regs(collect_set({_cs_hll_pair_sql(a[0], log2m)}), "
         f"{log2m})"
@@ -734,8 +725,6 @@ def _raw_hllpp_sql(a: list[str]) -> str:
     NORMAL state (valid + union-compatible; the library's small-n
     SPARSE regime is a documented boundary)."""
     p, sp = _hllpp_params(a)
-    if _HLL_WIRE == "engine":
-        return _raw_hll_sql(a[:1], 8)
     return (
         f"__cs_hllpp_from_regs(collect_set({_cs_hllpp_pair_sql(a[0], p)}), "
         f"{p}, {sp})"
@@ -752,13 +741,6 @@ def _raw_hll_mv_sql(a: list[str], default_log2m: int) -> str:
         if len(a) > 1 and a[1].strip().isdigit()
         else default_log2m
     )
-    if _HLL_WIRE == "engine":
-        pair = _hll_pair_expr("x", log2m)
-        return (
-            f"__hll_from_regs(array_distinct(flatten(collect_list("
-            f"array_distinct(transform(filter({a[0]}, x -> x IS NOT NULL), "
-            f"x -> {pair}))))), {log2m})"
-        )
     return (
         f"__cs_hll_from_regs(array_distinct(flatten(collect_list("
         f"{_cs_hll_pairs_arr_sql(a[0], log2m)}))), {log2m})"
@@ -767,8 +749,6 @@ def _raw_hll_mv_sql(a: list[str], default_log2m: int) -> str:
 
 def _raw_hllpp_mv_sql(a: list[str]) -> str:
     p, sp = _hllpp_params(a)
-    if _HLL_WIRE == "engine":
-        return _raw_hll_mv_sql(a[:1], 8)
     return (
         f"__cs_hllpp_from_regs(array_distinct(flatten(collect_list("
         f"__cs_hllpp_pairs_arr({a[0]}, typeof({a[0]}), {p})))), {p}, {sp})"
@@ -1126,15 +1106,13 @@ FUNCTION_MAP: dict[str, str | Callable[[list[str]], str]] = {
     "todatasketchestuple": lambda a: f"__ds_tuple_single({a[0]}, {a[1]})",
     # DataSketches register/items wire formats: loud SQL boundary
     # (COVERAGE.md Known gaps) — estimates are served by the non-raw names
-    # raw HLL: ENGINE-OWN register bytes (operators/hll.py — log2m byte +
-    # dense registers, merged register-wise; TRUE clearspring wire
-    # interop lives in operators/cs_hll.py behind TO_CLEARSPRING_HLL /
-    # HLL_UNION and the auto-detecting reader). GETHLLESTIMATE is the engine's
-    # reader extension; optional 2nd arg is log2m (reference default 8,
-    # CommonConstants.DEFAULT_HYPERLOGLOG_LOG2M). SCALE SHAPE: values
-    # reduce JVM-side to bounded-domain register pairs (_hll_pair_expr)
-    # aggregated with collect_set — the state is sketch-sized (≤ m*57
-    # bigints) at ANY row count; no per-value collection remains.
+    # raw HLL: clearspring stream-lib wire bytes (operators/cs_hll.py —
+    # ObjectSerDeUtils.HYPER_LOG_LOG_SER_DE); GETHLLESTIMATE / HLL_UNION
+    # also read engine-own operators/hll.py blobs. Optional 2nd arg is
+    # log2m (reference default 8, CommonConstants.DEFAULT_HYPERLOGLOG_LOG2M).
+    # SCALE SHAPE: values reduce to bounded-domain register pairs
+    # (_cs_hll_pair_sql) aggregated with collect_set — the state is
+    # sketch-sized at ANY row count; no per-value collection remains.
     "distinctcountrawhll": lambda a: _raw_hll_sql(a, 8),
     "distinctcountrawhllplus": lambda a: _raw_hllpp_sql(a),
     "distinctcountrawhllmv": lambda a: _raw_hll_mv_sql(a, 8),
@@ -1171,17 +1149,9 @@ FUNCTION_MAP: dict[str, str | Callable[[list[str]], str]] = {
     "kllquantile": lambda a: f"__ds_kll_quantile({a[0]}, CAST({a[1]} AS DOUBLE))",
     # TOHLL emits the reference's ACTUAL bytes (SketchFunctions.toHLL
     # builds stream-lib HyperLogLog — a clearspring singleton, identical
-    # to TOCLEARSPRINGHLL) so its output unions with the RAWHLL family;
-    # PINOT_SPARK_HLL_WIRE=engine restores the legacy engine-own blob
-    "tohll": lambda a: (
-        "__cs_hll_single({0}, typeof({0}), {1})".format(
-            a[0], a[1].strip() if len(a) > 1 and a[1].strip().isdigit() else 8
-        )
-        if _HLL_WIRE != "engine"
-        else "__hll_singleton(CASE WHEN {0} IS NULL THEN CAST(NULL AS BIGINT) "
-        "ELSE xxhash64({0}) END, {1})".format(
-            a[0], a[1].strip() if len(a) > 1 and a[1].strip().isdigit() else 8
-        )
+    # to TOCLEARSPRINGHLL) so its output unions with the RAWHLL family
+    "tohll": lambda a: "__cs_hll_single({0}, typeof({0}), {1})".format(
+        a[0], a[1].strip() if len(a) > 1 and a[1].strip().isdigit() else 8
     ),
     # raw ULL: ENGINE-OWN UltraLogLog register bytes (operators/ull.py —
     # Ertl's packed 4*u+flags layout; hash4j binary stays a documented
@@ -3806,7 +3776,7 @@ _THETA_UDF_SESSIONS: weakref.WeakSet = weakref.WeakSet()
 #
 # - PURE-SKETCH statements (no co-occurring COUNT/SUM/MIN/MAX/AVG): the
 #   inner partial is a pandas GROUPED_AGG UDAF (__theta_partial /
-#   __tuple_partial / __tdigest_partial / __hll_mv_partial) — the
+#   __tuple_partial / __tdigest_partial / __cs_hll_mv_partial) — the
 #   persistent aggregation state IS the sketch blob at every level; the
 #   bucket's rows only stream transiently through Arrow, bounded by the
 #   fanout. This matches the reference's partial-state contract exactly.
@@ -4061,7 +4031,7 @@ _RS_SCALAR_ALLOW = {
     "and", "or", "not", "in", "when", "then", "else", "case", "between",
     "like", "is", "exists",
 }
-_RS_FANOUT = int(os.environ.get("PINOT_SPARK_RAW_SKETCH_FANOUT", "256"))
+_RS_FANOUT = 256
 
 
 def _strip_raw_calls(s: str) -> str:
@@ -4260,38 +4230,22 @@ def _rs_pandas_forms(name: str, args: list[str], n: int) -> tuple[str, str]:
     blob at every level (the reference's partial-state contract,
     AggregationFunction.java:63,86,132)."""
     a0 = args[0].strip()
-    if name in ("distinctcountrawhllmv", "distinctcountrawhllplusmv"):
-        if _HLL_WIRE != "engine":
-            if name == "distinctcountrawhllplusmv":
-                p, sp = _hllpp_params(args)
-                pairs_arr = f"__cs_hllpp_pairs_arr({a0}, typeof({a0}), {p})"
-                return (
-                    f"__cs_hllpp_mv_partial({pairs_arr}, {p}, {sp})",
-                    f"__cs_hll_merge_blobs(collect_list(__rs{n}))",
-                )
-            log2m = (
-                int(args[1].strip())
-                if len(args) > 1 and args[1].strip().isdigit()
-                else 8
-            )
-            return (
-                f"__cs_hll_mv_partial({_cs_hll_pairs_arr_sql(a0, log2m)}, {log2m})",
-                f"__cs_hll_merge_blobs(collect_list(__rs{n}))",
-            )
+    if name == "distinctcountrawhllplusmv":
+        p, sp = _hllpp_params(args)
+        pairs_arr = f"__cs_hllpp_pairs_arr({a0}, typeof({a0}), {p})"
+        return (
+            f"__cs_hllpp_mv_partial({pairs_arr}, {p}, {sp})",
+            f"__cs_hll_merge_blobs(collect_list(__rs{n}))",
+        )
+    if name == "distinctcountrawhllmv":
         log2m = (
             int(args[1].strip())
-            if name == "distinctcountrawhllmv"
-            and len(args) > 1 and args[1].strip().isdigit()
+            if len(args) > 1 and args[1].strip().isdigit()
             else 8
         )
-        pair = _hll_pair_expr("x", log2m)
-        pairs_arr = (
-            "array_distinct(transform(filter({0}, "
-            "x -> x IS NOT NULL), x -> {1}))".format(a0, pair)
-        )
         return (
-            f"__hll_mv_partial({pairs_arr}, {log2m})",
-            f"__hll_merge_blobs(collect_list(__rs{n}))",
+            f"__cs_hll_mv_partial({_cs_hll_pairs_arr_sql(a0, log2m)}, {log2m})",
+            f"__cs_hll_merge_blobs(collect_list(__rs{n}))",
         )
     if name in ("percentilerawestmv", "percentilerawkllmv", "percentilerawtdigestmv"):
         return (
@@ -4355,32 +4309,25 @@ def _parse_tuple_build(a0: str):
 
 def _zs_descriptor(name: str, args: list[str]):
     """Zero-shuffle call descriptor for the grouped-partials route:
-    ("theta", a0, k), ("tuple", key, val, k), ("hll", arr, log2m),
-    ("tdigest", arr), or None (not routable)."""
+    ("theta", a0, k), ("tuple", key, val, k), ("cs_hll", arr, log2m),
+    ("cs_hllpp", arr, p, sp), ("tdigest", arr), ("freq_str"|"freq_long",
+    arr, max_map_size), or None (not routable)."""
     if name == "distinctcountrawthetasketch":
         return ("theta", args[0].strip(), _theta_nominal_entries(args))
     if name in _TUPLE_RAW_NAMES:
         p = _parse_tuple_build(args[0])
         if p:
             return ("tuple", p[0], p[1], p[2])
-    if name in ("distinctcountrawhllmv", "distinctcountrawhllplusmv"):
-        if _HLL_WIRE != "engine":
-            if name == "distinctcountrawhllplusmv":
-                p, sp = _hllpp_params(args)
-                return ("cs_hllpp", args[0].strip(), p, sp)
-            log2m = (
-                int(args[1].strip())
-                if len(args) > 1 and args[1].strip().isdigit()
-                else 8
-            )
-            return ("cs_hll", args[0].strip(), log2m)
+    if name == "distinctcountrawhllplusmv":
+        p, sp = _hllpp_params(args)
+        return ("cs_hllpp", args[0].strip(), p, sp)
+    if name == "distinctcountrawhllmv":
         log2m = (
             int(args[1].strip())
-            if name == "distinctcountrawhllmv"
-            and len(args) > 1 and args[1].strip().isdigit()
+            if len(args) > 1 and args[1].strip().isdigit()
             else 8
         )
-        return ("hll", args[0].strip(), log2m)
+        return ("cs_hll", args[0].strip(), log2m)
     if name in ("percentilerawestmv", "percentilerawkllmv", "percentilerawtdigestmv"):
         return ("tdigest", args[0].strip())
     if name in ("frequentstringssketch", "frequentlongssketch"):
@@ -4400,9 +4347,7 @@ def _zs_final(name: str, col: str) -> str:
     if name == "distinctcountrawthetasketch":
         return f"__theta_merge_blobs(collect_list({col}))"
     if name in ("distinctcountrawhllmv", "distinctcountrawhllplusmv"):
-        if _HLL_WIRE != "engine":
-            return f"__cs_hll_merge_blobs(collect_list({col}))"
-        return f"__hll_merge_blobs(collect_list({col}))"
+        return f"__cs_hll_merge_blobs(collect_list({col}))"
     if name in ("percentilerawestmv", "percentilerawkllmv", "percentilerawtdigestmv"):
         return f"__tdigest_merge(collect_list({col}))"
     if name == "frequentstringssketch":
@@ -4798,30 +4743,18 @@ def _inexpr_udaf_expr(name: str, args: list[str]) -> str:
         fl = "str" if name == "frequentstringssketch" else "long"
         return f"__freq_{fl}_partial({a0}, {mm})"
     # distinctcountrawhllmv / plusmv
-    if _HLL_WIRE != "engine":
-        if name == "distinctcountrawhllplusmv":
-            p, sp = _hllpp_params(args)
-            return (
-                f"__cs_hllpp_mv_partial("
-                f"__cs_hllpp_pairs_arr({a0}, typeof({a0}), {p}), {p}, {sp})"
-            )
-        log2m = (
-            int(args[1].strip())
-            if len(args) > 1 and args[1].strip().isdigit()
-            else 8
+    if name == "distinctcountrawhllplusmv":
+        p, sp = _hllpp_params(args)
+        return (
+            f"__cs_hllpp_mv_partial("
+            f"__cs_hllpp_pairs_arr({a0}, typeof({a0}), {p}), {p}, {sp})"
         )
-        return f"__cs_hll_mv_partial({_cs_hll_pairs_arr_sql(a0, log2m)}, {log2m})"
     log2m = (
         int(args[1].strip())
-        if name == "distinctcountrawhllmv"
-        and len(args) > 1 and args[1].strip().isdigit()
+        if len(args) > 1 and args[1].strip().isdigit()
         else 8
     )
-    pair = _hll_pair_expr("x", log2m)
-    pairs_arr = (
-        f"array_distinct(transform(filter({a0}, x -> x IS NOT NULL), x -> {pair}))"
-    )
-    return f"__hll_mv_partial({pairs_arr}, {log2m})"
+    return f"__cs_hll_mv_partial({_cs_hll_pairs_arr_sql(a0, log2m)}, {log2m})"
 
 
 def rewrite_raw_sketch_inexpr_udaf(sql: str) -> str:
@@ -4873,7 +4806,7 @@ _AGG_FILTER_RE = re.compile(r"\s*FILTER\s*\(\s*WHERE\b", re.IGNORECASE)
 
 
 _ST_UNION_CALL_RE = re.compile(r"\bST_?UNION\s*\(", re.IGNORECASE)
-_ST_UNION_FANOUT = int(os.environ.get("PINOT_SPARK_ST_UNION_FANOUT", "64"))
+_ST_UNION_FANOUT = 64
 # scalar post-processing allowed around the hoisted union in the outer
 # level (Pinot names — this rewrite runs before rewrite_functions)
 _ST_UNION_SCALAR_ALLOW = {
@@ -5974,35 +5907,7 @@ def _ensure_theta_sql_udfs(spark: SparkSession) -> None:
         _tuple_binop("intersect")
     )
 
-    from pinot_spark.operators.hll import HllSketch
     from pinot_spark.operators.tdigest import TDigest
-
-    def _hll_from_hash_list(hs, log2m: int) -> bytes:
-        raw = np.asarray([h for h in hs if h is not None], dtype=np.int64).astype(np.uint64)
-        raw += np.uint64(2**63)  # signed xxhash64 → unsigned shift
-        return HllSketch.from_hashes(raw, log2m).to_bytes()
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __hll_from_hashes(arrs, log2m):
-        lm = int(log2m.iloc[0]) if len(log2m) else 8
-        return pd.Series(
-            [_hll_from_hash_list(hs if hs is not None else [], lm) for hs in arrs]
-        )
-
-    def _hll_from_pair_list(pairs, log2m: int) -> bytes:
-        s = HllSketch.empty(log2m)
-        if pairs is not None and len(pairs):
-            p = np.asarray(pairs, dtype=np.int64)
-            np.maximum.at(s.registers, p >> 6, (p & 63).astype(np.uint8))
-        return s.to_bytes()
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __hll_from_regs(arrs, log2m):
-        # bounded-domain register pairs (idx*64+rho, _hll_pair_expr)
-        # → engine-own dense registers; byte-identical to from_hashes
-        lm = int(log2m.iloc[0]) if len(log2m) else 8
-        return pd.Series([_hll_from_pair_list(ps, lm) for ps in arrs])
-
     from pinot_spark.operators.ull import UllSketch
 
     @pandas_udf("binary", PandasUDFType.SCALAR)
@@ -6034,13 +5939,6 @@ def _ensure_theta_sql_udfs(spark: SparkSession) -> None:
         return pd.Series(
             [None if x is None else round(UllSketch.from_bytes(bytes(x)).estimate()) for x in b],
             dtype="Int64",
-        )
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __hll_singleton(h, log2m):
-        lm = int(log2m.iloc[0]) if len(log2m) else 8
-        return pd.Series(
-            [_hll_from_hash_list([] if pd.isna(x) else [x], lm) for x in h]
         )
 
     @pandas_udf("bigint", PandasUDFType.SCALAR)
@@ -6284,17 +6182,6 @@ def _ensure_theta_sql_udfs(spark: SparkSession) -> None:
         return td.to_bytes()
 
     @pandas_udf("binary", PandasUDFType.GROUPED_AGG)
-    def __hll_mv_partial(pair_arrs, log2m):
-        lm = int(log2m.iloc[0]) if len(log2m) else 8
-        s = HllSketch.empty(lm)
-        for ps in pair_arrs:
-            if ps is None or len(ps) == 0:
-                continue
-            p = np.asarray(ps, dtype=np.int64)
-            np.maximum.at(s.registers, p >> 6, (p & 63).astype(np.uint8))
-        return s.to_bytes()
-
-    @pandas_udf("binary", PandasUDFType.GROUPED_AGG)
     def __freq_long_partial(vals, mm):
         # DataSketches frequencies partial (operators/ds_freq.py):
         # numeric values update the reverse-purge map; BYTES values are
@@ -6504,22 +6391,9 @@ def _ensure_theta_sql_udfs(spark: SparkSession) -> None:
             [run(e, gs) for e, gs in zip(expr, groups)], dtype="Int64"
         )
 
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __hll_merge_blobs(arrs):
-        def run(lst):
-            acc = None
-            for b in lst if lst is not None else []:
-                if b is None:
-                    continue
-                s = HllSketch.from_bytes(bytes(b))
-                acc = s if acc is None else acc.merge(s)
-            return (acc or HllSketch.empty()).to_bytes()
-
-        return pd.Series([run(lst) for lst in arrs])
-
     # --- clearspring RAW-HLL wire route (operators/cs_hll.py;
-    # functions/sketches.py series bodies) — the default
-    # DISTINCTCOUNTRAWHLL[PLUS][MV] serialization since round 11 -------
+    # functions/sketches.py series bodies) — the
+    # DISTINCTCOUNTRAWHLL[PLUS][MV] serialization -------
 
     @pandas_udf("bigint", PandasUDFType.SCALAR)
     def __cs_hll_pair(v, t, log2m):
@@ -7261,16 +7135,6 @@ class PinotEngine:
                 else 8
             )
             mv = canonical.endswith("mv")
-            if _HLL_WIRE == "engine":
-                if mv:
-                    pair = _hll_pair_expr("x", log2m)
-                    tok = (
-                        f"array_distinct(transform(filter({col}, "
-                        f"x -> x IS NOT NULL), x -> {pair}))"
-                    )
-                else:
-                    tok = _hll_pair_expr(col, log2m)
-                return ("hll_engine", (log2m,), [tok], mv, wrap)
             tok = (
                 _cs_hll_pairs_arr_sql(col, log2m)
                 if mv
@@ -7279,18 +7143,6 @@ class PinotEngine:
             return ("hll_cs", (log2m,), [tok], mv, wrap)
         if canonical in ("distinctcountrawhllplus", "distinctcountrawhllplusmv"):
             mv = canonical.endswith("mv")
-            if _HLL_WIRE == "engine":
-                # mirrors _raw_hllpp_sql: engine mode serves the
-                # engine-own HLL blob at the log2m=8 default
-                if mv:
-                    pair = _hll_pair_expr("x", 8)
-                    tok = (
-                        f"array_distinct(transform(filter({col}, "
-                        f"x -> x IS NOT NULL), x -> {pair}))"
-                    )
-                else:
-                    tok = _hll_pair_expr(col, 8)
-                return ("hll_engine", (8,), [tok], mv, wrap)
             p, sp = _hllpp_params(args)
             tok = (
                 f"__cs_hllpp_pairs_arr({col}, typeof({col}), {p})"
@@ -7660,17 +7512,6 @@ class PinotEngine:
                         hi, lo = _split_hash_expr(d[1])
                         sel += [f"{hi} AS __hi{i}", f"({lo}) AS __lo{i}"]
                         op_calls.append(("theta", f"__hi{i}", f"__lo{i}", d[2]))
-                    elif d[0] == "hll":
-                        # JVM-side bounded-domain register pairs per MV
-                        # element (idx*64+rho ≤ 2^log2m·64+64: exact in
-                        # float64, no split needed)
-                        pair = _hll_pair_expr("x", d[2])
-                        pairs_arr = (
-                            "array_distinct(transform(filter({0}, "
-                            "x -> x IS NOT NULL), x -> {1}))".format(d[1], pair)
-                        )
-                        sel += [f"{pairs_arr} AS __pa{i}"]
-                        op_calls.append(("hll", f"__pa{i}", d[2]))
                     elif d[0] == "cs_hll":
                         # clearspring murmur-domain pairs: pure-JVM
                         # expression for integer-element arrays, the

@@ -477,26 +477,7 @@ _reg("cpcsketchunion")(
 )
 
 
-# --- engine-own HLL (operators/hll.py) ------------------------------------
-
-
-def _make_hll_singleton():
-    from pinot_spark.operators.hll import DEFAULT_LOG2M, HllSketch
-
-    @_pandas_udf("binary")
-    def _f(h: _pd.Series, log2m: _pd.Series) -> _pd.Series:
-        lm = int(log2m.iloc[0]) if len(log2m) else DEFAULT_LOG2M
-        shifted = _shift_u64(h.fillna(0))
-        return _pd.Series(
-            [
-                HllSketch.empty(lm).to_bytes()
-                if _pd.isna(raw)
-                else HllSketch.from_hashes(np.array([u], dtype=np.uint64), lm).to_bytes()
-                for raw, u in zip(h, shifted)
-            ]
-        )
-
-    return _f
+# --- TOHLL: clearspring singleton (operators/cs_hll.py) -------------------
 
 
 def _make_cs_hll_single_udf():
@@ -529,8 +510,8 @@ _reg("tohll")(
 # (operators/cs_hll.py) — the formats a real reference cluster ships for
 # its HLL family (ObjectSerDeUtils.HYPER_LOG_LOG_SER_DE /
 # HYPER_LOG_LOG_PLUS_SER_DE; SketchFunctions.toHLL builds exactly these
-# bytes).  The engine-own fast path (operators/hll.py, xxhash64 domain)
-# stays separate — consumers auto-detect the format per argument and
+# bytes).  Engine-own blobs (operators/hll.py, xxhash64 domain) are
+# still read — consumers auto-detect the format per argument and
 # refuse cross-domain unions loudly.
 # ---------------------------------------------------------------------------
 

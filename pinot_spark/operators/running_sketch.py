@@ -23,7 +23,7 @@ sequential pass per partition group inside one Arrow-batched
 applyInPandas stage.  The per-value hash/pair/coupon TOKENS are
 computed JVM-side in the derived view's projection, reusing the very
 SQL expressions the grouped aggregation routes use (dialect
-``_hll_pair_expr`` / ``_cs_hll_pair_sql`` / raw ``xxhash64``), so a
+``_cs_hll_pair_sql`` / ``_hll_pair_expr`` / raw ``xxhash64``), so a
 running blob for a full partition is byte-identical to the grouped
 route's blob for the same rows: one hash domain, one accumulation
 rule, one serializer.  Accumulator state is sketch-bounded per group
@@ -280,11 +280,6 @@ def make_acc(family: str, params: tuple):
 
         (log2m,) = params
         return PairRegAcc(1 << log2m, lambda r: CsHll(log2m, r).serialize())
-    if family == "hll_engine":
-        from pinot_spark.operators.hll import HllSketch
-
-        (log2m,) = params
-        return PairRegAcc(1 << log2m, lambda r: HllSketch(log2m, r).to_bytes())
     if family == "hllpp_cs":
         from pinot_spark.operators.cs_hll import NORMAL, CsHllPlus
 

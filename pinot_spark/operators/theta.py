@@ -190,10 +190,11 @@ def grouped_sketch_partials(
     tuple sketch accumulates exact int64 per-hash sums alongside the
     KMV candidates; the VALUE also arrives as 32-bit halves
     (arithmetic-shift hi keeps the sign) because nullable BIGINTs reach
-    pandas as float64, lossy past 2^53 —, ("hll", pairs_col, log2m)
-    whose column holds JVM-computed idx*64+rho register pairs
-    (dialect._hll_pair_expr; values < 2^log2m·64+64 so float64-exact,
-    partial state is the fixed register array), or
+    pandas as float64, lossy past 2^53 —, ("cs_hll", pairs_col, log2m)
+    or ("cs_hllpp", pairs_col, p, sp) whose column holds clearspring
+    j*64+rho register pairs (dialect._cs_hll_pairs_arr_sql; values
+    < 2^log2m·64+64 so float64-exact, partial state is the fixed
+    register array), or
     ("tdigest", values_col) accumulating an engine-own t-digest
     (bounded centroid count) per group.
 
@@ -244,12 +245,10 @@ def grouped_sketch_partials(
                 slot = acc.setdefault(kt, [None] * len(calls))
                 for i, call in enumerate(calls):
                     kind = call[0]
-                    if kind in ("hll", "cs_hll", "cs_hllpp"):
+                    if kind in ("cs_hll", "cs_hllpp"):
                         # accumulate max-rho registers per group — the
                         # HLL partial state is the fixed 2^log2m register
-                        # array regardless of row count (engine-own and
-                        # clearspring pairs share the j*64+r layout; only
-                        # the hash domain and final bytes differ)
+                        # array regardless of row count
                         regs = slot[i]
                         if regs is None:
                             regs = slot[i] = np.zeros(1 << call[2], np.uint8)
@@ -346,14 +345,6 @@ def grouped_sketch_partials(
             row = [None if (v is None or v != v) else v for v in kt]
             for i, call in enumerate(calls):
                 kind = call[0]
-                if kind == "hll":
-                    from pinot_spark.operators.hll import HllSketch
-
-                    regs = slots[i]
-                    if regs is None:
-                        regs = np.zeros(1 << call[2], np.uint8)
-                    row.append(HllSketch(call[2], regs).to_bytes())
-                    continue
                 if kind == "cs_hll":
                     from pinot_spark.operators.cs_hll import CsHll
 
@@ -438,7 +429,7 @@ def grouped_sketch_partials(
 
     needed = list(keys)
     for call in calls:
-        if call[0] in ("hll", "cs_hll", "cs_hllpp", "tdigest", "freq_str"):
+        if call[0] in ("cs_hll", "cs_hllpp", "tdigest", "freq_str"):
             needed.append(call[1])
             continue
         needed += [call[1], call[2]]

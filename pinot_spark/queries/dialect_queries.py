@@ -1340,8 +1340,7 @@ def dialect_rawhll_clearspring_wire(spark, sf_dir):
     139-162).  The aggregation state stays sketch-bounded: a
     collect_set over the (register*64+rho) pair domain, never per-value
     hashes.  GETHLLESTIMATE still reads legacy engine-own blobs
-    (auto-detection), and PINOT_SPARK_HLL_WIRE=engine restores the old
-    default."""
+    (auto-detection)."""
     return _engine(spark, sf_dir).sql(
         "SELECT n_regionkey, "
         "lower(hex(DISTINCTCOUNTRAWHLL(n_nationkey, 8))) AS hll_hex, "

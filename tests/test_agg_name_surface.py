@@ -553,7 +553,7 @@ def test_raw_theta_mixed_expression_key_fallback_correct(spark, at):
 
 
 def test_raw_theta_nondefault_fanout_correct(spark, at, monkeypatch):
-    """PINOT_SPARK_RAW_SKETCH_FANOUT governs the bucketed two-phase's
+    """``dialect._RS_FANOUT`` governs the bucketed two-phase's
     inner fan-out; a non-default (odd, tiny) value must not change any
     answer — the bucket column only shapes the partial distribution
     (VERDICT r8 optional item). The JOIN form declines the zero-shuffle

@@ -527,8 +527,7 @@ _THETA_SQL_UDF_NAMES = [
     "__ds_theta_single", "__ds_tuple_single", "__freq_long_estimate",
     "__freq_long_merge", "__freq_long_partial", "__freq_str_estimate",
     "__freq_str_merge", "__freq_str_partial", "__hll_estimate",
-    "__hll_from_hashes", "__hll_from_regs", "__hll_merge_blobs",
-    "__hll_mv_partial", "__hll_singleton", "__hll_union", "__json_all_keys",
+    "__hll_union", "__json_all_keys",
     "__tdigest_from_quantiles", "__tdigest_from_values", "__tdigest_merge",
     "__tdigest_partial", "__tdigest_quantile", "__theta_diff",
     "__theta_estimate", "__theta_filtered", "__theta_from_hashes",

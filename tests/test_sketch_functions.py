@@ -180,13 +180,9 @@ def test_raw_hll_sql_bytes_match_from_hashes(spark):
     """DISTINCTCOUNTRAWHLL emits the reference's ACTUAL wire bytes
     (round 11): a clearspring stream-lib HyperLogLog byte-identical to
     a flat Java-semantics build over the same values — the serialization
-    ObjectSerDeUtils.HYPER_LOG_LOG_SER_DE ships.  The legacy engine-own
-    register machinery (__hll_from_regs over dialect._hll_pair_expr)
-    must keep producing ITS bytes too: old blobs stay readable and
-    PINOT_SPARK_HLL_WIRE=engine restores them as the default."""
-    from pinot_spark.dialect import PinotEngine, _hll_pair_expr
+    ObjectSerDeUtils.HYPER_LOG_LOG_SER_DE ships."""
+    from pinot_spark.dialect import PinotEngine
     from pinot_spark.operators.cs_hll import CsHll
-    from pinot_spark.operators.hll import HllSketch
 
     df = spark.range(0, 5000).selectExpr(
         "CASE WHEN id % 50 = 0 THEN NULL ELSE CAST((id * 37) % 1500 AS STRING) END AS v"
@@ -204,23 +200,32 @@ def test_raw_hll_sql_bytes_match_from_hashes(spark):
         for v in values:
             want.offer(v)
         assert got == want.serialize()
-        # legacy engine-own route still byte-stable for old consumers
-        legacy = bytes(
-            spark.sql(
-                f"SELECT __hll_from_regs(collect_set("
-                f"{_hll_pair_expr('v', log2m)}), {log2m}) AS b FROM hll_bytes_t"
-            ).collect()[0].b
-        )
-        hashes = np.array(
-            [
-                r.h
-                for r in df.where("v IS NOT NULL")
-                .selectExpr("xxhash64(v) AS h")
-                .collect()
-            ],
-            dtype=np.int64,
-        ).astype(np.uint64) + np.uint64(2**63)
-        assert legacy == HllSketch.from_hashes(hashes, log2m).to_bytes()
+
+
+def test_engine_own_hll_blobs_stay_readable(spark):
+    """No SQL name builds engine-own HLL blobs (operators/hll.py) any
+    more, but blobs stored by older builds must still estimate and
+    union through SQL, and must still refuse to merge with clearspring
+    bytes (different hash domains)."""
+    from pinot_spark.dialect import PinotEngine
+    from pinot_spark.operators.hll import HllSketch
+
+    rng = np.random.default_rng(4)
+    eng = PinotEngine(spark, default_limit=1000)
+    for log2m in (8, 12):
+        h = rng.integers(0, 2**64, size=3000, dtype=np.uint64)
+        a = HllSketch.from_hashes(h[:2000], log2m)
+        b = HllSketch.from_hashes(h[1000:], log2m)
+        row = eng.sql(
+            f"SELECT GETHLLESTIMATE(X'{a.to_bytes().hex()}') AS e, "
+            f"HLLUNION(X'{a.to_bytes().hex()}', X'{b.to_bytes().hex()}') AS u"
+        ).collect()[0]
+        assert row.e == round(a.estimate())
+        assert bytes(row.u) == a.merge(b).to_bytes()
+    with pytest.raises(Exception, match="mixed sketch domains"):
+        eng.sql(
+            f"SELECT HLLUNION(TOCLEARSPRINGHLL('a'), X'{a.to_bytes().hex()}') AS x"
+        ).collect()
 
 
 def test_theta_value_build_exact_below_k(spark):
