@@ -1876,15 +1876,13 @@ def rewrite_functions(sql: str) -> str:
 # ---------------------------------------------------------------------------
 
 # Words that may follow a table reference but never alias it: clause,
-# join and set-operator keywords.  LATERAL is left out so the MV-distinct
-# rewrite's ``FROM <table> LATERAL VIEW ...`` keeps its translated text
-# (tests/test_translate_golden.py).
+# join and set-operator keywords.
 _SQL_KEYWORDS = frozenset({
     "ON", "USING", "WHERE", "GROUP", "ORDER", "LIMIT", "OFFSET", "HAVING",
     "QUALIFY", "WINDOW", "TABLESAMPLE", "NATURAL", "LEFT", "RIGHT", "INNER",
     "OUTER", "CROSS", "FULL", "SEMI", "ANTI", "JOIN", "ASOF",
     "MATCH_CONDITION", "UNION", "INTERSECT", "EXCEPT", "MINUS", "SET", "AS",
-    "SORT", "CLUSTER", "DISTRIBUTE", "PIVOT", "UNPIVOT",
+    "SORT", "CLUSTER", "DISTRIBUTE", "PIVOT", "UNPIVOT", "LATERAL",
 })
 # FROM|JOIN <table> [TABLESAMPLE (...)] [[AS] <alias>] — Spark's grammar
 # puts the sample clause before the alias

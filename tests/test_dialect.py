@@ -438,13 +438,15 @@ def test_exact_distinct_window_aggregates(engine, spark):
         "WINDOW w AS (ORDER BY n_name) ORDER BY rn LIMIT 3",
         "SELECT region.r_name FROM region TABLESAMPLE (100 PERCENT) "
         "ORDER BY 1 LIMIT 3",
+        "SELECT embeddings.label, v FROM embeddings "
+        "LATERAL VIEW explode(embedding) lv AS v ORDER BY 1, 2 LIMIT 3",
     ],
-    ids=["natural", "window", "tablesample"],
+    ids=["natural", "window", "tablesample", "lateral"],
 )
 def test_null_default_views_keep_qualifier_before_keyword(engine, stmt):
     """Default null mode swaps a base table for its null-defaulted view
     and re-aliases it with the table's own name.  A keyword right after
-    the table (NATURAL, WINDOW, TABLESAMPLE) is not an alias, so the
+    the table (NATURAL, WINDOW, TABLESAMPLE, LATERAL) is not an alias, so the
     qualifier ``table.col`` must still resolve and give the same rows as
     the null-handling mode, which reads the table itself."""
     default_rows = engine.sql(stmt).collect()
