@@ -1,6 +1,9 @@
 """Benchmark harness: runs headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) and prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
+ "failed": [...], "sf": ...}
+A query that raises is listed in ``failed`` and left out of ``queries``,
+``iterations`` and ``value``, so a failure never reads as a fast run.
 """
 
 from __future__ import annotations
@@ -60,23 +63,22 @@ def main() -> None:
     iters = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "5")))
     timings: dict[str, float] = {}
     iterations: dict[str, list[float]] = {}
+    failed: list[str] = []
     for name in names:
         times: list[float] = []
-        rows = None
-        for _attempt in range(iters):
-            t0 = time.perf_counter()
-            try:
+        try:
+            for _attempt in range(iters):
+                t0 = time.perf_counter()
                 rows = Q.QUERIES[name](spark, sf_dir).collect()
-            except Exception as e:  # never lose the JSON line to one query
-                print(f"# {name}: FAILED {e}", file=sys.stderr)
                 times.append(round(time.perf_counter() - t0, 3))
-                break
-            times.append(round(time.perf_counter() - t0, 3))
+        except Exception as e:  # never lose the JSON line to one query
+            print(f"# {name}: FAILED {e}", file=sys.stderr)
+            failed.append(name)
+            continue
         timings[name] = round(statistics.median(times), 3)
         iterations[name] = times
-        nrows = len(rows) if rows is not None else 0
         print(
-            f"# {name}: median {timings[name]}s of {times} ({nrows} rows)",
+            f"# {name}: median {timings[name]}s of {times} ({len(rows)} rows)",
             file=sys.stderr,
         )
 
@@ -102,6 +104,7 @@ def main() -> None:
                 "value": round(sum(timings.values()), 3),
                 "unit": "sec",
                 "queries": timings,
+                "failed": failed,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
                 "iters_per_query": iters,
                 "iterations": iterations,
