@@ -718,6 +718,12 @@ def _raw_hll_sql(a: list[str], default_log2m: int) -> str:
     )
 
 
+def _cs_hll_single_sql(a: list[str]) -> str:
+    """TOHLL / TOCLEARSPRINGHLL: one value's clearspring singleton."""
+    log2m = a[1].strip() if len(a) > 1 and a[1].strip().isdigit() else 8
+    return f"__cs_hll_single({a[0]}, typeof({a[0]}), {log2m})"
+
+
 def _raw_hllpp_sql(a: list[str]) -> str:
     """DISTINCTCOUNTRAWHLLPLUS → clearspring HyperLogLogPlus wire bytes
     (NORMAL format).  Byte-canonical with a flat stream-lib build at the
@@ -1123,11 +1129,7 @@ FUNCTION_MAP: dict[str, str | Callable[[list[str]], str]] = {
     # DISTINCTCOUNTHLLPLUS serializes (ObjectSerDeUtils.java:741-775;
     # operators/cs_hll.py) for cross-engine exchange; GETHLLESTIMATE and
     # HLL_UNION auto-detect the format and refuse mixed-domain unions
-    "toclearspringhll": lambda a: (
-        "__cs_hll_single({0}, typeof({0}), {1})".format(
-            a[0], a[1].strip() if len(a) > 1 and a[1].strip().isdigit() else 8
-        )
-    ),
+    "toclearspringhll": lambda a: _cs_hll_single_sql(a),
     "toclearspringhllplus": lambda a: (
         "__cs_hllpp_single({0}, typeof({0}), {1}, {2})".format(
             a[0],
@@ -1150,9 +1152,7 @@ FUNCTION_MAP: dict[str, str | Callable[[list[str]], str]] = {
     # TOHLL emits the reference's ACTUAL bytes (SketchFunctions.toHLL
     # builds stream-lib HyperLogLog — a clearspring singleton, identical
     # to TOCLEARSPRINGHLL) so its output unions with the RAWHLL family
-    "tohll": lambda a: "__cs_hll_single({0}, typeof({0}), {1})".format(
-        a[0], a[1].strip() if len(a) > 1 and a[1].strip().isdigit() else 8
-    ),
+    "tohll": lambda a: _cs_hll_single_sql(a),
     # raw ULL: ENGINE-OWN UltraLogLog register bytes (operators/ull.py —
     # Ertl's packed 4*u+flags layout; hash4j binary stays a documented
     # gap). Same bounded-domain register-pair scale shape as raw HLL;
