@@ -23,7 +23,7 @@ sequential pass per partition group inside one Arrow-batched
 applyInPandas stage.  The per-value hash/pair/coupon TOKENS are
 computed JVM-side in the derived view's projection, reusing the very
 SQL expressions the grouped aggregation routes use (dialect
-``_cs_hll_pair_sql`` / ``_hll_pair_expr`` / raw ``xxhash64``), so a
+``_hll_pair_expr`` / ``_cs_hll_pair_sql`` / raw ``xxhash64``), so a
 running blob for a full partition is byte-identical to the grouped
 route's blob for the same rows: one hash domain, one accumulation
 rule, one serializer.  Accumulator state is sketch-bounded per group

@@ -203,8 +203,8 @@ def test_raw_hll_sql_bytes_match_from_hashes(spark):
 
 
 def test_engine_own_hll_blobs_stay_readable(spark):
-    """No SQL name builds engine-own HLL blobs (operators/hll.py) any
-    more, but blobs stored by older builds must still estimate and
+    """SQL builds only clearspring HLL bytes, but engine-own blobs
+    (operators/hll.py) stored by older builds must still estimate and
     union through SQL, and must still refuse to merge with clearspring
     bytes (different hash domains)."""
     from pinot_spark.dialect import PinotEngine
