@@ -686,6 +686,18 @@ def _hllpp_params(a: list[str]) -> tuple[int, int]:
     return p, sp
 
 
+def _log2m(a: list[str]) -> int:
+    """log2m from the optional second arg of the clearspring HLL names
+    (reference default 8, CommonConstants.DEFAULT_HYPERLOGLOG_LOG2M)."""
+    return int(a[1].strip()) if len(a) > 1 and a[1].strip().isdigit() else 8
+
+
+def _max_map_size(a: list[str]) -> int:
+    """maxMapSize from the optional second arg of the frequent-items
+    sketches (reference default 256)."""
+    return int(a[1].strip()) if len(a) > 1 and a[1].strip().isdigit() else 256
+
+
 def _cpc_lgk(a: list[str]) -> int:
     """lgK from the optional second arg (reference default 12,
     CommonConstants.DEFAULT_CPC_SKETCH_LGK)."""
@@ -706,12 +718,8 @@ def _cpc_coupon_sql(col: str, lg_k: int) -> str:
     )
 
 
-def _raw_hll_sql(a: list[str], default_log2m: int) -> str:
-    log2m = (
-        int(a[1].strip())
-        if len(a) > 1 and a[1].strip().isdigit()
-        else default_log2m
-    )
+def _raw_hll_sql(a: list[str]) -> str:
+    log2m = _log2m(a)
     return (
         f"__cs_hll_from_regs(collect_set({_cs_hll_pair_sql(a[0], log2m)}), "
         f"{log2m})"
@@ -720,8 +728,7 @@ def _raw_hll_sql(a: list[str], default_log2m: int) -> str:
 
 def _cs_hll_single_sql(a: list[str]) -> str:
     """TOHLL / TOCLEARSPRINGHLL: one value's clearspring singleton."""
-    log2m = a[1].strip() if len(a) > 1 and a[1].strip().isdigit() else 8
-    return f"__cs_hll_single({a[0]}, typeof({a[0]}), {log2m})"
+    return f"__cs_hll_single({a[0]}, typeof({a[0]}), {_log2m(a)})"
 
 
 def _raw_hllpp_sql(a: list[str]) -> str:
@@ -737,16 +744,12 @@ def _raw_hllpp_sql(a: list[str]) -> str:
     )
 
 
-def _raw_hll_mv_sql(a: list[str], default_log2m: int) -> str:
+def _raw_hll_mv_sql(a: list[str]) -> str:
     """MV variant: each row contributes its array's (deduplicated)
     register pairs; the bounded pair domain keeps every buffer element
     tiny, though the collect_list entry count still scales with rows —
     the fully bounded path is the SV form over an exploded view."""
-    log2m = (
-        int(a[1].strip())
-        if len(a) > 1 and a[1].strip().isdigit()
-        else default_log2m
-    )
+    log2m = _log2m(a)
     return (
         f"__cs_hll_from_regs(array_distinct(flatten(collect_list("
         f"{_cs_hll_pairs_arr_sql(a[0], log2m)}))), {log2m})"
@@ -1119,9 +1122,9 @@ FUNCTION_MAP: dict[str, str | Callable[[list[str]], str]] = {
     # SCALE SHAPE: values reduce to bounded-domain register pairs
     # (_cs_hll_pair_sql) aggregated with collect_set — the state is
     # sketch-sized at ANY row count; no per-value collection remains.
-    "distinctcountrawhll": lambda a: _raw_hll_sql(a, 8),
+    "distinctcountrawhll": lambda a: _raw_hll_sql(a),
     "distinctcountrawhllplus": lambda a: _raw_hllpp_sql(a),
-    "distinctcountrawhllmv": lambda a: _raw_hll_mv_sql(a, 8),
+    "distinctcountrawhllmv": lambda a: _raw_hll_mv_sql(a),
     "distinctcountrawhllplusmv": lambda a: _raw_hllpp_mv_sql(a),
     "gethllestimate": lambda a: f"__hll_estimate({a[0]})",
     # engine extensions: clearspring (stream-lib) wire-format emitters —
@@ -1132,9 +1135,7 @@ FUNCTION_MAP: dict[str, str | Callable[[list[str]], str]] = {
     "toclearspringhll": lambda a: _cs_hll_single_sql(a),
     "toclearspringhllplus": lambda a: (
         "__cs_hllpp_single({0}, typeof({0}), {1}, {2})".format(
-            a[0],
-            a[1].strip() if len(a) > 1 and a[1].strip().isdigit() else 14,
-            a[2].strip() if len(a) > 2 and a[2].strip().isdigit() else 0,
+            a[0], *_hllpp_params(a)
         )
     ),
     "hllunion": lambda a: f"__hll_union({a[0]}, {a[1]})",
@@ -1216,20 +1217,16 @@ FUNCTION_MAP: dict[str, str | Callable[[list[str]], str]] = {
     # DataSketches frequencies aggregations (round 10,
     # operators/ds_freq.py — LongsSketch / ItemsSketch<String> wire
     # formats, Java-parity reverse-purge semantics): canonical grouped
-    # statements take the bounded two-phase (_rs_pandas_forms); these
+    # statements take the bounded two-phase (_RAW_FAMILIES); these
     # map entries are the single-level GROUPED_AGG fallback.  BYTES
     # inputs merge as foreign sketches (the reference's contract).
     # FREQUENT_STRINGS_ESTIMATE / FREQUENT_LONGS_ESTIMATE are the
     # engine's reader extensions.
     "frequentstringssketch": lambda a: (
-        "__freq_str_partial({0}, {1})".format(
-            a[0], a[1].strip() if len(a) > 1 and a[1].strip().isdigit() else 256
-        )
+        f"__freq_str_partial({a[0]}, {_max_map_size(a)})"
     ),
     "frequentlongssketch": lambda a: (
-        "__freq_long_partial({0}, {1})".format(
-            a[0], a[1].strip() if len(a) > 1 and a[1].strip().isdigit() else 256
-        )
+        f"__freq_long_partial({a[0]}, {_max_map_size(a)})"
     ),
     "frequentstringsestimate": lambda a: f"__freq_str_estimate({a[0]}, {a[1]})",
     "frequentlongsestimate": lambda a: f"__freq_long_estimate({a[0]}, {a[1]})",
@@ -3760,61 +3757,159 @@ _THETA_SQL_RE = re.compile(
 _THETA_UDF_SESSIONS: weakref.WeakSet = weakref.WeakSet()
 
 # ---------------------------------------------------------------------------
-# Two-phase raw theta/tuple aggregation — the KMV top-k and sketch-merge
-# aggregates have no bounded single-expression form in native Spark SQL
-# (there is no bounded top-k-distinct aggregate), so the canonical
-# grouped statement is restructured into partial-per-bucket + final
-# merge: the inner level groups by (keys, pmod(hash, fanout)), the outer
-# level merges ≤ fanout bounded partial blobs per group. Same
-# asymptotics as the reference's segment→broker merge
-# (AggregationFunction.java:63,86,132) and the repo's two-phase distinct
-# (operators/skew.py).
+# Raw-sketch aggregation.  Every raw name in _RAW_FAMILIES follows the
+# reference's aggregate → merge → extractFinalResult contract
+# (AggregationFunction.java:63,86,132): a per-group partial blob, a merge
+# of partial blobs, and a final wrapper over the merged blob.  There is
+# no bounded single-expression form in native Spark SQL for these (no
+# bounded top-k-distinct aggregate, no sketch merge), so the canonical
+# grouped statement is restructured around that contract:
 #
-# TWO inner shapes, chosen by what else the statement aggregates:
+# - PURE-SKETCH statements (no co-occurring COUNT/SUM/MIN/MAX/AVG) become
+#   one two-phase statement: the inner level groups by (keys,
+#   pmod(hash, fanout)) and builds partials with the pandas GROUPED_AGG
+#   UDAFs, the outer level merges ≤ fanout bounded blobs per group.  The
+#   aggregation state is the sketch blob at every level.  Pandas
+#   aggregation has no map-side combine, so raw ROWS shuffle on (keys,
+#   bucket): O(rows) shuffle volume for O(sketch) memory.
 #
-# - PURE-SKETCH statements (no co-occurring COUNT/SUM/MIN/MAX/AVG): the
-#   inner partial is a pandas GROUPED_AGG UDAF (__theta_partial /
-#   __tuple_partial / __tdigest_partial / __cs_hll_mv_partial) — the
-#   persistent aggregation state IS the sketch blob at every level; the
-#   bucket's rows only stream transiently through Arrow, bounded by the
-#   fanout. This matches the reference's partial-state contract exactly.
-#   Trade-off vs the native shape: pandas aggregation has no map-side
-#   combine, so raw ROWS shuffle on (keys, bucket) — O(rows) shuffle
-#   volume for O(sketch) memory, where collect_set shuffles O(distinct)
-#   for O(distinct) memory. The zero-shuffle partition-local build
-#   remains the DataFrame operator (operators/theta.theta_sketch,
-#   mapInPandas + tree merge) — SQL text cannot express mapInPandas.
+# - MIXED statements (sketch + basic aggregates) split into two
+#   subqueries joined null-safely on the group keys, because Spark cannot
+#   place a pandas UDAF and a native aggregate in one aggregation
+#   (INVALID_PANDAS_UDF_PLACEMENT, Spark 4.1.2).  The native side is a
+#   plain grouped subquery; the sketch side is the pure-sketch two-phase.
+#   The trade is a second scan of the source.
 #
-# - MIXED statements (sketch + basic aggregates in one SELECT): Spark
-#   cannot place a pandas UDAF and a native aggregate in the same
-#   aggregation (INVALID_PANDAS_UDF_PLACEMENT — verified on 4.1.2), so
-#   since round 9 the statement SPLITS into two subqueries joined
-#   null-safely on the group keys: the native aggregates stay a plain
-#   grouped subquery (Catalyst partial/final, map-side combine); the raw
-#   sketch calls take the same bounded GROUPED_AGG two-phase as
-#   pure-sketch statements. Memory is sketch-bounded at every level on
-#   BOTH sides — this retires the round-8 native-partial inner whose
-#   collect_set BUFFER was O(distinct/fanout) per bucket. The trade is a
-#   second scan of the source (a columnar re-read at 100 TB, not a
-#   buffer blowup; the reference pays one pass with sketch state,
-#   AggregationFunction.java:63,86,132).
+# Both shapes take an optional view builder: PinotEngine's zero-shuffle
+# route passes one that builds partition-local partials in one
+# mapInPandas pass (operators/theta.grouped_sketch_partials), and the
+# outer merge then reads that view instead of the bucketed inner level,
+# so no raw row is shuffled.
 #
-# Non-canonical statements (set ops/window/subquery-SELECT) route
-# through rewrite_raw_sketch_inexpr_udaf below; only mixed-aggregate
-# non-canonical statements remain on the per-value fallback entries.
+# Non-canonical statements (set-op branches aside, which take the
+# shapes above per branch) route through rewrite_raw_sketch_inexpr_udaf:
+# each call becomes its partial UDAF in place, wrapped by its final.
 # ---------------------------------------------------------------------------
 
+
+@dataclass(frozen=True)
+class _RawFamily:
+    """One raw-sketch aggregation: ``partial(a0, args)`` builds a group's
+    partial blob, ``merge`` names the UDF merging a collect_list of
+    partial blobs, ``final`` wraps the merged blob (``{}`` keeps it), and
+    ``zs(a0, args)`` is the zero-shuffle descriptor
+    (operators/theta.grouped_sketch_partials) or None when the call has
+    no partition-local build."""
+
+    partial: Callable[[str, list[str]], str]
+    merge: str
+    final: str
+    zs: Callable[[str, list[str]], tuple | None]
+
+    def merged(self, col: str) -> str:
+        """The final value over a column of partial blobs."""
+        return self.final.format(f"{self.merge}(collect_list({col}))")
+
+
+def _tuple_family(final: str) -> _RawFamily:
+    return _RawFamily(
+        lambda a0, a: f"__tuple_partial({a0})",
+        "__tuple_merge_sum",
+        final,
+        lambda a0, a: ("tuple", *p) if (p := _parse_tuple_build(a0)) else None,
+    )
+
+
+def _freq_family(fl: str) -> _RawFamily:
+    return _RawFamily(
+        lambda a0, a: f"__freq_{fl}_partial({a0}, {_max_map_size(a)})",
+        f"__freq_{fl}_merge",
+        "{}",
+        lambda a0, a: (f"freq_{fl}", a0, _max_map_size(a)),
+    )
+
+
+_TDIGEST_FAMILY = _RawFamily(
+    lambda a0, a: f"__tdigest_partial({a0})",
+    "__tdigest_merge",
+    "{}",
+    lambda a0, a: ("tdigest", a0),
+)
+
+_RAW_FAMILIES: dict[str, _RawFamily] = {
+    "distinctcountrawthetasketch": _RawFamily(
+        lambda a0, a: "__theta_partial({}, {}, {})".format(
+            *_split_hash_expr(a0), _theta_nominal_entries(a)
+        ),
+        "__theta_merge_blobs",
+        "{}",
+        lambda a0, a: ("theta", a0, _theta_nominal_entries(a)),
+    ),
+    "distinctcountrawintegersumtuplesketch": _tuple_family("{}"),
+    "sumvaluesintegersumtuplesketch": _tuple_family("__tuple_sum_values({})"),
+    "avgvalueintegersumtuplesketch": _tuple_family("__tuple_avg_value({})"),
+    "distinctcounttuplesketch": _tuple_family("__tuple_estimate({})"),
+    "distinctcountrawhllmv": _RawFamily(
+        lambda a0, a: (
+            f"__cs_hll_mv_partial({_cs_hll_pairs_arr_sql(a0, _log2m(a))}, "
+            f"{_log2m(a)})"
+        ),
+        "__cs_hll_merge_blobs",
+        "{}",
+        lambda a0, a: ("cs_hll", a0, _log2m(a)),
+    ),
+    "distinctcountrawhllplusmv": _RawFamily(
+        lambda a0, a: (
+            "__cs_hllpp_mv_partial(__cs_hllpp_pairs_arr({0}, typeof({0}), {1}), "
+            "{1}, {2})".format(a0, *_hllpp_params(a))
+        ),
+        "__cs_hll_merge_blobs",
+        "{}",
+        lambda a0, a: ("cs_hllpp", a0, *_hllpp_params(a)),
+    ),
+    "frequentstringssketch": _freq_family("str"),
+    "frequentlongssketch": _freq_family("long"),
+    "percentilerawestmv": _TDIGEST_FAMILY,
+    "percentilerawkllmv": _TDIGEST_FAMILY,
+    "percentilerawtdigestmv": _TDIGEST_FAMILY,
+}
+
+# Pinot canonicalizes function names by dropping every underscore, so
+# an underscore may sit between any two letters of a name
 _RAW_SKETCH_CALL_RE = re.compile(
-    r"\b(?P<name>DISTINCT_?COUNT_?RAW_?THETA_?SKETCH"
-    r"|DISTINCT_?COUNT_?RAW_?INTEGER_?SUM_?TUPLE_?SKETCH"
-    r"|SUM_?VALUES_?INTEGER_?SUM_?TUPLE_?SKETCH"
-    r"|AVG_?VALUE_?INTEGER_?SUM_?TUPLE_?SKETCH"
-    r"|DISTINCT_?COUNT_?TUPLE_?SKETCH"
-    r"|DISTINCT_?COUNT_?RAW_?HLL(?:_?PLUS)?_?MV"
-    r"|FREQUENT_?STRINGS_?SKETCH|FREQUENT_?LONGS_?SKETCH"
-    r"|PERCENTILE_?RAW_?(?:EST|KLL|TDIGEST)_?MV)\s*\(",
+    r"\b(?P<name>" + "|".join("_?".join(n) for n in _RAW_FAMILIES) + r")\s*\(",
     re.IGNORECASE,
 )
+
+
+def _raw_calls(s: str):
+    """Yield ``(start, close, canonical name, args)`` for each raw-sketch
+    call outside string literals, left to right; ``close`` indexes the
+    call's closing paren.  Calls nested in another call's arguments are
+    not yielded."""
+    spans = _literal_spans(s)
+    i = 0
+    while True:
+        m = _RAW_SKETCH_CALL_RE.search(s, i)
+        while m and any(a <= m.start() < b for a, b in spans):
+            m = _RAW_SKETCH_CALL_RE.search(s, m.end())
+        if not m:
+            return
+        open_idx = s.index("(", m.end() - 1)
+        close = _find_matching(s, open_idx)
+        name = m.group("name").replace("_", "").lower()
+        yield m.start(), close, name, _split_args(s[open_idx + 1 : close])
+        i = close + 1
+
+
+def _sub_raw_calls(s: str, repl: Callable[[str, list[str]], str]) -> str:
+    """Replace each raw-sketch call of ``s`` with ``repl(name, args)``."""
+    out, i = [], 0
+    for start, close, name, args in _raw_calls(s):
+        out += [s[i:start], repl(name, args)]
+        i = close + 1
+    out.append(s[i:])
+    return "".join(out)
 # raw-sketch names that can appear in WINDOW position (superset of
 # _RAW_SKETCH_CALL_RE: adds the plain HLL/HLLPLUS/ULL and non-MV
 # percentile-raw forms, whose grouped fallbacks are bounded but whose
@@ -4032,26 +4127,6 @@ _RS_SCALAR_ALLOW = {
 _RS_FANOUT = 256
 
 
-def _strip_raw_calls(s: str) -> str:
-    """Excise every raw-sketch call span (name through matching close
-    paren) so co-occurring aggregate detection can't be confused by
-    aggregate-looking text inside the sketch arguments."""
-    out, i = [], 0
-    spans = _literal_spans(s)
-    while True:
-        m = _RAW_SKETCH_CALL_RE.search(s, i)
-        while m and any(a <= m.start() < b for a, b in spans):
-            m = _RAW_SKETCH_CALL_RE.search(s, m.end())
-        if not m:
-            out.append(s[i:])
-            break
-        open_idx = s.index("(", m.end() - 1)
-        close_idx = _find_matching(s, open_idx)
-        out.append(s[i : m.start()])
-        i = close_idx + 1
-    return "".join(out)
-
-
 def _search_outside_literals(pattern: re.Pattern, s: str):
     spans = _literal_spans(s)
     m = pattern.search(s)
@@ -4222,70 +4297,6 @@ def _parse_canonical_stmt(
     }
 
 
-def _rs_pandas_forms(name: str, args: list[str], n: int) -> tuple[str, str]:
-    """(inner partial expr, outer final-merge expr over ``__rs{n}``) for
-    the GROUPED_AGG pandas path — the aggregation state IS the sketch
-    blob at every level (the reference's partial-state contract,
-    AggregationFunction.java:63,86,132)."""
-    a0 = args[0].strip()
-    if name == "distinctcountrawhllplusmv":
-        p, sp = _hllpp_params(args)
-        pairs_arr = f"__cs_hllpp_pairs_arr({a0}, typeof({a0}), {p})"
-        return (
-            f"__cs_hllpp_mv_partial({pairs_arr}, {p}, {sp})",
-            f"__cs_hll_merge_blobs(collect_list(__rs{n}))",
-        )
-    if name == "distinctcountrawhllmv":
-        log2m = (
-            int(args[1].strip())
-            if len(args) > 1 and args[1].strip().isdigit()
-            else 8
-        )
-        return (
-            f"__cs_hll_mv_partial({_cs_hll_pairs_arr_sql(a0, log2m)}, {log2m})",
-            f"__cs_hll_merge_blobs(collect_list(__rs{n}))",
-        )
-    if name in ("percentilerawestmv", "percentilerawkllmv", "percentilerawtdigestmv"):
-        return (
-            f"__tdigest_partial({a0})",
-            f"__tdigest_merge(collect_list(__rs{n}))",
-        )
-    if name == "distinctcountrawthetasketch":
-        k = _theta_nominal_entries(args)
-        hi, lo = _split_hash_expr(a0)
-        return (
-            f"__theta_partial({hi}, {lo}, {k})",
-            f"__theta_merge_blobs(collect_list(__rs{n}))",
-        )
-    if name in ("frequentstringssketch", "frequentlongssketch"):
-        mm = (
-            args[1].strip()
-            if len(args) > 1 and args[1].strip().isdigit()
-            else "256"
-        )
-        fl = "str" if name == "frequentstringssketch" else "long"
-        return (
-            f"__freq_{fl}_partial({a0}, {mm})",
-            f"__freq_{fl}_merge(collect_list(__rs{n}))",
-        )
-    merged = f"__tuple_merge_sum(collect_list(__rs{n}))"
-    return (
-        f"__tuple_partial({a0})",
-        {
-            "distinctcountrawintegersumtuplesketch": merged,
-            "distinctcounttuplesketch": f"__tuple_estimate({merged})",
-            "sumvaluesintegersumtuplesketch": f"__tuple_sum_values({merged})",
-            "avgvalueintegersumtuplesketch": f"__tuple_avg_value({merged})",
-        }[name],
-    )
-
-
-_TUPLE_RAW_NAMES = {
-    "distinctcountrawintegersumtuplesketch", "distinctcounttuplesketch",
-    "sumvaluesintegersumtuplesketch", "avgvalueintegersumtuplesketch",
-}
-
-
 def _parse_tuple_build(a0: str):
     """``TO_INTEGER_SUM_TUPLE_SKETCH(key, val[, lgK])`` call text →
     (key expr, value expr, nominal k) or None when ``a0`` is anything
@@ -4303,62 +4314,6 @@ def _parse_tuple_build(a0: str):
         return None
     k = 2 ** int(args[2]) if len(args) > 2 and args[2].strip().isdigit() else 4096
     return args[0].strip(), args[1].strip(), k
-
-
-def _zs_descriptor(name: str, args: list[str]):
-    """Zero-shuffle call descriptor for the grouped-partials route:
-    ("theta", a0, k), ("tuple", key, val, k), ("cs_hll", arr, log2m),
-    ("cs_hllpp", arr, p, sp), ("tdigest", arr), ("freq_str"|"freq_long",
-    arr, max_map_size), or None (not routable)."""
-    if name == "distinctcountrawthetasketch":
-        return ("theta", args[0].strip(), _theta_nominal_entries(args))
-    if name in _TUPLE_RAW_NAMES:
-        p = _parse_tuple_build(args[0])
-        if p:
-            return ("tuple", p[0], p[1], p[2])
-    if name == "distinctcountrawhllplusmv":
-        p, sp = _hllpp_params(args)
-        return ("cs_hllpp", args[0].strip(), p, sp)
-    if name == "distinctcountrawhllmv":
-        log2m = (
-            int(args[1].strip())
-            if len(args) > 1 and args[1].strip().isdigit()
-            else 8
-        )
-        return ("cs_hll", args[0].strip(), log2m)
-    if name in ("percentilerawestmv", "percentilerawkllmv", "percentilerawtdigestmv"):
-        return ("tdigest", args[0].strip())
-    if name in ("frequentstringssketch", "frequentlongssketch"):
-        mm = (
-            int(args[1].strip())
-            if len(args) > 1 and args[1].strip().isdigit()
-            else 256
-        )
-        kind = "freq_str" if name == "frequentstringssketch" else "freq_long"
-        return (kind, args[0].strip(), mm)
-    return None
-
-
-def _zs_final(name: str, col: str) -> str:
-    """Final merge expression over a partials-view blob column for the
-    given raw-sketch canonical name."""
-    if name == "distinctcountrawthetasketch":
-        return f"__theta_merge_blobs(collect_list({col}))"
-    if name in ("distinctcountrawhllmv", "distinctcountrawhllplusmv"):
-        return f"__cs_hll_merge_blobs(collect_list({col}))"
-    if name in ("percentilerawestmv", "percentilerawkllmv", "percentilerawtdigestmv"):
-        return f"__tdigest_merge(collect_list({col}))"
-    if name == "frequentstringssketch":
-        return f"__freq_str_merge(collect_list({col}))"
-    if name == "frequentlongssketch":
-        return f"__freq_long_merge(collect_list({col}))"
-    merged = f"__tuple_merge_sum(collect_list({col}))"
-    return {
-        "distinctcountrawintegersumtuplesketch": merged,
-        "distinctcounttuplesketch": f"__tuple_estimate({merged})",
-        "sumvaluesintegersumtuplesketch": f"__tuple_sum_values({merged})",
-        "avgvalueintegersumtuplesketch": f"__tuple_avg_value({merged})",
-    }[name]
 
 
 def _alias_map_of(items: list[str]) -> dict[str, str]:
@@ -4398,11 +4353,19 @@ def _replace_word_outside_literals(text: str, word: str, repl: str) -> str:
     return "".join(out)
 
 
-def rewrite_raw_sketch_two_phase(sql: str) -> str:
-    """Restructure ``SELECT [keys,] ...RAW_THETA/TUPLE_SKETCH aggs...
-    FROM t [WHERE] [GROUP BY keys] [ORDER BY/LIMIT]`` into the bounded
+def rewrite_raw_sketch_two_phase(sql: str, view_builder=None) -> str:
+    """Restructure ``SELECT [keys,] ...raw sketch aggs... FROM t [WHERE]
+    [GROUP BY keys] [HAVING] [ORDER BY/LIMIT]`` into the bounded
     two-phase shape (see block comment). Returns the SQL unchanged when
-    the statement doesn't match the canonical shape."""
+    the statement doesn't match the canonical shape.
+
+    ``view_builder(stmt, keys, calls)`` (PinotEngine's zero-shuffle
+    route) receives the parsed statement, the group keys and every raw
+    call's zero-shuffle descriptor in call order, when every call has
+    one.  It may register a temp view of per-group partials, columns
+    ``__rs0..`` in call order, and return its name; the merge level then
+    reads that view instead of the bucketed inner level.  Returning None
+    keeps the bucketed inner level."""
     if not _RAW_SKETCH_CALL_RE.search(sql):
         return sql
     if re.search(r"\bOVER\s*\(", sql, re.IGNORECASE):
@@ -4426,43 +4389,25 @@ def rewrite_raw_sketch_two_phase(sql: str) -> str:
     # statements that also aggregate natively split into two subqueries
     # joined on the group keys (no pandas/native mixing in one SELECT)
     has_basic = any(
-        _search_outside_literals(_BASIC_AGG_CALL_RE, _strip_raw_calls(item))
+        _search_outside_literals(
+            _BASIC_AGG_CALL_RE, _sub_raw_calls(item, lambda name, args: "")
+        )
         for item in items + ([stmt["having"]] if stmt["having"] else [])
     )
     if has_basic:
-        return _rewrite_mixed_split(sql, stmt, keys, items)
+        return _rewrite_mixed_split(sql, stmt, keys, items, view_builder)
     partials: list[str] = []
+    calls: list[tuple | None] = []
     placeholders: dict[str, str] = {}
     bucket_arg: list[str] = []
-    seq = [0]
 
-    def hoist_raw(item: str) -> str:
-        out = []
-        i = 0
-        spans = _literal_spans(item)
-        while True:
-            m = _RAW_SKETCH_CALL_RE.search(item, i)
-            while m and any(a <= m.start() < b for a, b in spans):
-                m = _RAW_SKETCH_CALL_RE.search(item, m.end())
-            if not m:
-                out.append(item[i:])
-                break
-            open_idx = item.index("(", m.end() - 1)
-            close_idx = _find_matching(item, open_idx)
-            args = _split_args(item[open_idx + 1 : close_idx])
-            name = re.sub("_", "", m.group("name")).lower()
-            n = seq[0]
-            seq[0] += 1
-            if not bucket_arg:
-                bucket_arg.append(args[0].strip())
-            partial, outer = _rs_pandas_forms(name, args, n)
-            partials.append(f"{partial} AS __rs{n}")
-            ph = f"__RSPH{n}__"
-            placeholders[ph] = outer
-            out.append(item[i : m.start()])
-            out.append(ph)
-            i = close_idx + 1
-        return "".join(out)
+    def hoist_raw(name: str, args: list[str]) -> str:
+        fam, a0, n = _RAW_FAMILIES[name], args[0].strip(), len(partials)
+        bucket_arg.append(a0)
+        partials.append(f"{fam.partial(a0, args)} AS __rs{n}")
+        calls.append(fam.zs(a0, args))
+        placeholders[f"__RSPH{n}__"] = fam.merged(f"__rs{n}")
+        return f"__RSPH{n}__"
 
     rebuilt: list[str] = []
     for item in items:
@@ -4471,7 +4416,7 @@ def rewrite_raw_sketch_two_phase(sql: str) -> str:
         if expr.strip() in keys:
             rebuilt.append(item)
             continue
-        expr2 = hoist_raw(expr)
+        expr2 = _sub_raw_calls(expr, hoist_raw)
         # every remaining call must be an allowed scalar wrapper
         for cm in re.finditer(r"\b([A-Za-z_][A-Za-z0-9_]*)\s*\(", expr2):
             if re.sub("_", "", cm.group(1)).lower() not in _RS_SCALAR_ALLOW:
@@ -4482,7 +4427,7 @@ def rewrite_raw_sketch_two_phase(sql: str) -> str:
         # the HAVING predicate rides on the OUTER aggregation: its raw
         # calls hoist exactly like select items (alias references pass
         # through — Spark resolves select aliases in HAVING)
-        having2 = hoist_raw(having2)
+        having2 = _sub_raw_calls(having2, hoist_raw)
         for cm in re.finditer(r"\b([A-Za-z_][A-Za-z0-9_]*)\s*\(", having2):
             if re.sub("_", "", cm.group(1)).lower() not in _RS_SCALAR_ALLOW:
                 return sql
@@ -4493,20 +4438,22 @@ def rewrite_raw_sketch_two_phase(sql: str) -> str:
         if having2:
             having2 = having2.replace(ph, outer)
 
-    bucket = f"pmod(xxhash64({bucket_arg[0]}), {_RS_FANOUT})"
-    inner_select = ", ".join(keys + partials)
-    inner_group = ", ".join(keys + [bucket])
-    where = stmt["where"]
-    inner = (
-        f"SELECT {inner_select} FROM {stmt['table']}"
-        + (f" WHERE {where}" if where else "")
-        + f" GROUP BY {inner_group}"
-    )
+    source = None
+    if view_builder is not None and None not in calls:
+        source = view_builder(stmt, keys, calls)
+    if source is None:
+        bucket = f"pmod(xxhash64({bucket_arg[0]}), {_RS_FANOUT})"
+        where = stmt["where"]
+        source = (
+            f"(SELECT {', '.join(keys + partials)} FROM {stmt['table']}"
+            + (f" WHERE {where}" if where else "")
+            + f" GROUP BY {', '.join(keys + [bucket])})"
+        )
     outer_group = f" GROUP BY {', '.join(keys)}" if keys else ""
     having_sql = f" HAVING {having2}" if having2 else ""
     tail = stmt["tail"] or ""
     return (
-        f"SELECT {', '.join(rebuilt)} FROM ({inner}) "
+        f"SELECT {', '.join(rebuilt)} FROM {source} "
         f"__rs_partials{outer_group}{having_sql}{tail}"
     )
 
@@ -4516,7 +4463,7 @@ def _rewrite_mixed_split(
     stmt: dict[str, str | None],
     keys: list[str],
     items: list[str],
-    theta_view_builder=None,
+    view_builder=None,
 ) -> str:
     """MIXED raw-sketch statements (native aggregates + raw sketch names
     in one SELECT/HAVING) split into two subqueries joined NULL-SAFELY
@@ -4530,13 +4477,9 @@ def _rewrite_mixed_split(
     buffer blowup. Returns ``sql`` unchanged when the statement resists
     the split (exotic aggregates mixed into a sketch expression).
 
-    ``theta_view_builder`` (engine-provided, round 9): when every raw
-    call is a theta sketch, the callback receives [(a0, k), ...] and may
-    register a ZERO-SHUFFLE partials temp view (one mapInPandas pass,
-    operators/theta.grouped_sketch_partials) returning its name — the
-    sketch subquery then merges view blobs instead of running the
-    bucketed GROUPED_AGG inner, so neither side of the split shuffles
-    raw rows. Returning None keeps the bucketed SQL inner."""
+    ``view_builder`` is ``rewrite_raw_sketch_two_phase``'s: a view it
+    returns feeds the sketch subquery's merge, so neither side of the
+    split shuffles raw rows."""
     NAT, SK = "__rsn", "__rss"
     sk_partials: list[str] = []
     sk_finals: list[str] = []
@@ -4544,35 +4487,17 @@ def _rewrite_mixed_split(
     bucket_arg: list[str] = []
     seq = [0]
     zs_calls: list = []  # zero-shuffle descriptors, view order (or None)
-    call_meta: list[tuple[int, str]] = []  # (seq n, canonical name)
+    call_meta: list[tuple[int, _RawFamily]] = []  # (seq n, family)
 
-    def hoist_raw(item: str) -> str:
-        out, i = [], 0
-        spans = _literal_spans(item)
-        while True:
-            m = _RAW_SKETCH_CALL_RE.search(item, i)
-            while m and any(a <= m.start() < b for a, b in spans):
-                m = _RAW_SKETCH_CALL_RE.search(item, m.end())
-            if not m:
-                out.append(item[i:])
-                break
-            open_idx = item.index("(", m.end() - 1)
-            close_idx = _find_matching(item, open_idx)
-            args = _split_args(item[open_idx + 1 : close_idx])
-            name = re.sub("_", "", m.group("name")).lower()
-            n = seq[0]
-            seq[0] += 1
-            if not bucket_arg:
-                bucket_arg.append(args[0].strip())
-            partial, final = _rs_pandas_forms(name, args, n)
-            sk_partials.append(f"{partial} AS __rs{n}")
-            sk_finals.append(f"{final} AS __rsph{n}")
-            zs_calls.append(_zs_descriptor(name, args))
-            call_meta.append((n, name))
-            out.append(item[i : m.start()])
-            out.append(f"{SK}.__rsph{n}")
-            i = close_idx + 1
-        return "".join(out)
+    def hoist_raw(name: str, args: list[str]) -> str:
+        fam, a0, n = _RAW_FAMILIES[name], args[0].strip(), seq[0]
+        seq[0] += 1
+        bucket_arg.append(a0)
+        sk_partials.append(f"{fam.partial(a0, args)} AS __rs{n}")
+        sk_finals.append(f"{fam.merged(f'__rs{n}')} AS __rsph{n}")
+        zs_calls.append(fam.zs(a0, args))
+        call_meta.append((n, fam))
+        return f"{SK}.__rsph{n}"
 
     def hoist_basic(item: str) -> str:
         # native aggregate calls move VERBATIM into the native subquery
@@ -4625,7 +4550,7 @@ def _rewrite_mixed_split(
             if alias:
                 alias_map[alias] = out_ref
             continue
-        e2 = hoist_basic(hoist_raw(expr))
+        e2 = hoist_basic(_sub_raw_calls(expr, hoist_raw))
         for cm in re.finditer(r"\b([A-Za-z_][A-Za-z0-9_]*)\s*\(", e2):
             if re.sub("_", "", cm.group(1)).lower() not in _RS_SCALAR_ALLOW:
                 return sql
@@ -4642,7 +4567,7 @@ def _rewrite_mixed_split(
             having2 = _replace_word_outside_literals(
                 having2, alias, f"({out_ref})"
             )
-        having2 = hoist_basic(hoist_raw(having2))
+        having2 = hoist_basic(_sub_raw_calls(having2, hoist_raw))
         for cm in re.finditer(r"\b([A-Za-z_][A-Za-z0-9_]*)\s*\(", having2):
             if re.sub("_", "", cm.group(1)).lower() not in _RS_SCALAR_ALLOW:
                 return sql
@@ -4656,16 +4581,14 @@ def _rewrite_mixed_split(
         + (f" GROUP BY {key_csv}" if keys else "")
     )
     view = None
-    if theta_view_builder is not None and zs_calls and all(
-        c is not None for c in zs_calls
-    ):
-        view = theta_view_builder(zs_calls)
+    if view_builder is not None and None not in zs_calls:
+        view = view_builder(stmt, keys, zs_calls)
     if view is not None:
         # zero-shuffle sketch side: view columns __rs0.. are in CALL
         # order; re-alias the merges to the seq-numbered __rsph refs
         finals = [
-            f"{_zs_final(name, f'__rs{j}')} AS __rsph{n}"
-            for j, (n, name) in enumerate(call_meta)
+            f"{fam.merged(f'__rs{j}')} AS __rsph{n}"
+            for j, (n, fam) in enumerate(call_meta)
         ]
         sk_sub = (
             f"SELECT {', '.join(keys + finals)} FROM {view} __rs_partials"
@@ -4720,41 +4643,6 @@ _RS_INEXPR_ALLOW = {
 }
 
 
-def _inexpr_udaf_expr(name: str, args: list[str]) -> str:
-    a0 = args[0].strip()
-    if name == "distinctcountrawthetasketch":
-        k = _theta_nominal_entries(args)
-        hi, lo = _split_hash_expr(a0)
-        return f"__theta_partial({hi}, {lo}, {k})"
-    if name == "distinctcountrawintegersumtuplesketch":
-        return f"__tuple_partial({a0})"
-    if name == "distinctcounttuplesketch":
-        return f"__tuple_estimate(__tuple_partial({a0}))"
-    if name == "sumvaluesintegersumtuplesketch":
-        return f"__tuple_sum_values(__tuple_partial({a0}))"
-    if name == "avgvalueintegersumtuplesketch":
-        return f"__tuple_avg_value(__tuple_partial({a0}))"
-    if name in ("percentilerawestmv", "percentilerawkllmv", "percentilerawtdigestmv"):
-        return f"__tdigest_partial({a0})"
-    if name in ("frequentstringssketch", "frequentlongssketch"):
-        mm = args[1].strip() if len(args) > 1 and args[1].strip().isdigit() else "256"
-        fl = "str" if name == "frequentstringssketch" else "long"
-        return f"__freq_{fl}_partial({a0}, {mm})"
-    # distinctcountrawhllmv / plusmv
-    if name == "distinctcountrawhllplusmv":
-        p, sp = _hllpp_params(args)
-        return (
-            f"__cs_hllpp_mv_partial("
-            f"__cs_hllpp_pairs_arr({a0}, typeof({a0}), {p}), {p}, {sp})"
-        )
-    log2m = (
-        int(args[1].strip())
-        if len(args) > 1 and args[1].strip().isdigit()
-        else 8
-    )
-    return f"__cs_hll_mv_partial({_cs_hll_pairs_arr_sql(a0, log2m)}, {log2m})"
-
-
 def rewrite_raw_sketch_inexpr_udaf(sql: str) -> str:
     """Bounded aggregation for raw THETA/TUPLE/MV-digest/MV-HLL names in
     NON-canonical statements (JOIN / HAVING / subqueries — shapes where
@@ -4772,29 +4660,18 @@ def rewrite_raw_sketch_inexpr_udaf(sql: str) -> str:
     # collect_set but constrain pandas UDAFs (unbounded frames only)
     if re.search(r"\bOVER\s*\(", sql, re.IGNORECASE):
         return sql
-    stripped = _strip_raw_calls(sql)
+    stripped = _sub_raw_calls(sql, lambda name, args: "")
     for cm in re.finditer(r"\b([A-Za-z_][A-Za-z0-9_]*)\s*\(", stripped):
         if any(a <= cm.start() < b for a, b in _literal_spans(stripped)):
             continue
         if re.sub("_", "", cm.group(1)).lower() not in _RS_INEXPR_ALLOW:
             return sql
-    out, i = [], 0
-    spans = _literal_spans(sql)
-    while True:
-        m = _RAW_SKETCH_CALL_RE.search(sql, i)
-        while m and any(a <= m.start() < b for a, b in spans):
-            m = _RAW_SKETCH_CALL_RE.search(sql, m.end())
-        if not m:
-            out.append(sql[i:])
-            break
-        open_idx = sql.index("(", m.end() - 1)
-        close_idx = _find_matching(sql, open_idx)
-        args = _split_args(sql[open_idx + 1 : close_idx])
-        name = re.sub("_", "", m.group("name")).lower()
-        out.append(sql[i : m.start()])
-        out.append(_inexpr_udaf_expr(name, args))
-        i = close_idx + 1
-    return "".join(out)
+
+    def in_place(name: str, args: list[str]) -> str:
+        fam = _RAW_FAMILIES[name]
+        return fam.final.format(fam.partial(args[0].strip(), args))
+
+    return _sub_raw_calls(sql, in_place)
 
 
 _THETA_BLOB_CALL_RE = re.compile(
@@ -6910,7 +6787,7 @@ class PinotEngine:
         if routed is not None:
             return routed
         pinot_sql = self._normalize_sketch_group_keys(pinot_sql)
-        routed = self._route_pure_theta_zero_shuffle(pinot_sql)
+        routed = self._route_raw_sketch_zero_shuffle(pinot_sql)
         if routed is not None:
             return routed
         if _GEO_SQL_RE.search(pinot_sql):
@@ -7100,7 +6977,7 @@ class PinotEngine:
         as hi/lo halves (nullable BIGINT → pandas float64 is lossy
         past 2^53)."""
         col = args[0]
-        wrap = "{c}"
+        wrap = "{}"
         if canonical == "distinctcountrawthetasketch":
             k = _theta_nominal_entries(args)
             base = (
@@ -7120,18 +6997,9 @@ class PinotEngine:
             "sumvaluesintegersumtuplesketch",
             "avgvalueintegersumtuplesketch",
         ):
-            wrap = {
-                "distinctcounttuplesketch": "__tuple_estimate({c})",
-                "sumvaluesintegersumtuplesketch": "__tuple_sum_values({c})",
-                "avgvalueintegersumtuplesketch": "__tuple_avg_value({c})",
-            }.get(canonical, "{c}")
-            return ("tuple", (), [col], False, wrap)
+            return ("tuple", (), [col], False, _RAW_FAMILIES[canonical].final)
         if canonical in ("distinctcountrawhll", "distinctcountrawhllmv"):
-            log2m = (
-                int(args[1])
-                if len(args) > 1 and args[1].strip().isdigit()
-                else 8
-            )
+            log2m = _log2m(args)
             mv = canonical.endswith("mv")
             tok = (
                 _cs_hll_pairs_arr_sql(col, log2m)
@@ -7158,14 +7026,10 @@ class PinotEngine:
         if canonical in ("distinctcountrawcpcsketch", "distinctcountcpcsketch"):
             lgk = _cpc_lgk(args)
             if canonical == "distinctcountcpcsketch":
-                wrap = "__cpc_estimate({c})"
+                wrap = "__cpc_estimate({})"
             return ("cpc", (lgk,), [_cpc_coupon_sql(col, lgk)], False, wrap)
         if canonical in ("frequentstringssketch", "frequentlongssketch"):
-            mm = (
-                int(args[1])
-                if len(args) > 1 and args[1].strip().isdigit()
-                else 256
-            )
+            mm = _max_map_size(args)
             strings = canonical == "frequentstringssketch"
             # resolved-type probe (analysis only, no execution): BYTES
             # columns MERGE as foreign sketches — the reference's
@@ -7275,7 +7139,7 @@ class PinotEngine:
             wrap = specs[i][7]
             body = (
                 body[:start]
-                + wrap.format(c=f"__rswr_{i}")
+                + wrap.format(f"__rswr_{i}")
                 + body[oclose + 1 :]
             )
 
@@ -7435,13 +7299,14 @@ class PinotEngine:
         )
         return cand
 
-    def _route_pure_theta_zero_shuffle(self, pinot_sql: str) -> DataFrame | None:
-        """Map-side combine for canonical raw-theta statements — pure
+    def _route_raw_sketch_zero_shuffle(self, pinot_sql: str) -> DataFrame | None:
+        """Map-side combine for canonical raw-sketch statements — pure
         AND mixed, single tables AND join trees: the SQL two-phase's
         GROUPED_AGG inner shuffles O(rows) on (keys, bucket) because
         pandas UDAFs have no partial aggregation, where the reference
         ships segment-local sketches (LeafOperator → broker merge).
-        This route executes the FROM/WHERE as a DataFrame (one
+        This route runs ``rewrite_raw_sketch_two_phase`` with a view
+        builder that executes the FROM/WHERE as a DataFrame (one
         translated mini-statement, so join trees, Pinot functions in
         WHERE, and null-default views all resolve), builds
         partition-local per-group sketch partials in ONE mapInPandas
@@ -7460,28 +7325,20 @@ class PinotEngine:
         key now has an exact carrier.
 
         Declines (returns None → the bounded SQL two-phase / bucketed
-        split handles it) when: any raw name is not theta, keys are not
-        plain columns or are of a non-Pinot type (array/map/struct/
-        binary), or the source mini-statement fails to analyze."""
+        split handles it) when the statement is not canonical, a raw
+        call has no zero-shuffle descriptor (a tuple sketch over a
+        pre-built blob), a frequent-items argument is not a plain
+        string or integer value, keys are not plain columns or are of a
+        non-Pinot type (array/map/struct/binary), or the source
+        mini-statement fails to analyze."""
         options, sql = split_options(pinot_sql)
         if not _RAW_SKETCH_CALL_RE.search(sql):
             return None
-        if re.search(r"\bOVER\s*\(", sql, re.IGNORECASE):
-            return None
-        sql = rewrite_quoted_identifiers(sql)
-        stmt = _parse_canonical_stmt(sql, allow_join=True)
-        if stmt is None:
-            return None
-        group = stmt["group"]
-        keys = [g.strip() for g in _split_args(group)] if group else []
-        if any(not re.fullmatch(r"[A-Za-z_]\w*", k) for k in keys):
-            return None
-        items = [x.strip() for x in _split_args(stmt["select"])]
-        if _keys_shadowed_by_alias(keys, items):
-            return None  # unresolvable in generated subqueries
         prefix = "".join(f"SET {k}={v};" for k, v in options.items())
 
-        def build_partials_view(zs_calls: list[tuple]) -> str | None:
+        def build_partials_view(
+            stmt: dict, keys: list[str], zs_calls: list[tuple]
+        ) -> str | None:
             """Translate + analyze the FROM/WHERE once, hash each sketch
             arg JVM-side (split 32-bit halves; tuple calls also carry an
             exact BIGINT value column), build the mapInPandas grouped
@@ -7676,93 +7533,11 @@ class PinotEngine:
             _ensure_theta_sql_udfs(self.spark)
             return view
 
-        has_basic = any(
-            _search_outside_literals(_BASIC_AGG_CALL_RE, _strip_raw_calls(item))
-            for item in items + ([stmt["having"]] if stmt["having"] else [])
-        )
-        if has_basic:
-            cand = _rewrite_mixed_split(
-                sql, stmt, keys, items, theta_view_builder=build_partials_view
-            )
-            if cand == sql or "__theta_zs_" not in cand:
-                return None  # split declined or fell back to bucketed SQL
-            return self.sql(prefix + cand)
-
-        # --- pure path -------------------------------------------------
-        calls: list[tuple] = []  # zero-shuffle descriptors, view order
-
-        def hoist_raw(item: str) -> str | None:
-            out, i = [], 0
-            spans = _literal_spans(item)
-            while True:
-                m = _RAW_SKETCH_CALL_RE.search(item, i)
-                while m and any(a <= m.start() < b for a, b in spans):
-                    m = _RAW_SKETCH_CALL_RE.search(item, m.end())
-                if not m:
-                    out.append(item[i:])
-                    break
-                name = re.sub("_", "", m.group("name")).lower()
-                open_idx = item.index("(", m.end() - 1)
-                close_idx = _find_matching(item, open_idx)
-                args = _split_args(item[open_idx + 1 : close_idx])
-                d = _zs_descriptor(name, args)
-                if d is None:
-                    return None  # HLL-MV/digest families keep the SQL path
-                n = len(calls)
-                calls.append(d)
-                out.append(item[i : m.start()])
-                out.append(_zs_final(name, f"__rs{n}"))
-                i = close_idx + 1
-            return "".join(out)
-
-        rebuilt: list[str] = []
-        for item in items:
-            am = re.match(
-                r"(?s)^(.*?)\s+AS\s+([A-Za-z_]\w*)\s*$", item, re.IGNORECASE
-            )
-            expr, alias = (am.group(1), am.group(2)) if am else (item, None)
-            if expr.strip() in keys:
-                rebuilt.append(item)
-                continue
-            e2 = hoist_raw(expr)
-            if e2 is None:
-                return None
-            for cm in re.finditer(r"\b([A-Za-z_][A-Za-z0-9_]*)\s*\(", e2):
-                name = re.sub("_", "", cm.group(1)).lower()
-                if name not in _RS_SCALAR_ALLOW and name not in (
-                    "thetamergeblobs", "collectlist", "tuplemergesum",
-                    "tupleestimate", "tuplesumvalues", "tupleavgvalue",
-                    "hllmergeblobs", "cshllmergeblobs", "tdigestmerge",
-                    "freqstrmerge", "freqlongmerge",
-                ):
-                    return None
-            rebuilt.append(e2 + (f" AS {alias}" if alias else ""))
-        having2 = stmt["having"]
-        if having2:
-            having2 = hoist_raw(having2)
-            if having2 is None:
-                return None
-            for cm in re.finditer(r"\b([A-Za-z_][A-Za-z0-9_]*)\s*\(", having2):
-                name = re.sub("_", "", cm.group(1)).lower()
-                if name not in _RS_SCALAR_ALLOW and name not in (
-                    "thetamergeblobs", "collectlist", "tuplemergesum",
-                    "tupleestimate", "tuplesumvalues", "tupleavgvalue",
-                    "hllmergeblobs", "cshllmergeblobs", "tdigestmerge",
-                    "freqstrmerge", "freqlongmerge",
-                ):
-                    return None
-        if not calls:
-            return None
-        view = build_partials_view(calls)
-        if view is None:
-            return None
-        outer_group = f" GROUP BY {', '.join(keys)}" if keys else ""
-        having_sql = f" HAVING {having2}" if having2 else ""
-        tail = stmt["tail"] or ""
-        return self.sql(
-            f"{prefix}SELECT {', '.join(rebuilt)} FROM {view} "
-            f"__rs_partials{outer_group}{having_sql}{tail}"
-        )
+        sql = rewrite_quoted_identifiers(sql)
+        cand = rewrite_raw_sketch_two_phase(sql, view_builder=build_partials_view)
+        if cand == sql or "__theta_zs_" not in cand:
+            return None  # declined, or fell back to the bucketed SQL
+        return self.sql(prefix + cand)
 
     def _explain(self, pinot_sql: str) -> DataFrame:
         """``EXPLAIN PLAN FOR <query>`` (reference: the broker's EXPLAIN

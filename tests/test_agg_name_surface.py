@@ -428,7 +428,9 @@ def test_raw_sketch_rewrite_parse_failure_fails_safe(spark, at, monkeypatch):
     spark.createDataFrame([(1, "a"), (2, "b")], "v int, k string"
                           ).createOrReplaceTempView("rs_failsafe_t")
     monkeypatch.setattr(
-        D, "rewrite_raw_sketch_two_phase", lambda sql: "SELECT ((( FROM"
+        D,
+        "rewrite_raw_sketch_two_phase",
+        lambda sql, view_builder=None: "SELECT ((( FROM",
     )
     rows = at.sql(
         "SELECT GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(v)) "

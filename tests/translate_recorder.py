@@ -22,7 +22,7 @@ import json
 from pinot_spark.dialect import PinotEngine
 from tests.test_translate_golden import _normalize
 
-_ROUTE = "_route_pure_theta_zero_shuffle"
+_ROUTE = "_route_raw_sketch_zero_shuffle"
 _records: dict[str, list[dict]] = {}
 _current = ["<collection>"]
 _originals: dict[str, object] = {}
