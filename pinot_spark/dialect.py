@@ -6549,6 +6549,16 @@ class PinotEngine:
         ).createOrReplaceTempView(view)
         self.upsert_tables[name] = view
 
+    def _substitute_upsert_views(self, sql: str, options: dict[str, str]) -> str:
+        """Point every upsert table of ``sql`` at its latest-row-per-key
+        view, unless the statement sets ``skipUpsert``."""
+        if self.upsert_tables and not any(
+            k.lower() == "skipupsert" and v.strip().lower() in _TRUE_VALUES
+            for k, v in options.items()
+        ):
+            return _substitute_views(sql, self.upsert_tables.get)
+        return sql
+
     def _syntax_ok(self, sql: str) -> bool:
         """Does the text PARSE as a Spark SQL statement? (Catalyst's own
         parser, syntax only — no analysis/resolution, no execution.)"""
@@ -6646,11 +6656,7 @@ class PinotEngine:
             # ASOF) which match plain `FROM <table>` forms
             if not null_handling_enabled(options, self.null_handling_default):
                 sql = _substitute_views(sql, self._ensure_nulldef_view)
-            if self.upsert_tables and not any(
-                k.lower() == "skipupsert" and v.strip().lower() in _TRUE_VALUES
-                for k, v in options.items()
-            ):
-                sql = _substitute_views(sql, self.upsert_tables.get)
+            sql = self._substitute_upsert_views(sql, options)
             sql = self._hoist_heavy_agg_args(sql)
             if _inject_default_limit and not _NO_DEFAULT_LIMIT.get():
                 sql = apply_default_limit(
@@ -7308,7 +7314,7 @@ class PinotEngine:
         This route runs ``rewrite_raw_sketch_two_phase`` with a view
         builder that executes the FROM/WHERE as a DataFrame (one
         translated mini-statement, so join trees, Pinot functions in
-        WHERE, and null-default views all resolve), builds
+        WHERE, and null-default and upsert views all resolve), builds
         partition-local per-group sketch partials in ONE mapInPandas
         pass (operators/theta.grouped_sketch_partials — no row shuffle),
         and re-enters the dialect with the merge statement over a temp
@@ -7435,6 +7441,7 @@ class PinotEngine:
                 mini = rewrite_mv_predicates(self.spark, mini)
                 if not null_handling_enabled(options, self.null_handling_default):
                     mini = _substitute_views(mini, self._ensure_nulldef_view)
+                mini = self._substitute_upsert_views(mini, options)
                 src = self.spark.sql(mini)
                 ok_key_types = ("string", "int", "smallint", "tinyint",
                                 "boolean", "date", "float", "double")
@@ -7570,7 +7577,7 @@ class PinotEngine:
         from pyspark.sql import Window
         from pyspark.sql import functions as F
 
-        _options, sql = split_options(pinot_sql)
+        options, sql = split_options(pinot_sql)
         m = _GAPFILL_CALL_RE.search(sql)
         open_idx = sql.index("(", m.end() - 1)
         close_idx = _find_matching(sql, open_idx)
@@ -7621,6 +7628,7 @@ class PinotEngine:
         from_tail = sql[from_m.end() : tail_end].strip().rstrip(";")
 
         inner_sql = rewrite_mv_predicates(self.spark, rewrite_functions(f"SELECT * FROM {from_tail}"))
+        inner_sql = self._substitute_upsert_views(inner_sql, options)
         inner_df = self.spark.sql(inner_sql)
 
         if in_type == "EPOCH":

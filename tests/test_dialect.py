@@ -548,3 +548,54 @@ def test_theta_sql_udfs_all_registered(spark):
     _ensure_theta_sql_udfs(spark)
     missing = [n for n in _THETA_SQL_UDF_NAMES if not spark.catalog.functionExists(n)]
     assert not missing
+
+
+def _upsert_engine(spark, view: str, rows, schema: str, keys: list[str]):
+    spark.createDataFrame(rows, schema).createOrReplaceTempView(view)
+    eng = PinotEngine(spark)
+    eng.register_upsert_table(view, keys=keys, comparison=["seq"])
+    return eng
+
+
+def test_zero_shuffle_sketch_route_reads_the_upsert_view(spark):
+    """The zero-shuffle sketch route builds its partials from the
+    latest row per key, like every other statement over an upsert
+    table, in both its pure and its mixed (split) shape."""
+    eng = _upsert_engine(
+        spark,
+        "ups_sketch_t",
+        [(k, float(10 * k + v), v) for k in range(3) for v in range(3)],
+        "k int, score double, seq int",
+        ["k"],
+    )
+    est = "GET_THETA_SKETCH_ESTIMATE(DISTINCTCOUNTRAWTHETASKETCH(score))"
+    pure = f"SELECT k, {est} AS e FROM ups_sketch_t GROUP BY k ORDER BY k"
+    mixed = f"SELECT k, COUNT(*) AS n, {est} AS e FROM ups_sketch_t GROUP BY k ORDER BY k"
+    assert [(r.k, r.e) for r in eng.sql(pure).collect()] == [(0, 1), (1, 1), (2, 1)]
+    assert [(r.k, r.n, r.e) for r in eng.sql(mixed).collect()] == [
+        (0, 1, 1), (1, 1, 1), (2, 1, 1)
+    ]
+    raw = eng.sql("SET skipUpsert=true; " + mixed).collect()
+    assert [(r.k, r.n, r.e) for r in raw] == [(0, 3, 3), (1, 3, 3), (2, 3, 3)]
+
+
+def test_gapfill_reads_the_upsert_view(spark):
+    """GAPFILL's inner selection reads the latest row per key: a
+    superseded row neither adds a row to its bucket nor feeds
+    FILL_PREVIOUS_VALUE."""
+    eng = _upsert_engine(
+        spark,
+        "ups_gf_t",
+        [("s1", 60_000, 2.0, 0), ("s1", 60_000, 1.0, 1), ("s1", 180_000, 3.0, 0)],
+        "sk string, tms long, v double, seq int",
+        ["sk", "tms"],
+    )
+    stmt = (
+        "SELECT GAPFILL(tms, '1:MILLISECONDS:EPOCH', '0', '240000', '1:MINUTES', "
+        "FILL(v, 'FILL_PREVIOUS_VALUE'), TIMESERIESON(sk)) AS tms, sk, v "
+        "FROM ups_gf_t ORDER BY sk, tms LIMIT 100"
+    )
+    rows = [(r.tms, r.v) for r in eng.sql(stmt).collect()]
+    assert rows == [(0, None), (60_000, 1.0), (120_000, 1.0), (180_000, 3.0)]
+    raw = eng.sql("SET skipUpsert=true; " + stmt).collect()
+    assert sorted(r.v for r in raw if r.tms == 60_000) == [1.0, 2.0]
