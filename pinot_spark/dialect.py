@@ -6451,7 +6451,8 @@ class PinotEngine:
     upsert_tables: dict[str, str] = field(default_factory=dict)
     # Scoped suppression of the selection default-LIMIT injection for
     # ENGINE-GENERATED derived-table statements (raw-window grouped
-    # subqueries): the zero-shuffle sketch routes re-enter sql()
+    # subqueries and running-window token views; _NO_DEFAULT_LIMIT is
+    # the only switch): the zero-shuffle sketch routes re-enter sql()
     # internally, so a parameter cannot reach every translate() on the
     # path — a dynamically-scoped flag can.  A ContextVar (not an
     # instance attribute) so a concurrent query on another thread of
@@ -6568,9 +6569,7 @@ class PinotEngine:
         except Exception:
             return False
 
-    def translate(
-        self, pinot_sql: str, *, _inject_default_limit: bool = True
-    ) -> tuple[str, dict[str, str]]:
+    def translate(self, pinot_sql: str) -> tuple[str, dict[str, str]]:
         # one schema memo per statement: every schema-aware pass
         # resolves each referenced table once
         memo_token = _SCHEMA_MEMO.set({})
@@ -6658,7 +6657,7 @@ class PinotEngine:
                 sql = _substitute_views(sql, self._ensure_nulldef_view)
             sql = self._substitute_upsert_views(sql, options)
             sql = self._hoist_heavy_agg_args(sql)
-            if _inject_default_limit and not _NO_DEFAULT_LIMIT.get():
+            if not _NO_DEFAULT_LIMIT.get():
                 sql = apply_default_limit(
                     sql, int(options.get("limit", self.default_limit))
                 )
@@ -6739,9 +6738,7 @@ class PinotEngine:
         )
         return rebuilt if self._syntax_ok(rebuilt) else sql
 
-    def sql(
-        self, pinot_sql: str, *, _inject_default_limit: bool = True
-    ) -> DataFrame:
+    def sql(self, pinot_sql: str) -> DataFrame:
         from pinot_spark.ddl import is_ddl
 
         _opts, bare = split_options(pinot_sql)
@@ -6798,9 +6795,7 @@ class PinotEngine:
             return routed
         if _GEO_SQL_RE.search(pinot_sql):
             _ensure_geo_sql_udfs(self.spark)
-        spark_sql, _options = self.translate(
-            pinot_sql, _inject_default_limit=_inject_default_limit
-        )
+        spark_sql, _options = self.translate(pinot_sql)
         try:
             return self.spark.sql(spark_sql)
         except Exception:
@@ -7159,10 +7154,13 @@ class PinotEngine:
         # SinglePartition funneling every ROW through one partition —
         # fatal at scale for this per-row view (the token projection has
         # no raw-sketch names, so plain translate covers it)
-        vsql, _ = self.translate(
-            f"{prefix}SELECT {', '.join(sel)} FROM {stmt['table']}{where}",
-            _inject_default_limit=False,
-        )
+        _ndl_token = _NO_DEFAULT_LIMIT.set(True)
+        try:
+            vsql, _ = self.translate(
+                f"{prefix}SELECT {', '.join(sel)} FROM {stmt['table']}{where}"
+            )
+        finally:
+            _NO_DEFAULT_LIMIT.reset(_ndl_token)
         vdf = self.spark.sql(vsql)
         for i, (pexprs, oitems, mode, fam, params, toks, is_arr, _w) in enumerate(specs):
             vdf = attach_running(
