@@ -3910,6 +3910,8 @@ def _sub_raw_calls(s: str, repl: Callable[[str, list[str]], str]) -> str:
         i = close + 1
     out.append(s[i:])
     return "".join(out)
+
+
 # raw-sketch names that can appear in WINDOW position (superset of
 # _RAW_SKETCH_CALL_RE: adds the plain HLL/HLLPLUS/ULL and non-MV
 # percentile-raw forms, whose grouped fallbacks are bounded but whose
