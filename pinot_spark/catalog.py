@@ -56,7 +56,13 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
     tests/test_vanilla_session.py — is that confs stripped or changed on
     the session between calls are re-applied at the next load_tables.
     The cost is 4 conf-probe py4j round trips per builder call (~1.5 ms),
-    which is not worth weakening the driver-session guarantee for."""
+    which is not worth weakening the driver-session guarantee for.
+
+    Static confs cannot reach a foreign session: ``spark.conf.set`` on
+    one raises, and the loop below swallows that.  So a caller's
+    vanilla session keeps Spark's 100-entry generated-class cache;
+    ``spark.sql.codegen.cache.maxEntries`` stays in
+    ``session.DEFAULT_CONFS`` and out of ``_RUNTIME_CONFS``."""
     for k, v in _RUNTIME_CONFS.items():
         try:
             if spark.conf.get(k, None) != v:

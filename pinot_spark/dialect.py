@@ -6743,12 +6743,12 @@ class PinotEngine:
     def sql(self, pinot_sql: str) -> DataFrame:
         from pinot_spark.ddl import is_ddl
 
-        _opts, bare = split_options(pinot_sql)
+        opts, bare = split_options(pinot_sql)
+        # re-prefixed on every statement this one delegates to, so each
+        # runs under the same options
+        prefix = "".join(f"SET {k}={v};" for k, v in opts.items())
         em = re.match(r"\s*EXPLAIN\s+PLAN\s+FOR\s+", bare, re.IGNORECASE)
         if em:
-            # re-prefix the SET statements so the explained query runs
-            # under the same options
-            prefix = "".join(f"SET {k}={v};" for k, v in _opts.items())
             return self._explain(prefix + bare[em.end() :])
         if is_ddl(pinot_sql):
             # DDL defining-SELECTs get dialect rewrites but NOT the
@@ -6766,7 +6766,6 @@ class PinotEngine:
                 "operation string, name string, rows bigint, rollup_registered boolean",
             )
         if has_gapfill(pinot_sql):
-            options, bare = split_options(pinot_sql)
             span = find_gapfill_subquery(bare)
             if span is None:
                 return self._gapfill(pinot_sql)
@@ -6775,8 +6774,8 @@ class PinotEngine:
             s, e = span
             _ASOF_VIEW_SEQ[0] += 1
             view = f"__gapfill_{_ASOF_VIEW_SEQ[0]}"
-            self._gapfill(bare[s + 1 : e]).createOrReplaceTempView(view)
-            return self.sql(bare[:s] + view + bare[e + 1 :])
+            self._gapfill(prefix + bare[s + 1 : e]).createOrReplaceTempView(view)
+            return self.sql(prefix + bare[:s] + view + bare[e + 1 :])
         if _THETA_VALUE_CALL_RE.search(pinot_sql) and re.search(
             r"\bOVER\s*\(", pinot_sql, re.IGNORECASE
         ):

@@ -396,9 +396,14 @@ def _poly_rings(g):
 def _location_in_polygon(p, rings) -> str:
     """'in' / 'on' / 'out' for Fraction point vs one polygon (even-odd
     across its rings — shell XOR holes), exact ray cast."""
+    return _location_in_segments(p, [_ring_segments(ring) for ring in rings])
+
+
+def _location_in_segments(p, ring_segs) -> str:
+    """_location_in_polygon over rings already cut into segments."""
     inside = False
-    for ring in rings:
-        for a, b in _ring_segments(ring):
+    for segs in ring_segs:
+        for a, b in segs:
             if _on_segment(p, a, b):
                 return "on"
             # half-open rule, exact: edge crosses the horizontal ray
@@ -907,20 +912,29 @@ def union_polygons(polys_rings: list, geog: bool = False):
     if not inputs:
         return ("POLYGON", [], geog)
 
+    # each input's segments and closed bbox, built once: a point outside
+    # the bbox is neither in nor on that polygon (exact pruning)
+    located = []
+    for rings in inputs:
+        ring_segs = [_ring_segments(ring) for ring in rings]
+        xs = [c[0] for segs in ring_segs for seg in segs for c in seg]
+        ys = [c[1] for segs in ring_segs for seg in segs for c in seg]
+        if xs:  # a polygon with no segment is never in or on
+            located.append(((min(xs), max(xs), min(ys), max(ys)), ring_segs))
+
     def loc_in_union(p) -> str:
         best = "out"
-        for rings in inputs:
-            loc = _location_in_polygon(p, rings)
+        for (x0, x1, y0, y1), ring_segs in located:
+            if p[0] < x0 or p[0] > x1 or p[1] < y0 or p[1] > y1:
+                continue
+            loc = _location_in_segments(p, ring_segs)
             if loc == "in":
                 return "in"
             if loc == "on":
                 best = "on"
         return best
 
-    all_segs = []
-    for rings in inputs:
-        for ring in rings:
-            all_segs += _ring_segments(ring)
+    all_segs = [seg for _, ring_segs in located for segs in ring_segs for seg in segs]
 
     # node all edges against each other, dedup as undirected
     # sub-segments.  Exact bbox interval checks prune non-overlapping

@@ -599,3 +599,23 @@ def test_gapfill_reads_the_upsert_view(spark):
     assert rows == [(0, None), (60_000, 1.0), (120_000, 1.0), (180_000, 3.0)]
     raw = eng.sql("SET skipUpsert=true; " + stmt).collect()
     assert sorted(r.v for r in raw if r.tms == 60_000) == [1.0, 2.0]
+
+
+def test_aggregation_over_gapfill_keeps_the_statement_options(spark):
+    """The inner GAPFILL selection and the outer aggregation of a nested
+    GAPFILL both run under the statement's SET options: skipUpsert
+    reaches the superseded row."""
+    eng = _upsert_engine(
+        spark,
+        "ups_gf_nested_t",
+        [("s1", 60_000, 2.0, 0), ("s1", 60_000, 1.0, 1), ("s1", 180_000, 3.0, 0)],
+        "sk string, tms long, v double, seq int",
+        ["sk", "tms"],
+    )
+    stmt = (
+        "SELECT COUNT(*) AS n FROM (SELECT GAPFILL(tms, '1:MILLISECONDS:EPOCH', "
+        "'0', '240000', '1:MINUTES', FILL(v, 'FILL_PREVIOUS_VALUE'), "
+        "TIMESERIESON(sk)) AS tms, sk, v FROM ups_gf_nested_t LIMIT 100)"
+    )
+    assert eng.sql(stmt).collect()[0].n == 4
+    assert eng.sql("SET skipUpsert=true; " + stmt).collect()[0].n == 5
