@@ -3766,12 +3766,17 @@ _THETA_UDF_SESSIONS: weakref.WeakSet = weakref.WeakSet()
 # grouped statement is restructured around that contract:
 #
 # - PURE-SKETCH statements (no co-occurring COUNT/SUM/MIN/MAX/AVG) become
-#   one two-phase statement: the inner level groups by (keys,
-#   pmod(hash, fanout)) and builds partials with the pandas GROUPED_AGG
-#   UDAFs, the outer level merges ≤ fanout bounded blobs per group.  The
-#   aggregation state is the sketch blob at every level.  Pandas
-#   aggregation has no map-side combine, so raw ROWS shuffle on (keys,
-#   bucket): O(rows) shuffle volume for O(sketch) memory.
+#   one two-phase statement: the inner level projects each call's
+#   argument once (``<arg> AS __g{n}`` over the FROM/WHERE), groups by
+#   (keys, pmod(xxhash64(__g0), fanout)) and builds partials with the
+#   pandas GROUPED_AGG UDAFs over ``__g{n}``; the outer level merges
+#   ≤ fanout bounded blobs per group.  The fanout is the smallest among
+#   the statement's families.  The aggregation state is the sketch blob
+#   at every level.  Pandas aggregation has no map-side combine, so raw
+#   ROWS shuffle on (keys, bucket): O(rows) shuffle volume for O(sketch)
+#   memory.  The projection matters when the argument is itself a
+#   pandas UDF (STUNION's __geo_from_text): the bucket and the partial
+#   read one evaluated column instead of running the UDF twice.
 #
 # - MIXED statements (sketch + basic aggregates) split into two
 #   subqueries joined null-safely on the group keys, because Spark cannot
@@ -3789,6 +3794,11 @@ _THETA_UDF_SESSIONS: weakref.WeakSet = weakref.WeakSet()
 # Non-canonical statements (set-op branches aside, which take the
 # shapes above per branch) route through rewrite_raw_sketch_inexpr_udaf:
 # each call becomes its partial UDAF in place, wrapped by its final.
+#
+# STUNION is one more record (StUnionAggregationFunction.java follows
+# the same contract): the partial is the incremental __geo_union_agg
+# fold, the merge is FUNCTION_MAP's own __geo_union_fold over at most
+# 64 partials, and it has no zero-shuffle descriptor.
 # ---------------------------------------------------------------------------
 
 
@@ -3796,15 +3806,18 @@ _THETA_UDF_SESSIONS: weakref.WeakSet = weakref.WeakSet()
 class _RawFamily:
     """One raw-sketch aggregation: ``partial(a0, args)`` builds a group's
     partial blob, ``merge`` names the UDF merging a collect_list of
-    partial blobs, ``final`` wraps the merged blob (``{}`` keeps it), and
+    partial blobs, ``final`` wraps the merged blob (``{}`` keeps it),
     ``zs(a0, args)`` is the zero-shuffle descriptor
     (operators/theta.grouped_sketch_partials) or None when the call has
-    no partition-local build."""
+    no partition-local build (``zs=None``: never has one), and
+    ``fanout`` is the bucket count of the bucketed inner level (None
+    reads ``_RS_FANOUT``)."""
 
     partial: Callable[[str, list[str]], str]
     merge: str
     final: str
-    zs: Callable[[str, list[str]], tuple | None]
+    zs: Callable[[str, list[str]], tuple | None] | None
+    fanout: int | None = None
 
     def merged(self, col: str) -> str:
         """The final value over a column of partial blobs."""
@@ -3872,6 +3885,11 @@ _RAW_FAMILIES: dict[str, _RawFamily] = {
     "percentilerawestmv": _TDIGEST_FAMILY,
     "percentilerawkllmv": _TDIGEST_FAMILY,
     "percentilerawtdigestmv": _TDIGEST_FAMILY,
+    # 64: the exact-overlay fold's width (round 13) — each partial is
+    # a polygon union, so the merge folds few, larger geometries
+    "stunion": _RawFamily(
+        lambda a0, a: f"__geo_union_agg({a0})", "__geo_union_fold", "{}", None, 64
+    ),
 }
 
 # Pinot canonicalizes function names by dropping every underscore, so
@@ -4108,19 +4126,26 @@ def rewrite_distinct_window_aggs(sql: str) -> str:
 
 
 _BASIC_AGG_CALL_RE = re.compile(r"\b(?P<name>COUNT|SUM|MIN|MAX|AVG)\s*\(", re.IGNORECASE)
-# scalar wrappers allowed around the hoisted aggregates in the outer
-# level, plus the final-merge machinery hoisting itself introduces
-# (sum/count/min/max over the __ag partials)
-_RS_SCALAR_ALLOW = {
+# scalar wrappers both raw-sketch allow-lists accept around a raw call:
+# the sketch and ST output wrappers (Pinot names — the restructures run
+# before rewrite_functions) and a few scalar conveniences
+_RS_WRAPPERS = {
     "getthetasketchestimate", "thetasketchdiff", "thetasketchunion",
     "thetasketchintersect", "thetasketchtostring",
-    "getinttuplesketchestimate", "round", "cast", "abs", "coalesce",
-    "sum", "count", "min", "max",
-    "gethllestimate", "getullestimate", "gettdigestquantile",
-    "toclearspringhll", "toclearspringhllplus", "hllunion",
-    "todatasketcheskll", "kllmerge", "kllquantile",
+    "getinttuplesketchestimate", "gethllestimate", "getullestimate",
+    "gettdigestquantile", "toclearspringhll", "toclearspringhllplus",
+    "hllunion", "todatasketcheskll", "kllmerge", "kllquantile",
     "frequentstringsestimate", "frequentlongsestimate",
     "getcpcsketchestimate",
+    "stastext", "stasbinary", "stasgeojson", "starea", "stx", "sty",
+    "stgeometrytype",
+    "round", "cast", "abs", "coalesce",
+}
+# wrappers allowed around the hoisted aggregates in the outer level,
+# plus the final-merge machinery hoisting itself introduces
+# (sum/count/min/max over the __ag partials)
+_RS_SCALAR_ALLOW = _RS_WRAPPERS | {
+    "sum", "count", "min", "max",
     # structural SQL keywords the call-shaped regex also matches when a
     # paren follows (AND (expr), CASE WHEN (..) ...) — not functions
     "and", "or", "not", "in", "when", "then", "else", "case", "between",
@@ -4355,6 +4380,27 @@ def _replace_word_outside_literals(text: str, word: str, repl: str) -> str:
     return "".join(out)
 
 
+def _bucketed_partials(
+    stmt: dict[str, str | None],
+    keys: list[str],
+    args0: list[str],
+    partials: list[str],
+    fams: list[_RawFamily],
+) -> str:
+    """The bucketed inner level: each call's argument projected once as
+    ``__g{n}``, the ``partials`` (which read ``__g{n}``) grouped by the
+    keys and a hash bucket of ``__g0`` — as many buckets as the
+    smallest fanout among ``fams``."""
+    where = f" WHERE {stmt['where']}" if stmt["where"] else ""
+    proj = keys + [f"{a} AS __g{n}" for n, a in enumerate(args0)]
+    fanout = min(f.fanout or _RS_FANOUT for f in fams)
+    return (
+        f"SELECT {', '.join(keys + partials)} FROM (SELECT {', '.join(proj)} "
+        f"FROM {stmt['table']}{where}) __rs_rows"
+        f" GROUP BY {', '.join(keys + [f'pmod(xxhash64(__g0), {fanout})'])}"
+    )
+
+
 def rewrite_raw_sketch_two_phase(sql: str, view_builder=None) -> str:
     """Restructure ``SELECT [keys,] ...raw sketch aggs... FROM t [WHERE]
     [GROUP BY keys] [HAVING] [ORDER BY/LIMIT]`` into the bounded
@@ -4401,13 +4447,15 @@ def rewrite_raw_sketch_two_phase(sql: str, view_builder=None) -> str:
     partials: list[str] = []
     calls: list[tuple | None] = []
     placeholders: dict[str, str] = {}
-    bucket_arg: list[str] = []
+    args0: list[str] = []
+    fams: list[_RawFamily] = []
 
     def hoist_raw(name: str, args: list[str]) -> str:
         fam, a0, n = _RAW_FAMILIES[name], args[0].strip(), len(partials)
-        bucket_arg.append(a0)
-        partials.append(f"{fam.partial(a0, args)} AS __rs{n}")
-        calls.append(fam.zs(a0, args))
+        args0.append(a0)
+        fams.append(fam)
+        partials.append(f"{fam.partial(f'__g{n}', args)} AS __rs{n}")
+        calls.append(fam.zs and fam.zs(a0, args))
         placeholders[f"__RSPH{n}__"] = fam.merged(f"__rs{n}")
         return f"__RSPH{n}__"
 
@@ -4444,13 +4492,7 @@ def rewrite_raw_sketch_two_phase(sql: str, view_builder=None) -> str:
     if view_builder is not None and None not in calls:
         source = view_builder(stmt, keys, calls)
     if source is None:
-        bucket = f"pmod(xxhash64({bucket_arg[0]}), {_RS_FANOUT})"
-        where = stmt["where"]
-        source = (
-            f"(SELECT {', '.join(keys + partials)} FROM {stmt['table']}"
-            + (f" WHERE {where}" if where else "")
-            + f" GROUP BY {', '.join(keys + [bucket])})"
-        )
+        source = f"({_bucketed_partials(stmt, keys, args0, partials, fams)})"
     outer_group = f" GROUP BY {', '.join(keys)}" if keys else ""
     having_sql = f" HAVING {having2}" if having2 else ""
     tail = stmt["tail"] or ""
@@ -4486,7 +4528,7 @@ def _rewrite_mixed_split(
     sk_partials: list[str] = []
     sk_finals: list[str] = []
     nat_items: list[str] = []
-    bucket_arg: list[str] = []
+    args0: list[str] = []  # each raw call's argument, call order
     seq = [0]
     zs_calls: list = []  # zero-shuffle descriptors, view order (or None)
     call_meta: list[tuple[int, _RawFamily]] = []  # (seq n, family)
@@ -4494,10 +4536,10 @@ def _rewrite_mixed_split(
     def hoist_raw(name: str, args: list[str]) -> str:
         fam, a0, n = _RAW_FAMILIES[name], args[0].strip(), seq[0]
         seq[0] += 1
-        bucket_arg.append(a0)
-        sk_partials.append(f"{fam.partial(a0, args)} AS __rs{n}")
+        sk_partials.append(f"{fam.partial(f'__g{len(args0)}', args)} AS __rs{n}")
+        args0.append(a0)
         sk_finals.append(f"{fam.merged(f'__rs{n}')} AS __rsph{n}")
-        zs_calls.append(fam.zs(a0, args))
+        zs_calls.append(fam.zs and fam.zs(a0, args))
         call_meta.append((n, fam))
         return f"{SK}.__rsph{n}"
 
@@ -4597,10 +4639,8 @@ def _rewrite_mixed_split(
             + (f" GROUP BY {key_csv}" if keys else "")
         )
     else:
-        bucket = f"pmod(xxhash64({bucket_arg[0]}), {_RS_FANOUT})"
-        sk_inner = (
-            f"SELECT {', '.join(keys + sk_partials)} FROM {stmt['table']}{where}"
-            f" GROUP BY {', '.join(keys + [bucket])}"
+        sk_inner = _bucketed_partials(
+            stmt, keys, args0, sk_partials, [fam for _n, fam in call_meta]
         )
         sk_sub = (
             f"SELECT {', '.join(keys + sk_finals)} FROM ({sk_inner}) __rs_partials"
@@ -4622,17 +4662,9 @@ def _rewrite_mixed_split(
 # fn-name regex also matches. Anything else — especially ANY native
 # aggregate — declines to the per-value fallback, because Spark cannot
 # mix pandas UDAFs with native aggregates in one SELECT.
-_RS_INEXPR_ALLOW = {
-    "getthetasketchestimate", "thetasketchdiff", "thetasketchunion",
-    "thetasketchintersect", "thetasketchtostring",
-    "getinttuplesketchestimate", "gethllestimate", "getullestimate",
-    "gettdigestquantile", "tointegersumtuplesketch", "tothetasketch",
-    "todatasketchestheta", "todatasketchestuple",
-    "toclearspringhll", "toclearspringhllplus", "hllunion",
-    "todatasketcheskll", "kllmerge", "kllquantile",
-    "frequentstringsestimate", "frequentlongsestimate",
-    "getcpcsketchestimate",
-    "round", "cast", "abs", "coalesce", "upper", "lower", "substr",
+_RS_INEXPR_ALLOW = _RS_WRAPPERS | {
+    "tointegersumtuplesketch", "tothetasketch", "todatasketchestheta",
+    "todatasketchestuple", "upper", "lower", "substr",
     "in", "not", "exists", "values", "any", "all", "some", "using",
     # known-SCALAR conveniences (safe next to a pandas UDAF; only
     # aggregates break placement) — common dims/filters in sketch queries
@@ -4680,260 +4712,6 @@ _THETA_BLOB_CALL_RE = re.compile(
     r"\bDISTINCT_?COUNT_?(RAW_?)?(THETA|CPC)_?SKETCH\s*\(", re.IGNORECASE
 )
 _AGG_FILTER_RE = re.compile(r"\s*FILTER\s*\(\s*WHERE\b", re.IGNORECASE)
-
-
-_ST_UNION_CALL_RE = re.compile(r"\bST_?UNION\s*\(", re.IGNORECASE)
-_ST_UNION_FANOUT = 64
-# scalar post-processing allowed around the hoisted union in the outer
-# level (Pinot names — this rewrite runs before rewrite_functions)
-_ST_UNION_SCALAR_ALLOW = {
-    "stastext", "stasbinary", "stasgeojson", "starea", "stx", "sty",
-    "stgeometrytype", "round", "cast", "coalesce", "abs",
-}
-
-
-def _st_union_mixed_split(
-    sql: str,
-    stmt: dict[str, str | None],
-    keys: list[str],
-    items: list[str],
-) -> str:
-    """MIXED statements (native aggregates + STUNION in one SELECT)
-    split into two subqueries joined NULL-SAFELY on the group keys —
-    the _rewrite_mixed_split shape: native aggregates stay a plain
-    grouped subquery (Catalyst partial/final), STUNION takes the same
-    bounded two-phase fold as pure statements.  Memory stays
-    geometry-bounded on the union side; the trade is a second columnar
-    scan of the source.  Statements with HAVING or shapes that resist
-    the split return ``sql`` unchanged (collect_list fallback)."""
-    if stmt["having"]:
-        return sql
-    NAT, SK = "__stn", "__sts"
-    arg_exprs: list[str] = []
-    sk_finals: list[str] = []
-    nat_items: list[str] = []
-    seq = [0]
-
-    def hoist_union(item: str) -> str:
-        out, i = [], 0
-        spans = _literal_spans(item)
-        while True:
-            m = _ST_UNION_CALL_RE.search(item, i)
-            while m and any(a <= m.start() < b for a, b in spans):
-                m = _ST_UNION_CALL_RE.search(item, m.end())
-            if not m:
-                out.append(item[i:])
-                break
-            open_idx = item.index("(", m.end() - 1)
-            close_idx = _find_matching(item, open_idx)
-            args = _split_args(item[open_idx + 1 : close_idx])
-            if len(args) != 1:
-                raise ValueError("STUNION takes one argument")
-            n = len(arg_exprs)
-            arg_exprs.append(args[0].strip())
-            sk_finals.append(f"__geo_union_agg(__stp{n}) AS __stu{n}")
-            out.append(item[i : m.start()])
-            out.append(f"{SK}.__stu{n}")
-            i = close_idx + 1
-        return "".join(out)
-
-    def hoist_basic(item: str) -> str:
-        out, i = [], 0
-        spans = _literal_spans(item)
-        while True:
-            m = _BASIC_AGG_CALL_RE.search(item, i)
-            while m and any(a <= m.start() < b for a, b in spans):
-                m = _BASIC_AGG_CALL_RE.search(item, m.end())
-            if not m:
-                out.append(item[i:])
-                break
-            open_idx = item.index("(", m.end() - 1)
-            close_idx = _find_matching(item, open_idx)
-            n = seq[0]
-            seq[0] += 1
-            nat_items.append(f"{item[m.start() : close_idx + 1]} AS __ag{n}")
-            out.append(item[i : m.start()])
-            out.append(f"{NAT}.__ag{n}")
-            i = close_idx + 1
-        return "".join(out)
-
-    rebuilt: list[str] = []
-    try:
-        for item in items:
-            am = re.match(
-                r"(?s)^(.*?)\s+AS\s+([A-Za-z_]\w*)\s*$", item, re.IGNORECASE
-            )
-            expr, alias = (am.group(1), am.group(2)) if am else (item, None)
-            if expr.strip() in keys:
-                k = expr.strip()
-                rebuilt.append(f"{NAT}.{k} AS {alias or k}")
-                continue
-            e2 = hoist_basic(hoist_union(expr))
-            for cm in re.finditer(r"\b([A-Za-z_][A-Za-z0-9_]*)\s*\(", e2):
-                if re.sub("_", "", cm.group(1)).lower() not in _ST_UNION_SCALAR_ALLOW:
-                    return sql
-            for k in keys:
-                e2 = _replace_word_outside_literals(e2, k, f"{NAT}.{k}")
-            rebuilt.append(e2 + (f" AS {alias}" if alias else ""))
-    except ValueError:
-        return sql
-    if not arg_exprs:
-        return sql
-
-    where = f" WHERE {stmt['where']}" if stmt["where"] else ""
-    key_csv = ", ".join(keys)
-    nat_sub = (
-        f"SELECT {', '.join(keys + nat_items)} FROM {stmt['table']}{where}"
-        + (f" GROUP BY {key_csv}" if keys else "")
-    )
-    proj = keys + [f"{e} AS __g{n}" for n, e in enumerate(arg_exprs)]
-    partials = keys + [
-        f"__geo_union_agg(__g{n}) AS __stp{n}" for n in range(len(arg_exprs))
-    ]
-    bucket = f"pmod(xxhash64(__g0), {_ST_UNION_FANOUT})"
-    sk_inner = (
-        f"SELECT {', '.join(partials)} FROM "
-        f"(SELECT {', '.join(proj)} FROM {stmt['table']}{where}) __st_rows"
-        f" GROUP BY {', '.join(keys + [bucket])}"
-    )
-    sk_sub = (
-        f"SELECT {', '.join(keys + sk_finals)} FROM ({sk_inner}) __st_partials"
-        + (f" GROUP BY {key_csv}" if keys else "")
-    )
-    if keys:
-        on = " AND ".join(f"{NAT}.{k} <=> {SK}.{k}" for k in keys)
-        join = f"({nat_sub}) {NAT} JOIN ({sk_sub}) {SK} ON {on}"
-    else:
-        join = f"({nat_sub}) {NAT} CROSS JOIN ({sk_sub}) {SK}"
-    tail = stmt["tail"] or ""
-    return f"SELECT {', '.join(rebuilt)} FROM {join}{tail}"
-
-
-def rewrite_st_union_two_phase(sql: str) -> str:
-    """Restructure canonical ``SELECT [keys,] ...STUNION(g)... FROM t
-    [WHERE] [GROUP BY keys] [ORDER BY/LIMIT]`` into a bounded two-phase
-    fold (VERDICT r13 item 2 — the expression-level
-    ``__geo_union_fold(collect_list(g))`` shape buffers EVERY serialized
-    geometry of a group in one aggregation buffer, which OOMs at scale):
-
-        SELECT [keys,] __geo_union_agg(__stp{n}) ...
-        FROM (SELECT [keys,] __geo_union_agg(__g{n}) AS __stp{n}
-              FROM (SELECT [keys,] <arg_n> AS __g{n} FROM t [WHERE])
-              GROUP BY [keys,] pmod(xxhash64(__g0), FANOUT))
-        [GROUP BY keys] [tail]
-
-    Inner buffers are a hash-bucketed 1/FANOUT slice of each group and
-    the incremental ``__geo_union_agg`` state is one geometry, not a
-    list; the outer merge sees ≤ FANOUT partials per group — the
-    reference's segment-fold + broker-merge shape
-    (StUnionAggregationFunction.java).  Statements that don't match the
-    canonical shape (window position, mixed native aggregates, STUNION
-    in HAVING) return unchanged and fall back to the fixture-scale
-    collect_list path."""
-    if not _search_outside_literals(_ST_UNION_CALL_RE, sql):
-        return sql
-    if re.search(r"\bOVER\s*\(", sql, re.IGNORECASE):
-        return sql
-    stmt = _parse_canonical_stmt(sql, allow_join=True)
-    if stmt is None:
-        return sql
-    if stmt["having"] and (
-        _search_outside_literals(_ST_UNION_CALL_RE, stmt["having"])
-        or _search_outside_literals(_BASIC_AGG_CALL_RE, stmt["having"])
-    ):
-        # a native aggregate in HAVING (e.g. HAVING COUNT(*) > 5) must
-        # evaluate over BASE rows; re-emitting it on the outer
-        # partial-merge query would count <=FANOUT hash-bucket partials
-        # instead — fall back to the expression-level collect_list path
-        # (mirrors the mixed-split HAVING rejection above).
-        return sql
-    group = stmt["group"]
-    keys = [g.strip() for g in _split_args(group)] if group else []
-    if any(not re.fullmatch(r"[A-Za-z_]\w*", k) for k in keys):
-        return sql
-    items = [x.strip() for x in _split_args(stmt["select"])]
-    if _keys_shadowed_by_alias(keys, items):
-        return sql
-    if any(_search_outside_literals(_BASIC_AGG_CALL_RE, it) for it in items):
-        # native aggregates cannot share a SELECT with the grouped-agg
-        # pandas UDF — split into two subqueries joined on the keys
-        return _st_union_mixed_split(sql, stmt, keys, items)
-
-    arg_exprs: list[str] = []
-    placeholders: dict[str, str] = {}
-
-    def hoist_union(item: str) -> str:
-        out = []
-        i = 0
-        spans = _literal_spans(item)
-        while True:
-            m = _ST_UNION_CALL_RE.search(item, i)
-            while m and any(a <= m.start() < b for a, b in spans):
-                m = _ST_UNION_CALL_RE.search(item, m.end())
-            if not m:
-                out.append(item[i:])
-                break
-            open_idx = item.index("(", m.end() - 1)
-            close_idx = _find_matching(item, open_idx)
-            args = _split_args(item[open_idx + 1 : close_idx])
-            if len(args) != 1:
-                raise ValueError("STUNION takes one argument")
-            n = len(arg_exprs)
-            arg_exprs.append(args[0].strip())
-            ph = f"__STUPH{n}__"
-            placeholders[ph] = f"__geo_union_agg(__stp{n})"
-            out.append(item[i : m.start()])
-            out.append(ph)
-            i = close_idx + 1
-        return "".join(out)
-
-    rebuilt: list[str] = []
-    try:
-        for item in items:
-            am = re.match(
-                r"(?s)^(.*?)\s+AS\s+([A-Za-z_]\w*)\s*$", item, re.IGNORECASE
-            )
-            expr, alias = (am.group(1), am.group(2)) if am else (item, None)
-            if expr.strip() in keys:
-                rebuilt.append(item)
-                continue
-            expr2 = hoist_union(expr)
-            # every remaining call must be an allowed scalar wrapper —
-            # in particular no native aggregate may share the outer
-            # SELECT with the grouped-agg pandas UDF (Spark rejects
-            # mixing them in one aggregation)
-            for cm in re.finditer(r"\b([A-Za-z_][A-Za-z0-9_]*)\s*\(", expr2):
-                if re.sub("_", "", cm.group(1)).lower() not in _ST_UNION_SCALAR_ALLOW:
-                    return sql
-            rebuilt.append(expr2 + (f" AS {alias}" if alias else ""))
-    except ValueError:
-        return sql
-    if not placeholders:
-        return sql
-    for ph, outer in placeholders.items():
-        rebuilt = [x.replace(ph, outer) for x in rebuilt]
-
-    proj = keys + [f"{e} AS __g{n}" for n, e in enumerate(arg_exprs)]
-    partials = keys + [
-        f"__geo_union_agg(__g{n}) AS __stp{n}" for n in range(len(arg_exprs))
-    ]
-    where = stmt["where"]
-    rows = (
-        f"SELECT {', '.join(proj)} FROM {stmt['table']}"
-        + (f" WHERE {where}" if where else "")
-    )
-    bucket = f"pmod(xxhash64(__g0), {_ST_UNION_FANOUT})"
-    inner = (
-        f"SELECT {', '.join(partials)} FROM ({rows}) __st_rows"
-        f" GROUP BY {', '.join(keys + [bucket])}"
-    )
-    outer_group = f" GROUP BY {', '.join(keys)}" if keys else ""
-    having_sql = f" HAVING {stmt['having']}" if stmt["having"] else ""
-    tail = stmt["tail"] or ""
-    return (
-        f"SELECT {', '.join(rebuilt)} FROM ({inner}) "
-        f"__st_partials{outer_group}{having_sql}{tail}"
-    )
 
 
 _VECTOR_SIM_RE = re.compile(r"\bVECTOR_?SIMILARITY\s*\(", re.IGNORECASE)
@@ -5475,9 +5253,12 @@ def _ensure_geo_sql_udfs(spark: SparkSession) -> None:
 
     @pandas_udf("binary", PandasUDFType.SCALAR)
     def __geo_union_fold(groups):
-        """STUNION final fold over collect_list(geometry) — fixture-scale
-        SQL path; the 100 TB path is the executor-side tree fold in
-        operators/geo.py (one partial per partition, isqrt tree rounds)."""
+        """STUNION fold over collect_list(geometry): the ``stunion``
+        family's merge over ≤ 64 partials, and FUNCTION_MAP's
+        single-buffer fallback where no restructure applies (window
+        position, native aggregates in a non-canonical statement); the
+        DataFrame path is the executor-side tree fold in operators/geo.py
+        (one partial per partition, isqrt tree rounds)."""
 
         def run(lst):
             geoms = [parse_any(v) for v in lst if v is not None]
@@ -5512,10 +5293,11 @@ def _ensure_geo_sql_udfs(spark: SparkSession) -> None:
         """Incremental STUNION fold — the aggregation state is ONE
         geometry plus a ≤64-element parse buffer, never a group-sized
         list (the reference accumulates a single growing union,
-        StUnionAggregationFunction.java aggregate()).  Used at both
-        levels of the two-phase rewrite_st_union_two_phase shape: the
-        inner level sees a hash-bucketed slice of each group, the outer
-        level merges ≤ _ST_UNION_FANOUT partials."""
+        StUnionAggregationFunction.java aggregate()).  The partial of
+        the ``stunion`` raw-sketch family: the bucketed inner level runs
+        it over a hash-bucketed slice of each group, and
+        ``__geo_union_fold`` merges the ≤ 64 partials; non-canonical
+        statements run it in place over the whole group."""
         acc, buf = None, []
         # union is idempotent: skip byte-identical blobs (telemetry
         # columns repeat shapes heavily — a grid-cell column has
@@ -6605,6 +6387,9 @@ class PinotEngine:
                 sql = rewrite_theta_value_calls(sql)
             if _THETA_SQL_RE.search(sql):
                 _ensure_theta_sql_udfs(self.spark)
+            if _search_outside_literals(_RAW_SKETCH_CALL_RE, sql):
+                if _GEO_SQL_RE.search(sql):
+                    _ensure_geo_sql_udfs(self.spark)
                 # Safety net for the regex-based restructuring (VERDICT r7:
                 # parsing SQL with a regex is inherently fragile): a
                 # restructured statement that no longer PARSES degrades to
@@ -6617,14 +6402,6 @@ class PinotEngine:
                     cand = rewrite(sql)
                     if cand != sql and not self._syntax_ok(cand):
                         continue
-                    sql = cand
-            if _search_outside_literals(_ST_UNION_CALL_RE, sql):
-                # bounded two-phase fold (same safety net as the raw-sketch
-                # restructures: a candidate that no longer parses degrades
-                # to the expression-level collect_list fallback)
-                _ensure_geo_sql_udfs(self.spark)
-                cand = rewrite_st_union_two_phase(sql)
-                if cand != sql and self._syntax_ok(cand):
                     sql = cand
             if re.search(r"\bGROOVY\s*\(", sql, re.IGNORECASE):
                 sql = self._register_groovy_calls(sql)

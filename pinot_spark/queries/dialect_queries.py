@@ -1717,12 +1717,12 @@ def dialect_geo_bytes_family(spark, sf_dir):
     """,
 )
 def dialect_st_union_area(spark, sf_dir):
-    """STUNION through the dialect's bounded two-phase fold at real
-    fan-in (round-14 fix for the collect_list buffer,
-    StUnionAggregationFunction.java segment-fold + broker-merge shape):
-    2000 unit squares on a 6x5 integer grid — thousands of duplicate
-    blobs collapse in the idempotent per-bucket folds, the <=64 bucket
-    partials merge in one exact overlay, and the union's area must
+    """STUNION through the dialect's raw-sketch family two-phase at
+    real fan-in (StUnionAggregationFunction.java segment-fold +
+    broker-merge shape): 2000 unit squares on a 6x5 integer grid —
+    thousands of duplicate blobs collapse in the idempotent per-bucket
+    ``__geo_union_agg`` partials, ``__geo_union_fold`` merges the <=64
+    bucket partials in one exact overlay, and the union's area must
     equal the distinct-cell count exactly (disjoint-interior squares;
     shoelace over small integers is exact in doubles).  The DuckDB
     oracle recomputes the cell count from the generating expression."""

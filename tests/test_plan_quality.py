@@ -712,67 +712,68 @@ def test_fuzzy_dedup_end2end_no_allpairs(spark, sf_dir):
 
 
 def test_st_union_sql_two_phase_bounded(spark, sf_dir):
-    """Dialect STUNION must restructure into the bounded two-phase fold
-    (VERDICT r13 item 2): hash-bucketed inner partials + a ≤-fanout
-    outer merge, with the incremental __geo_union_agg grouped-agg UDF —
-    never a group-sized collect_list in one aggregation buffer.  The
-    fallback collect_list shape is reserved for non-canonical
-    statements (mixed native aggs, window position)."""
+    """Dialect STUNION takes the raw-sketch family's bounded two-phase
+    (VERDICT r13 item 2): the argument projected once as __g0, the
+    incremental __geo_union_agg partial per hash bucket, and a merge
+    that folds at most 64 partials — never a group-sized collect_list
+    of geometries in one aggregation buffer.  Mixed and HAVING shapes
+    take the family's split."""
+    import re
+
     from pinot_spark.dialect import PinotEngine
 
     eng = PinotEngine(spark)
     spark.createDataFrame(
         [(i % 3, f"POINT ({i} {i})") for i in range(24)], "k int, wkt string"
     ).createOrReplaceTempView("st_union_gate_t")
+
+    def only_partials_collected(text: str) -> bool:
+        return not re.search(r"collect_list\((?!__rs\d)", text)
+
     for q in (
         "SELECT STUnion(ST_GeomFromText(wkt)) AS u FROM st_union_gate_t",
         "SELECT k, STUnion(ST_GeomFromText(wkt)) AS u "
         "FROM st_union_gate_t GROUP BY k",
     ):
         translated, _ = eng.translate(q)
-        assert "__geo_union_agg" in translated, translated
-        assert "collect_list" not in translated, translated
-        assert "pmod(xxhash64(__g0)" in translated, translated
+        assert "__geo_union_agg(__g0) AS __rs0" in translated, translated
+        assert "pmod(xxhash64(__g0), 64)" in translated, translated
+        assert "__geo_union_fold(collect_list(__rs0))" in translated, translated
+        assert only_partials_collected(translated), translated
         plan = _plan(eng.sql(q))
-        # grouped-agg pandas operator at BOTH levels (Spark 4 spells it
-        # ArrowAggregatePython; older releases AggregateInPandas)
+        # grouped-agg pandas operator at the inner level (Spark 4 spells
+        # it ArrowAggregatePython; older releases AggregateInPandas)
         agg_ops = plan.count("ArrowAggregatePython") + plan.count(
             "AggregateInPandas"
         )
-        assert agg_ops >= 2, plan
-        assert "collect_list" not in plan, plan
+        assert agg_ops >= 1, plan
+        assert only_partials_collected(plan), plan
     # mixed native aggregate → the SPLIT shape: native side + bounded
-    # two-phase union side joined on the keys, still no collect_list
-    mixed, _ = eng.translate(
+    # two-phase union side joined on the keys
+    for q in (
         "SELECT k, COUNT(*) AS c, STUnion(ST_GeomFromText(wkt)) AS u "
-        "FROM st_union_gate_t GROUP BY k"
-    )
-    assert "__geo_union_agg" in mixed and "collect_list" not in mixed
-    assert "__stn" in mixed and "__sts" in mixed
-    # mixed + HAVING resists the split → expression fallback
-    fb, _ = eng.translate(
+        "FROM st_union_gate_t GROUP BY k",
+        # HAVING with a native aggregate: COUNT(*) evaluates on the
+        # native side over BASE rows, never over the bucket partials
         "SELECT k, COUNT(*) AS c, STUnion(ST_GeomFromText(wkt)) AS u "
-        "FROM st_union_gate_t GROUP BY k HAVING COUNT(*) > 0"
-    )
-    assert "__geo_union_fold(collect_list" in fb
-    # a native aggregate in HAVING alone (pure STUNION select) must ALSO
-    # fall back — the two-phase shape would evaluate COUNT(*) over
-    # <=fanout hash-bucket partials instead of base rows (r14 ADVICE)
-    fb2, _ = eng.translate(
+        "FROM st_union_gate_t GROUP BY k HAVING COUNT(*) > 0",
         "SELECT k, STUnion(ST_GeomFromText(wkt)) AS u "
-        "FROM st_union_gate_t GROUP BY k HAVING COUNT(*) > 5"
-    )
-    assert "__geo_union_fold(collect_list" in fb2, fb2
-    assert "__geo_union_agg" not in fb2, fb2
+        "FROM st_union_gate_t GROUP BY k HAVING COUNT(*) > 5",
+    ):
+        mixed, _ = eng.translate(q)
+        assert "__rsn" in mixed and "__rss" in mixed, mixed
+        assert "__geo_union_agg(__g0)" in mixed, mixed
+        assert "pmod(xxhash64(__g0), 64)" in mixed, mixed
+        assert only_partials_collected(mixed), mixed
 
 
-def test_st_union_two_phase_matches_fallback(spark, sf_dir):
-    """The two-phase bucketed fold and the single-buffer fallback must
-    produce identical serialized unions (associativity of the exact
-    overlay), on polygons AND mixed point/polygon groups."""
-    from pinot_spark.dialect import PinotEngine
+def _st_union_eq_fixture(spark) -> dict:
+    """15 rows in two groups of polygons and points, registered as
+    ``st_union_eq_t``; returns the single-buffer
+    reference union per group, computed from the fallback SQL itself
+    (every geometry of a group in one collect_list)."""
+    from pinot_spark.dialect import _ensure_geo_sql_udfs
 
-    eng = PinotEngine(spark)
     rows = []
     for i in range(9):
         x = i * 2  # overlapping unit squares chained along x
@@ -783,6 +784,24 @@ def test_st_union_two_phase_matches_fallback(spark, sf_dir):
     spark.createDataFrame(rows, "k int, wkt string").createOrReplaceTempView(
         "st_union_eq_t"
     )
+    _ensure_geo_sql_udfs(spark)
+    return {
+        r.k: r.u
+        for r in spark.sql(
+            "SELECT k, __geo_as_text(__geo_union_fold(collect_list("
+            "__geo_from_text(wkt, false)))) AS u FROM st_union_eq_t GROUP BY k"
+        ).collect()
+    }
+
+
+def test_st_union_two_phase_matches_fallback(spark, sf_dir):
+    """The two-phase bucketed fold and the single-buffer fallback must
+    produce identical serialized unions (associativity of the exact
+    overlay), on polygons AND mixed point/polygon groups."""
+    from pinot_spark.dialect import PinotEngine
+
+    eng = PinotEngine(spark)
+    ref = _st_union_eq_fixture(spark)
     two = {
         r.k: r.u
         for r in eng.sql(
@@ -799,17 +818,7 @@ def test_st_union_two_phase_matches_fallback(spark, sf_dir):
             "FROM st_union_eq_t GROUP BY k"
         ).collect()
     }
-    # HAVING alongside a native agg resists every restructure → the
-    # single-buffer collect_list fallback is the reference comparison
-    fb = {
-        r.k: r.u
-        for r in eng.sql(
-            "SELECT k, COUNT(*) AS c, "
-            "ST_AsText(STUnion(ST_GeomFromText(wkt))) AS u "
-            "FROM st_union_eq_t GROUP BY k HAVING COUNT(*) > 0"
-        ).collect()
-    }
-    assert two == mixed == fb and len(two) == 2
+    assert two == mixed == ref and len(two) == 2
     # pure STUNION + native-agg HAVING (r14 ADVICE high): COUNT(*) must
     # count BASE rows (group 0 has 8 rows, group 1 has 7), never the
     # <=fanout partials the two-phase shape would expose
@@ -820,7 +829,54 @@ def test_st_union_two_phase_matches_fallback(spark, sf_dir):
             "FROM st_union_eq_t GROUP BY k HAVING COUNT(*) > 7"
         ).collect()
     }
-    assert set(hv) == {0} and hv[0] == two[0]
+    assert set(hv) == {0} and hv[0] == ref[0]
+
+
+def test_st_union_newly_bounded_shapes_match_fallback(spark, sf_dir):
+    """HAVING, expression group keys, top-level set operations and
+    joins grouped by an expression take a bounded STUNION form (the
+    family split, the in-place __geo_union_agg or per-branch two-phase)
+    instead of buffering every geometry of a group in one collect_list,
+    and each answers exactly as the single-buffer reference."""
+    from pinot_spark.dialect import PinotEngine
+
+    eng = PinotEngine(spark)
+    ref = _st_union_eq_fixture(spark)
+    spark.createDataFrame([(0, "even"), (1, "odd")], "k int, name string"
+                          ).createOrReplaceTempView("st_union_dim_t")
+    u = "ST_AsText(STUnion(ST_GeomFromText(wkt))) AS u"
+    cases = {
+        "having": (
+            f"SELECT k, {u} FROM st_union_eq_t GROUP BY k HAVING COUNT(*) > 7",
+            {0: ref[0]},
+        ),
+        "mixed_having": (
+            f"SELECT k, COUNT(*) AS c, {u} FROM st_union_eq_t GROUP BY k "
+            "HAVING COUNT(*) > 0",
+            ref,
+        ),
+        "expr_key": (
+            f"SELECT k + 10 AS k, {u} FROM st_union_eq_t GROUP BY k + 10",
+            {k + 10: v for k, v in ref.items()},
+        ),
+        "union_all": (
+            f"SELECT 0 AS k, {u} FROM st_union_eq_t WHERE k = 0 UNION ALL "
+            f"SELECT 1 AS k, {u} FROM st_union_eq_t WHERE k = 1",
+            ref,
+        ),
+        "join_expr_key": (
+            "SELECT upper(d.name) AS k, "
+            "ST_AsText(STUnion(ST_GeomFromText(t.wkt))) AS u "
+            "FROM st_union_eq_t t JOIN st_union_dim_t d ON t.k = d.k "
+            "GROUP BY upper(d.name)",
+            {"EVEN": ref[0], "ODD": ref[1]},
+        ),
+    }
+    for name, (q, want) in cases.items():
+        translated, _ = eng.translate(q)
+        assert "collect_list(__geo_from_text" not in translated, (name, translated)
+        got = {r.k: r.u for r in eng.sql(q).collect()}
+        assert got == want, (name, got)
 
 
 def test_aggregate_metrics_partial_final(spark, sf_dir):

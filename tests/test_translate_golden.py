@@ -41,21 +41,21 @@ PINNED = {
         "'nominalEntries=1024') AS th, FREQUENT_STRINGS_SKETCH(l_linestatus) AS fs, "
         "FREQUENTLONGSSKETCH(l_linenumber, 64) AS fl FROM lineitem "
         "GROUP BY l_returnflag",
-        ["pmod(xxhash64(l_partkey), 256)) __rs_partials GROUP BY l_returnflag"],
+        ["l_partkey AS __g0", "pmod(xxhash64(__g0), 256)) __rs_partials GROUP BY l_returnflag"],
         ["__rsn"],
     ),
     "pinned_two_phase_mv": (
         "SELECT label, DISTINCTCOUNTRAWHLLMV(embedding, 10) AS h, "
         "DISTINCTCOUNTRAWHLLPLUSMV(embedding, 12, 20) AS hp, "
         "PERCENTILERAWTDIGESTMV(embedding, 50) AS td FROM embeddings GROUP BY label",
-        ["pmod(xxhash64(embedding), 256)) __rs_partials GROUP BY label"],
+        ["embedding AS __g0", "pmod(xxhash64(__g0), 256)) __rs_partials GROUP BY label"],
         ["__rsn"],
     ),
     "pinned_mixed_split": (
         "SELECT c_mktsegment, COUNT(*) AS n, GET_THETA_SKETCH_ESTIMATE("
         "DISTINCTCOUNTRAWTHETASKETCH(c_custkey)) AS dc FROM customer "
         "GROUP BY c_mktsegment HAVING COUNT(*) > 0",
-        [") __rsn JOIN (", "pmod(xxhash64(c_custkey), 256)) __rs_partials"],
+        [") __rsn JOIN (", "pmod(xxhash64(__g0), 256)) __rs_partials"],
         [],
     ),
     "pinned_inexpr_udaf": (
@@ -77,7 +77,7 @@ PINNED = {
         "SUM_VALUES_INTEGER_SUM_TUPLE_SKETCH(b) AS sv, AVG_VALUE_INTEGER_SUM_TUPLE_SKETCH(b) AS av "
         "FROM (SELECT o_orderstatus AS g, TO_INTEGER_SUM_TUPLE_SKETCH(o_custkey, o_totalprice) "
         "AS b FROM orders) GROUP BY g",
-        ["__tuple_partial(b) AS __rs0", "pmod(xxhash64(b), 256)) __rs_partials GROUP BY g"],
+        ["__tuple_partial(__g0) AS __rs0", "pmod(xxhash64(__g0), 256)) __rs_partials GROUP BY g"],
         [],
     ),
 }
