@@ -7129,16 +7129,22 @@ class PinotEngine:
             # statement (non-integer MV elements) — register before
             # analysis or the route silently declines to the two-phase
             _ensure_theta_sql_udfs(self.spark)
+
+            def translated(stmt_sql: str) -> str:
+                # the whole dialect under the statement's options, as
+                # the statement itself would get it, minus the selection
+                # default LIMIT
+                token = _NO_DEFAULT_LIMIT.set(True)
+                try:
+                    return self.translate(prefix + stmt_sql)[0]
+                finally:
+                    _NO_DEFAULT_LIMIT.reset(token)
+
             try:
                 def arg_type(expr: str) -> str:
-                    probe = (
-                        f"SELECT ({expr}) AS __p FROM {stmt['table']} LIMIT 0"
-                    )
-                    probe = rewrite_array_constructor(probe)
-                    probe = rewrite_functions(probe)
-                    probe = rewrite_cast_types(probe)
+                    probe = f"SELECT ({expr}) AS __p FROM {stmt['table']} LIMIT 0"
                     return (
-                        self.spark.sql(probe)
+                        self.spark.sql(translated(probe))
                         .schema["__p"].dataType.simpleString()
                     )
 
@@ -7210,15 +7216,7 @@ class PinotEngine:
                     f"SELECT {', '.join(sel)} FROM {stmt['table']}"
                     + (f" WHERE {stmt['where']}" if stmt["where"] else "")
                 )
-                mini = rewrite_array_constructor(mini)
-                mini = rewrite_functions(mini)
-                mini = rewrite_cast_types(mini)
-                mini = rewrite_timestamp_coercion(self.spark, mini)
-                mini = rewrite_mv_predicates(self.spark, mini)
-                if not null_handling_enabled(options, self.null_handling_default):
-                    mini = _substitute_views(mini, self._ensure_nulldef_view)
-                mini = self._substitute_upsert_views(mini, options)
-                src = self.spark.sql(mini)
+                src = self.spark.sql(translated(mini))
                 ok_key_types = ("string", "int", "smallint", "tinyint",
                                 "boolean", "date", "float", "double")
                 # BIGINT group keys (the dominant real sketch shape:

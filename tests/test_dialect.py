@@ -579,6 +579,30 @@ def test_zero_shuffle_sketch_route_reads_the_upsert_view(spark):
     assert [(r.k, r.n, r.e) for r in raw] == [(0, 3, 3), (1, 3, 3), (2, 3, 3)]
 
 
+def test_zero_shuffle_sketch_route_translates_its_source(engine, spark):
+    """The zero-shuffle route's source statement gets the whole dialect:
+    a missing map key reads Pinot's default value in its WHERE, so the
+    sketch counts the rows ``COUNT(*)`` counts under the same WHERE."""
+    spark.createDataFrame(
+        [(i, i % 3, {"a": i} if i % 2 else {}) for i in range(20)],
+        "id bigint, g int, m map<string,int>",
+    ).createOrReplaceTempView("zs_map_t")
+    where = "FROM zs_map_t WHERE m['a'] = -2147483648"
+    est = "GET_THETA_SKETCH_ESTIMATE(DISTINCTCOUNTRAWTHETASKETCH(id))"
+
+    def zs_views() -> set[str]:
+        return {t.name for t in spark.catalog.listTables() if t.name.startswith("__theta_zs_")}
+
+    before = zs_views()
+    dc = engine.sql(f"SELECT {est} AS dc {where}").collect()[0].dc
+    assert zs_views() - before, "the zero-shuffle route did not serve the statement"
+    assert dc == engine.sql(f"SELECT COUNT(*) AS n {where}").collect()[0].n == 10
+    grouped = engine.sql(f"SELECT g, {est} AS dc {where} GROUP BY g ORDER BY g")
+    counts = engine.sql(f"SELECT g, COUNT(*) AS n {where} GROUP BY g ORDER BY g")
+    assert [tuple(r) for r in grouped.collect()] == [tuple(r) for r in counts.collect()]
+    assert [r.n for r in counts.collect()] == [4, 3, 3]
+
+
 def test_gapfill_reads_the_upsert_view(spark):
     """GAPFILL's inner selection reads the latest row per key: a
     superseded row neither adds a row to its bucket nor feeds
