@@ -819,17 +819,6 @@ def test_st_union_two_phase_matches_fallback(spark, sf_dir):
         ).collect()
     }
     assert two == mixed == ref and len(two) == 2
-    # pure STUNION + native-agg HAVING (r14 ADVICE high): COUNT(*) must
-    # count BASE rows (group 0 has 8 rows, group 1 has 7), never the
-    # <=fanout partials the two-phase shape would expose
-    hv = {
-        r.k: r.u
-        for r in eng.sql(
-            "SELECT k, ST_AsText(STUnion(ST_GeomFromText(wkt))) AS u "
-            "FROM st_union_eq_t GROUP BY k HAVING COUNT(*) > 7"
-        ).collect()
-    }
-    assert set(hv) == {0} and hv[0] == ref[0]
 
 
 def test_st_union_newly_bounded_shapes_match_fallback(spark, sf_dir):
@@ -846,6 +835,8 @@ def test_st_union_newly_bounded_shapes_match_fallback(spark, sf_dir):
                           ).createOrReplaceTempView("st_union_dim_t")
     u = "ST_AsText(STUnion(ST_GeomFromText(wkt))) AS u"
     cases = {
+        # a native aggregate in HAVING counts BASE rows (group 0 has 8
+        # rows, group 1 has 7), never the bucket partials
         "having": (
             f"SELECT k, {u} FROM st_union_eq_t GROUP BY k HAVING COUNT(*) > 7",
             {0: ref[0]},
