@@ -1091,17 +1091,18 @@ FUNCTION_MAP: dict[str, str | Callable[[list[str]], str]] = {
     "intsumtuplesketchintersect": lambda a: (
         f"__tuple_intersect({a[0]}, {a[1]})"
     ),
+    # the hash and the value travel as 32-bit halves (_split_hash_expr)
     "tointegersumtuplesketch": lambda a: (
-        "__tuple_singleton(CASE WHEN {0} IS NULL THEN CAST(NULL AS BIGINT) "
-        "ELSE xxhash64({0}) END, CAST({1} AS BIGINT), {2})".format(
-            a[0], a[1], 2 ** int(a[2]) if len(a) > 2 and a[2].strip().isdigit() else 4096
+        "__tuple_singleton({}, {}, shiftright({v}, 32), ({v}) & 4294967295, "
+        "{})".format(
+            *_split_hash_expr(a[0]),
+            2 ** int(a[2]) if len(a) > 2 and a[2].strip().isdigit() else 4096,
+            v=f"CAST({a[1]} AS BIGINT)",
         )
     ),
-    "tothetasketch": lambda a: (
-        "__theta_singleton(CASE WHEN {0} IS NULL THEN CAST(NULL AS BIGINT) "
-        "ELSE xxhash64({0}) END, {1})".format(
-            a[0], a[1].strip() if len(a) > 1 and a[1].strip().isdigit() else 4096
-        )
+    "tothetasketch": lambda a: "__theta_singleton({}, {}, {})".format(
+        *_split_hash_expr(a[0]),
+        a[1].strip() if len(a) > 1 and a[1].strip().isdigit() else 4096,
     ),
     "thetasketchtostring": lambda a: f"__theta_to_string({a[0]})",
     # engine extension: single-item sketch in the DataSketches COMPACT
@@ -5411,18 +5412,10 @@ def _ensure_theta_sql_udfs(spark: SparkSession) -> None:
     from pinot_spark.functions.sketches import TupleSketch, _MODES
 
     @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __theta_singleton(h, k):
-        kk = int(k.iloc[0]) if len(k) else 4096
-        out = []
-        for raw in h:
-            if pd.isna(raw):
-                out.append(ThetaSketch(kk, 2**64, np.array([], dtype=np.uint64)).to_bytes())
-            else:
-                # XOR of the sign bit == +2^63 mod 2^64 without the
-                # numpy scalar-overflow warning
-                u = np.int64(raw).astype(np.uint64) ^ np.uint64(1 << 63)
-                out.append(ThetaSketch(kk, 2**64, np.array([u], dtype=np.uint64)).to_bytes())
-        return pd.Series(out)
+    def __theta_singleton(hi, lo, k):
+        from pinot_spark.functions.sketches import theta_singleton_series
+
+        return theta_singleton_series(hi, lo, k)
 
     @pandas_udf("binary", PandasUDFType.SCALAR)
     def __ds_theta_single(v, t):
@@ -5452,16 +5445,10 @@ def _ensure_theta_sql_udfs(spark: SparkSession) -> None:
         return b.map(fmt)
 
     @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __tuple_singleton(h, v, k):
-        kk = int(k.iloc[0]) if len(k) else 4096
-        out = []
-        for raw, val in zip(h, v):
-            if pd.isna(raw) or pd.isna(val):
-                out.append(TupleSketch.empty(kk).to_bytes())
-            else:
-                u = int(np.int64(raw).astype(np.uint64) ^ np.uint64(1 << 63))
-                out.append(TupleSketch.singleton(kk, u, int(val)).to_bytes())
-        return pd.Series(out)
+    def __tuple_singleton(hi, lo, vhi, vlo, k):
+        from pinot_spark.functions.sketches import tuple_singleton_series
+
+        return tuple_singleton_series(hi, lo, vhi, vlo, k)
 
     @pandas_udf("binary", PandasUDFType.SCALAR)
     def __tuple_merge_sum(arrs):

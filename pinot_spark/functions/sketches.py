@@ -40,9 +40,10 @@ _DEFAULT_K = 4096  # 2^DEFAULT_TUPLE_SKETCH_LGK (CommonConstants 16 → 65536 is
 # formats use one K so theta and tuple sketches stay mutually consistent)
 
 
-def _shift_u64(h: _pd.Series) -> np.ndarray:
-    raw = h.to_numpy(dtype=np.int64).astype(np.uint64)
-    return raw + np.uint64(2**63)  # signed xxhash64 → unsigned, order-preserving
+def _join_u64(hi, lo) -> int:
+    """The order-preserving unsigned hash from the 32-bit halves of a
+    signed xxhash64 (``hi`` shifted unsigned)."""
+    return ((int(hi) << 32) | int(lo)) ^ (1 << 63)
 
 
 @dataclass
@@ -123,21 +124,31 @@ _MODES = {"sum": lambda a, b: a + b, "min": min, "max": max}
 # --- theta singleton / to-string ------------------------------------------
 
 
-def _make_theta_singleton():
+def theta_singleton_series(
+    hi: _pd.Series, lo: _pd.Series, k: _pd.Series
+) -> _pd.Series:
+    """One engine-own theta sketch per row: a singleton, or empty for a
+    NULL value.  The NULL-masked xxhash64 arrives as 32-bit halves — a
+    nullable BIGINT reaches pandas as float64 when a NULL shares the
+    Arrow batch, which cannot hold a 64-bit hash; each half can."""
     from pinot_spark.operators.theta import ThetaSketch
 
+    kk = int(k.iloc[0]) if len(k) else _DEFAULT_K
+    return _pd.Series(
+        [
+            ThetaSketch(
+                kk, 2**64,
+                np.array([] if _pd.isna(h) else [_join_u64(h, l)], dtype=np.uint64),
+            ).to_bytes()
+            for h, l in zip(hi, lo)
+        ]
+    )
+
+
+def _make_theta_singleton():
     @_pandas_udf("binary")
-    def _f(h: _pd.Series, k: _pd.Series) -> _pd.Series:
-        kk = int(k.iloc[0]) if len(k) else _DEFAULT_K
-        shifted = _shift_u64(h.fillna(0))
-        return _pd.Series(
-            [
-                ThetaSketch(kk, 2**64, np.array([], dtype=np.uint64)).to_bytes()
-                if _pd.isna(raw)
-                else ThetaSketch(kk, 2**64, np.array([u], dtype=np.uint64)).to_bytes()
-                for raw, u in zip(h, shifted)
-            ]
-        )
+    def _f(hi: _pd.Series, lo: _pd.Series, k: _pd.Series) -> _pd.Series:
+        return theta_singleton_series(hi, lo, k)
 
     return _f
 
@@ -283,18 +294,20 @@ _reg("todatasketchestheta")(
 )
 
 
-def _null_safe_hash(col):
+def _hash_halves(col):
     # xxhash64(NULL) returns the seed, not NULL — mask it so NULL inputs
-    # become EMPTY sketches (reference nullableParameters behavior)
+    # become EMPTY sketches (reference nullableParameters behavior); the
+    # hash travels as 32-bit halves (theta_singleton_series)
     c = _c(col)
-    return F.when(c.isNull(), F.lit(None).cast("long")).otherwise(F.xxhash64(c))
+    h = F.when(c.isNull(), F.lit(None).cast("long")).otherwise(F.xxhash64(c))
+    return F.shiftrightunsigned(h, 32), h.bitwiseAND(F.lit(0xFFFFFFFF))
 
 
 # reference: toThetaSketch(value[, nominalEntries]) — a singleton (or
 # empty, for NULL input) serialized sketch for pre-aggregated ingest
 _reg("tothetasketch")(
     lambda v, k=_DEFAULT_K: _lazy_udf("theta_singleton", _make_theta_singleton)(
-        _null_safe_hash(v), F.lit(int(k))
+        *_hash_halves(v), F.lit(int(k))
     )
 )
 _reg("thetasketchtostring")(
@@ -305,18 +318,33 @@ _reg("thetasketchtostring")(
 # --- integer tuple sketch family ------------------------------------------
 
 
+def tuple_singleton_series(
+    hi: _pd.Series, lo: _pd.Series, vhi: _pd.Series, vlo: _pd.Series,
+    k: _pd.Series,
+) -> _pd.Series:
+    """One integer-sum tuple sketch per row: a singleton, or empty when
+    the key or the value is NULL.  Hash and value both arrive as 32-bit
+    halves (theta_singleton_series); the value's high half is signed."""
+    kk = int(k.iloc[0]) if len(k) else _DEFAULT_K
+    return _pd.Series(
+        [
+            TupleSketch.empty(kk).to_bytes()
+            if _pd.isna(h) or _pd.isna(vh)
+            else TupleSketch.singleton(
+                kk, _join_u64(h, l), (int(vh) << 32) | int(vl)
+            ).to_bytes()
+            for h, l, vh, vl in zip(hi, lo, vhi, vlo)
+        ]
+    )
+
+
 def _make_tuple_singleton():
     @_pandas_udf("binary")
-    def _f(h: _pd.Series, v: _pd.Series, k: _pd.Series) -> _pd.Series:
-        kk = int(k.iloc[0]) if len(k) else _DEFAULT_K
-        shifted = _shift_u64(h.fillna(0))
-        out = []
-        for raw, u, val in zip(h, shifted, v):
-            if _pd.isna(raw) or _pd.isna(val):
-                out.append(TupleSketch.empty(kk).to_bytes())
-            else:
-                out.append(TupleSketch.singleton(kk, int(u), int(val)).to_bytes())
-        return _pd.Series(out)
+    def _f(
+        hi: _pd.Series, lo: _pd.Series, vhi: _pd.Series, vlo: _pd.Series,
+        k: _pd.Series,
+    ) -> _pd.Series:
+        return tuple_singleton_series(hi, lo, vhi, vlo, k)
 
     return _f
 
@@ -350,8 +378,10 @@ def _make_tuple_estimate():
 
 def _tuple_singleton(key, value, lg_k=None):
     k = _DEFAULT_K if lg_k is None else 2 ** int(lg_k)
+    v = _c(value).cast("long")
     return _lazy_udf("tuple_singleton", _make_tuple_singleton)(
-        _null_safe_hash(key), _c(value).cast("long"), F.lit(int(k))
+        *_hash_halves(key), F.shiftright(v, 32), v.bitwiseAND(F.lit(0xFFFFFFFF)),
+        F.lit(int(k)),
     )
 
 

@@ -36,6 +36,36 @@ def test_theta_singleton_and_tostring(spark, kv):
     assert "retained=1" in txt and txt.startswith("ThetaSketch(")
 
 
+def test_singleton_hash_exact_with_null_in_batch(spark):
+    """TO_THETA_SKETCH / TO_INTEGER_SUM_TUPLE_SKETCH keep every bit of
+    the hash and the value when a NULL shares the Arrow batch (one
+    partition here, at any core count), on both surfaces."""
+    from pinot_spark.dialect import PinotEngine
+
+    big = 2**60 + 3  # not representable in float64
+    df = spark.createDataFrame(
+        [("a", big), ("b", 2), ("a", 3), (None, 4)], "k string, v bigint"
+    ).coalesce(1)
+    h = spark.sql("SELECT xxhash64('a') AS h").collect()[0].h
+    want = (h % 2**64) ^ (1 << 63)
+    df.createOrReplaceTempView("singleton_null_batch")
+    sql_rows = PinotEngine(spark).sql(
+        "SELECT TO_THETA_SKETCH(k) AS t, TO_INTEGER_SUM_TUPLE_SKETCH(k, v) AS u "
+        "FROM singleton_null_batch"
+    ).collect()
+    col_rows = df.select(
+        call("tothetasketch", F.col("k")).alias("t"),
+        call("tointegersumtuplesketch", F.col("k"), F.col("v")).alias("u"),
+    ).collect()
+    for rows in (sql_rows, col_rows):
+        thetas = [ThetaSketch.from_bytes(bytes(r.t)) for r in rows]
+        tuples = [TupleSketch.from_bytes(bytes(r.u)) for r in rows]
+        assert int(thetas[0].hashes[0]) == int(thetas[2].hashes[0]) == want
+        assert int(tuples[0].hashes[0]) == want
+        assert int(tuples[0].values[0]) == big
+        assert len(thetas[3].hashes) == 0 and len(tuples[3].hashes) == 0
+
+
 def test_tuple_sketch_union_modes(spark, kv):
     rows = kv.select(
         call("tointegersumtuplesketch", F.col("k"), F.col("v")).alias("ts")
