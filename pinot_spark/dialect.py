@@ -788,26 +788,64 @@ def _raw_tdigest_sql(values_expr: str) -> str:
     )
 
 
-def _theta_nominal_entries(a: list[str]) -> int:
-    """Parse the optional 'nominalEntries=N' parameter string of
-    DISTINCT_COUNT_RAW_THETA_SKETCH (CommonConstants default 4096)."""
-    for arg in a[1:]:
+def _theta_lgk(params: list[str]) -> int:
+    """lgNomEntries for ``theta_sketch_agg`` from the optional
+    'nominalEntries=N' parameter string of DISTINCT_COUNT_RAW_THETA_SKETCH
+    (CommonConstants default 4096): log2 of N rounded up to a power of
+    two, the library's own setNominalEntries rounding; N outside
+    [16, 2^26] raises, as the library does."""
+    n = 4096
+    for arg in params:
         m = re.search(r"nominalEntries\s*=\s*(\d+)", arg, re.IGNORECASE)
         if m:
-            return int(m.group(1))
-    return 4096
-
-
-def _theta_raw_build_expr(a: list[str]) -> str:
-    """KMV theta build over values as a native-aggregate expression (see
-    the FUNCTION_MAP comment at ``distinctcountrawthetasketch``)."""
-    return (
-        "__theta_from_hashes(slice(sort_array(collect_set("
-        "CASE WHEN {0} IS NULL THEN CAST(NULL AS BIGINT) ELSE xxhash64({0}) END"
-        ")), 1, {1}), {2})".format(
-            a[0], _theta_nominal_entries(a) + 1, _theta_nominal_entries(a)
+            n = int(m.group(1))
+            break
+    if not 16 <= n <= 1 << 26:
+        raise PinotSqlError(
+            f"theta sketch nominalEntries={n} is outside [16, 2^26]"
         )
-    )
+    return (n - 1).bit_length()
+
+
+# a theta expression Spark builds natively in this statement: the set
+# operations and the estimate stay native over it
+_NATIVE_THETA_RE = re.compile(
+    r"(?i)theta_(?:sketch_agg|union|intersection|difference)\s*\("
+)
+
+
+def _is_native_theta(e: str) -> bool:
+    """Is ``e`` one native theta call, optionally followed by its OVER
+    clause?  Anything else (a BYTES column, a literal, an engine-own
+    builder) may hold engine-own bytes and keeps the UDF readers."""
+    m = _NATIVE_THETA_RE.match(e)
+    if not m:
+        return False
+    rest = e[_find_matching(e, m.end() - 1) + 1 :]
+    return not rest.strip() or bool(_OVER_AFTER_CALL_RE.match(rest))
+
+
+def _theta_op(native: str, udf: str, sized: bool = False) -> Callable[[list[str]], str]:
+    """A theta set operation: native when every argument is a native
+    theta expression (_is_native_theta), else the UDF, which reads
+    every wire format and refuses to mix hash domains; more than two
+    arguments nest left to right.  A ``sized`` operation (the union)
+    keeps as many entries as the largest native argument was built
+    with, so a union of large sketches keeps their accuracy."""
+
+    def f(a: list[str]) -> str:
+        fn, size = udf, ""
+        if all(map(_is_native_theta, a)):
+            fn = native
+            if sized:
+                lgks = [re.search(r",\s*(\d+)\s*\)\s*$", x) for x in a]
+                size = f", {max(int(m[1]) if m else 12 for m in lgks)}"
+        out = a[0]
+        for x in a[1:]:
+            out = f"{fn}({out}, {x}{size})"
+        return out
+
+    return f
 
 
 FUNCTION_MAP: dict[str, str | Callable[[list[str]], str]] = {
@@ -1013,11 +1051,12 @@ FUNCTION_MAP: dict[str, str | Callable[[list[str]], str]] = {
     "distinctcountsmarthll": lambda a: f"approx_count_distinct({a[0]})",
     # Pinot returns Math.round(sketch.getEstimate()) as a LONG, and a
     # theta sketch below nominalEntries is EXACT — approx_count_distinct
-    # (an HLL) is not, even at tiny cardinalities.  Ride the RAW theta
-    # machinery.  The filtered multi-parameter form is handled by
-    # rewrite_theta_value_calls / rewrite_theta_blob_calls before
-    # FUNCTION_MAP; a shape neither pass matched raises rather than
-    # silently ignoring its filter predicates.
+    # (an HLL) is not, even at tiny cardinalities.  Spark's native
+    # DataSketches aggregate is that sketch (theta_sketch_estimate
+    # rounds the same way).  The filtered multi-parameter form is
+    # handled by rewrite_theta_value_calls / rewrite_theta_blob_calls
+    # before FUNCTION_MAP; a shape neither pass matched raises rather
+    # than silently ignoring its filter predicates.
     "distinctcountthetasketch": lambda a: (
         _sql_gap(
             "DISTINCTCOUNTTHETASKETCH",
@@ -1025,9 +1064,7 @@ FUNCTION_MAP: dict[str, str | Callable[[list[str]], str]] = {
             "(col, params, 'p1', .., 'SET_OP($1, ..)') shape",
         )(a)
         if len(a) > 2
-        else "CAST(ROUND(__theta_estimate({})) AS BIGINT)".format(
-            _theta_raw_build_expr(a)
-        )
+        else f"theta_sketch_estimate(theta_sketch_agg({a[0]}, {_theta_lgk(a[1:])}))"
     ),
     # true CPC semantics since round 11: the same bounded coupon-domain
     # aggregation as DISTINCTCOUNTRAWCPCSKETCH, estimated with
@@ -1040,35 +1077,27 @@ FUNCTION_MAP: dict[str, str | Callable[[list[str]], str]] = {
     ),
     # --- raw theta sketch pipeline (UDFAggregates.json corpus:
     # GET_THETA_SKETCH_ESTIMATE(THETA_SKETCH_DIFF(DISTINCT_COUNT_RAW_THETA_
-    # SKETCH(col,'nominalEntries=16'), ...))). Values are hashed JVM-side
-    # (xxhash64); the KMV top-k + engine-own wire format is operators/
-    # theta.py's ThetaSketch, exposed through pandas UDFs that
-    # PinotEngine registers lazily (_ensure_theta_sql_udfs). ---
-    # KMV build as NATIVE aggregates (collect_set → sort → k+1 smallest;
-    # the +1 carries the theta boundary) + a SCALAR pandas UDF for the
-    # wire format — a grouped-agg pandas UDF can't mix with other
-    # aggregates in one SELECT (INVALID_PANDAS_UDF_PLACEMENT), and the
-    # corpus does exactly that (AVG(x), GET_THETA_SKETCH_ESTIMATE(...)).
-    # Scale note: canonical grouped statements are restructured FIRST by
-    # rewrite_raw_sketch_two_phase (partial-per-bucket + final merge,
-    # bounded buffers); this in-expression form is the fallback for
-    # non-canonical shapes, where collect_set holds all distinct hashes
-    # (map-side-deduped). The DataFrame-level bounded path is
-    # operators/theta.theta_sketch.
-    # NULLs are masked (CASE → NULL, collect_set drops NULLs) so raw and
-    # non-raw theta names agree: DISTINCTCOUNTTHETASKETCH's
-    # approx_count_distinct skips NULLs and TO_THETA_SKETCH emits an
-    # empty sketch for NULL — xxhash64(NULL) would otherwise contribute
-    # the seed hash as a phantom distinct value
-    "distinctcountrawthetasketch": lambda a: _theta_raw_build_expr(a),
-    "getthetasketchestimate": lambda a: f"__theta_estimate({a[0]})",
-    "thetasketchdiff": lambda a: f"__theta_diff({a[0]}, {a[1]})",
-    "thetasketchunion": lambda a: (
-        a[0]
-        if len(a) == 1
-        else "__theta_union(" + ", __theta_union(".join(a[:-1]) + ", " + a[-1] + ")" * (len(a) - 1)
+    # SKETCH(col,'nominalEntries=16'), ...))).  Value builds are Spark's
+    # native DataSketches aggregate (map-side partial, final merge; the
+    # murmur-9001 domain and compact bytes of datasketches-java, NULLs
+    # and '' skipped); translate casts argument types it rejects to an
+    # exact carrier first (rewrite_theta_carriers).  The estimate and
+    # the set operations stay native over native expressions; over
+    # anything else (stored BYTES columns, literals, TO_THETA_SKETCH)
+    # the pandas UDFs PinotEngine registers lazily
+    # (_ensure_theta_sql_udfs) read either wire format and refuse to
+    # mix hash domains. ---
+    "distinctcountrawthetasketch": lambda a: (
+        f"theta_sketch_agg({a[0]}, {_theta_lgk(a[1:])})"
     ),
-    "thetasketchintersect": lambda a: f"__theta_intersect({a[0]}, {a[1]})",
+    "getthetasketchestimate": lambda a: (
+        f"theta_sketch_estimate({a[0]})"
+        if _is_native_theta(a[0])
+        else f"__theta_estimate({a[0]})"
+    ),
+    "thetasketchdiff": _theta_op("theta_difference", "__theta_diff"),
+    "thetasketchunion": _theta_op("theta_union", "__theta_union", sized=True),
+    "thetasketchintersect": _theta_op("theta_intersection", "__theta_intersect"),
     # integer tuple sketch aggregations over serialized sketch columns
     # (functions/sketches.py wire format; built scalar-side by
     # TO_INTEGER_SUM_TUPLE_SKETCH) — merge with sum mode, then extract
@@ -3734,7 +3763,7 @@ def rewrite_unicode_literals(sql: str) -> str:
 
 
 _THETA_SQL_RE = re.compile(
-    r"\b(DISTINCT_?COUNT_?RAW_?THETA_?SKETCH|GET_?THETA_?SKETCH_?ESTIMATE"
+    r"\b(GET_?THETA_?SKETCH_?ESTIMATE"
     r"|THETA_?SKETCH_?(?:DIFF|UNION|INTERSECT|TO_?STRING)|TO_?THETA_?SKETCH"
     r"|TO_?DATA_?SKETCHES_?(?:THETA|TUPLE)"
     r"|TO_?INTEGER_?SUM_?TUPLE_?SKETCH|GET_?INT_?TUPLE_?SKETCH_?ESTIMATE"
@@ -3800,18 +3829,24 @@ _THETA_UDF_SESSIONS: weakref.WeakSet = weakref.WeakSet()
 # the same contract): the partial is the incremental __geo_union_agg
 # fold, the merge is FUNCTION_MAP's own __geo_union_fold over at most
 # 64 partials, and it has no zero-shuffle descriptor.
+#
+# Theta is not a record: Spark's native theta_sketch_agg already is
+# that contract (map-side partial, final merge), so theta needs none of
+# these shapes and counts as a native aggregate (_BASIC_AGG_CALL_RE) —
+# next to a family above it sits on the native side of the mixed split.
 # ---------------------------------------------------------------------------
 
 
 @dataclass(frozen=True)
 class _RawFamily:
-    """One raw-sketch aggregation: ``partial(a0, args)`` builds a group's
-    partial blob, ``merge`` names the UDF merging a collect_list of
-    partial blobs, ``final`` wraps the merged blob (``{}`` keeps it),
-    ``zs(a0, args)`` is the zero-shuffle descriptor
-    (operators/theta.grouped_sketch_partials) or None when the call has
-    no partition-local build (``zs=None``: never has one), and
-    ``fanout`` is the bucket count of the bucketed inner level (None
+    """One raw-sketch aggregation built by pandas UDAFs (the families
+    with no native Spark aggregate; theta has one and is not a record):
+    ``partial(a0, args)`` builds a group's partial blob, ``merge`` names
+    the UDF merging a collect_list of partial blobs, ``final`` wraps the
+    merged blob (``{}`` keeps it), ``zs(a0, args)`` is the zero-shuffle
+    descriptor (operators/theta.grouped_sketch_partials) or None when
+    the call has no partition-local build (``zs=None``: never has one),
+    and ``fanout`` is the bucket count of the bucketed inner level (None
     reads ``_RS_FANOUT``)."""
 
     partial: Callable[[str, list[str]], str]
@@ -3851,14 +3886,6 @@ _TDIGEST_FAMILY = _RawFamily(
 )
 
 _RAW_FAMILIES: dict[str, _RawFamily] = {
-    "distinctcountrawthetasketch": _RawFamily(
-        lambda a0, a: "__theta_partial({}, {}, {})".format(
-            *_split_hash_expr(a0), _theta_nominal_entries(a)
-        ),
-        "__theta_merge_blobs",
-        "{}",
-        lambda a0, a: ("theta", a0, _theta_nominal_entries(a)),
-    ),
     "distinctcountrawintegersumtuplesketch": _tuple_family("{}"),
     "sumvaluesintegersumtuplesketch": _tuple_family("__tuple_sum_values({})"),
     "avgvalueintegersumtuplesketch": _tuple_family("__tuple_avg_value({})"),
@@ -3937,8 +3964,7 @@ def _sub_raw_calls(s: str, repl: Callable[[str, list[str]], str]) -> str:
 # naive OVER() substitution Spark rejects — the scalar wrapper around
 # collect_set cannot carry a window spec)
 _RAW_WINDOW_CALL_RE = re.compile(
-    r"\b(?P<name>DISTINCT_?COUNT_?RAW_?THETA_?SKETCH"
-    r"|DISTINCT_?COUNT_?RAW_?INTEGER_?SUM_?TUPLE_?SKETCH"
+    r"\b(?P<name>DISTINCT_?COUNT_?RAW_?INTEGER_?SUM_?TUPLE_?SKETCH"
     r"|SUM_?VALUES_?INTEGER_?SUM_?TUPLE_?SKETCH"
     r"|AVG_?VALUE_?INTEGER_?SUM_?TUPLE_?SKETCH"
     r"|DISTINCT_?COUNT_?TUPLE_?SKETCH"
@@ -4126,7 +4152,13 @@ def rewrite_distinct_window_aggs(sql: str) -> str:
     return out
 
 
-_BASIC_AGG_CALL_RE = re.compile(r"\b(?P<name>COUNT|SUM|MIN|MAX|AVG)\s*\(", re.IGNORECASE)
+# native aggregates a statement may mix with raw-sketch calls; theta
+# builds are native too (theta_sketch_agg), so a statement mixing them
+# with a pandas-UDAF family takes the mixed split
+_BASIC_AGG_CALL_RE = re.compile(
+    r"\b(?P<name>COUNT|SUM|MIN|MAX|AVG|DISTINCT_?COUNT_?(?:RAW_?)?THETA_?SKETCH)\s*\(",
+    re.IGNORECASE,
+)
 # scalar wrappers both raw-sketch allow-lists accept around a raw call:
 # the sketch and ST output wrappers (Pinot names — the restructures run
 # before rewrite_functions) and a few scalar conveniences
@@ -4679,7 +4711,7 @@ _RS_INEXPR_ALLOW = _RS_WRAPPERS | {
 
 
 def rewrite_raw_sketch_inexpr_udaf(sql: str) -> str:
-    """Bounded aggregation for raw THETA/TUPLE/MV-digest/MV-HLL names in
+    """Bounded aggregation for raw TUPLE/MV-digest/MV-HLL/etc. names in
     NON-canonical statements (JOIN / HAVING / subqueries — shapes where
     ``rewrite_raw_sketch_two_phase`` declines): when nothing else in the
     statement aggregates, each raw call becomes a pandas GROUPED_AGG
@@ -4847,22 +4879,18 @@ _THETA_VALUE_CALL_RE = re.compile(
 _OVER_AFTER_CALL_RE = re.compile(r"\s*OVER\s*\(", re.IGNORECASE)
 
 
-def rewrite_theta_value_calls(
-    sql: str, blob_cols: set[str] | None = None
-) -> str:
+def rewrite_theta_value_calls(sql: str) -> str:
     """Value-build ``DISTINCTCOUNTTHETASKETCH(x[, params])`` →
-    ``CAST(ROUND(GETTHETASKETCHESTIMATE(DISTINCTCOUNTRAWTHETASKETCH(..)))
-    AS BIGINT)`` — Pinot returns ``Math.round(getEstimate())`` and a
-    theta sketch below nominalEntries is EXACT
-    (DistinctCountThetaSketchAggregationFunction.java), while Spark's
-    approx_count_distinct (an HLL) errs even at single-digit
-    cardinalities.  Runs AFTER the blob rewrite (any surviving call is a
-    value build) and BEFORE the raw-sketch restructuring passes so the
-    emitted RAW call rides the bounded two-phase / running-window
-    machinery.  A trailing OVER clause moves INSIDE the estimate wrapper
-    (window attaches to the aggregate, not the CAST).  The filtered
-    multi-parameter VALUE form (arity > 2) is left to the existing
-    fallback."""
+    ``GETTHETASKETCHESTIMATE(DISTINCTCOUNTRAWTHETASKETCH(..))``, which
+    FUNCTION_MAP makes ``theta_sketch_estimate(theta_sketch_agg(..))`` —
+    Pinot returns ``Math.round(getEstimate())`` and a theta sketch below
+    nominalEntries is EXACT
+    (DistinctCountThetaSketchAggregationFunction.java).  Runs AFTER the
+    blob rewrite (any surviving call is a value build), so the emitted
+    RAW call gets rewrite_theta_carriers' argument casts.  A trailing
+    OVER clause moves INSIDE the estimate (the window attaches to the
+    aggregate).  The filtered multi-parameter VALUE form becomes one
+    build per predicate, combined by the theta set operations."""
     out = sql
     pos = 0
     guard = 0
@@ -4880,21 +4908,13 @@ def rewrite_theta_value_calls(
         if not args or not args[0].strip():
             pos = open_idx + 1
             continue
-        if blob_cols and any(
-            tok.split(".")[-1].lower() in blob_cols
-            for tok in re.findall(r"[A-Za-z_][\w.]*", args[0])
-        ):
-            # references a pre-built sketch BYTES column — leave for the
-            # blob-union rewrite
-            pos = open_idx + 1
-            continue
         if len(args) > 2:
             # V1 filtered multi-parameter form over a VALUE column:
             # ``(col, params, 'p1', .., 'SET_OP($1, ..)')``
             # (DistinctCountThetaSketchAggregationFunction.java) — each
             # $i becomes a RAW build over CASE WHEN p_i, the post-agg's
-            # SET_* ops become the theta set-op scalars, estimate+round
-            # last.  Non-matching arity>2 shapes skip (loud downstream).
+            # SET_* ops become the theta set-op scalars, estimate last.
+            # Non-matching arity>2 shapes skip (loud downstream).
             lits = [
                 a.strip() for a in args[1:]
                 if a.strip().startswith("'") and a.strip().endswith("'")
@@ -4922,7 +4942,7 @@ def rewrite_theta_value_calls(
                 r"(?i)\bSET_INTERSECT\b", "THETASKETCHINTERSECT", expr
             )
             expr = re.sub(r"(?i)\bSET_DIFF\b", "THETASKETCHDIFF", expr)
-            repl = f"CAST(ROUND(GETTHETASKETCHESTIMATE({expr})) AS BIGINT)"
+            repl = f"GETTHETASKETCHESTIMATE({expr})"
             out = out[: m.start()] + repl + out[close + 1 :]
             pos = m.start() + len(repl)
             continue
@@ -4936,10 +4956,61 @@ def rewrite_theta_value_calls(
             oclose = _find_matching(out, oopen)
             inner += out[call_end : oclose + 1]
             call_end = oclose + 1
-        repl = f"CAST(ROUND(GETTHETASKETCHESTIMATE({inner})) AS BIGINT)"
+        repl = f"GETTHETASKETCHESTIMATE({inner})"
         out = out[: m.start()] + repl + out[call_end:]
         pos = m.start() + len(repl)
     return out
+
+
+_RAW_THETA_CALL_RE = re.compile(
+    r"\bDISTINCT_?COUNT_?RAW_?THETA_?SKETCH\s*\(", re.IGNORECASE
+)
+# theta_sketch_agg takes int, bigint, float, double, string, binary,
+# array<int> and array<bigint>; these argument types get an exact
+# carrier it accepts: small integers and booleans as INT and timestamps
+# as epoch millis (as Pinot stores them; TIMESTAMP_NTZ read in the
+# session time zone, which the engine's sessions pin to UTC), DATE as
+# epoch days, DECIMAL as its plain string (fixed scale: one string per
+# value at any precision)
+_THETA_CARRIERS = (
+    ((T.ByteType, T.ShortType, T.BooleanType), "CAST({} AS INT)"),
+    (T.TimestampType, "unix_millis({})"),
+    (T.TimestampNTZType, "unix_millis(CAST({} AS TIMESTAMP))"),
+    (T.DateType, "unix_date({})"),
+    (T.DecimalType, "CAST({} AS STRING)"),
+)
+# a bare (qualified) column, or the CASE WHEN wrapper the FILTER fold
+# and the filtered value form put around one
+_THETA_ARG_COL_RE = re.compile(
+    r"(?is)(\(\s*CASE\s+WHEN\s+.*\s+THEN\s+|)([A-Za-z_][\w.]*)(\s+END\s*\)|)"
+)
+
+
+def rewrite_theta_carriers(spark: SparkSession, sql: str) -> str:
+    """Cast each DISTINCTCOUNTRAWTHETASKETCH argument whose column type
+    theta_sketch_agg rejects to its exact carrier (_THETA_CARRIERS).
+    The type comes from the statement's schema memo; an argument it
+    cannot see passes unchanged, and Spark's DATATYPE_MISMATCH names it."""
+    types: dict[str, T.DataType] = {}
+    for t in {ref["table"] for ref in _table_refs(sql)}:
+        for f in _table_schema(spark, t).fields:
+            types.setdefault(f.name.lower(), f.dataType)
+
+    out, i = [], 0
+    spans = _literal_spans(sql)
+    for m in _RAW_THETA_CALL_RE.finditer(sql):
+        if any(a <= m.start() < b for a, b in spans):
+            continue
+        close = _find_matching(sql, m.end() - 1)
+        args = _split_args(sql[m.end() : close])
+        am = args and _THETA_ARG_COL_RE.fullmatch(args[0])
+        dt = am and types.get(am.group(2).split(".")[-1].lower())
+        tpl = next((c for ts, c in _THETA_CARRIERS if isinstance(dt, ts)), None)
+        if tpl:
+            args[0] = am.group(1) + tpl.format(am.group(2)) + am.group(3)
+            out += [sql[i : m.end()], ", ".join(args)]
+            i = close
+    return "".join(out) + sql[i:]
 
 
 def rewrite_theta_blob_calls(spark: SparkSession, sql: str) -> str:
@@ -5323,10 +5394,10 @@ def _ensure_geo_sql_udfs(spark: SparkSession) -> None:
 
 
 def _ensure_theta_sql_udfs(spark: SparkSession) -> None:
-    """Register the raw-theta-sketch pandas UDFs FUNCTION_MAP's
-    rewrites call (__theta_agg grouped-agg + scalar estimate/diff/
-    union/intersect over the engine-own wire format, operators/theta.py).
-    Idempotent per SparkSession."""
+    """Register the sketch pandas UDFs FUNCTION_MAP's rewrites call:
+    the theta readers (estimate/diff/union/intersect/blob union over
+    either theta wire format), the singletons, and the other families'
+    partials, merges and finals.  Idempotent per SparkSession."""
     if spark in _THETA_UDF_SESSIONS:
         return
     import numpy as np
@@ -5335,19 +5406,8 @@ def _ensure_theta_sql_udfs(spark: SparkSession) -> None:
 
     from pinot_spark.operators.theta import ThetaSketch
 
-    def _from_hash_list(hs, k: int) -> bytes:
-        raw = np.asarray(hs, dtype=np.int64).astype(np.uint64)
-        raw += np.uint64(2**63)  # signed xxhash64 → unsigned, order-preserving
-        return ThetaSketch.from_hashes(k, raw).to_bytes()
-
     # eval types are explicit: hint strings can't resolve the
     # function-local pandas import
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __theta_from_hashes(arrs, k):
-        kk = int(k.iloc[0]) if len(k) else 4096
-        return pd.Series(
-            [_from_hash_list(hs if hs is not None else [], kk) for hs in arrs]
-        )
 
     # DataSketches wire-format interop (operators/ds_theta.py): every
     # theta consumer auto-detects the compact DataSketches layout per
@@ -5765,23 +5825,7 @@ def _ensure_theta_sql_udfs(spark: SparkSession) -> None:
     # path for pure-sketch statements). Persistent aggregation state is
     # the emitted sketch blob; the group's rows stream to Python as Arrow
     # batches (the transient feed is bounded by the two-phase bucket
-    # fanout where the rewrite applies). 64-bit hashes arrive SPLIT into
-    # hi/lo 32-bit halves: a nullable BIGINT column reaches pandas as
-    # float64, which cannot represent xxhash64 exactly — 32-bit halves
-    # can (both < 2^32), and NULLs stay detectable as NaN.
-    def _join_halves(hi: pd.Series, lo: pd.Series) -> np.ndarray:
-        mask = hi.notna().to_numpy()
-        h = np.asarray(hi, dtype=np.float64)[mask].astype(np.uint64)
-        l = np.asarray(lo, dtype=np.float64)[mask].astype(np.uint64)
-        # (hi<<32)|lo reassembles the unsigned reinterpretation of the
-        # signed xxhash64; ^2^63 matches the +2^63 shift used everywhere
-        return ((h << np.uint64(32)) | l) ^ np.uint64(1 << 63)
-
-    @pandas_udf("binary", PandasUDFType.GROUPED_AGG)
-    def __theta_partial(hi, lo, k):
-        kk = int(k.iloc[0]) if len(k) else 4096
-        return ThetaSketch.from_hashes(kk, _join_halves(hi, lo)).to_bytes()
-
+    # fanout where the rewrite applies).
     @pandas_udf("binary", PandasUDFType.GROUPED_AGG)
     def __tuple_partial(blobs):
         from pinot_spark.operators.ds_theta import DsTupleSketch, is_ds_tuple_bytes
@@ -5918,19 +5962,6 @@ def _ensure_theta_sql_udfs(spark: SparkSession) -> None:
             ],
             dtype="Int64",
         )
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __theta_merge_blobs(arrs):
-        def run(lst):
-            acc = None
-            for b in lst if lst is not None else []:
-                if b is None:
-                    continue
-                s = ThetaSketch.from_bytes(bytes(b))
-                acc = s if acc is None else acc.union(s)
-            return (acc or ThetaSketch(4096, 2**64, np.array([], dtype=np.uint64))).to_bytes()
-
-        return pd.Series([run(lst) for lst in arrs])
 
     def _union_any_blobs(lst):
         """Union a list of serialized theta sketches in EITHER wire
@@ -6370,8 +6401,9 @@ class PinotEngine:
                 _ensure_theta_sql_udfs(self.spark)
                 sql = rewrite_theta_blob_calls(self.spark, sql)
             if _THETA_VALUE_CALL_RE.search(sql):
-                _ensure_theta_sql_udfs(self.spark)
                 sql = rewrite_theta_value_calls(sql)
+            if _RAW_THETA_CALL_RE.search(sql):
+                sql = rewrite_theta_carriers(self.spark, sql)
             if _THETA_SQL_RE.search(sql):
                 _ensure_theta_sql_udfs(self.spark)
             if _search_outside_literals(_RAW_SKETCH_CALL_RE, sql):
@@ -6540,17 +6572,6 @@ class PinotEngine:
             view = f"__gapfill_{_ASOF_VIEW_SEQ[0]}"
             self._gapfill(prefix + bare[s + 1 : e]).createOrReplaceTempView(view)
             return self.sql(prefix + bare[:s] + view + bare[e + 1 :])
-        if _THETA_VALUE_CALL_RE.search(pinot_sql) and re.search(
-            r"\bOVER\s*\(", pinot_sql, re.IGNORECASE
-        ):
-            # value-build theta in WINDOW position must become its RAW
-            # twin BEFORE the window router (which keys on RAW names);
-            # pre-built blob columns stay for the blob rewrite
-            _ensure_theta_sql_udfs(self.spark)
-            pinot_sql = rewrite_theta_value_calls(
-                pinot_sql,
-                blob_cols=_typed_columns(self.spark, pinot_sql, (T.BinaryType,)),
-            )
         routed = self._route_raw_sketch_windows(pinot_sql)
         if routed is not None:
             return routed
@@ -6599,7 +6620,8 @@ class PinotEngine:
         RANGE sliding and two-sided bounded frames still raise.  Without
         this route, Spark rejects the naive
         substitution with a misleading MISSING_GROUP_BY (OVER cannot
-        attach to the scalar-wrapped collect_set)."""
+        attach to the scalar-wrapped collect_set).  Theta is not routed:
+        ``theta_sketch_agg`` is a native window aggregate for any frame."""
         options, sql = split_options(pinot_sql)
         if not _RAW_WINDOW_CALL_RE.search(sql) or not re.search(
             r"\bOVER\s*\(", sql, re.IGNORECASE
@@ -6744,19 +6766,6 @@ class PinotEngine:
         past 2^53)."""
         col = args[0]
         wrap = "{}"
-        if canonical == "distinctcountrawthetasketch":
-            k = _theta_nominal_entries(args)
-            base = (
-                f"CASE WHEN ({col}) IS NULL THEN CAST(NULL AS BIGINT) "
-                f"ELSE xxhash64({col}) END"
-            )
-            return (
-                "theta",
-                (k,),
-                [f"shiftright({base}, 32)", f"({base}) & 4294967295"],
-                False,
-                wrap,
-            )
         if canonical in (
             "distinctcounttuplesketch",
             "distinctcountrawintegersumtuplesketch",
@@ -7138,11 +7147,7 @@ class PinotEngine:
                 sel = list(keys)
                 op_calls: list[tuple] = []
                 for i, d in enumerate(zs_calls):
-                    if d[0] == "theta":
-                        hi, lo = _split_hash_expr(d[1])
-                        sel += [f"{hi} AS __hi{i}", f"({lo}) AS __lo{i}"]
-                        op_calls.append(("theta", f"__hi{i}", f"__lo{i}", d[2]))
-                    elif d[0] == "cs_hll":
+                    if d[0] == "cs_hll":
                         # clearspring murmur-domain pairs: pure-JVM
                         # expression for integer-element arrays, the
                         # Arrow-batched pair UDF otherwise (same bounded

@@ -19,6 +19,8 @@ from collections.abc import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
+from pinot_spark.dialect import _theta_lgk
+
 
 def _c(x) -> Column:
     return x if isinstance(x, Column) else F.col(x)
@@ -79,19 +81,16 @@ _reg("distinctavg")(lambda c: F.try_divide(F.sum_distinct(_c(c).cast("double")),
 _reg("distinctcounthll", "distinctcounthllplus", "distinctcountull",
      "distinctcountsmarthll")(lambda c, *a: F.approx_count_distinct(_c(c)))
 _reg("distinctcountrawhll", "distinctcountrawhllplus")(lambda c, *a: F.hll_sketch_agg(_c(c)))
-_reg("distinctcountthetasketch", "distinctcountcpcsketch",
+_reg("distinctcountcpcsketch",
      "distinctcounttuplesketch")(lambda c, *a: F.approx_count_distinct(_c(c)))
-
-
-@_reg("distinctcountrawthetasketch")
-def _raw_theta(c, *a):
-    # Theta sketches are driver-mergeable objects, not a single Column agg;
-    # erroring beats a silently-wrong Column (VERDICT r1 principle).
-    raise NotImplementedError(
-        "DISTINCTCOUNTRAWTHETASKETCH is a two-step plan: "
-        "operators.theta.theta_sketch(df, col).to_bytes() — mergeable KMV "
-        "sketch with union/intersect/a_not_b set algebra"
-    )
+# theta: Spark's native DataSketches aggregate, as on the SQL surface
+# (the optional params string is DISTINCT_COUNT_RAW_THETA_SKETCH's)
+_reg("distinctcountrawthetasketch")(
+    lambda c, *a: F.theta_sketch_agg(_c(c), _theta_lgk(list(a)))
+)
+_reg("distinctcountthetasketch")(
+    lambda c, *a: F.theta_sketch_estimate(F.theta_sketch_agg(_c(c), _theta_lgk(list(a))))
+)
 
 
 @_reg("percentilerawtdigest", "percentilerawkll", "percentilerawest")

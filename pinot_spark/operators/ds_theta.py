@@ -10,8 +10,12 @@ This module implements that public format from scratch:
 - ``parse`` / ``serialize``: the compact (ordered) theta layout in all
   four shapes — empty, single-item, exact (theta == MAX) and estimating
   (explicit theta long).  ``serialize(parse(b)) == b`` for every
-  Java-generated golden vector (tests/data/ds_theta_vectors.json), so
-  the writer is byte-canonical with the library.
+  serial-version-3 Java golden vector (tests/data/ds_theta_vectors.json),
+  so the writer is byte-canonical with the library's uncompressed form.
+  ``parse`` also reads serial version 4, the compressed form Spark's
+  native ``theta_sketch_agg`` writes for two or more entries;
+  ``serialize`` writes version 3, so for version-4 input it returns the
+  same sketch in the other layout, not the input bytes.
 - ``update_hash_long`` / ``update_hash_bytes``: the update-hash domain
   (murmur3 x64-128, seed 9001, high bit cleared), bit-identical to
   ``org.apache.datasketches.hash.MurmurHash3`` probes.
@@ -35,6 +39,17 @@ Layout facts (verified against datasketches-java 6.2.0 byte dumps):
   [preLongs>=2] bytes 8-11 retained count (LE int32), 12-15 p (LE f32, 1.0)
   [preLongs==3] bytes 16-23 theta (LE int64)
   then retained hashes, LE uint64, ascending, all < theta < 2^63.
+
+Serial version 4 (compressed; datasketches-java 6.2.0 as bundled with
+Spark 4.1.2, always ordered with two or more entries):
+  byte 0   preamble longs (1 exact, 2 estimating)
+  byte 1   serial version = 4;  byte 2  family id = 3
+  byte 3   bits per delta;  byte 4  byte width of the entry count
+  byte 5   flags (0x1a: read-only, compact, ordered)
+  bytes 6-7  seed hash
+  [preLongs==2] bytes 8-15 theta (LE int64)
+  then the entry count (LE, byte-4 bytes wide), then the deltas between
+  consecutive sorted hashes (the first from 0), bit-packed big-endian.
 """
 
 from __future__ import annotations
@@ -48,6 +63,7 @@ DS_SEED = 9001
 DS_SEED_HASH = 37836  # ThetaUtil.computeSeedHash(9001)
 MAX_THETA = (1 << 63) - 1
 _SER_VER = 3
+_SER_VER_COMPRESSED = 4
 _FAMILY_COMPACT = 3
 _F_READ_ONLY, _F_EMPTY, _F_COMPACT, _F_ORDERED, _F_SINGLE = 2, 4, 8, 16, 32
 
@@ -107,11 +123,11 @@ def update_hash_bytes(b: bytes) -> int:
 def is_ds_theta_bytes(b: bytes) -> bool:
     """Structural sniff for the DataSketches compact-theta preamble.
     The engine-own format starts with a little-endian int32 k (a power
-    of two), which can never render serVer==3 AND family==3 in bytes
-    1-2, so the two formats are unambiguous."""
+    of two), which can never render serVer 3 or 4 AND family==3 in
+    bytes 1-2, so the two formats are unambiguous."""
     return (
         len(b) >= 8
-        and b[1] == _SER_VER
+        and b[1] in (_SER_VER, _SER_VER_COMPRESSED)
         and b[2] == _FAMILY_COMPACT
         and (b[0] & 0x3F) in (1, 2, 3)
     )
@@ -173,6 +189,8 @@ class DsThetaSketch:
                 f"theta sketch built with a non-default seed "
                 f"(seed hash {seed_hash}, expected {DS_SEED_HASH} for seed 9001)"
             )
+        if b[1] == _SER_VER_COMPRESSED:
+            return cls._parse_compressed(b)
         if flags & _F_SINGLE or (pre_longs == 1):
             h = struct.unpack_from("<Q", b, 8)[0]
             return cls(MAX_THETA, np.array([h], dtype=np.uint64))
@@ -186,6 +204,21 @@ class DsThetaSketch:
         hashes = np.frombuffer(b, dtype="<u8", count=retained, offset=off).copy()
         hashes.sort()  # unordered compact inputs are legal; canonicalize
         return cls(theta, hashes)
+
+    @classmethod
+    def _parse_compressed(cls, b: bytes) -> "DsThetaSketch":
+        """Serial version 4 (module docstring): unpack the bit-packed
+        deltas into 64-bit words, then sum them back into hashes."""
+        bits, width = b[3], b[4]
+        theta, off = MAX_THETA, 8
+        if b[0] & 0x3F == 2:
+            theta, off = struct.unpack_from("<q", b, 8)[0], 16
+        n = int.from_bytes(b[off : off + width], "little")
+        packed = np.unpackbits(np.frombuffer(b, dtype=np.uint8, offset=off + width))
+        words = np.zeros((n, 64), dtype=np.uint8)
+        words[:, 64 - bits :] = packed[: n * bits].reshape(n, bits)
+        deltas = np.packbits(words, axis=1).view(">u8").ravel()
+        return cls(theta, np.cumsum(deltas, dtype=np.uint64))
 
     def serialize(self) -> bytes:
         n = len(self.hashes)
@@ -447,6 +480,21 @@ class DsTupleSketch:
             off += 13
         order = np.argsort(hashes)
         return cls(theta, hashes[order], values[order])
+
+    @classmethod
+    def _parse_compressed(cls, b: bytes) -> "DsThetaSketch":
+        """Serial version 4 (module docstring): unpack the bit-packed
+        deltas into 64-bit words, then sum them back into hashes."""
+        bits, width = b[3], b[4]
+        theta, off = MAX_THETA, 8
+        if b[0] & 0x3F == 2:
+            theta, off = struct.unpack_from("<q", b, 8)[0], 16
+        n = int.from_bytes(b[off : off + width], "little")
+        packed = np.unpackbits(np.frombuffer(b, dtype=np.uint8, offset=off + width))
+        words = np.zeros((n, 64), dtype=np.uint8)
+        words[:, 64 - bits :] = packed[: n * bits].reshape(n, bits)
+        deltas = np.packbits(words, axis=1).view(">u8").ravel()
+        return cls(theta, np.cumsum(deltas, dtype=np.uint64))
 
     def serialize(self) -> bytes:
         n = len(self.hashes)

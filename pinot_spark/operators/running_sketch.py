@@ -23,28 +23,26 @@ sequential pass per partition group inside one Arrow-batched
 applyInPandas stage.  The per-value hash/pair/coupon TOKENS are
 computed JVM-side in the derived view's projection, reusing the very
 SQL expressions the grouped aggregation routes use (dialect
-``_hll_pair_expr`` / ``_cs_hll_pair_sql`` / raw ``xxhash64``), so a
+``_hll_pair_expr`` / ``_cs_hll_pair_sql`` / ``_cpc_coupon_sql``), so a
 running blob for a full partition is byte-identical to the grouped
 route's blob for the same rows: one hash domain, one accumulation
 rule, one serializer.  Accumulator state is sketch-bounded per group
-(registers / KMV heap / reverse-purge map / centroid list); only the
-emitted one-blob-per-row column scales with rows, which is the query's
-own output contract.
+(registers / merged tuple sketch / reverse-purge map / centroid list);
+only the emitted one-blob-per-row column scales with rows, which is the
+query's own output contract.
 
-Full-range int64 tokens (theta xxhash64, FREQUENTLONGS values) ride as
-split hi/lo 32-bit halves: a nullable BIGINT column reaches pandas as
-float64, which is lossy past 2^53 (the repo-wide convention, see
+Theta has no accumulator here: Spark computes ``theta_sketch_agg``
+over any window frame natively.
+
+Full-range int64 tokens (FREQUENTLONGS values) ride as split hi/lo
+32-bit halves: a nullable BIGINT column reaches pandas as float64,
+which is lossy past 2^53 (the repo-wide convention, see
 operators/ds_theta.grouped_ds_theta).
 """
 
 from __future__ import annotations
 
-import heapq
-
 import numpy as np
-
-_TWO64 = 1 << 64
-
 
 def _missing(v) -> bool:
     return v is None or (isinstance(v, float) and v != v)
@@ -88,39 +86,6 @@ class PairSetAcc:
     def blob(self) -> bytes:
         arr = np.fromiter(self.pairs, dtype=np.int64, count=len(self.pairs))
         return self._blob_fn(arr)
-
-
-class ThetaAcc:
-    """Running engine-own theta (xxhash64 domain): a dedup set plus a
-    max-heap of the k+1 smallest unsigned hashes — the same candidates
-    the grouped route's ``slice(sort_array(collect_set(..)), 1, k+1)``
-    keeps, so ThetaSketch.from_hashes yields identical bytes."""
-
-    def __init__(self, k: int):
-        from pinot_spark.operators.theta import ThetaSketch
-
-        self._cls = ThetaSketch
-        self.k = k
-        self.seen: set[int] = set()
-        self.heap: list[int] = []  # negated unsigned hashes, size <= k+1
-
-    def push(self, vals):
-        hi, lo = vals
-        if _missing(hi):
-            return
-        h = (int(hi) << 32) | int(lo)
-        u = (h % _TWO64) ^ (1 << 63)  # signed -> unsigned, order-preserving
-        if u in self.seen:
-            return
-        self.seen.add(u)
-        if len(self.heap) < self.k + 1:
-            heapq.heappush(self.heap, -u)
-        elif u < -self.heap[0]:
-            heapq.heapreplace(self.heap, -u)
-
-    def blob(self) -> bytes:
-        vals = np.array(sorted(-x for x in self.heap), dtype=np.uint64)
-        return self._cls.from_hashes(self.k, vals).to_bytes()
 
 
 class TupleAcc:
@@ -272,9 +237,6 @@ def make_acc(family: str, params: tuple):
     """Accumulator factory. ``family`` is the internal family key the
     dialect's running-window spec table assigns; ``params`` carries the
     parsed sketch parameters."""
-    if family == "theta":
-        (k,) = params
-        return ThetaAcc(k)
     if family == "hll_cs":
         from pinot_spark.operators.cs_hll import CsHll
 

@@ -177,35 +177,36 @@ def grouped_sketch_partials(
     src: DataFrame, keys: list[str], calls: list[tuple]
 ) -> DataFrame:
     """Partition-local GROUPED sketch partials — the map-side combine
-    the SQL two-phase cannot express (pandas UDAFs have no partial
-    aggregation, so the GROUPED_AGG inner shuffles O(rows)).
+    the SQL two-phase cannot express for the families pandas UDAFs
+    build (they have no partial aggregation, so the GROUPED_AGG inner
+    shuffles O(rows)).  Theta needs none: Spark's native
+    ``theta_sketch_agg`` has its own partial aggregate.
 
-    ``src`` must already carry the key columns plus, per call i, the
-    NULL-masked xxhash64 split into 32-bit halves as ``__hi{i}``/
-    ``__lo{i}`` (a nullable BIGINT reaches pandas as float64, which
-    cannot hold a 64-bit hash exactly; the halves can —
-    dialect._split_hash_expr), and for tuple calls a value column.
-    ``calls`` entries are ("theta", hi_col, lo_col, k),
-    ("tuple", hi_col, lo_col, k, vhi_col, vlo_col) — the integer-sum
+    ``src`` must already carry the key columns plus each call's input
+    columns.  ``calls`` entries are
+    ("tuple", hi_col, lo_col, k, vhi_col, vlo_col) — the NULL-masked
+    xxhash64 of the key split into 32-bit halves (a nullable BIGINT
+    reaches pandas as float64, which cannot hold a 64-bit hash exactly;
+    the halves can — dialect._split_hash_expr) and the VALUE as 32-bit
+    halves too (arithmetic-shift hi keeps the sign); the integer-sum
     tuple sketch accumulates exact int64 per-hash sums alongside the
-    KMV candidates; the VALUE also arrives as 32-bit halves
-    (arithmetic-shift hi keeps the sign) because nullable BIGINTs reach
-    pandas as float64, lossy past 2^53 —, ("cs_hll", pairs_col, log2m)
+    KMV candidates —, ("cs_hll", pairs_col, log2m)
     or ("cs_hllpp", pairs_col, p, sp) whose column holds clearspring
     j*64+rho register pairs (dialect._cs_hll_pairs_arr_sql; values
     < 2^log2m·64+64 so float64-exact, partial state is the fixed
-    register array), or
-    ("tdigest", values_col) accumulating an engine-own t-digest
-    (bounded centroid count) per group.
+    register array), ("freq_str", col, max_map_size) or
+    ("freq_long", hi_col, lo_col, max_map_size) building a frequent-
+    items sketch, or ("tdigest", values_col) accumulating an engine-own
+    t-digest (bounded centroid count) per group.
 
     One ``mapInPandas`` pass accumulates, per (key-tuple, call), the
-    ≤ k+1 smallest distinct hashes (k+1, not k: the (k+1)-th value
-    BECOMES theta downstream — truncating to k silently flips the
-    sketch into its "exact" regime) across the partition's Arrow
-    batches, then emits ONE row per key per partition:
-    (keys..., __rs0 blob, ...). The only shuffle after this is of
-    partial rows — O(groups × partitions × blob) — mirroring Pinot's
-    segment-local sketch build + broker merge
+    bounded partial state across the partition's Arrow batches — for a
+    tuple call the ≤ k+1 smallest distinct hashes (k+1, not k: the
+    (k+1)-th value BECOMES theta downstream — truncating to k silently
+    flips the sketch into its "exact" regime) — then emits ONE row per
+    key per partition: (keys..., __rs0 blob, ...). The only shuffle
+    after this is of partial rows — O(groups × partitions × blob) —
+    mirroring Pinot's segment-local sketch build + broker merge
     (AggregationFunction.java:63,86,132). Candidate truncation at k+1
     is associative, so the downstream blob merge is exact w.r.t. the
     flat build; tuple value sums are per-hash and combine across
@@ -303,41 +304,31 @@ def grouped_sketch_partials(
                             for v, c in zip(vals, cnts):
                                 fs.update(int(v), int(c))
                         continue
-                    hi_c, lo_c, k = call[1], call[2], call[3]
-                    if kind == "theta":
-                        u, _ = _u64_of(g, hi_c, lo_c)
-                        if not len(u):
-                            continue
-                        cand = (
-                            u if slot[i] is None
-                            else np.concatenate([slot[i], u])
-                        )
-                        cand = np.unique(cand)  # sorted
-                        slot[i] = cand[: k + 1]
-                    else:  # tuple: exact int64 per-hash sums ride along
-                        u, mask = _u64_of(g, hi_c, lo_c)
-                        vhi = g[call[4]].to_numpy(dtype="float64")[mask]
-                        vlo = g[call[5]].to_numpy(dtype="float64")[mask]
-                        vmask = ~np.isnan(vhi)
-                        u = u[vmask]
-                        v = (
-                            vhi[vmask].astype(np.int64) << np.int64(32)
-                        ) | vlo[vmask].astype(np.int64)
-                        if slot[i] is not None:
-                            pu, pv = slot[i]
-                            u = np.concatenate([pu, u])
-                            v = np.concatenate([pv, v])
-                        if not len(u):
-                            continue
-                        order = np.argsort(u, kind="stable")
-                        us, vs = u[order], v[order]
-                        first = np.empty(len(us), dtype=bool)
-                        first[0] = True
-                        first[1:] = us[1:] != us[:-1]
-                        starts = np.flatnonzero(first)
-                        sums = np.add.reduceat(vs, starts)  # int64 exact
-                        uh = us[starts]
-                        slot[i] = (uh[: k + 1], sums[: k + 1])
+                    # tuple: exact int64 per-hash sums ride along
+                    k = call[3]
+                    u, mask = _u64_of(g, call[1], call[2])
+                    vhi = g[call[4]].to_numpy(dtype="float64")[mask]
+                    vlo = g[call[5]].to_numpy(dtype="float64")[mask]
+                    vmask = ~np.isnan(vhi)
+                    u = u[vmask]
+                    v = (
+                        vhi[vmask].astype(np.int64) << np.int64(32)
+                    ) | vlo[vmask].astype(np.int64)
+                    if slot[i] is not None:
+                        pu, pv = slot[i]
+                        u = np.concatenate([pu, u])
+                        v = np.concatenate([pv, v])
+                    if not len(u):
+                        continue
+                    order = np.argsort(u, kind="stable")
+                    us, vs = u[order], v[order]
+                    first = np.empty(len(us), dtype=bool)
+                    first[0] = True
+                    first[1:] = us[1:] != us[:-1]
+                    starts = np.flatnonzero(first)
+                    sums = np.add.reduceat(vs, starts)  # int64 exact
+                    uh = us[starts]
+                    slot[i] = (uh[: k + 1], sums[: k + 1])
         if not acc:
             return
         rows = []
@@ -386,27 +377,21 @@ def grouped_sketch_partials(
                     row.append(fs.serialize())
                     continue
                 k = call[3]
-                if kind == "theta":
-                    cand = slots[i]
-                    if cand is None:
-                        cand = np.array([], dtype=np.uint64)
-                    row.append(ThetaSketch.from_hashes(k, cand).to_bytes())
+                if slots[i] is None:
+                    uh = np.array([], dtype=np.uint64)
+                    sums = np.array([], dtype=np.int64)
                 else:
-                    if slots[i] is None:
-                        uh = np.array([], dtype=np.uint64)
-                        sums = np.array([], dtype=np.int64)
-                    else:
-                        uh, sums = slots[i]
-                    if len(uh) > k:
-                        th = int(uh[k])
-                        uh, sums = uh[:k], sums[:k]
-                    else:
-                        th = 2**64
-                    row.append(
-                        TupleSketch(
-                            k, th, uh.astype(np.uint64), sums.astype(np.int64)
-                        ).to_bytes()
-                    )
+                    uh, sums = slots[i]
+                if len(uh) > k:
+                    th = int(uh[k])
+                    uh, sums = uh[:k], sums[:k]
+                else:
+                    th = 2**64
+                row.append(
+                    TupleSketch(
+                        k, th, uh.astype(np.uint64), sums.astype(np.int64)
+                    ).to_bytes()
+                )
             rows.append(row)
         out = pd.DataFrame(
             rows, columns=keys + [f"__rs{i}" for i in range(len(calls))]

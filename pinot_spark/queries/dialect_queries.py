@@ -572,25 +572,19 @@ def dialect_raw_ull_distinct(spark, sf_dir):
     """,
 )
 def dialect_raw_theta_scale(spark, sf_dir):
-    """High-cardinality grouped DISTINCTCOUNTRAWTHETASKETCH at the
-    bounded scale path. Since round 9 the canonical single-table shape
-    takes the ZERO-SHUFFLE route (VERDICT r8 'missing #2'): one
-    mapInPandas pass builds partition-local per-group KMV partials
-    (operators/theta.grouped_sketch_partials — the map-side combine
-    pandas UDAFs lack), and the only exchange moves partial BLOB rows,
-    O(groups × partitions), mirroring Pinot's segment-local build +
-    broker merge. No (keys, bucket) row shuffle, no collect_set of
-    hashes — gated in tests/test_plan_quality.py. Candidate truncation
-    at k+1 is associative, so the answer is bit-identical to the SQL
-    two-phase it replaces.
+    """High-cardinality grouped DISTINCTCOUNTRAWTHETASKETCH.  The build
+    is Spark's native DataSketches aggregate (theta_sketch_agg):
+    map-side partial sketches per group, and the only exchange moves
+    those partials, O(groups × partitions), mirroring Pinot's
+    segment-local build + broker merge.  No row shuffle, no collect_set
+    of hashes, no Python worker — gated in tests/test_theta_native.py.
 
     l_orderkey's per-flag cardinality exceeds the default nominal
     entries (4096) at sf>=0.01, so the sketch runs in its genuinely
     approximate regime; the emitted columns are the exact count plus the
     ~1.6%-standard-error estimate checked at 5% (the oracle emits the
-    same exact and literal TRUE). The sketch statement stays PURE (no
-    co-occurring native aggregates) so it takes the GROUPED_AGG shape;
-    the exact side is a separate query joined for evidence packaging.
+    same exact and literal TRUE). The exact side is a separate query
+    joined for evidence packaging.
     Reference: DistinctCountRawThetaSketchAggregationFunction.java."""
     eng = _engine(spark, sf_dir)
     approx = eng.sql(
@@ -629,16 +623,13 @@ def dialect_raw_theta_scale(spark, sf_dir):
 )
 def dialect_raw_theta_join(spark, sf_dir):
     """DISTINCTCOUNTRAWTHETASKETCH under a JOIN — the statement shape
-    round 7 served with per-value collect_set state. The bucketed
-    two-phase now accepts JOIN statements (the FROM join tree carries
-    verbatim into the inner level), so this runs GROUPED_AGG partials
-    per (key, bucket) with sketch-sized aggregation state — the
-    reference's partial-state contract
-    (AggregationFunction.java:63,86,132); the plan gate asserts no
-    per-value collection. Non-canonical shapes (HAVING, subqueries)
-    take the in-expression UDAF path instead. Cardinalities here stay
-    under the nominal entries, so the KMV sketch is EXACT and the oracle
-    mirrors the column with the exact distinct count."""
+    round 7 served with per-value collect_set state.  Theta is a native
+    aggregate (theta_sketch_agg), so the join feeds a partial/final
+    aggregation with sketch-sized state — the reference's partial-state
+    contract (AggregationFunction.java:63,86,132) — in any statement
+    shape, with no restructure.  Cardinalities here stay under the
+    nominal entries, so the theta sketch is EXACT and the oracle mirrors
+    the column with the exact distinct count."""
     return _engine(spark, sf_dir).sql(
         "SELECT r_name, "
         "GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(c_custkey)) "
@@ -664,14 +655,12 @@ def dialect_raw_theta_mixed_split(spark, sf_dir):
     """MIXED native aggregates + raw theta in ONE statement (with a
     HAVING on a select alias) — the statement class round 8 served with
     an O(distinct/fanout) collect_set inner (VERDICT r8 'what's missing
-    #1'). Since round 9 the dialect SPLITS it: the native aggregates
-    run a plain grouped subquery (Catalyst partial/final, map-side
-    combine) null-safe-joined on the group keys with the pure-sketch
-    pandas GROUPED_AGG two-phase, so memory is sketch-bounded at every
-    level on both sides (plan-gated: no collect_set of hashes,
-    tests/test_plan_quality.py). Per-segment customer cardinality stays
-    under the 4096 nominal entries at the driver SFs, so the KMV sketch
-    is EXACT and the oracle mirrors it with count(DISTINCT).
+    #1').  Theta is a native aggregate (theta_sketch_agg), so COUNT,
+    MIN and the sketch share one partial/final aggregation with no split
+    and no Python worker; the mixed split remains for the pandas-UDAF
+    families.  Per-segment customer cardinality stays under the 4096
+    nominal entries at the driver SFs, so the theta sketch is EXACT and
+    the oracle mirrors it with count(DISTINCT).
     Reference: AggregationFunction.java:63,86,132 (partial-state
     contract); DistinctCountRawThetaSketchAggregationFunction.java."""
     return _engine(spark, sf_dir).sql(
@@ -696,14 +685,11 @@ def dialect_raw_theta_expr_key(spark, sf_dir):
     """Raw theta + native COUNT grouped by an EXPRESSION key — round
     8's per-value fallback class (VERDICT r8 'what's missing #1' tail).
     (Pinot SUBSTR is 0-based with exclusive end — StringFunctions.java.)
-    Since round 9 the engine normalizes alias/expression GROUP BY keys
-    into a derived table with plain key columns
-    (PinotEngine._normalize_sketch_group_keys), after which the mixed
-    split + zero-shuffle theta route apply unchanged: native side
-    Catalyst partial/final, sketch side one mapInPandas partials pass,
-    no per-value collection anywhere. Cardinalities stay under the
-    nominal entries so the KMV sketch is EXACT and the oracle mirrors
-    count(DISTINCT)."""
+    Theta is a native aggregate (theta_sketch_agg), so Spark groups by
+    the expression key directly: one partial/final aggregation, no key
+    normalization, no per-value collection, no Python worker.
+    Cardinalities stay under the nominal entries so the theta sketch is
+    EXACT and the oracle mirrors count(DISTINCT)."""
     return _engine(spark, sf_dir).sql(
         "SELECT SUBSTR(c_mktsegment, 0, 4) AS seg4, COUNT(*) AS n_cust, "
         "GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(c_custkey)) "
@@ -723,19 +709,16 @@ def dialect_raw_theta_expr_key(spark, sf_dir):
 )
 def dialect_raw_theta_bigint_key(spark, sf_dir):
     """Raw theta grouped by a BIGINT key (GROUP BY user_id — the
-    dominant real-world sketch shape). Round 9 declined 64-bit keys on
-    the zero-shuffle route (nullable int64 loses exactness through
-    Arrow→pandas float64) and fell back to an O(rows) bucketed shuffle;
-    since round 10 the key travels as split 32-bit halves — exactly how
-    sketch hashes and tuple values already ride — and recombines
-    JVM-side, so the plan shows ONE mapInPandas partials pass with no
-    pmod bucket column (plan-gated,
-    tests/test_plan_quality.py::test_raw_theta_bigint_key_takes_zero_shuffle_route).
-    Mixed with native COUNT(*), so the split + zero-shuffle paths
-    compose on the bigint key too. Per-group event_type cardinality is
-    far under the nominal entries, so the KMV sketch is EXACT and the
-    oracle mirrors count(DISTINCT). Reference:
-    AggregationFunction.java:63,86,132 (segment-partial contract)."""
+    dominant real-world sketch shape), mixed with native COUNT(*).
+    Theta is a native aggregate (theta_sketch_agg), so the bigint key
+    groups in the JVM with no key carrier and no Python worker; the
+    zero-shuffle route's split 32-bit key halves serve the pandas-UDAF
+    families (tests/test_plan_quality.py::
+    test_raw_theta_bigint_key_takes_zero_shuffle_route checks both).
+    Per-group event_type cardinality is far under the nominal entries,
+    so the theta sketch is EXACT and the oracle mirrors
+    count(DISTINCT). Reference: AggregationFunction.java:63,86,132
+    (segment-partial contract)."""
     return _engine(spark, sf_dir).sql(
         "SELECT user_id, COUNT(*) AS n_events, "
         "GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(event_type)) "
@@ -756,7 +739,7 @@ def dialect_raw_theta_bigint_key(spark, sf_dir):
 def dialect_raw_mv_sketch_grouped(spark, sf_dir):
     """Grouped MV raw-sketch names on the round-10 zero-shuffle route:
     DISTINCTCOUNTRAWHLLMV and PERCENTILERAWTDIGESTMV partials now build
-    in the same ONE mapInPandas pass as theta/tuple (HLL register
+    in the same ONE mapInPandas pass as the tuple sketch (HLL register
     arrays and t-digest centroids are fixed-size per group, so the
     partial state is sketch-bounded and only blobs cross the wire),
     retiring the bucketed GROUPED_AGG inner that shuffled O(rows) for
@@ -985,14 +968,13 @@ def fn_ds_hll_interop(spark, sf_dir):
     """,
 )
 def dialect_raw_sketch_window(spark, sf_dir):
-    """RAW-sketch aggregates in WINDOW position (round 10, dialect.py
-    _route_raw_sketch_windows): ``RAW...(x) OVER (PARTITION BY k)``
-    computes the per-partition sketch via the bounded grouped routes
-    (zero-shuffle map-side combine for theta) in a materialized
-    subquery null-safe-joined back — one aggregation state per
-    partition, the reference's window-aggregate semantics
-    (pinot-query-runtime WindowAggregateOperator); the global OVER ()
-    frame rides the same route with a single group.  Cardinalities stay
+    """RAW-sketch aggregates in WINDOW position: one aggregation state
+    per partition, the reference's window-aggregate semantics
+    (pinot-query-runtime WindowAggregateOperator).  Theta is a native
+    Window over Spark's theta_sketch_agg.  RAW HLL routes through
+    dialect.py _route_raw_sketch_windows (round 10): the global OVER ()
+    frame computes the sketch via the bounded grouped routes in a
+    materialized single-group subquery joined back.  Cardinalities stay
     in the exact regime (<=5 distinct priorities, k=4096; <=3
     distinct statuses at log2m=12) so the estimates equal the oracle's exact distinct
     counts.  ORDER BY / framed raw windows route to the RUNNING
@@ -1025,17 +1007,18 @@ def dialect_raw_sketch_window(spark, sf_dir):
     """,
 )
 def dialect_raw_sketch_running(spark, sf_dir):
-    """RUNNING raw-sketch windows (round 11, dialect.py
+    """RUNNING raw-sketch windows: ``RAW...(x) OVER (PARTITION BY k
+    ORDER BY t [frame])`` computes a per-row PREFIX sketch — the
+    standard SQL running frame the reference's WindowAggregateOperator
+    advances in frame order (RANGE peers share one state; ROWS advances
+    per row).  Theta is a native Window over Spark's theta_sketch_agg.
+    RAW HLL takes the running rewrite (round 11, dialect.py
     _rewrite_running_raw_windows + operators/running_sketch.py):
-    ``RAW...(x) OVER (PARTITION BY k ORDER BY t [frame])`` computes a
-    per-row PREFIX sketch — the standard SQL running frame the
-    reference's WindowAggregateOperator advances in frame order
-    (RANGE peers share one state; ROWS advances per row).  Per-value
-    hash tokens are computed JVM-side (the grouped routes' own
-    expressions, hi/lo-split for exactness), one shuffle on the
-    partition keys, then a sequential Arrow pass with sketch-bounded
-    accumulator state; a full-partition running blob is byte-identical
-    to the grouped route's blob (tests/test_raw_sketch_windows.py).
+    per-value hash tokens computed JVM-side (the grouped routes' own
+    expressions), one shuffle on the partition keys, then a sequential
+    Arrow pass with sketch-bounded accumulator state; a full-partition
+    running blob is byte-identical to the grouped route's blob
+    (tests/test_raw_sketch_windows.py).
     Exact regime (distinct custkeys/priorities well under k=4096 and
     2^12 registers), so both estimates equal the oracle's windowed
     exact distinct counts — a query shape Spark itself REJECTS
@@ -1360,19 +1343,17 @@ def dialect_rawhll_clearspring_wire(spark, sf_dir):
     """,
 )
 def dialect_raw_theta_timestamp_key(spark, sf_dir):
-    """Round 11: native TIMESTAMP group keys ride the zero-shuffle
-    sketch route — the key travels as unix_micros split into exact
-    32-bit halves (the BIGINT-key trick; epoch-micros int64 is a
-    lossless carrier where pandas float64 is not) and recombines via
-    timestamp_micros, so grouped raw-theta over a timestamp key builds
-    partition-local sketch partials in ONE mapInPandas pass with no
-    per-value state (plan-gated:
-    test_raw_theta_timestamp_key_takes_zero_shuffle_route).  Hourly
-    user cardinalities stay far under k=4096, so estimates equal the
-    oracle's exact distinct counts.  Mixed with COUNT(*) to exercise
-    the split shape.  Reference: the segment-local sketch build +
-    broker merge contract (AggregationFunction.java:63,86,132) with
-    TIMESTAMP-typed time columns (pinot-spi FieldSpec TIMESTAMP)."""
+    """Raw theta grouped by a native TIMESTAMP key, mixed with
+    COUNT(*).  Theta is a native aggregate (theta_sketch_agg), so the
+    timestamp key groups in the JVM: one partial/final aggregation, no
+    key carrier, no Python worker.  The zero-shuffle route's
+    unix_micros key halves serve the pandas-UDAF families (round 11;
+    test_raw_theta_timestamp_key_takes_zero_shuffle_route checks both).
+    Hourly user cardinalities stay far under k=4096, so estimates equal
+    the oracle's exact distinct counts.  Reference: the segment-local
+    sketch build + broker merge contract
+    (AggregationFunction.java:63,86,132) with TIMESTAMP-typed time
+    columns (pinot-spi FieldSpec TIMESTAMP)."""
     load_tables(spark, sf_dir)
     spark.sql(
         "SELECT date_trunc('hour', ts) AS h, user_id FROM events"
@@ -1396,17 +1377,15 @@ def dialect_raw_theta_timestamp_key(spark, sf_dir):
     """,
 )
 def dialect_raw_theta_decimal_key(spark, sf_dir):
-    """Round 12: DECIMAL group keys ride the zero-shuffle sketch route —
-    the last typed-key gap.  The key travels as its canonical plain-form
-    string (CAST(dec AS STRING) is exact and injective at fixed scale;
-    no float transit anywhere) and recombines JVM-side via CAST back to
-    the original DECIMAL(p,s), so grouped raw-theta over a decimal key
-    builds partition-local sketch partials in ONE mapInPandas pass
-    (plan-gated: test_raw_theta_decimal_key_takes_zero_shuffle_route,
-    which also tortures DECIMAL(38,10) magnitudes past float64 and NULL
-    keys).  Per-quantity part cardinalities stay far under k=4096, so
-    estimates equal the oracle's exact distinct counts.  Mixed with
-    COUNT(*) to exercise the split shape.  Reference: BIG_DECIMAL-typed
+    """Raw theta grouped by a DECIMAL key, mixed with COUNT(*).  Theta
+    is a native aggregate (theta_sketch_agg), so the decimal key groups
+    in the JVM with no key carrier and no Python worker.  The
+    zero-shuffle route's canonical-string key carrier (round 12) serves
+    the pandas-UDAF families (test_raw_theta_decimal_key_takes_zero_
+    shuffle_route checks both, with DECIMAL(38,10) magnitudes past
+    float64 and NULL keys).  Per-quantity part cardinalities stay far
+    under k=4096, so estimates equal the oracle's exact distinct
+    counts.  Reference: BIG_DECIMAL-typed
     group-by keys (pinot-spi FieldSpec BIG_DECIMAL;
     GroupKeyGenerator over DictionaryBasedGroupKeyGenerator) feeding the
     segment-local sketch build + broker merge contract
@@ -1425,7 +1404,7 @@ def dialect_raw_theta_decimal_key(spark, sf_dir):
     )
     assert out.schema["q"].dataType.simpleString() == "decimal(12,2)"
     # canonical plain-form string for the driver compare (DuckDB's .df()
-    # degrades DECIMAL to float64; the route itself ran on the decimal)
+    # degrades DECIMAL to float64; the aggregation itself ran on the decimal)
     return out.selectExpr("CAST(q AS STRING) AS q", "dc", "n")
 
 
@@ -1492,13 +1471,15 @@ def fn_ds_cpc_write(spark, sf_dir):
     """,
 )
 def dialect_raw_sketch_sliding(spark, sf_dir):
-    """SLIDING and SHRINKING raw-sketch window frames (round 12,
-    operators/running_sketch.py deque rebuild): ``ROWS N PRECEDING ..
-    CURRENT ROW`` rebuilds each row's sketch from the last N+1 token
+    """SLIDING and SHRINKING raw-sketch window frames.  Theta's
+    ``ROWS N PRECEDING .. CURRENT ROW`` frame is a native Window over
+    Spark's theta_sketch_agg.  RAW HLL's ``CURRENT ROW .. UNBOUNDED
+    FOLLOWING`` frame takes the running rewrite (round 12,
+    operators/running_sketch.py) as the reversed shrinking suffix; its
+    sliding frames rebuild each row's sketch from the last N+1 token
     tuples (sketches never retract, so the bounded rebuild IS the
     evaluation — work and carried state scale with the user's frame
-    width, never partition size); ``CURRENT ROW .. UNBOUNDED
-    FOLLOWING`` is the reversed shrinking suffix.  Exact regime
+    width, never partition size).  Exact regime
     (distinct counts well under k=4096 / 2^12 registers), so the
     estimates equal DuckDB's windowed exact distinct counts with the
     same frames — a shape both Spark and the reference reject (the

@@ -34,6 +34,28 @@ def _canon(n: str) -> str:
     return n.replace("_", "").lower()
 
 
+# Raw theta is a native aggregate (theta_sketch_agg) and takes none of
+# the raw-sketch restructures; the integer-sum tuple sketch with value 1
+# counts its keys exactly below k and takes every one of them, so each
+# restructure shape below is checked on the tuple twin of a statement.
+_THETA_DC_RE = re.compile(
+    r"GET_THETA_SKETCH_ESTIMATE\(DISTINCT_COUNT_RAW_THETA_SKETCH\((\w+)(?:, *'[^']*')?\)\)"
+)
+
+
+def _as_tuple(sql: str) -> str:
+    out = _THETA_DC_RE.sub(
+        lambda m: f"DISTINCT_COUNT_TUPLE_SKETCH(TO_INTEGER_SUM_TUPLE_SKETCH({m[1]}, 1))",
+        sql,
+    )
+    assert out != sql
+    return out
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 @pytest.mark.skipif(not os.path.isfile(REF_AGG), reason="reference repo not present")
 def test_aggregation_enum_names_resolve():
     src = open(REF_AGG).read()
@@ -365,14 +387,16 @@ def test_raw_theta_tuple_two_phase_rewrite(spark, at):
     plan = at.sql(q)._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
     assert "pmod" not in plan and "collect_set" not in plan
+    # raw theta sits on the native side of the split
+    assert "theta_sketch_estimate(theta_sketch_agg(u, 12)) AS __nat" in translated
     # HAVING rides on the two-phase outer since round 8
     q2 = (
         "SELECT g, GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(u)) "
         "AS dc FROM rs2_t GROUP BY g HAVING dc > 0 LIMIT 10"
     )
-    t2 = at.translate(q2)[0]
+    t2 = at.translate(_as_tuple(q2))[0]
     assert "__rs_partials" in t2 and "HAVING dc > 0" in t2
-    assert len(at.sql(q2).collect()) == 4
+    assert len(at.sql(q2).collect()) == len(at.sql(_as_tuple(q2)).collect()) == 4
 
 
 def test_sql_funnel_step_duration_stats(spark, at, funnel_sql_t):
@@ -432,10 +456,10 @@ def test_raw_sketch_rewrite_parse_failure_fails_safe(spark, at, monkeypatch):
         "rewrite_raw_sketch_two_phase",
         lambda sql, view_builder=None: "SELECT ((( FROM",
     )
-    rows = at.sql(
+    rows = at.sql(_as_tuple(
         "SELECT GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(v)) "
         "AS dc FROM rs_failsafe_t LIMIT 10"
-    ).collect()
+    )).collect()
     assert rows[0].dc == 2
 
 
@@ -481,15 +505,15 @@ def test_raw_theta_under_having_bounded(spark, at):
         [(k, ord(k) * 10 + i) for k in ("a", "b", "c") for i in range({"a": 5, "b": 2, "c": 7}[k])],
         "k string, v int",
     ).createOrReplaceTempView("rs_having_t")
-    rows = at.sql(
+    q = (
         "SELECT k, GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(v)) AS dc "
         "FROM rs_having_t GROUP BY k HAVING dc >= 5 ORDER BY k LIMIT 10"
-    ).collect()
-    assert [(r.k, r.dc) for r in rows] == [("a", 5), ("c", 7)]
-    plan = at.sql(
-        "SELECT k, GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(v)) AS dc "
-        "FROM rs_having_t GROUP BY k HAVING dc >= 5 LIMIT 10"
-    )._jdf.queryExecution().executedPlan().toString()
+    )
+    for stmt in (q, _as_tuple(q)):
+        rows = at.sql(stmt).collect()
+        assert [(r.k, r.dc) for r in rows] == [("a", 5), ("c", 7)]
+    assert "partial_theta_sketch_agg" in _plan(at.sql(q))
+    plan = _plan(at.sql(_as_tuple(q)))
     # Shape A: pandas partials, no per-value collect_set; the only
     # collect_list is the bounded blob merge
     assert "collect_set" not in plan
@@ -504,13 +528,15 @@ def test_raw_theta_mixed_aggs_under_join_falls_back_correct(spark, at):
     ).createOrReplaceTempView("rs_mix_a")
     spark.createDataFrame([(1, "x"), (2, "y")], "g int, lbl string"
                           ).createOrReplaceTempView("rs_mix_b")
-    rows = at.sql(
+    q = (
         "SELECT lbl, COUNT(*) AS n, "
         "GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(v)) AS dc "
         "FROM rs_mix_a JOIN rs_mix_b ON rs_mix_a.g = rs_mix_b.g "
         "GROUP BY lbl ORDER BY lbl LIMIT 10"
-    ).collect()
-    assert [(r.lbl, r.n, r.dc) for r in rows] == [("x", 2, 2), ("y", 1, 1)]
+    )
+    for stmt in (q, _as_tuple(q)):
+        rows = at.sql(stmt).collect()
+        assert [(r.lbl, r.n, r.dc) for r in rows] == [("x", 2, 2), ("y", 1, 1)]
 
 
 def test_raw_theta_mixed_aggs_having_two_phase(spark, at):
@@ -522,17 +548,19 @@ def test_raw_theta_mixed_aggs_having_two_phase(spark, at):
     spark.createDataFrame(
         [(1, 10), (1, 20), (2, 30)], "g int, v int"
     ).createOrReplaceTempView("rs_mix_h")
-    rows = at.sql(
+    q = (
         "SELECT g, COUNT(*) AS n, "
         "GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(v)) AS dc "
         "FROM rs_mix_h GROUP BY g HAVING n > 1 ORDER BY g LIMIT 10"
-    ).collect()
-    assert [(r.g, r.n, r.dc) for r in rows] == [(1, 2, 2)]
-    plan = at.sql(
+    )
+    for stmt in (q, _as_tuple(q)):
+        rows = at.sql(stmt).collect()
+        assert [(r.g, r.n, r.dc) for r in rows] == [(1, 2, 2)]
+    plan = at.sql(_as_tuple(
         "SELECT g, COUNT(*) AS n, "
         "GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(v)) AS dc "
         "FROM rs_mix_h GROUP BY g HAVING n > 1 LIMIT 10"
-    )._jdf.queryExecution().executedPlan().toString()
+    ))._jdf.queryExecution().executedPlan().toString()
     assert "collect_set" not in plan
     # round 9: zero-shuffle grouped partials (int key → route accepts)
     assert "MapInPandas" in plan or "ArrowAggregatePython" in plan
@@ -546,12 +574,14 @@ def test_raw_theta_mixed_expression_key_fallback_correct(spark, at):
     spark.createDataFrame(
         [(1, 10), (2, 20), (3, 30), (4, 40)], "g int, v int"
     ).createOrReplaceTempView("rs_mix_e")
-    rows = at.sql(
+    q = (
         "SELECT g % 2 AS p, COUNT(*) AS n, "
         "GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(v)) AS dc "
         "FROM rs_mix_e GROUP BY g % 2 ORDER BY p LIMIT 10"
-    ).collect()
-    assert [(r.p, r.n, r.dc) for r in rows] == [(0, 2, 2), (1, 2, 2)]
+    )
+    for stmt in (q, _as_tuple(q)):
+        rows = at.sql(stmt).collect()
+        assert [(r.p, r.n, r.dc) for r in rows] == [(0, 2, 2), (1, 2, 2)]
 
 
 def test_raw_theta_nondefault_fanout_correct(spark, at, monkeypatch):
@@ -567,7 +597,7 @@ def test_raw_theta_nondefault_fanout_correct(spark, at, monkeypatch):
     ).createOrReplaceTempView("rs_fan_a")
     spark.createDataFrame([(0, "x"), (1, "y"), (2, "z")], "g int, lbl string"
                           ).createOrReplaceTempView("rs_fan_b")
-    q = (
+    q = _as_tuple(
         "SELECT lbl, GET_THETA_SKETCH_ESTIMATE("
         "DISTINCT_COUNT_RAW_THETA_SKETCH(v)) AS dc "
         "FROM rs_fan_a JOIN rs_fan_b ON rs_fan_a.g = rs_fan_b.g "
@@ -594,21 +624,24 @@ def test_raw_theta_alias_and_expression_keys_normalized(spark, at):
         "s string, v int",
     ).createOrReplaceTempView("rs_alias_t")
     # alias key, mixed with native COUNT + HAVING on alias
-    df = at.sql(
+    q = (
         "SELECT UPPER(s) AS u, COUNT(*) AS n, GET_THETA_SKETCH_ESTIMATE("
         "DISTINCT_COUNT_RAW_THETA_SKETCH(v)) AS dc "
         "FROM rs_alias_t GROUP BY u HAVING n > 1 ORDER BY u LIMIT 10"
     )
-    assert [(r.u, r.n, r.dc) for r in df.collect()] == [("AB", 2, 2), ("CD", 2, 1)]
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    for stmt in (q, _as_tuple(q)):
+        df = at.sql(stmt)
+        assert [(r.u, r.n, r.dc) for r in df.collect()] == [("AB", 2, 2), ("CD", 2, 1)]
+    plan = _plan(df)
     assert "collect_set" not in plan
     assert "MapInPandas" in plan
     # expression key, pure
-    df2 = at.sql(
+    q2 = (
         "SELECT GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(v)) "
         "AS dc FROM rs_alias_t GROUP BY UPPER(s) ORDER BY dc LIMIT 10"
     )
-    assert [r.dc for r in df2.collect()] == [1, 1, 2]
+    for stmt in (q2, _as_tuple(q2)):
+        assert [r.dc for r in at.sql(stmt).collect()] == [1, 1, 2]
     # expression key appearing in the select under a different alias
     df3 = at.sql(
         "SELECT UPPER(s) AS grp, COUNT(*) AS n FROM rs_alias_t "
@@ -643,12 +676,10 @@ def test_raw_theta_setop_branches_bounded(spark, at):
     )
     from pinot_spark.dialect import rewrite_raw_sketch_setop
 
-    rewritten = rewrite_raw_sketch_setop(q)
-    assert rewritten != q
+    rewritten = rewrite_raw_sketch_setop(_as_tuple(q))
+    assert rewritten != _as_tuple(q)
     assert "collect_set" not in rewritten
     assert rewritten.rstrip().endswith("LIMIT 100")
-    df = at.sql(q)
-    got = [(r.g, r.n, round(r.dc)) for r in df.collect()]
     want = [
         (r.g, r.n, r.dc)
         for r in spark.sql(
@@ -656,9 +687,11 @@ def test_raw_theta_setop_branches_bounded(spark, at):
             "FROM rs_setop_t GROUP BY g ORDER BY g"
         ).collect()
     ]
-    assert got == want and len(got) == 3  # 500 distinct < 4096 → exact
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "collect_set" not in plan
+    for stmt in (q, _as_tuple(q)):
+        df = at.sql(stmt)
+        got = [(r.g, r.n, round(r.dc)) for r in df.collect()]
+        assert got == want and len(got) == 3  # 500 distinct < 4096 → exact
+        assert "collect_set" not in _plan(df)
 
 
 def test_raw_theta_setop_pure_and_distinct_semantics(spark, at):
@@ -675,8 +708,9 @@ def test_raw_theta_setop_pure_and_distinct_semantics(spark, at):
         "SELECT GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(v)) "
         "AS dc FROM rs_setop_p LIMIT 10"
     )
-    rows = at.sql(q).collect()
-    assert [round(r.dc) for r in rows] == [3]
+    for stmt in (q, _as_tuple(q)):
+        rows = at.sql(stmt).collect()
+        assert [round(r.dc) for r in rows] == [3]
 
 
 def test_raw_theta_setop_unboundable_branch_fails_safe(spark, at):
@@ -686,7 +720,7 @@ def test_raw_theta_setop_unboundable_branch_fails_safe(spark, at):
     from pinot_spark.dialect import rewrite_raw_sketch_setop
 
     q = (
-        "SELECT g, GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(v)) "
+        "SELECT g, DISTINCT_COUNT_TUPLE_SKETCH(TO_INTEGER_SUM_TUPLE_SKETCH(v, 1)) "
         "OVER (PARTITION BY g) AS dc FROM t1 "
         "UNION ALL SELECT g, 0.0 AS dc FROM t2"
     )
@@ -706,22 +740,25 @@ def test_raw_theta_expression_keys_case_and_space_insensitive(spark, at):
         [("ab", 1), ("AB", 2), ("cd", 2), ("cd", 2), ("ef", 3)],
         "s string, v int",
     ).createOrReplaceTempView("rs_ci_t")
-    df = at.sql(
+    q = (
         "SELECT substr(s,0,1) AS p, COUNT(*) AS n, "
         "GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(v)) AS dc "
         "FROM rs_ci_t GROUP BY SUBSTR(s , 0 , 1) ORDER BY p LIMIT 10"
     )
-    assert [(r.p, r.n, r.dc) for r in df.collect()] == [
-        ("A", 1, 1), ("a", 1, 1), ("c", 2, 1), ("e", 1, 1)
-    ]
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    for stmt in (q, _as_tuple(q)):
+        df = at.sql(stmt)
+        assert [(r.p, r.n, r.dc) for r in df.collect()] == [
+            ("A", 1, 1), ("a", 1, 1), ("c", 2, 1), ("e", 1, 1)
+        ]
+    plan = _plan(df)
     assert "collect_set" not in plan and "MapInPandas" in plan
     # alias key written in a different case than the GROUP BY token
-    df2 = at.sql(
+    q2 = (
         "SELECT UPPER(s) AS U, COUNT(*) AS n, GET_THETA_SKETCH_ESTIMATE("
         "DISTINCT_COUNT_RAW_THETA_SKETCH(v)) AS dc "
         "FROM rs_ci_t GROUP BY u ORDER BY u LIMIT 10"
     )
-    assert [(r.U, r.n, r.dc) for r in df2.collect()] == [
-        ("AB", 2, 2), ("CD", 2, 1), ("EF", 1, 1)
-    ]
+    for stmt in (q2, _as_tuple(q2)):
+        assert [(r.U, r.n, r.dc) for r in at.sql(stmt).collect()] == [
+            ("AB", 2, 2), ("CD", 2, 1), ("EF", 1, 1)
+        ]

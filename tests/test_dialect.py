@@ -532,8 +532,7 @@ _THETA_SQL_UDF_NAMES = [
     "__hll_union", "__json_all_keys",
     "__tdigest_from_quantiles", "__tdigest_from_values", "__tdigest_merge",
     "__tdigest_partial", "__tdigest_quantile", "__theta_diff",
-    "__theta_estimate", "__theta_filtered", "__theta_from_hashes",
-    "__theta_intersect", "__theta_merge_blobs", "__theta_partial",
+    "__theta_estimate", "__theta_filtered", "__theta_intersect",
     "__theta_singleton", "__theta_to_string", "__theta_union",
     "__theta_union_blobs", "__tuple_avg_value", "__tuple_estimate",
     "__tuple_intersect", "__tuple_merge_sum", "__tuple_partial",
@@ -548,6 +547,9 @@ def test_theta_sql_udfs_all_registered(spark):
     _ensure_theta_sql_udfs(spark)
     missing = [n for n in _THETA_SQL_UDF_NAMES if not spark.catalog.functionExists(n)]
     assert not missing
+    # theta builds are native (theta_sketch_agg): no engine-own build UDF
+    gone = ["__theta_from_hashes", "__theta_partial", "__theta_merge_blobs"]
+    assert not [n for n in gone if spark.catalog.functionExists(n)]
 
 
 def _upsert_engine(spark, view: str, rows, schema: str, keys: list[str]):
@@ -568,7 +570,8 @@ def test_zero_shuffle_sketch_route_reads_the_upsert_view(spark):
         "k int, score double, seq int",
         ["k"],
     )
-    est = "GET_THETA_SKETCH_ESTIMATE(DISTINCTCOUNTRAWTHETASKETCH(score))"
+    # a tuple sketch: theta is a native aggregate, not a zero-shuffle family
+    est = "DISTINCT_COUNT_TUPLE_SKETCH(TO_INTEGER_SUM_TUPLE_SKETCH(score, 1))"
     pure = f"SELECT k, {est} AS e FROM ups_sketch_t GROUP BY k ORDER BY k"
     mixed = f"SELECT k, COUNT(*) AS n, {est} AS e FROM ups_sketch_t GROUP BY k ORDER BY k"
     assert [(r.k, r.e) for r in eng.sql(pure).collect()] == [(0, 1), (1, 1), (2, 1)]
@@ -588,7 +591,7 @@ def test_zero_shuffle_sketch_route_translates_its_source(engine, spark):
         "id bigint, g int, m map<string,int>",
     ).createOrReplaceTempView("zs_map_t")
     where = "FROM zs_map_t WHERE m['a'] = -2147483648"
-    est = "GET_THETA_SKETCH_ESTIMATE(DISTINCTCOUNTRAWTHETASKETCH(id))"
+    est = "DISTINCT_COUNT_TUPLE_SKETCH(TO_INTEGER_SUM_TUPLE_SKETCH(id, 1))"
 
     def zs_views() -> set[str]:
         return {t.name for t in spark.catalog.listTables() if t.name.startswith("__theta_zs_")}

@@ -22,6 +22,7 @@ from pinot_spark.operators.ds_theta import (
     MAX_THETA,
     DsThetaSketch,
     grouped_ds_theta,
+    hash_longs,
     is_ds_theta_bytes,
     update_hash_bytes,
     update_hash_long,
@@ -119,6 +120,55 @@ def test_sql_surface_ds_domain(spark):
         f"SELECT GET_THETA_SKETCH_ESTIMATE(X'{java_hex}') AS e FROM ds_sql_t LIMIT 1"
     ).collect()[0].e
     assert est == 136  # round(136.16), bit-identical parse
+
+
+def test_parse_native_serial_version_4(spark):
+    """Spark's native theta_sketch_agg writes the compressed compact
+    layout (serial version 4) for two or more entries; parse reads it to
+    exactly the murmur hashes below theta, in the exact regime and the
+    estimating one, and the estimate matches the native one."""
+    for n, lgk in ((3, 12), (50, 12), (1000, 12), (10000, 4), (100000, 10)):
+        b, est = spark.sql(
+            f"SELECT theta_sketch_agg(id, {lgk}) AS s, "
+            f"theta_sketch_estimate(theta_sketch_agg(id, {lgk})) AS e "
+            f"FROM range({n})"
+        ).collect()[0]
+        b = bytes(b)
+        assert b[1] == 4 and is_ds_theta_bytes(b), n
+        sk = DsThetaSketch.parse(b)
+        h = np.sort(hash_longs(np.arange(n, dtype=np.int64)))
+        assert (sk.theta == MAX_THETA) == (n < 1 << lgk), n
+        assert np.array_equal(sk.hashes, h[h < np.uint64(sk.theta)]), n
+        assert round(sk.estimate()) == est, n
+
+
+def test_native_sketch_column_unions_with_java_vector(spark):
+    """A stored column of native (version-4) sketches unions with the
+    pinned Java version-3 vectors through the blob reader, in one hash
+    domain: exact with the exact vector, the library's rule with the
+    estimating one."""
+    from pinot_spark.dialect import PinotEngine
+
+    java = {v["n"]: v["bytes"] for v in _VEC["sketches"]}
+    spark.sql(
+        "SELECT theta_sketch_agg(id) AS sk FROM range(10, 30)"
+    ).createOrReplaceTempView("native_sk_t")
+    native = DsThetaSketch.parse(bytes(spark.table("native_sk_t").collect()[0].sk))
+    eng = PinotEngine(spark)
+    for n in (15, 100):
+        spark.sql(
+            f"SELECT sk FROM native_sk_t UNION ALL SELECT X'{java[n]}' AS sk"
+        ).createOrReplaceTempView("mixed_sk_t")
+        b = eng.sql(
+            "SELECT DISTINCT_COUNT_RAW_THETA_SKETCH(sk) AS u FROM mixed_sk_t"
+        ).collect()[0].u
+        assert "__theta_union_blobs" in eng.translate(
+            "SELECT DISTINCT_COUNT_RAW_THETA_SKETCH(sk) AS u FROM mixed_sk_t"
+        )[0]
+        want = DsThetaSketch.parse(bytes.fromhex(java[n])).union(native)
+        assert bytes(b) == want.serialize(), n
+    assert round(DsThetaSketch.parse(
+        bytes.fromhex(java[15])).union(native).estimate()) == 30
 
 
 def test_sql_mixed_domain_raises(spark):

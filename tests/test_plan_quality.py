@@ -202,20 +202,49 @@ def test_raw_sketch_sql_bounded_aggregation(spark, sf_dir):
     assert plan.count("ObjectHashAggregate") + plan.count("HashAggregate") >= 2
 
 
+# Python-worker plan nodes: a native theta plan holds none of them
+_PY_NODES = (
+    "ArrowEvalPython", "ArrowAggregatePython", "BatchEvalPython",
+    "MapInPandas", "FlatMapGroupsInPandas",
+)
+# an integer-sum tuple sketch with value 1 counts its keys exactly below
+# k, and takes every raw-sketch restructure shape; theta, a native
+# aggregate, takes none
+_TUPLE_DC = "DISTINCT_COUNT_TUPLE_SKETCH(TO_INTEGER_SUM_TUPLE_SKETCH({}, 1))"
+
+
+def _assert_native_theta(plan: str) -> None:
+    assert "partial_theta_sketch_agg" in plan, plan
+    assert not [n for n in _PY_NODES if n in plan], plan
+
+
 def test_raw_theta_two_phase_udaf_inner(spark, sf_dir):
-    """Canonical single-table pure raw-theta statements take the round-9
-    ZERO-SHUFFLE route (VERDICT r8 'missing #2'): partition-local
-    grouped sketch partials in one MapInPandas pass — NO (keys, bucket)
-    row shuffle (no pmod bucket column), NO collect_set of hashes — and
-    the only exchange moves partial BLOB rows, whose collect_list even
-    gets a map-side partial (partial_collect_list of ≤1 blob per group
-    per partition)."""
-    from pinot_spark.dialect import PinotEngine, _ensure_theta_sql_udfs
+    """A canonical single-table pure raw-theta statement plans as
+    Spark's native theta aggregate: map-side partial, final merge, no
+    Python worker.  The tuple sketch takes the ZERO-SHUFFLE route
+    (round 9): partition-local grouped sketch
+    partials in one MapInPandas pass — NO (keys, bucket) row shuffle
+    (no pmod bucket column), NO collect_set of hashes — and the only
+    exchange moves partial BLOB rows, whose collect_list even gets a
+    map-side partial (partial_collect_list of ≤1 blob per group per
+    partition)."""
+    from pinot_spark.dialect import PinotEngine
 
     load_tables(spark, sf_dir)
-    df = PinotEngine(spark).sql(
+    eng = PinotEngine(spark)
+    theta = eng.sql(
         "SELECT l_returnflag, GET_THETA_SKETCH_ESTIMATE("
         "DISTINCT_COUNT_RAW_THETA_SKETCH(l_partkey)) AS dc "
+        "FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag LIMIT 100"
+    )
+    _assert_native_theta(_plan(theta))
+    exact = spark.sql(
+        "SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS dc FROM lineitem "
+        "GROUP BY l_returnflag ORDER BY l_returnflag"
+    ).collect()
+    assert theta.collect() == exact
+    df = eng.sql(
+        f"SELECT l_returnflag, {_TUPLE_DC.format('l_partkey')} AS dc "
         "FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag LIMIT 100"
     )
     plan = _plan(df)
@@ -227,71 +256,90 @@ def test_raw_theta_two_phase_udaf_inner(spark, sf_dir):
         if "Exchange hashpartitioning" in line:
             assert "_groupingexpression" not in line, line
     assert "partial_collect_list" in plan, plan  # map-side blob combine
+    assert df.collect() == exact
 
 
 def test_raw_theta_under_join_no_per_value_collection(spark, sf_dir):
-    """Raw theta under a JOIN (the round-7 per-value fallback) now takes
-    the bucketed two-phase with GROUPED_AGG partials — the FROM join
-    tree carries verbatim into the inner level. The plan shows a pandas
-    aggregation of the hash halves, NO collect_set of per-value state;
-    the only collect_list is the bounded (≤ fanout) blob-list merge
-    (VERDICT r7 #3)."""
+    """Raw theta under a JOIN is a native aggregate over the join.  The
+    raw-sketch route for join trees (the FROM text executes as a
+    DataFrame feeding zero-shuffle grouped partials, round 9) stays
+    covered by the tuple sketch: MapInPandas partials, NO collect_set of
+    per-value state, no bucket column (VERDICT r7 #3)."""
     from pinot_spark.dialect import PinotEngine
 
     load_tables(spark, sf_dir)
-    df = PinotEngine(spark).sql(
-        "SELECT n_name, GET_THETA_SKETCH_ESTIMATE("
-        "DISTINCT_COUNT_RAW_THETA_SKETCH(c_custkey)) AS dc "
+    eng = PinotEngine(spark)
+    stmt = (
+        "SELECT n_name, {} AS dc "
         "FROM customer JOIN nation ON c_nationkey = n_nationkey "
         "GROUP BY n_name ORDER BY n_name LIMIT 100"
     )
+    theta = eng.sql(stmt.format(
+        "GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(c_custkey))"
+    ))
+    _assert_native_theta(_plan(theta))
+    df = eng.sql(stmt.format(_TUPLE_DC.format("c_custkey")))
     plan = _plan(df)
     assert "collect_set" not in plan, plan
-    # round 9: join trees route through the zero-shuffle grouped
-    # partials too (the FROM text executes as a DataFrame)
     assert "MapInPandas" in plan, plan
     assert "pmod" not in plan, plan
+    assert df.collect() == theta.collect()
 
 
 def test_raw_theta_mixed_under_join_bounded_native(spark, sf_dir):
-    """Mixed native aggregates + raw theta under a JOIN — round 8's
-    O(distinct/fanout) collect_set inner — now SPLITS into a plain
-    native-aggregate subquery null-safe-joined with the pure-sketch
-    GROUPED_AGG two-phase: NO collect_set of hashes anywhere; the
-    sketch side runs pandas partials per (key, bucket) and the only
-    collect_list is the bounded ≤ fanout blob merge."""
+    """Native aggregates + raw theta under a JOIN: theta is one more
+    native aggregate, so the statement needs no split.  The mixed split
+    (a plain native-aggregate subquery null-safe-joined with the sketch
+    side, which reads zero-shuffle partials — round 9) is checked on
+    the tuple sketch: NO collect_set of hashes, no bucketed row shuffle,
+    the key hash JVM-side."""
     from pinot_spark.dialect import PinotEngine
 
     load_tables(spark, sf_dir)
-    plan = _plan(PinotEngine(spark).sql(
-        "SELECT n_name, COUNT(*) AS n, GET_THETA_SKETCH_ESTIMATE("
-        "DISTINCT_COUNT_RAW_THETA_SKETCH(c_custkey)) AS dc "
+    eng = PinotEngine(spark)
+    stmt = (
+        "SELECT n_name, COUNT(*) AS n, {} AS dc "
         "FROM customer JOIN nation ON c_nationkey = n_nationkey "
         "GROUP BY n_name ORDER BY n_name LIMIT 100"
+    )
+    theta = eng.sql(stmt.format(
+        "GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(c_custkey))"
     ))
+    tplan = _plan(theta)
+    _assert_native_theta(tplan)
+    assert "__rsn" not in eng.translate(stmt.format(
+        "GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(c_custkey))"
+    ))[0]
+    df = eng.sql(stmt.format(_TUPLE_DC.format("c_custkey")))
+    plan = _plan(df)
     assert "collect_set" not in plan, plan
-    # round 9: the sketch side of the split reads the zero-shuffle
-    # partials view — no bucketed (keys, pmod) row shuffle remains
     assert "MapInPandas" in plan, plan
     assert "pmod" not in plan, plan
     assert "xxhash64" in plan, plan
+    assert df.collect() == theta.collect()
 
 
 def test_raw_theta_mixed_single_table_no_collect_set(spark, sf_dir):
     """The canonical mixed single-table statement (VERDICT r8 'what's
-    missing #1' done-criteria): COUNT(*) + raw theta in one SELECT must
-    show no collect_set of hashes — the native side keeps Catalyst
-    partial/final HashAggregate, the sketch side is the pandas
-    two-phase."""
+    missing #1' done-criteria): COUNT(*) + SUM + raw theta in one
+    SELECT is one native aggregation with partial/final levels and no
+    Python worker.  The split shape is checked on the tuple sketch: no collect_set of hashes, the native side keeps
+    Catalyst partial/final HashAggregate, the sketch side reads
+    zero-shuffle partials."""
     from pinot_spark.dialect import PinotEngine
 
     load_tables(spark, sf_dir)
-    plan = _plan(PinotEngine(spark).sql(
+    eng = PinotEngine(spark)
+    stmt = (
         "SELECT l_returnflag, COUNT(*) AS n, SUM(l_quantity) AS sq, "
-        "GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH("
-        "l_partkey)) AS dc FROM lineitem GROUP BY l_returnflag "
+        "{} AS dc FROM lineitem GROUP BY l_returnflag "
         "ORDER BY l_returnflag LIMIT 100"
+    )
+    theta = eng.sql(stmt.format(
+        "GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(l_partkey))"
     ))
+    _assert_native_theta(_plan(theta))
+    plan = _plan(eng.sql(stmt.format(_TUPLE_DC.format("l_partkey"))))
     assert "collect_set" not in plan, plan
     assert "MapInPandas" in plan, plan  # zero-shuffle sketch side
     assert plan.count("HashAggregate") >= 2, plan  # native partial/final
@@ -303,7 +351,8 @@ def test_raw_theta_bigint_key_takes_zero_shuffle_route(spark, sf_dir):
     split 32-bit halves (the sketch-hash exactness trick) and recombine
     JVM-side, so plans show MapInPandas partials with NO pmod bucket
     column and NO collect_set — pure AND mixed — and exactness survives
-    keys past 2^53 and NULL keys."""
+    keys past 2^53 and NULL keys.  Raw theta is a native aggregate
+    (no key carrier needed); the tuple sketch carries the route."""
     from pinot_spark.dialect import PinotEngine
 
     load_tables(spark, sf_dir)
@@ -314,22 +363,28 @@ def test_raw_theta_bigint_key_takes_zero_shuffle_route(spark, sf_dir):
         + [(None, 7), (None, 7), (-(big + 3), 1)],
         "g long, v int",
     ).createOrReplaceTempView("rs_big_t")
-    df = eng.sql(
+    want = [
+        (None, 1), (-(big + 3), 1),
+        (big, 13), (big + 1, 13), (big + 2, 13), (big + 3, 13), (big + 4, 13),
+    ]
+    theta = eng.sql(
         "SELECT g, GET_THETA_SKETCH_ESTIMATE("
         "DISTINCT_COUNT_RAW_THETA_SKETCH(v)) AS dc "
+        "FROM rs_big_t GROUP BY g ORDER BY g LIMIT 10"
+    )
+    _assert_native_theta(_plan(theta))
+    assert [(r.g, r.dc) for r in theta.collect()] == want
+    df = eng.sql(
+        f"SELECT g, {_TUPLE_DC.format('v')} AS dc "
         "FROM rs_big_t GROUP BY g ORDER BY g LIMIT 10"
     )
     plan = _plan(df)
     assert "pmod" not in plan, plan  # zero-shuffle route, not bucketed SQL
     assert "collect_set" not in plan, plan
     assert "MapInPandas" in plan, plan
-    assert [(r.g, r.dc) for r in df.collect()] == [
-        (None, 1), (-(big + 3), 1),
-        (big, 13), (big + 1, 13), (big + 2, 13), (big + 3, 13), (big + 4, 13),
-    ]
+    assert [(r.g, r.dc) for r in df.collect()] == want
     mixed = eng.sql(
-        "SELECT g, COUNT(*) AS n, GET_THETA_SKETCH_ESTIMATE("
-        "DISTINCT_COUNT_RAW_THETA_SKETCH(v)) AS dc "
+        f"SELECT g, COUNT(*) AS n, {_TUPLE_DC.format('v')} AS dc "
         "FROM rs_big_t GROUP BY g ORDER BY g LIMIT 10"
     )
     mplan = _plan(mixed)
@@ -347,7 +402,8 @@ def test_raw_theta_decimal_key_takes_zero_shuffle_route(spark, sf_dir):
     keys travel as the canonical plain-form string (CAST(dec AS STRING)
     is exact and injective at fixed scale — no float transit) and
     recombine JVM-side via CAST back to the original DECIMAL(p,s).
-    Exactness must survive >2^53 unscaled values and NULL keys."""
+    Exactness must survive >2^53 unscaled values and NULL keys.  Raw
+    theta groups natively; the tuple sketch carries the route."""
     import decimal
 
     from pinot_spark.dialect import PinotEngine
@@ -358,9 +414,15 @@ def test_raw_theta_decimal_key_takes_zero_shuffle_route(spark, sf_dir):
         "SELECT CAST(id % 3 AS DECIMAL(20,0)) AS g, CAST(id % 7 AS INT) AS v "
         "FROM range(210)"
     ).createOrReplaceTempView("rs_dec_t")
-    df = eng.sql(
+    theta = eng.sql(
         "SELECT g, GET_THETA_SKETCH_ESTIMATE("
         "DISTINCT_COUNT_RAW_THETA_SKETCH(v)) AS dc "
+        "FROM rs_dec_t GROUP BY g ORDER BY g LIMIT 10"
+    )
+    _assert_native_theta(_plan(theta))
+    assert [(int(r.g), r.dc) for r in theta.collect()] == [(0, 7), (1, 7), (2, 7)]
+    df = eng.sql(
+        f"SELECT g, {_TUPLE_DC.format('v')} AS dc "
         "FROM rs_dec_t GROUP BY g ORDER BY g LIMIT 10"
     )
     plan = _plan(df)
@@ -379,8 +441,7 @@ def test_raw_theta_decimal_key_takes_zero_shuffle_route(spark, sf_dir):
         "g decimal(38,10), v int",
     ).createOrReplaceTempView("rs_dec38_t")
     mixed = eng.sql(
-        "SELECT g, COUNT(*) AS n, GET_THETA_SKETCH_ESTIMATE("
-        "DISTINCT_COUNT_RAW_THETA_SKETCH(v)) AS dc "
+        f"SELECT g, COUNT(*) AS n, {_TUPLE_DC.format('v')} AS dc "
         "FROM rs_dec38_t GROUP BY g ORDER BY g LIMIT 10"
     )
     mplan = _plan(mixed)
@@ -558,7 +619,8 @@ def test_raw_theta_timestamp_key_takes_zero_shuffle_route(spark, sf_dir):
     round 11: the key travels as unix_micros split into 32-bit halves
     (lossless int64 carrier) and recombines via timestamp_micros, so
     plans show MapInPandas partials with no pmod and no collect_set,
-    NULL keys survive, and sub-second precision round-trips exactly."""
+    NULL keys survive, and sub-second precision round-trips exactly.
+    Raw theta groups natively; the tuple sketch carries the route."""
     import datetime
 
     from pinot_spark.dialect import PinotEngine
@@ -573,9 +635,19 @@ def test_raw_theta_timestamp_key_takes_zero_shuffle_route(spark, sf_dir):
     spark.createDataFrame(rows, "ts timestamp, v int").createOrReplaceTempView(
         "rs_ts_t"
     )
-    df = eng.sql(
+    want = [(None, 2)] + [
+        (base + datetime.timedelta(microseconds=123456 * j), 9)
+        for j in range(4)
+    ]
+    theta = eng.sql(
         "SELECT ts, GET_THETA_SKETCH_ESTIMATE("
         "DISTINCT_COUNT_RAW_THETA_SKETCH(v)) AS dc "
+        "FROM rs_ts_t GROUP BY ts ORDER BY ts LIMIT 10"
+    )
+    _assert_native_theta(_plan(theta))
+    assert [(r.ts, r.dc) for r in theta.collect()] == want
+    df = eng.sql(
+        f"SELECT ts, {_TUPLE_DC.format('v')} AS dc "
         "FROM rs_ts_t GROUP BY ts ORDER BY ts LIMIT 10"
     )
     plan = _plan(df)
@@ -583,10 +655,7 @@ def test_raw_theta_timestamp_key_takes_zero_shuffle_route(spark, sf_dir):
     assert "collect_set" not in plan, plan
     assert "MapInPandas" in plan, plan
     got = [(r.ts, r.dc) for r in df.collect()]
-    assert got == [(None, 2)] + [
-        (base + datetime.timedelta(microseconds=123456 * j), 9.0)
-        for j in range(4)
-    ], got
+    assert got == want, got
 
 
 def test_rawhll_clearspring_int_pair_stays_jvm_side(spark, sf_dir):

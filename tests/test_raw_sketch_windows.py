@@ -14,8 +14,13 @@ row, and a running blob over a full partition is byte-identical to the
 grouped route's blob for the same rows.  Sliding/shrinking frame
 starts raise loudly: sketch states never retract.  Notably Spark
 itself REJECTS ``COUNT(DISTINCT x) OVER (ORDER BY ...)``
-(DISTINCT_WINDOW_FUNCTION_UNSUPPORTED) — the running theta route
+(DISTINCT_WINDOW_FUNCTION_UNSUPPORTED) — a running theta sketch
 serves that query shape exactly in the sub-k regime.
+
+Theta is not routed: ``theta_sketch_agg`` is a native Spark aggregate,
+so a theta window is a native Window over it, for every frame.  The
+route shapes are checked with the integer-sum tuple sketch
+(``_TUPLE_DC``), which counts its keys exactly below k.
 
 Before round 10 this statement class died with Spark's misleading
 MISSING_GROUP_BY (OVER cannot attach to the scalar-wrapped collect_set
@@ -23,6 +28,8 @@ the per-value fallbacks emit).
 """
 
 from __future__ import annotations
+
+import re
 
 import pytest
 
@@ -32,6 +39,30 @@ from pinot_spark.dialect import PinotEngine
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+_TUPLE_DC = "DISTINCT_COUNT_TUPLE_SKETCH(TO_INTEGER_SUM_TUPLE_SKETCH({}, 1))"
+_THETA_WINDOW_RE = re.compile(
+    r"GET_THETA_SKETCH_ESTIMATE\(\s*DISTINCT_COUNT_RAW_THETA_SKETCH\((\w+)\)"
+    r"\s*(OVER\s*\((?:[^()]|\([^()]*\))*\))\)"
+)
+
+
+def _run_both(eng, stmt: str) -> dict[str, list]:
+    """Rows of ``stmt`` (theta window estimates) as written — a native
+    Window, no Python worker — and with every theta window swapped for
+    the tuple sketch, which the raw-sketch window routes serve."""
+    tuple_stmt = _THETA_WINDOW_RE.sub(
+        lambda m: f"{_TUPLE_DC.format(m[1])} {m[2]}", stmt
+    )
+    assert tuple_stmt != stmt
+    theta = eng.sql(stmt)
+    plan = _plan(theta)
+    assert "theta_sketch_agg" in plan, plan
+    assert "Python" not in plan and "InPandas" not in plan, plan
+    tup = eng.sql(tuple_stmt)
+    assert "MapInPandas" in _plan(tup)
+    return {"theta": theta.collect(), "tuple": tup.collect()}
 
 
 @pytest.fixture()
@@ -63,19 +94,30 @@ def test_raw_theta_partition_window_matches_grouped(spark, eng):
 
 
 def test_raw_theta_window_takes_zero_shuffle_subquery(spark, eng):
-    """The materialized partition subquery rides the zero-shuffle
+    """A theta partition window is a native Window over
+    theta_sketch_agg, with no Python worker.  The materialized
+    partition subquery of the raw-sketch families rides the zero-shuffle
     grouped route: no collect_set of hashes, no pmod bucket column,
     MapInPandas partials present."""
-    df = eng.sql(
+    theta = eng.sql(
         "SELECT n_name, GET_THETA_SKETCH_ESTIMATE("
         "DISTINCT_COUNT_RAW_THETA_SKETCH(n_nationkey) "
         "OVER (PARTITION BY n_regionkey)) AS dc "
+        "FROM nation LIMIT 100"
+    )
+    tplan = _plan(theta)
+    assert "Window [theta_sketch_agg" in tplan, tplan
+    assert "Python" not in tplan and "InPandas" not in tplan, tplan
+    df = eng.sql(
+        f"SELECT n_name, {_TUPLE_DC.format('n_nationkey')} "
+        "OVER (PARTITION BY n_regionkey) AS dc "
         "FROM nation LIMIT 100"
     )
     plan = _plan(df)
     assert "collect_set" not in plan, plan
     assert "pmod" not in plan, plan
     assert "MapInPandas" in plan, plan
+    assert sorted(df.collect()) == sorted(theta.collect())
 
 
 def test_raw_hll_window_plain_and_global(spark, eng):
@@ -121,7 +163,7 @@ def test_raw_window_unbounded_frame_shapes_raise_loudly(eng):
     GROUPS frames are unsupported outright."""
     with pytest.raises(NotImplementedError, match="never retract"):
         eng.sql(
-            "SELECT DISTINCT_COUNT_RAW_THETA_SKETCH(n_nationkey) "
+            "SELECT DISTINCTCOUNTRAWHLL(n_nationkey) "
             "OVER (PARTITION BY n_regionkey ORDER BY n_nationkey "
             "RANGE BETWEEN 3 PRECEDING AND CURRENT ROW) AS s FROM nation"
         )
@@ -148,26 +190,21 @@ def test_sliding_rows_frame_matches_exact(spark, eng):
         [(i % 3, i, i % 7) for i in range(60)] + [(None, 99, 5)],
         "g int, t int, v int",
     ).createOrReplaceTempView("slide_t")
-    got = eng.sql(
-        "SELECT g, t, CAST(GET_THETA_SKETCH_ESTIMATE("
-        "DISTINCT_COUNT_RAW_THETA_SKETCH(v) OVER (PARTITION BY g ORDER BY t "
-        "ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)) AS INT) AS d "
-        "FROM slide_t ORDER BY g, t LIMIT 100"
-    ).collect()
     want = spark.sql(
         "SELECT g, t, size(collect_set(v) OVER (PARTITION BY g ORDER BY t "
         "ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)) AS d "
         "FROM slide_t ORDER BY g NULLS FIRST, t LIMIT 100"
     ).collect()
-    assert [(r.g, r.t, r.d) for r in got] == [(r.g, r.t, r.d) for r in want]
-    # shorthand frame spelling `ROWS 3 PRECEDING` is the same frame
-    got2 = eng.sql(
-        "SELECT g, t, CAST(GET_THETA_SKETCH_ESTIMATE("
-        "DISTINCT_COUNT_RAW_THETA_SKETCH(v) OVER (PARTITION BY g ORDER BY t "
-        "ROWS 3 PRECEDING)) AS INT) AS d "
-        "FROM slide_t ORDER BY g, t LIMIT 100"
-    ).collect()
-    assert [(r.g, r.t, r.d) for r in got2] == [(r.g, r.t, r.d) for r in want]
+    want = [(r.g, r.t, r.d) for r in want]
+    # the shorthand frame spelling `ROWS 3 PRECEDING` is the same frame
+    for frame in ("ROWS BETWEEN 3 PRECEDING AND CURRENT ROW", "ROWS 3 PRECEDING"):
+        for got in _run_both(
+            eng,
+            "SELECT g, t, CAST(GET_THETA_SKETCH_ESTIMATE("
+            "DISTINCT_COUNT_RAW_THETA_SKETCH(v) OVER (PARTITION BY g ORDER BY t "
+            f"{frame})) AS INT) AS d FROM slide_t ORDER BY g, t LIMIT 100",
+        ).values():
+            assert [(r.g, r.t, r.d) for r in got] == want
 
 
 def test_sliding_full_width_blob_byte_identical_to_running(eng):
@@ -175,19 +212,23 @@ def test_sliding_full_width_blob_byte_identical_to_running(eng):
     running ROWS frame — the per-row rebuilt blobs must be
     byte-identical to the streaming accumulator's (same tokens, same
     candidate truncation, same serializer)."""
-    a = eng.sql(
-        "SELECT n_nationkey, hex(DISTINCT_COUNT_RAW_THETA_SKETCH(n_name) "
-        "OVER (PARTITION BY n_regionkey ORDER BY n_nationkey "
-        "ROWS BETWEEN 1000 PRECEDING AND CURRENT ROW)) AS b "
-        "FROM nation ORDER BY n_nationkey LIMIT 100"
-    ).collect()
-    b = eng.sql(
-        "SELECT n_nationkey, hex(DISTINCT_COUNT_RAW_THETA_SKETCH(n_name) "
-        "OVER (PARTITION BY n_regionkey ORDER BY n_nationkey "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS b "
-        "FROM nation ORDER BY n_nationkey LIMIT 100"
-    ).collect()
-    assert [(r.n_nationkey, r.b) for r in a] == [(r.n_nationkey, r.b) for r in b]
+    for raw in (
+        "DISTINCT_COUNT_RAW_THETA_SKETCH(n_name)",
+        "DISTINCT_COUNT_RAW_INTEGER_SUM_TUPLE_SKETCH("
+        "TO_INTEGER_SUM_TUPLE_SKETCH(n_name, 1))",
+    ):
+        a, b = (
+            eng.sql(
+                f"SELECT n_nationkey, hex({raw} "
+                "OVER (PARTITION BY n_regionkey ORDER BY n_nationkey "
+                f"ROWS BETWEEN {start} PRECEDING AND CURRENT ROW)) AS b "
+                "FROM nation ORDER BY n_nationkey LIMIT 100"
+            ).collect()
+            for start in ("1000", "UNBOUNDED")
+        )
+        assert [(r.n_nationkey, r.b) for r in a] == [
+            (r.n_nationkey, r.b) for r in b
+        ], raw
 
 
 def test_shrinking_frame_matches_exact(spark, eng):
@@ -206,20 +247,23 @@ def test_shrinking_frame_matches_exact(spark, eng):
         "g int, t int, v int",
     ).createOrReplaceTempView("shrink_t")
     for frame_kw, view in (("ROWS", "shrink_rows_t"), ("RANGE", "shrink_t")):
-        got = eng.sql(
-            "SELECT g, t, v, CAST(GET_THETA_SKETCH_ESTIMATE("
-            "DISTINCT_COUNT_RAW_THETA_SKETCH(v) OVER ("
-            f"PARTITION BY g ORDER BY t {frame_kw} BETWEEN CURRENT ROW "
-            "AND UNBOUNDED FOLLOWING)) AS INT) AS d "
-            f"FROM {view} ORDER BY g, t, v LIMIT 100"
-        ).collect()
         want = spark.sql(
             "SELECT g, t, v, size(collect_set(v) OVER ("
             f"PARTITION BY g ORDER BY t {frame_kw} BETWEEN CURRENT ROW "
             "AND UNBOUNDED FOLLOWING)) AS d "
             f"FROM {view} ORDER BY g, t, v LIMIT 100"
         ).collect()
-        assert [tuple(r) for r in got] == [tuple(r) for r in want], frame_kw
+        for form, got in _run_both(
+            eng,
+            "SELECT g, t, v, CAST(GET_THETA_SKETCH_ESTIMATE("
+            "DISTINCT_COUNT_RAW_THETA_SKETCH(v) OVER ("
+            f"PARTITION BY g ORDER BY t {frame_kw} BETWEEN CURRENT ROW "
+            "AND UNBOUNDED FOLLOWING)) AS INT) AS d "
+            f"FROM {view} ORDER BY g, t, v LIMIT 100",
+        ).items():
+            assert [tuple(r) for r in got] == [tuple(r) for r in want], (
+                frame_kw, form
+            )
 
 
 def test_sliding_deque_spans_arrow_batches(spark, sf_dir):
@@ -234,19 +278,20 @@ def test_sliding_deque_spans_arrow_batches(spark, sf_dir):
             [(i % 2, i, i % 11) for i in range(50)],
             "g int, t int, v int",
         ).createOrReplaceTempView("slide_b_t")
-        got = eng2.sql(
-            "SELECT g, t, CAST(GET_THETA_SKETCH_ESTIMATE("
-            "DISTINCT_COUNT_RAW_THETA_SKETCH(v) OVER ("
-            "PARTITION BY g ORDER BY t "
-            "ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)) AS INT) AS d "
-            "FROM slide_b_t ORDER BY g, t LIMIT 100"
-        ).collect()
         want = spark.sql(
             "SELECT g, t, size(collect_set(v) OVER (PARTITION BY g "
             "ORDER BY t ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)) AS d "
             "FROM slide_b_t ORDER BY g, t LIMIT 100"
         ).collect()
-        assert [tuple(r) for r in got] == [tuple(r) for r in want]
+        for got in _run_both(
+            eng2,
+            "SELECT g, t, CAST(GET_THETA_SKETCH_ESTIMATE("
+            "DISTINCT_COUNT_RAW_THETA_SKETCH(v) OVER ("
+            "PARTITION BY g ORDER BY t "
+            "ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)) AS INT) AS d "
+            "FROM slide_b_t ORDER BY g, t LIMIT 100",
+        ).values():
+            assert [tuple(r) for r in got] == [tuple(r) for r in want]
     finally:
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
 
@@ -255,7 +300,7 @@ def test_raw_window_non_canonical_raises_loudly(eng):
     with pytest.raises(NotImplementedError, match="canonical single-SELECT"):
         eng.sql(
             "SELECT n_regionkey, COUNT(*) AS n, "
-            "DISTINCT_COUNT_RAW_THETA_SKETCH(n_nationkey) OVER () AS s "
+            "DISTINCTCOUNTRAWHLL(n_nationkey) OVER () AS s "
             "FROM nation GROUP BY n_regionkey"
         )
 
@@ -279,7 +324,8 @@ def test_raw_window_multiline_leading_whitespace(spark, eng):
     the replacements splice into.  Regression: offsets were computed
     on the unstripped text but spliced into ``.strip()``-ed text,
     desyncing every span and corrupting the statement."""
-    rows = eng.sql(
+    for rows in _run_both(
+        eng,
         """
         SELECT n_name,
                GET_THETA_SKETCH_ESTIMATE(
@@ -288,10 +334,10 @@ def test_raw_window_multiline_leading_whitespace(spark, eng):
         FROM nation
         ORDER BY n_name
         LIMIT 100;
-        """
-    ).collect()
-    assert len(rows) == 25
-    assert all(r.dc == 5.0 for r in rows)
+        """,
+    ).values():
+        assert len(rows) == 25
+        assert all(r.dc == 5.0 for r in rows)
 
 
 def test_raw_window_identical_over_bodies_share_one_subquery(spark, eng):
@@ -306,14 +352,10 @@ def test_raw_window_identical_over_bodies_share_one_subquery(spark, eng):
         }
 
     before = _rswin_views()
+    dc = _TUPLE_DC.format("n_nationkey")
     rows = eng.sql(
-        "SELECT n_name, "
-        "GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(n_nationkey) "
-        "OVER (PARTITION BY n_regionkey)) AS a, "
-        "GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(n_nationkey) "
-        "OVER (PARTITION BY n_regionkey)) AS b, "
-        "GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(n_nationkey) "
-        "OVER ()) AS g "
+        f"SELECT n_name, {dc} OVER (PARTITION BY n_regionkey) AS a, "
+        f"{dc} OVER (PARTITION BY n_regionkey) AS b, {dc} OVER () AS g "
         "FROM nation ORDER BY n_name LIMIT 100"
     ).collect()
     made = _rswin_views() - before
@@ -340,75 +382,81 @@ def test_running_theta_matches_spark_collect_set_window(spark, eng):
     """Default ordered frame (RANGE UNBOUNDED PRECEDING): the running
     theta estimate in the exact regime equals size(collect_set) OVER
     the same window — a query shape Spark itself cannot serve with
-    COUNT(DISTINCT) (DISTINCT_WINDOW_FUNCTION_UNSUPPORTED)."""
-    got = eng.sql(
-        "SELECT n_regionkey, n_nationkey, GET_THETA_SKETCH_ESTIMATE("
-        "DISTINCT_COUNT_RAW_THETA_SKETCH(n_name) "
-        "OVER (PARTITION BY n_regionkey ORDER BY n_nationkey)) AS rdc "
-        "FROM nation ORDER BY n_regionkey, n_nationkey LIMIT 100"
-    ).collect()
+    COUNT(DISTINCT) (DISTINCT_WINDOW_FUNCTION_UNSUPPORTED).  Theta runs
+    as a native Window; the tuple sketch takes the running route."""
     exp = spark.sql(
         "SELECT n_regionkey, n_nationkey, "
         "size(collect_set(n_name) OVER (PARTITION BY n_regionkey "
         "ORDER BY n_nationkey)) AS e "
         "FROM nation ORDER BY n_regionkey, n_nationkey"
     ).collect()
-    assert len(got) == 25
-    assert [(r.n_regionkey, r.n_nationkey, float(r.rdc)) for r in got] == [
-        (r.n_regionkey, r.n_nationkey, float(r.e)) for r in exp
-    ]
+    for got in _run_both(
+        eng,
+        "SELECT n_regionkey, n_nationkey, GET_THETA_SKETCH_ESTIMATE("
+        "DISTINCT_COUNT_RAW_THETA_SKETCH(n_name) "
+        "OVER (PARTITION BY n_regionkey ORDER BY n_nationkey)) AS rdc "
+        "FROM nation ORDER BY n_regionkey, n_nationkey LIMIT 100",
+    ).values():
+        assert len(got) == 25
+        assert [(r.n_regionkey, r.n_nationkey, float(r.rdc)) for r in got] == [
+            (r.n_regionkey, r.n_nationkey, float(r.e)) for r in exp
+        ]
 
 
 def test_running_range_peers_share_and_rows_advance(eng, peers):
     """RANGE peers (ties on every ORDER BY key) share one value; an
     explicit ROWS frame advances per row; NULL values don't count."""
-    rng = eng.sql(
+    for rng in _run_both(
+        eng,
         "SELECT k, ts, v, GET_THETA_SKETCH_ESTIMATE("
         "DISTINCT_COUNT_RAW_THETA_SKETCH(v) "
         "OVER (PARTITION BY k ORDER BY ts)) AS d "
-        "FROM rswin_peers ORDER BY k, ts, v LIMIT 100"
-    ).collect()
-    assert [(r.k, r.ts, r.d) for r in rng] == [
-        (1, 10, 2.0), (1, 10, 2.0), (1, 20, 3.0), (1, 20, 3.0),
-        (1, 30, 3.0), (2, 5, 1.0), (2, 7, 1.0), (2, 9, 2.0),
-    ]
-    rows = eng.sql(
+        "FROM rswin_peers ORDER BY k, ts, v LIMIT 100",
+    ).values():
+        assert [(r.k, r.ts, r.d) for r in rng] == [
+            (1, 10, 2.0), (1, 10, 2.0), (1, 20, 3.0), (1, 20, 3.0),
+            (1, 30, 3.0), (2, 5, 1.0), (2, 7, 1.0), (2, 9, 2.0),
+        ]
+    for rows in _run_both(
+        eng,
         "SELECT k, ts, v, GET_THETA_SKETCH_ESTIMATE("
         "DISTINCT_COUNT_RAW_THETA_SKETCH(v) "
         "OVER (PARTITION BY k ORDER BY ts, v "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS d "
-        "FROM rswin_peers ORDER BY k, ts, v LIMIT 100"
-    ).collect()
-    assert [(r.k, r.ts, r.d) for r in rows] == [
-        (1, 10, 1.0), (1, 10, 2.0), (1, 20, 2.0), (1, 20, 3.0),
-        (1, 30, 3.0), (2, 5, 1.0), (2, 7, 1.0), (2, 9, 2.0),
-    ]
+        "FROM rswin_peers ORDER BY k, ts, v LIMIT 100",
+    ).values():
+        assert [(r.k, r.ts, r.d) for r in rows] == [
+            (1, 10, 1.0), (1, 10, 2.0), (1, 20, 2.0), (1, 20, 3.0),
+            (1, 30, 3.0), (2, 5, 1.0), (2, 7, 1.0), (2, 9, 2.0),
+        ]
 
 
 def test_running_final_blob_byte_identical_to_grouped(spark, eng):
     """The running blob on a partition's LAST row is byte-identical to
-    the grouped route's blob for that partition — same hash domain,
-    same accumulation rule, same serializer (theta AND clearspring
-    HLL)."""
+    the grouped blob for that partition — same hash domain, same
+    accumulation rule, same serializer (clearspring HLL and the tuple
+    sketch through the running route, theta natively on both sides)."""
+    tup = "DISTINCT_COUNT_RAW_INTEGER_SUM_TUPLE_SKETCH(TO_INTEGER_SUM_TUPLE_SKETCH(n_name, 1))"
     run = eng.sql(
         "SELECT n_regionkey, n_nationkey, "
         "DISTINCT_COUNT_RAW_THETA_SKETCH(n_name) "
         "OVER (PARTITION BY n_regionkey ORDER BY n_nationkey) AS tb, "
         "DISTINCTCOUNTRAWHLL(n_name, 11) "
-        "OVER (PARTITION BY n_regionkey ORDER BY n_nationkey) AS hb "
+        "OVER (PARTITION BY n_regionkey ORDER BY n_nationkey) AS hb, "
+        f"{tup} OVER (PARTITION BY n_regionkey ORDER BY n_nationkey) AS ub "
         "FROM nation ORDER BY n_regionkey, n_nationkey LIMIT 100"
     ).collect()
     last = {}
     for r in run:
-        last[r.n_regionkey] = (bytes(r.tb), bytes(r.hb))
+        last[r.n_regionkey] = (bytes(r.tb), bytes(r.hb), bytes(r.ub))
     grp = eng.sql(
         "SELECT n_regionkey, DISTINCT_COUNT_RAW_THETA_SKETCH(n_name) AS tb, "
-        "DISTINCTCOUNTRAWHLL(n_name, 11) AS hb "
+        f"DISTINCTCOUNTRAWHLL(n_name, 11) AS hb, {tup} AS ub "
         "FROM nation GROUP BY n_regionkey ORDER BY n_regionkey LIMIT 10"
     ).collect()
     assert len(grp) == 5
     for r in grp:
-        assert last[r.n_regionkey] == (bytes(r.tb), bytes(r.hb))
+        assert last[r.n_regionkey] == (bytes(r.tb), bytes(r.hb), bytes(r.ub))
 
 
 def test_running_hll_rows_global_window(eng):
@@ -427,15 +475,16 @@ def test_running_desc_and_nulls(spark, eng):
         "SELECT * FROM VALUES (1, 'a'), (2, 'b'), (NULL, 'c'), (3, 'a') "
         "AS t(ts, v)"
     ).createOrReplaceTempView("rswin_nulls")
-    rows = eng.sql(
+    for rows in _run_both(
+        eng,
         "SELECT ts, GET_THETA_SKETCH_ESTIMATE("
         "DISTINCT_COUNT_RAW_THETA_SKETCH(v) "
         "OVER (ORDER BY ts DESC NULLS FIRST)) AS d "
-        "FROM rswin_nulls ORDER BY d, ts LIMIT 100"
-    ).collect()
-    # prefix order: NULL('c') -> 3('a') -> 2('b') -> 1('a')
-    got = {(r.ts, r.d) for r in rows}
-    assert got == {(None, 1.0), (3, 2.0), (2, 3.0), (1, 3.0)}
+        "FROM rswin_nulls ORDER BY d, ts LIMIT 100",
+    ).values():
+        # prefix order: NULL('c') -> 3('a') -> 2('b') -> 1('a')
+        got = {(r.ts, r.d) for r in rows}
+        assert got == {(None, 1.0), (3, 2.0), (2, 3.0), (1, 3.0)}
 
 
 def test_running_null_numeric_key_spans_arrow_batches(spark, eng):
@@ -455,32 +504,35 @@ def test_running_null_numeric_key_spans_arrow_batches(spark, eng):
     prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
     try:
-        rows = eng.sql(
+        both = _run_both(
+            eng,
             "SELECT ts, GET_THETA_SKETCH_ESTIMATE("
             "DISTINCT_COUNT_RAW_THETA_SKETCH(v) "
             "OVER (PARTITION BY k ORDER BY ts "
             "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS d "
-            "FROM rswin_nullkey ORDER BY ts LIMIT 100"
-        ).collect()
+            "FROM rswin_nullkey ORDER BY ts LIMIT 100",
+        )
     finally:
         if prev is None:
             spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
         else:
             spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
-    assert [r.d for r in rows] == [float(i) for i in range(1, n + 1)]
+    for rows in both.values():
+        assert [r.d for r in rows] == [float(i) for i in range(1, n + 1)]
 
 
 def test_running_unbounded_both_frame_is_partition_value(eng):
     """UNBOUNDED PRECEDING .. UNBOUNDED FOLLOWING on an ordered window
     = the whole-partition sketch on every row."""
-    rows = eng.sql(
+    for rows in _run_both(
+        eng,
         "SELECT n_nationkey, GET_THETA_SKETCH_ESTIMATE("
         "DISTINCT_COUNT_RAW_THETA_SKETCH(n_name) "
         "OVER (PARTITION BY n_regionkey ORDER BY n_nationkey "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)) AS d "
-        "FROM nation ORDER BY n_nationkey LIMIT 100"
-    ).collect()
-    assert len(rows) == 25 and all(r.d == 5.0 for r in rows)
+        "FROM nation ORDER BY n_nationkey LIMIT 100",
+    ).values():
+        assert len(rows) == 25 and all(r.d == 5.0 for r in rows)
 
 
 def test_running_families_execute(spark, eng):
@@ -541,14 +593,11 @@ def test_running_identical_windows_share_one_column(spark, eng):
         }
 
     before = _rsrun_views()
+    dc = _TUPLE_DC.format("n_name")
     rows = eng.sql(
-        "SELECT n_nationkey, "
-        "GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(n_name) "
-        "OVER (ORDER BY n_nationkey)) AS a, "
-        "GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(n_name) "
-        "OVER (ORDER BY n_nationkey)) AS b, "
-        "GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(n_name) "
-        "OVER (PARTITION BY n_regionkey ORDER BY n_nationkey)) AS c "
+        f"SELECT n_nationkey, {dc} OVER (ORDER BY n_nationkey) AS a, "
+        f"{dc} OVER (ORDER BY n_nationkey) AS b, "
+        f"{dc} OVER (PARTITION BY n_regionkey ORDER BY n_nationkey) AS c "
         "FROM nation ORDER BY n_nationkey LIMIT 100"
     ).collect()
     made = _rsrun_views() - before
@@ -566,17 +615,18 @@ def test_running_where_applies_and_mixes_with_unbounded(spark, eng):
     """WHERE bounds the running population; a partition-unbounded raw
     window in the same statement still routes through the grouped
     LEFT-JOIN path on reentry."""
-    rows = eng.sql(
+    for rows in _run_both(
+        eng,
         "SELECT n_nationkey, "
         "GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(n_name) "
         "OVER (ORDER BY n_nationkey)) AS run, "
         "GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(n_name) "
         "OVER (PARTITION BY n_regionkey)) AS part "
         "FROM nation WHERE n_nationkey < 10 "
-        "ORDER BY n_nationkey LIMIT 100"
-    ).collect()
-    assert len(rows) == 10
-    assert [r.run for r in rows] == [float(i + 1) for i in range(10)]
+        "ORDER BY n_nationkey LIMIT 100",
+    ).values():
+        assert len(rows) == 10
+        assert [r.run for r in rows] == [float(i + 1) for i in range(10)]
     # partition sketches also see only the filtered population
     expect = {}
     for r in spark.sql(
@@ -588,14 +638,15 @@ def test_running_where_applies_and_mixes_with_unbounded(spark, eng):
         r.n_regionkey: None
         for r in spark.sql("SELECT n_regionkey FROM nation").collect()
     }
-    got = eng.sql(
+    for got in _run_both(
+        eng,
         "SELECT n_regionkey, GET_THETA_SKETCH_ESTIMATE("
         "DISTINCT_COUNT_RAW_THETA_SKETCH(n_name) "
         "OVER (PARTITION BY n_regionkey)) AS p "
-        "FROM nation WHERE n_nationkey < 10 ORDER BY n_regionkey LIMIT 100"
-    ).collect()
-    for r in got:
-        assert r.p == expect[r.n_regionkey]
+        "FROM nation WHERE n_nationkey < 10 ORDER BY n_regionkey LIMIT 100",
+    ).values():
+        for r in got:
+            assert r.p == expect[r.n_regionkey]
 
 
 def test_running_hll_mv_and_percentile_mv(spark, eng):
@@ -629,9 +680,8 @@ def test_running_view_plan_single_hash_exchange(spark, eng):
         if t.name.startswith("__rsrun_")
     }
     eng.sql(
-        "SELECT o_orderkey, GET_THETA_SKETCH_ESTIMATE("
-        "DISTINCT_COUNT_RAW_THETA_SKETCH(o_custkey) "
-        "OVER (PARTITION BY o_orderstatus ORDER BY o_orderkey)) AS rc "
+        f"SELECT o_orderkey, {_TUPLE_DC.format('o_custkey')} "
+        "OVER (PARTITION BY o_orderstatus ORDER BY o_orderkey) AS rc "
         "FROM orders ORDER BY o_orderkey LIMIT 10"
     ).collect()
     made = {
@@ -688,9 +738,8 @@ def test_partition_window_many_groups_no_limit_no_funnel(spark, eng):
         if t.name.startswith("__rswin_")
     }
     rows = eng.sql(
-        "SELECT o_orderkey, GET_THETA_SKETCH_ESTIMATE("
-        "DISTINCT_COUNT_RAW_THETA_SKETCH(o_orderpriority) "
-        "OVER (PARTITION BY MOD(o_custkey, 37))) AS d "
+        f"SELECT o_orderkey, {_TUPLE_DC.format('o_orderpriority')} "
+        "OVER (PARTITION BY MOD(o_custkey, 37)) AS d "
         "FROM orders ORDER BY o_orderkey LIMIT 2000"
     ).collect()
     made = {

@@ -282,7 +282,7 @@ def test_theta_value_build_exact_below_k(spark):
         ).collect()
     }
     assert got == {0: 2, 1: 5, 2: 2}
-    # window position routes through the RAW running-sketch machinery
+    # window position: a native Window over theta_sketch_agg
     rows = eng.sql(
         "SELECT v, DISTINCTCOUNTTHETASKETCH(v) OVER (PARTITION BY g) AS dc "
         "FROM theta_vals_t"
@@ -296,3 +296,28 @@ def test_theta_value_build_exact_below_k(spark):
         "FROM theta_vals_big_t"
     ).collect()[0].dc
     assert 400 <= est <= 2500
+
+
+def test_theta_column_surface_matches_sql(spark):
+    """The Column-surface theta aggregates build the same native sketch
+    as the SQL surface: byte-equal RAW sketches and equal, exact
+    estimates on the fixture where an HLL returned 8 for 9 distinct."""
+    from pinot_spark.dialect import PinotEngine
+    from pinot_spark.functions.aggregate import agg_call
+
+    vals = [1056, 1216, 1376, 1456, 2016, 2176, 2336, 2896, 3616, 1056, 1216]
+    df = spark.createDataFrame([(v,) for v in vals], "v int")
+    df.createOrReplaceTempView("theta_cols_t")
+    sql = PinotEngine(spark).sql(
+        "SELECT DISTINCTCOUNTRAWTHETASKETCH(v) AS raw, "
+        "DISTINCTCOUNTRAWTHETASKETCH(v, 'nominalEntries=100') AS raw100, "
+        "DISTINCTCOUNTTHETASKETCH(v) AS dc FROM theta_cols_t"
+    ).collect()[0]
+    col = df.agg(
+        agg_call("distinctcountrawthetasketch", "v").alias("raw"),
+        agg_call("distinctcountrawthetasketch", "v", "nominalEntries=100").alias("raw100"),
+        agg_call("distinctcountthetasketch", "v").alias("dc"),
+    ).collect()[0]
+    assert bytes(col.raw) == bytes(sql.raw)
+    assert bytes(col.raw100) == bytes(sql.raw100)
+    assert col.dc == sql.dc == 9

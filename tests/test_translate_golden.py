@@ -37,12 +37,23 @@ _SEQ_NAME_RE = re.compile(
 # must not hold)
 PINNED = {
     "pinned_two_phase": (
+        "SELECT l_returnflag, DISTINCT_COUNT_TUPLE_SKETCH(TO_INTEGER_SUM_TUPLE_SKETCH("
+        "l_partkey, l_quantity)) AS tu, FREQUENT_STRINGS_SKETCH(l_linestatus) AS fs, "
+        "FREQUENTLONGSSKETCH(l_linenumber, 64) AS fl FROM lineitem "
+        "GROUP BY l_returnflag",
+        ["l_linestatus AS __g1", "pmod(xxhash64(__g0), 256)) __rs_partials GROUP BY l_returnflag"],
+        ["__rsn"],
+    ),
+    # theta is a native aggregate: next to the frequent-items families
+    # it takes the native side of the mixed split
+    "pinned_theta_native_split": (
         "SELECT l_returnflag, DISTINCTCOUNTRAWTHETASKETCH(l_partkey, "
         "'nominalEntries=1024') AS th, FREQUENT_STRINGS_SKETCH(l_linestatus) AS fs, "
         "FREQUENTLONGSSKETCH(l_linenumber, 64) AS fl FROM lineitem "
         "GROUP BY l_returnflag",
-        ["l_partkey AS __g0", "pmod(xxhash64(__g0), 256)) __rs_partials GROUP BY l_returnflag"],
-        ["__rsn"],
+        ["theta_sketch_agg(l_partkey, 10) AS __nat0", ") __rsn JOIN (",
+         "pmod(xxhash64(__g0), 256)) __rs_partials"],
+        ["__theta_"],
     ),
     "pinned_two_phase_mv": (
         "SELECT label, DISTINCTCOUNTRAWHLLMV(embedding, 10) AS h, "
@@ -52,22 +63,22 @@ PINNED = {
         ["__rsn"],
     ),
     "pinned_mixed_split": (
-        "SELECT c_mktsegment, COUNT(*) AS n, GET_THETA_SKETCH_ESTIMATE("
-        "DISTINCTCOUNTRAWTHETASKETCH(c_custkey)) AS dc FROM customer "
+        "SELECT c_mktsegment, COUNT(*) AS n, DISTINCT_COUNT_TUPLE_SKETCH("
+        "TO_INTEGER_SUM_TUPLE_SKETCH(c_custkey, 1)) AS dc FROM customer "
         "GROUP BY c_mktsegment HAVING COUNT(*) > 0",
         [") __rsn JOIN (", "pmod(xxhash64(__g0), 256)) __rs_partials"],
         [],
     ),
     "pinned_inexpr_udaf": (
-        "SELECT GET_THETA_SKETCH_ESTIMATE(DISTINCTCOUNTRAWTHETASKETCH(l_partkey)) AS th, "
+        "SELECT FREQUENT_STRINGS_SKETCH(l_returnflag) AS fs, "
         "DISTINCT_COUNT_TUPLE_SKETCH(TO_INTEGER_SUM_TUPLE_SKETCH(l_suppkey, l_quantity)) AS tu "
         "FROM lineitem GROUP BY substr(l_linestatus, 1, 1)",
-        ["__theta_estimate(__theta_partial(", "__tuple_estimate(__tuple_partial("],
+        ["__freq_str_partial(l_returnflag, ", "__tuple_estimate(__tuple_partial("],
         ["__rs_partials"],
     ),
     "pinned_setop": (
-        "SELECT DISTINCTCOUNTRAWTHETASKETCH(l_partkey) AS dc FROM lineitem "
-        "WHERE l_returnflag = 'A' UNION ALL SELECT DISTINCTCOUNTRAWTHETASKETCH(l_partkey) "
+        "SELECT FREQUENTLONGSSKETCH(l_partkey) AS dc FROM lineitem "
+        "WHERE l_returnflag = 'A' UNION ALL SELECT FREQUENTLONGSSKETCH(l_partkey) "
         "AS dc FROM lineitem WHERE l_returnflag = 'N'",
         ["__rs_partials) UNION ALL (SELECT"],
         [],
