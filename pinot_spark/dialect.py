@@ -5469,13 +5469,15 @@ def _ensure_theta_sql_udfs(spark: SparkSession) -> None:
             dtype="Int64",
         )
 
-    from pinot_spark.functions.sketches import TupleSketch, _MODES
+    from pinot_spark.functions.sketches import (
+        _MODES,
+        TupleSketch,
+        theta_singleton_series,
+        tuple_singleton_series,
+    )
 
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __theta_singleton(hi, lo, k):
-        from pinot_spark.functions.sketches import theta_singleton_series
-
-        return theta_singleton_series(hi, lo, k)
+    __theta_singleton = pandas_udf(theta_singleton_series, "binary")
+    __tuple_singleton = pandas_udf(tuple_singleton_series, "binary")
 
     @pandas_udf("binary", PandasUDFType.SCALAR)
     def __ds_theta_single(v, t):
@@ -5503,12 +5505,6 @@ def _ensure_theta_sql_udfs(spark: SparkSession) -> None:
             )
 
         return b.map(fmt)
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __tuple_singleton(hi, lo, vhi, vlo, k):
-        from pinot_spark.functions.sketches import tuple_singleton_series
-
-        return tuple_singleton_series(hi, lo, vhi, vlo, k)
 
     @pandas_udf("binary", PandasUDFType.SCALAR)
     def __tuple_merge_sum(arrs):

@@ -145,14 +145,6 @@ def theta_singleton_series(
     )
 
 
-def _make_theta_singleton():
-    @_pandas_udf("binary")
-    def _f(hi: _pd.Series, lo: _pd.Series, k: _pd.Series) -> _pd.Series:
-        return theta_singleton_series(hi, lo, k)
-
-    return _f
-
-
 def _make_theta_to_string():
     from pinot_spark.operators.theta import ThetaSketch
 
@@ -306,9 +298,9 @@ def _hash_halves(col):
 # reference: toThetaSketch(value[, nominalEntries]) — a singleton (or
 # empty, for NULL input) serialized sketch for pre-aggregated ingest
 _reg("tothetasketch")(
-    lambda v, k=_DEFAULT_K: _lazy_udf("theta_singleton", _make_theta_singleton)(
-        *_hash_halves(v), F.lit(int(k))
-    )
+    lambda v, k=_DEFAULT_K: _lazy_udf(
+        "theta_singleton", lambda: _pandas_udf(theta_singleton_series, "binary")
+    )(*_hash_halves(v), F.lit(int(k)))
 )
 _reg("thetasketchtostring")(
     lambda b: _lazy_udf("theta_to_string", _make_theta_to_string)(_c(b))
@@ -336,17 +328,6 @@ def tuple_singleton_series(
             for h, l, vh, vl in zip(hi, lo, vhi, vlo)
         ]
     )
-
-
-def _make_tuple_singleton():
-    @_pandas_udf("binary")
-    def _f(
-        hi: _pd.Series, lo: _pd.Series, vhi: _pd.Series, vlo: _pd.Series,
-        k: _pd.Series,
-    ) -> _pd.Series:
-        return tuple_singleton_series(hi, lo, vhi, vlo, k)
-
-    return _f
 
 
 def _make_tuple_binop(op: str, mode: str):
@@ -379,7 +360,9 @@ def _make_tuple_estimate():
 def _tuple_singleton(key, value, lg_k=None):
     k = _DEFAULT_K if lg_k is None else 2 ** int(lg_k)
     v = _c(value).cast("long")
-    return _lazy_udf("tuple_singleton", _make_tuple_singleton)(
+    return _lazy_udf(
+        "tuple_singleton", lambda: _pandas_udf(tuple_singleton_series, "binary")
+    )(
         *_hash_halves(key), F.shiftright(v, 32), v.bitwiseAND(F.lit(0xFFFFFFFF)),
         F.lit(int(k)),
     )
