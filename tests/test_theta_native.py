@@ -90,7 +90,10 @@ def _no_python(plan: str) -> None:
     assert not [n for n in _PY_NODES if n in plan], plan
 
 
-@pytest.mark.parametrize("stmt,exact", _GROUPED)
+@pytest.mark.parametrize(
+    "stmt,exact", _GROUPED,
+    ids=["grouped", "having", "join", "expr_key", "mixed", "filtered"],
+)
 def test_grouped_theta_is_native_and_exact(spark, eng, stmt, exact):
     df = eng.sql(stmt)
     plan = _plan(df)
@@ -101,7 +104,7 @@ def test_grouped_theta_is_native_and_exact(spark, eng, stmt, exact):
     ]
 
 
-@pytest.mark.parametrize("over", _WINDOWS)
+@pytest.mark.parametrize("over", _WINDOWS, ids=["partition", "running", "rows_5"])
 def test_window_theta_is_native_and_exact(spark, eng, over):
     df = eng.sql(
         "SELECT l_orderkey, l_linenumber, "
