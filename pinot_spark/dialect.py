@@ -817,7 +817,7 @@ _NATIVE_THETA_RE = re.compile(
 def _is_native_theta(e: str) -> bool:
     """Is ``e`` one native theta call, optionally followed by its OVER
     clause?  Anything else (a BYTES column, a literal, an engine-own
-    builder) may hold engine-own bytes and keeps the UDF readers."""
+    constructor) may hold engine-own bytes and keeps the UDF readers."""
     m = _NATIVE_THETA_RE.match(e)
     if not m:
         return False

@@ -659,8 +659,8 @@ def dialect_raw_theta_mixed_split(spark, sf_dir):
     MIN and the sketch share one partial/final aggregation with no split
     and no Python worker; the mixed split remains for the pandas-UDAF
     families.  Per-segment customer cardinality stays under the 4096
-    nominal entries at the driver SFs, so the theta sketch is EXACT and
-    the oracle mirrors it with count(DISTINCT).
+    nominal entries at the registry scale factors, so the theta sketch
+    is EXACT and the oracle mirrors it with count(DISTINCT).
     Reference: AggregationFunction.java:63,86,132 (partial-state
     contract); DistinctCountRawThetaSketchAggregationFunction.java."""
     return _engine(spark, sf_dir).sql(
