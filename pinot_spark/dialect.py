@@ -29,7 +29,7 @@ What Pinot-specific semantics this layer reproduces:
   subqueries with map-side partial aggregation (no collect buffers).
 - **GROOVY inline transforms**: literal-script calls compile through the
   expression-subset evaluator (functions/groovy_expr.py) and register as
-  per-call pandas UDFs.
+  per-call Python UDFs.
 - **ResultTable shaping**: the broker's JSON result format
   (columnNames / columnDataTypes / rows — pinot-common/.../response/).
 
@@ -41,7 +41,7 @@ Catalyst.
 from __future__ import annotations
 
 import contextvars
-import math
+import functools
 import re
 import weakref
 from collections.abc import Callable
@@ -665,16 +665,8 @@ def _cs_hll_pairs_arr_sql(col: str, log2m: int) -> str:
 def _cs_hllpp_pair_sql(col: str, p: int) -> str:
     """HLL++ NORMAL pair for one value.  stream-lib hash64(Object)
     hashes toString() bytes for every number — a byte loop no Column
-    expression reaches — so the pair always computes in an
-    Arrow-batched UDF; integer values ship as exact 32-bit halves
-    (nullable int64 is lossy through pandas float64 past 2^53)."""
-    v = f"CAST({col} AS BIGINT)"
-    return (
-        f"CASE WHEN ({col}) IS NULL THEN CAST(NULL AS BIGINT) "
-        f"WHEN typeof({col}) IN {_INT_TYPEOFS} "
-        f"THEN __cs_hllpp_pair_long(shiftright({v}, 32), {v} & 4294967295, {p}) "
-        f"ELSE __cs_hllpp_pair({col}, typeof({col}), {p}) END"
-    )
+    expression reaches — so the pair always computes in a UDF."""
+    return f"__cs_hllpp_pair({col}, typeof({col}), {p})"
 
 
 def _hllpp_params(a: list[str]) -> tuple[int, int]:
@@ -706,16 +698,10 @@ def _cpc_lgk(a: list[str]) -> int:
 
 def _cpc_coupon_sql(col: str, lg_k: int) -> str:
     """Per-value CPC coupon (row*64 + col in the murmur3-9001 domain)
-    with CpcSketch.update(Object) type semantics — integer values ship
-    as exact 32-bit halves; the domain is bounded by 64*2^lgK, so
-    collect_set state stays sketch-scale at any row count."""
-    v = f"CAST({col} AS BIGINT)"
-    return (
-        f"CASE WHEN ({col}) IS NULL THEN CAST(NULL AS BIGINT) "
-        f"WHEN typeof({col}) IN {_INT_TYPEOFS} "
-        f"THEN __cpc_coupon_long(shiftright({v}, 32), {v} & 4294967295, {lg_k}) "
-        f"ELSE __cpc_coupon({col}, typeof({col}), {lg_k}) END"
-    )
+    with CpcSketch.update(Object) type semantics; the domain is bounded
+    by 64*2^lgK, so collect_set state stays sketch-scale at any row
+    count."""
+    return f"__cpc_coupon({col}, typeof({col}), {lg_k})"
 
 
 def _raw_hll_sql(a: list[str]) -> str:
@@ -764,23 +750,15 @@ def _raw_hllpp_mv_sql(a: list[str]) -> str:
     )
 
 
-# t-digest quantile grid: Chebyshev (cosine) spacing — denser at the
-# tails, mirroring the t-digest k1 scale function. 129 probes keep the
-# percentile_approx result array small while bounding the rank error of
-# the reconstructed digest to ~(1/128)/2 mid-range and much tighter at
-# the tails.
-_TDIGEST_GRID = [
-    (1 - math.cos(math.pi * i / 128)) / 2 for i in range(129)
-]
-
-
 def _raw_tdigest_sql(values_expr: str) -> str:
     """PERCENTILERAW* scale shape: Spark-native percentile_approx
     (bounded GK/KLL state, partial/final map-side combine) probes a
     fixed quantile grid; a scalar UDF reassembles engine-own t-digest
     bytes from (grid quantiles, row count). No per-value collection
     anywhere — the aggregation state is sketch-sized at any row count."""
-    grid = ", ".join(f"{q!r}" for q in _TDIGEST_GRID)
+    from pinot_spark.functions.sketches import TDIGEST_GRID
+
+    grid = ", ".join(f"{q!r}" for q in TDIGEST_GRID)
     return (
         f"__tdigest_from_quantiles("
         f"percentile_approx({values_expr}, array({grid}), 10000), "
@@ -1084,8 +1062,8 @@ FUNCTION_MAP: dict[str, str | Callable[[list[str]], str]] = {
     # exact carrier first (rewrite_theta_carriers).  The estimate and
     # the set operations stay native over native expressions; over
     # anything else (stored BYTES columns, literals, TO_THETA_SKETCH)
-    # the pandas UDFs PinotEngine registers lazily
-    # (_ensure_theta_sql_udfs) read either wire format and refuse to
+    # the sketch UDFs PinotEngine registers lazily
+    # (_ensure_sketch_udfs) read either wire format and refuse to
     # mix hash domains. ---
     "distinctcountrawthetasketch": lambda a: (
         f"theta_sketch_agg({a[0]}, {_theta_lgk(a[1:])})"
@@ -1120,17 +1098,13 @@ FUNCTION_MAP: dict[str, str | Callable[[list[str]], str]] = {
     "intsumtuplesketchintersect": lambda a: (
         f"__tuple_intersect({a[0]}, {a[1]})"
     ),
-    # the hash and the value travel as 32-bit halves (_split_hash_expr)
-    "tointegersumtuplesketch": lambda a: (
-        "__tuple_singleton({}, {}, shiftright({v}, 32), ({v}) & 4294967295, "
-        "{})".format(
-            *_split_hash_expr(a[0]),
-            2 ** int(a[2]) if len(a) > 2 and a[2].strip().isdigit() else 4096,
-            v=f"CAST({a[1]} AS BIGINT)",
-        )
+    "tointegersumtuplesketch": lambda a: "__tuple_singleton({}, CAST({} AS BIGINT), {})".format(
+        _masked_hash_expr(a[0]),
+        a[1],
+        2 ** int(a[2]) if len(a) > 2 and a[2].strip().isdigit() else 4096,
     ),
-    "tothetasketch": lambda a: "__theta_singleton({}, {}, {})".format(
-        *_split_hash_expr(a[0]),
+    "tothetasketch": lambda a: "__theta_singleton({}, {})".format(
+        _masked_hash_expr(a[0]),
         a[1].strip() if len(a) > 1 and a[1].strip().isdigit() else 4096,
     ),
     "thetasketchtostring": lambda a: f"__theta_to_string({a[0]})",
@@ -1200,11 +1174,9 @@ FUNCTION_MAP: dict[str, str | Callable[[list[str]], str]] = {
         )
     ),
     "getullestimate": lambda a: f"__ull_estimate({a[0]})",
-    "toull": lambda a: (
-        "__ull_singleton(CASE WHEN {0} IS NULL THEN CAST(NULL AS BIGINT) "
-        "ELSE xxhash64({0}) END, {1})".format(
-            a[0], a[1].strip() if len(a) > 1 and a[1].strip().isdigit() else 12
-        )
+    "toull": lambda a: "__ull_singleton({}, {})".format(
+        _masked_hash_expr(a[0]),
+        a[1].strip() if len(a) > 1 and a[1].strip().isdigit() else 12,
     ),
     "fromull": _sql_gap(
         "FROMULL", "re-wrapping hash4j-serialized UltraLogLog bytes needs the "
@@ -1222,21 +1194,7 @@ FUNCTION_MAP: dict[str, str | Callable[[list[str]], str]] = {
             _cpc_coupon_sql(a[0], _cpc_lgk(a)), _cpc_lgk(a)
         )
     ),
-    "tocpcsketch": lambda a: (
-        # The NULL branch must NOT forward the typed column: a SQL NULL
-        # in a DOUBLE/FLOAT column reaches the pandas UDF as NaN, which
-        # the float paths treat as a genuine value — pass an
-        # unambiguous string NULL so the UDF emits the empty sketch
-        # (SketchFunctions.toCpcSketch(null) semantics).
-        "CASE WHEN ({0}) IS NULL "
-        "THEN __ds_cpc_single(CAST(NULL AS STRING), 'string', {1}) "
-        "WHEN typeof({0}) IN {2} "
-        "THEN __ds_cpc_single_long(shiftright(CAST({0} AS BIGINT), 32), "
-        "CAST({0} AS BIGINT) & 4294967295, {1}) "
-        "ELSE __ds_cpc_single({0}, typeof({0}), {1}) END".format(
-            a[0], _cpc_lgk(a), _INT_TYPEOFS
-        )
-    ),
+    "tocpcsketch": lambda a: f"__ds_cpc_single({a[0]}, typeof({a[0]}), {_cpc_lgk(a)})",
     "cpcsketchunion": lambda a: (
         f"__cpc_union(array({', '.join(a)}))"
     ),
@@ -3762,29 +3720,20 @@ def rewrite_unicode_literals(sql: str) -> str:
     return _U_AMP_LIT_RE.sub(decode, sql)
 
 
-_THETA_SQL_RE = re.compile(
-    r"\b(GET_?THETA_?SKETCH_?ESTIMATE"
-    r"|THETA_?SKETCH_?(?:DIFF|UNION|INTERSECT|TO_?STRING)|TO_?THETA_?SKETCH"
-    r"|TO_?DATA_?SKETCHES_?(?:THETA|TUPLE)"
-    r"|TO_?INTEGER_?SUM_?TUPLE_?SKETCH|GET_?INT_?TUPLE_?SKETCH_?ESTIMATE"
-    r"|INT_?SUM_?TUPLE_?SKETCH_?(?:UNION|INTERSECT)"
-    r"|DISTINCT_?COUNT_?(?:RAW_?INTEGER_?SUM_?)?TUPLE_?SKETCH"
-    r"|(?:SUM_?VALUES|AVG_?VALUE)_?INTEGER_?SUM_?TUPLE_?SKETCH"
-    r"|PERCENTILE_?RAW_?(?:EST|KLL|TDIGEST)(?:MV|_MV)?|GET_?TDIGEST_?QUANTILE"
-    r"|DISTINCT_?COUNT_?RAW_?HLL(?:PLUS)?(?:MV|_MV)?|TO_?HLL|GET_?HLL_?ESTIMATE"
-    r"|JSON_?EXTRACT_?KEY|DISTINCT_?COUNT_?(?:RAW_?)?ULL|TO_?ULL"
-    r"|GET_?ULL_?ESTIMATE"
-    r"|TO_?CLEARSPRING_?HLL(?:_?PLUS)?|HLL_?UNION"
-    r"|TO_?DATA_?SKETCHES_?KLL|KLL_?MERGE|KLL_?QUANTILE"
-    r"|FREQUENT_?(?:STRINGS|LONGS)_?(?:SKETCH|ESTIMATE)"
-    r"|GET_?CPC_?SKETCH_?ESTIMATE|TO_?CPC_?SKETCH|CPC_?SKETCH_?UNION"
-    r"|DISTINCT_?COUNT_?(?:RAW_?)?CPC_?SKETCH)\s*\(",
-    re.IGNORECASE,
-)
 # WeakSet of SparkSession, not id(): a GC'd session's id can be
 # reused by a new session, which would silently skip registration
 # (ADVICE r13)
-_THETA_UDF_SESSIONS: weakref.WeakSet = weakref.WeakSet()
+_SKETCH_UDF_SESSIONS: weakref.WeakSet = weakref.WeakSet()
+
+
+@functools.cache
+def _sketch_udf_call_re() -> re.Pattern:
+    """A call to any row of the sketch-UDF table: translate registers
+    the table when its output holds one."""
+    from pinot_spark.functions.sketches import SKETCH_UDFS
+
+    return re.compile(r"\b(?:" + "|".join(map(re.escape, SKETCH_UDFS)) + r")\s*\(")
+
 
 # ---------------------------------------------------------------------------
 # Raw-sketch aggregation.  Every raw name in _RAW_FAMILIES follows the
@@ -3799,13 +3748,13 @@ _THETA_UDF_SESSIONS: weakref.WeakSet = weakref.WeakSet()
 #   one two-phase statement: the inner level projects each call's
 #   argument once (``<arg> AS __g{n}`` over the FROM/WHERE), groups by
 #   (keys, pmod(xxhash64(__g0), fanout)) and builds partials with the
-#   pandas GROUPED_AGG UDAFs over ``__g{n}``; the outer level merges
+#   Python GROUPED_AGG UDAFs over ``__g{n}``; the outer level merges
 #   ≤ fanout bounded blobs per group.  The fanout is the smallest among
 #   the statement's families.  The aggregation state is the sketch blob
-#   at every level.  Pandas aggregation has no map-side combine, so raw
+#   at every level.  Python aggregation has no map-side combine, so raw
 #   ROWS shuffle on (keys, bucket): O(rows) shuffle volume for O(sketch)
 #   memory.  The projection matters when the argument is itself a
-#   pandas UDF (STUNION's __geo_from_text): the bucket and the partial
+#   Python UDF (STUNION's __geo_from_text): the bucket and the partial
 #   read one evaluated column instead of running the UDF twice.
 #
 # - MIXED statements (sketch + basic aggregates) split into two
@@ -4195,14 +4144,17 @@ def _search_outside_literals(pattern: re.Pattern, s: str):
     return m
 
 
+def _masked_hash_expr(a0: str) -> str:
+    """xxhash64 of a value expression, NULL for a NULL value
+    (xxhash64(NULL) is the seed)."""
+    return f"CASE WHEN {a0} IS NULL THEN CAST(NULL AS BIGINT) ELSE xxhash64({a0}) END"
+
+
 def _split_hash_expr(a0: str) -> tuple[str, str]:
     """NULL-masked xxhash64 of a value expression, SPLIT into hi/lo
     32-bit halves — a nullable BIGINT reaches a pandas UDAF as float64,
     which cannot hold a 64-bit hash exactly; the halves can."""
-    h = (
-        "CASE WHEN {0} IS NULL THEN CAST(NULL AS BIGINT) "
-        "ELSE xxhash64({0}) END".format(a0)
-    )
+    h = _masked_hash_expr(a0)
     return f"shiftrightunsigned({h}, 32)", f"({h}) & 4294967295"
 
 
@@ -5192,7 +5144,7 @@ _GEO_UDF_SESSIONS: weakref.WeakSet = weakref.WeakSet()
 
 
 def _ensure_geo_sql_udfs(spark: SparkSession) -> None:
-    """Register the Pinot-parity geometry pandas UDFs the FUNCTION_MAP
+    """Register the Pinot-parity geometry UDFs the FUNCTION_MAP
     geo templates call (functions/pinot_geometry.py: GeometrySerializer
     byte layout, JTS within/contains/equals, geography spherical area
     and great-circle distance — see that module's reference citations).
@@ -5205,10 +5157,8 @@ def _ensure_geo_sql_udfs(spark: SparkSession) -> None:
     deterministic."""
     if spark in _GEO_UDF_SESSIONS:
         return
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
     from pinot_spark.functions import pinot_geometry as pgeo
+    from pinot_spark.functions.scalar import arrow_rows_udf
 
     def parse_any(v):
         if v is None:
@@ -5224,17 +5174,13 @@ def _ensure_geo_sql_udfs(spark: SparkSession) -> None:
         return v if isinstance(v, str) else bytes(v).decode("utf-8")
 
     def rowwise(out_type, fn):
-        @pandas_udf(out_type, PandasUDFType.SCALAR)
-        def _udf(*cols):
-            out = []
-            for vals in zip(*cols):
-                if any(v is None for v in vals):
-                    out.append(None)
-                else:
-                    out.append(fn(*vals))
-            return pd.Series(out, dtype=object)
-
-        return _udf
+        return arrow_rows_udf(
+            out_type,
+            lambda *cols: [
+                None if any(v is None for v in vals) else fn(*vals)
+                for vals in zip(*cols)
+            ],
+        )
 
     spark.udf.register(
         "__geo_from_text",
@@ -5323,7 +5269,6 @@ def _ensure_geo_sql_udfs(spark: SparkSession) -> None:
         rowwise("array<long>", lambda c, k: h3grid.grid_disk(int(c), int(k))),
     )
 
-    @pandas_udf("binary", PandasUDFType.SCALAR)
     def __geo_union_fold(groups):
         """STUNION fold over collect_list(geometry): the ``stunion``
         family's merge over ≤ 64 partials, and FUNCTION_MAP's
@@ -5342,9 +5287,9 @@ def _ensure_geo_sql_udfs(spark: SparkSession) -> None:
                 return pgeo.serialize((kind, pts[0] if kind == "POINT" else pts, geoms[0][2]))
             return pgeo.serialize(pgeo.union(geoms))
 
-        return pd.Series([run(lst) for lst in groups], dtype=object)
+        return [run(lst) for lst in groups]
 
-    spark.udf.register("__geo_union_fold", __geo_union_fold)
+    spark.udf.register("__geo_union_fold", arrow_rows_udf("binary", __geo_union_fold))
 
     def _union_chunk(acc, chunk):
         """Fold ``chunk`` (parsed geometries) into accumulator ``acc``
@@ -5360,7 +5305,6 @@ def _ensure_geo_sql_udfs(spark: SparkSession) -> None:
             return (kind, pts[0] if kind == "POINT" else pts, geoms[0][2])
         return pgeo.union(geoms)
 
-    @pandas_udf("binary", PandasUDFType.GROUPED_AGG)
     def __geo_union_agg(vals):
         """Incremental STUNION fold — the aggregation state is ONE
         geometry plus a ≤64-element parse buffer, never a group-sized
@@ -5389,837 +5333,22 @@ def _ensure_geo_sql_udfs(spark: SparkSession) -> None:
             acc = _union_chunk(acc, buf)
         return pgeo.serialize(acc) if acc is not None else None
 
-    spark.udf.register("__geo_union_agg", __geo_union_agg)
+    spark.udf.register("__geo_union_agg", arrow_rows_udf("binary", __geo_union_agg, agg=True))
     _GEO_UDF_SESSIONS.add(spark)
 
 
-def _ensure_theta_sql_udfs(spark: SparkSession) -> None:
-    """Register the sketch pandas UDFs FUNCTION_MAP's rewrites call:
-    the theta readers (estimate/diff/union/intersect/blob union over
-    either theta wire format), the singletons, and the other families'
-    partials, merges and finals.  Idempotent per SparkSession."""
-    if spark in _THETA_UDF_SESSIONS:
+def _ensure_sketch_udfs(spark: SparkSession) -> None:
+    """Register every row of the sketch-UDF table
+    (functions/sketches.SKETCH_UDFS) under its name: the sketch readers,
+    singletons, partials, merges and finals FUNCTION_MAP's rewrites
+    call.  Idempotent per SparkSession."""
+    if spark in _SKETCH_UDF_SESSIONS:
         return
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    from pinot_spark.operators.theta import ThetaSketch
-
-    # eval types are explicit: hint strings can't resolve the
-    # function-local pandas import
-
-    # DataSketches wire-format interop (operators/ds_theta.py): every
-    # theta consumer auto-detects the compact DataSketches layout per
-    # argument, so foreign sketches exchanged with a real Pinot cluster
-    # estimate/union/intersect/diff correctly. The two hash domains
-    # (engine xxhash64 vs DataSketches murmur-9001) must never mix in
-    # one set operation — that would silently double-count — so a mixed
-    # pair raises loudly by name instead.
-    from pinot_spark.operators.ds_theta import DsThetaSketch, is_ds_theta_bytes
-
-    def _load_any_theta(x):
-        b = bytes(x)
-        if is_ds_theta_bytes(b):
-            return "ds", DsThetaSketch.parse(b)
-        return "own", ThetaSketch.from_bytes(b)
-
-    def _binop(own_op: str):
-        def f(a: pd.Series, b: pd.Series) -> pd.Series:
-            out = []
-            for x, y in zip(a, b):
-                if x is None or y is None:
-                    out.append(None)
-                    continue
-                da, sa = _load_any_theta(x)
-                db, sb = _load_any_theta(y)
-                if da != db:
-                    raise ValueError(
-                        "theta set operation mixes a DataSketches-format "
-                        "sketch (murmur-9001 hash domain) with an "
-                        "engine-native sketch (xxhash64 domain) — the "
-                        "domains are incompatible; rebuild both sides in "
-                        "one format"
-                    )
-                r = getattr(sa, own_op)(sb)
-                out.append(r.serialize() if da == "ds" else r.to_bytes())
-            return pd.Series(out)
-
-        return f
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __theta_diff(a, b):
-        return _binop("a_not_b")(a, b)
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __theta_union(a, b):
-        return _binop("union")(a, b)
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __theta_intersect(a, b):
-        return _binop("intersect")(a, b)
-
-    @pandas_udf("bigint", PandasUDFType.SCALAR)
-    def __theta_estimate(a):
-        return pd.Series(
-            [
-                round(_load_any_theta(x)[1].estimate()) if x is not None else None
-                for x in a
-            ],
-            dtype="Int64",
-        )
-
-    from pinot_spark.functions.sketches import (
-        _MODES,
-        TupleSketch,
-        theta_singleton_series,
-        tuple_singleton_series,
-    )
-
-    __theta_singleton = pandas_udf(theta_singleton_series, "binary")
-    __tuple_singleton = pandas_udf(tuple_singleton_series, "binary")
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __ds_theta_single(v, t):
-        from pinot_spark.functions.sketches import ds_theta_single_series
-
-        return ds_theta_single_series(v, str(t.iloc[0]) if len(t) else None)
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __ds_tuple_single(k, v):
-        from pinot_spark.functions.sketches import ds_tuple_single_series
-
-        return ds_tuple_single_series(k, v)
-
-    @pandas_udf("string", PandasUDFType.SCALAR)
-    def __theta_to_string(b):
-        def fmt(x):
-            if x is None:
-                return None
-            domain, s = _load_any_theta(bytes(x))
-            if domain == "ds":
-                return s.to_string()
-            return (
-                f"ThetaSketch(k={s.k}, theta={s.theta:.6f}, "
-                f"retained={len(s.hashes)}, estimate={s.estimate():.1f})"
-            )
-
-        return b.map(fmt)
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __tuple_merge_sum(arrs):
-        from pinot_spark.operators.ds_theta import DsTupleSketch, is_ds_tuple_bytes
-
-        def run(lst):
-            if lst is None:
-                return None
-            acc = None
-            domain = None
-            for b in lst:
-                if b is None:
-                    continue
-                if is_ds_tuple_bytes(bytes(b)):
-                    s, d = DsTupleSketch.parse(bytes(b)), "ds"
-                else:
-                    s, d = TupleSketch.from_bytes(bytes(b)), "own"
-                if domain is None:
-                    domain = d
-                elif domain != d:
-                    raise ValueError(
-                        "tuple sketch merge mixes DataSketches-format "
-                        "(murmur-9001) and engine-native (xxhash64) "
-                        "sketches — the hash domains are incompatible"
-                    )
-                if acc is None:
-                    acc = s
-                elif d == "ds":
-                    acc = acc.union(s)
-                else:
-                    acc = acc.union(s, mode=_MODES["sum"])
-            if acc is None:
-                return TupleSketch.empty().to_bytes()
-            return acc.serialize() if domain == "ds" else acc.to_bytes()
-
-        return pd.Series([run(lst) for lst in arrs])
-
-    # DataSketches integer-tuple interop: consumers auto-detect the
-    # library's compact tuple layout (operators/ds_theta.DsTupleSketch)
-    # so sketches exchanged with a real Pinot cluster estimate and
-    # aggregate correctly; engine-own tuple bytes stay the fast path.
-    from pinot_spark.operators.ds_theta import DsTupleSketch, is_ds_tuple_bytes
-
-    def _load_any_tuple(x):
-        b = bytes(x)
-        if is_ds_tuple_bytes(b):
-            return "ds", DsTupleSketch.parse(b)
-        return "own", TupleSketch.from_bytes(b)
-
-    @pandas_udf("bigint", PandasUDFType.SCALAR)
-    def __tuple_estimate(b):
-        return pd.Series(
-            [None if x is None else round(_load_any_tuple(x)[1].estimate()) for x in b],
-            dtype="Int64",
-        )
-
-    @pandas_udf("bigint", PandasUDFType.SCALAR)
-    def __tuple_sum_values(b):
-        return pd.Series(
-            [None if x is None else int(_load_any_tuple(x)[1].values.sum()) for x in b],
-            dtype="Int64",
-        )
-
-    @pandas_udf("double", PandasUDFType.SCALAR)
-    def __tuple_avg_value(b):
-        def run(x):
-            if x is None:
-                return None
-            s = _load_any_tuple(x)[1]
-            return float(s.values.mean()) if len(s.values) else None
-
-        return pd.Series([run(x) for x in b])
-
-    def _tuple_binop(op: str):
-        def f(a: pd.Series, b: pd.Series) -> pd.Series:
-            out = []
-            for x, y in zip(a, b):
-                if x is None or y is None:
-                    out.append(None)
-                    continue
-                da, sa = _load_any_tuple(x)
-                db, sb = _load_any_tuple(y)
-                if da != db:
-                    raise ValueError(
-                        "tuple set operation mixes DataSketches-format "
-                        "and engine-native sketches — incompatible hash "
-                        "domains"
-                    )
-                if da == "ds":
-                    r = getattr(sa, op)(sb)
-                else:
-                    r = getattr(sa, op)(sb, mode=_MODES["sum"])
-                out.append(r.serialize() if da == "ds" else r.to_bytes())
-            return pd.Series(out)
-
-        return f
-
-    __tuple_union = pandas_udf("binary", PandasUDFType.SCALAR)(
-        _tuple_binop("union")
-    )
-    __tuple_intersect = pandas_udf("binary", PandasUDFType.SCALAR)(
-        _tuple_binop("intersect")
-    )
-
-    from pinot_spark.operators.tdigest import TDigest
-    from pinot_spark.operators.ull import UllSketch
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __ull_from_regs(arrs, p):
-        pp = int(p.iloc[0]) if len(p) else 12
-        return pd.Series(
-            [
-                UllSketch.from_pairs(
-                    np.asarray(ps if ps is not None else [], dtype=np.int64), pp
-                ).to_bytes()
-                for ps in arrs
-            ]
-        )
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __ull_singleton(h, p):
-        pp = int(p.iloc[0]) if len(p) else 12
-
-        def one(x):
-            if pd.isna(x):
-                return UllSketch.empty(pp).to_bytes()
-            raw = np.array([x], dtype=np.int64).astype(np.uint64) + np.uint64(2**63)
-            return UllSketch.from_hashes(raw, pp).to_bytes()
-
-        return pd.Series([one(x) for x in h])
-
-    @pandas_udf("bigint", PandasUDFType.SCALAR)
-    def __ull_estimate(b):
-        return pd.Series(
-            [None if x is None else round(UllSketch.from_bytes(bytes(x)).estimate()) for x in b],
-            dtype="Int64",
-        )
-
-    @pandas_udf("bigint", PandasUDFType.SCALAR)
-    def __hll_estimate(b):
-        # auto-detects clearspring plain/plus wire bytes (the formats a
-        # real reference cluster ships, operators/cs_hll.py) vs the
-        # engine-own register blob — foreign sketches estimate with
-        # Java-identical Math.round cardinalities
-        from pinot_spark.functions.sketches import cs_hll_estimate_series
-
-        return cs_hll_estimate_series(b)
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __cs_hll_single(v, t, log2m):
-        from pinot_spark.functions.sketches import cs_hll_single_series
-
-        return cs_hll_single_series(
-            v,
-            str(t.iloc[0]) if len(t) else None,
-            int(log2m.iloc[0]) if len(log2m) else 8,
-        )
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __cs_hllpp_single(v, t, p_, sp_):
-        from pinot_spark.functions.sketches import cs_hllpp_single_series
-
-        return cs_hllpp_single_series(
-            v,
-            str(t.iloc[0]) if len(t) else None,
-            int(p_.iloc[0]) if len(p_) else 14,
-            int(sp_.iloc[0]) if len(sp_) else 0,
-        )
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __hll_union(a, b):
-        from pinot_spark.functions.sketches import hll_union_series
-
-        return hll_union_series(a, b)
-
-    @pandas_udf("bigint", PandasUDFType.SCALAR)
-    def __cpc_estimate(b):
-        # Math.round(CpcSketch.getEstimate()) over foreign CPC bytes
-        # (SketchFunctions.java:388-392; operators/ds_cpc.py)
-        import math
-
-        from pinot_spark.operators.ds_cpc import DsCpcView
-
-        return pd.Series(
-            [
-                None if x is None
-                else int(math.floor(DsCpcView.parse(bytes(x)).estimate() + 0.5))
-                for x in b
-            ],
-            dtype="Int64",
-        )
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __ds_kll_single(v, k):
-        from pinot_spark.functions.sketches import ds_kll_single_series
-
-        return ds_kll_single_series(v, int(k.iloc[0]) if len(k) else 200)
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __ds_kll_merge(a, b):
-        from pinot_spark.functions.sketches import ds_kll_merge_series
-
-        return ds_kll_merge_series(a, b)
-
-    @pandas_udf("double", PandasUDFType.SCALAR)
-    def __ds_kll_quantile(b, p):
-        from pinot_spark.functions.sketches import ds_kll_quantile_series
-
-        return ds_kll_quantile_series(b, p)
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __tdigest_from_values(arrs):
-        def run(vals):
-            td = TDigest()
-            if vals is not None and len(vals):
-                td.add([float(v) for v in vals if v is not None])
-            return td.to_bytes()
-
-        return pd.Series([run(vals) for vals in arrs])
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __tdigest_from_quantiles(qs, n):
-        # reassemble engine-own t-digest bytes from percentile_approx's
-        # Chebyshev-grid probes (_raw_tdigest_sql): centroid means are
-        # the grid quantiles; weights apportion the row count by the
-        # half-open rank interval around each probe
-        def run(grid, count):
-            td = TDigest()
-            if grid is None or count is None or count == 0 or len(grid) == 0:
-                return td.to_bytes()
-            means = np.asarray(grid, dtype=np.float64)
-            k = len(means)
-            if k == 1:
-                w = np.array([float(count)])
-            else:
-                qs_grid = np.array(_TDIGEST_GRID[:k])
-                gaps = np.empty(k)
-                gaps[0] = (qs_grid[1] - qs_grid[0]) / 2
-                gaps[-1] = (qs_grid[-1] - qs_grid[-2]) / 2
-                gaps[1:-1] = (qs_grid[2:] - qs_grid[:-2]) / 2
-                w = gaps / gaps.sum() * float(count)
-            td.means, td.weights = means, w
-            td._compress()
-            return td.to_bytes()
-
-        return pd.Series([run(g, c) for g, c in zip(qs, n)])
-
-    import json as _json
-
-    @pandas_udf("array<string>", PandasUDFType.SCALAR)
-    def __json_all_keys(docs, max_depth, dot_notation):
-        # recursive key extraction in reference path formats
-        # (JsonFunctions.extractKeysFromNode:639-669): objects emit
-        # path['field'] (dot: a.b), arrays emit path[i] (dot: a.0),
-        # preorder, depth-limited, parse errors yield an empty list
-        md = int(max_depth.iloc[0]) if len(max_depth) else 2**31 - 1
-        dot = bool(dot_notation.iloc[0]) if len(dot_notation) else False
-
-        def walk(node, path, out, depth):
-            if depth > md:
-                return
-            items = (
-                node.items()
-                if isinstance(node, dict)
-                else enumerate(node) if isinstance(node, list) else ()
-            )
-            for k, v in items:
-                if dot:
-                    p = str(k) if path == "" else f"{path}.{k}"
-                elif isinstance(node, dict):
-                    p = f"{path}['{k}']"
-                else:
-                    p = f"{path}[{k}]"
-                out.append(p)
-                if depth < md and isinstance(v, (dict, list)):
-                    walk(v, p, out, depth + 1)
-
-        def run(doc):
-            if doc is None:
-                return None
-            out: list[str] = []
-            try:
-                walk(_json.loads(doc), "" if dot else "$", out, 1)
-            except Exception:
-                return []
-            return out
-
-        return pd.Series([run(d) for d in docs])
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __tdigest_merge(arrs):
-        # merge a (bounded) list of engine-own digests — the final level
-        # of the two-phase MV percentile shape
-        def run(lst):
-            acc = TDigest()
-            if lst is None:
-                return acc.to_bytes()
-            for b in lst:
-                if b is not None:
-                    acc = acc.merge(TDigest.from_bytes(bytes(b)))
-            return acc.to_bytes()
-
-        return pd.Series([run(lst) for lst in arrs])
-
-    @pandas_udf("double", PandasUDFType.SCALAR)
-    def __tdigest_quantile(b, pct):
-        # auto-detects foreign DataSketches KLL blobs (family-15
-        # preamble, operators/ds_kll.py) vs engine-own t-digest bytes
-        from pinot_spark.functions.sketches import tdigest_quantile_any_series
-
-        return tdigest_quantile_any_series(b, pct)
-
-    # ---- bounded GROUPED_AGG partials (two-phase inner / in-expression
-    # path for pure-sketch statements). Persistent aggregation state is
-    # the emitted sketch blob; the group's rows stream to Python as Arrow
-    # batches (the transient feed is bounded by the two-phase bucket
-    # fanout where the rewrite applies).
-    @pandas_udf("binary", PandasUDFType.GROUPED_AGG)
-    def __tuple_partial(blobs):
-        from pinot_spark.operators.ds_theta import DsTupleSketch, is_ds_tuple_bytes
-
-        acc = None
-        domain = None
-        for b in blobs:
-            if b is None:
-                continue
-            if is_ds_tuple_bytes(bytes(b)):
-                s, d = DsTupleSketch.parse(bytes(b)), "ds"
-            else:
-                s, d = TupleSketch.from_bytes(bytes(b)), "own"
-            if domain is None:
-                domain = d
-            elif domain != d:
-                raise ValueError(
-                    "tuple sketch aggregation mixes DataSketches-format "
-                    "(murmur-9001) and engine-native (xxhash64) sketches "
-                    "— the hash domains are incompatible"
-                )
-            if acc is None:
-                acc = s
-            elif d == "ds":
-                acc = acc.union(s)
-            else:
-                acc = acc.union(s, mode=_MODES["sum"])
-        if acc is None:
-            # NULL, not an engine-native empty: a format-less empty
-            # partial must not pollute a DataSketches-format merge
-            return None
-        return acc.serialize() if domain == "ds" else acc.to_bytes()
-
-    @pandas_udf("binary", PandasUDFType.GROUPED_AGG)
-    def __tdigest_partial(arrs):
-        td = TDigest()
-        for vals in arrs:
-            if vals is None or len(vals) == 0:
-                continue
-            v = np.asarray(vals, dtype=np.float64)
-            v = v[~np.isnan(v)]
-            if len(v):
-                td.add(v.tolist())
-        return td.to_bytes()
-
-    @pandas_udf("binary", PandasUDFType.GROUPED_AGG)
-    def __freq_long_partial(vals, mm):
-        # DataSketches frequencies partial (operators/ds_freq.py):
-        # numeric values update the reverse-purge map; BYTES values are
-        # serialized foreign sketches and MERGE (the reference's
-        # BYTES-column contract, FrequentLongsSketchAggregationFunction)
-        from pinot_spark.operators.ds_freq import DsFrequentSketch
-
-        m = int(mm.iloc[0]) if len(mm) else 256
-        s = DsFrequentSketch.empty(m)
-        for v in vals:
-            if v is None or (isinstance(v, float) and np.isnan(v)):
-                continue
-            if isinstance(v, (bytes, bytearray)):
-                s = s.merge(DsFrequentSketch.parse(bytes(v), strings=False))
-            else:
-                s.update(int(v))
-        return s.serialize()
-
-    @pandas_udf("binary", PandasUDFType.GROUPED_AGG)
-    def __freq_str_partial(vals, mm):
-        from pinot_spark.operators.ds_freq import DsFrequentSketch
-
-        m = int(mm.iloc[0]) if len(mm) else 256
-        s = DsFrequentSketch.empty(m)
-        for v in vals:
-            if v is None:
-                continue
-            if isinstance(v, (bytes, bytearray)):
-                s = s.merge(DsFrequentSketch.parse(bytes(v), strings=True))
-            else:
-                s.update(str(v))
-        return s.serialize()
-
-    # ---- scalar merges over the BOUNDED (≤ fanout) partial-blob lists
-    # the two-phase outer level collects
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __freq_long_merge(arrs):
-        from pinot_spark.operators.ds_freq import DsFrequentSketch
-
-        def run(lst):
-            acc = None
-            for b in (lst if lst is not None else []):
-                if b is None:
-                    continue
-                s = DsFrequentSketch.parse(bytes(b), strings=False)
-                acc = s if acc is None else acc.merge(s)
-            return (acc or DsFrequentSketch.empty()).serialize()
-
-        return pd.Series([run(lst) for lst in arrs])
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __freq_str_merge(arrs):
-        from pinot_spark.operators.ds_freq import DsFrequentSketch
-
-        def run(lst):
-            acc = None
-            for b in (lst if lst is not None else []):
-                if b is None:
-                    continue
-                s = DsFrequentSketch.parse(bytes(b), strings=True)
-                acc = s if acc is None else acc.merge(s)
-            return (acc or DsFrequentSketch.empty()).serialize()
-
-        return pd.Series([run(lst) for lst in arrs])
-
-    @pandas_udf("bigint", PandasUDFType.SCALAR)
-    def __freq_long_estimate(b, item):
-        from pinot_spark.operators.ds_freq import DsFrequentSketch
-
-        return pd.Series(
-            [
-                None if x is None or i is None
-                else DsFrequentSketch.parse(bytes(x), strings=False).estimate(int(i))
-                for x, i in zip(b, item)
-            ],
-            dtype="Int64",
-        )
-
-    @pandas_udf("bigint", PandasUDFType.SCALAR)
-    def __freq_str_estimate(b, item):
-        from pinot_spark.operators.ds_freq import DsFrequentSketch
-
-        return pd.Series(
-            [
-                None if x is None or i is None
-                else DsFrequentSketch.parse(bytes(x), strings=True).estimate(str(i))
-                for x, i in zip(b, item)
-            ],
-            dtype="Int64",
-        )
-
-    def _union_any_blobs(lst):
-        """Union a list of serialized theta sketches in EITHER wire
-        format (DataSketches compact or engine-native) — the pre-built
-        BYTES-column ingestion path (ThetaSketchTest.java uploads
-        datasketches-java compact blobs)."""
-        acc_kind, acc = None, None
-        for b in lst if lst is not None else []:
-            if b is None:
-                continue
-            kind, s = _load_any_theta(b)
-            if acc is None:
-                acc_kind, acc = kind, s
-            elif kind != acc_kind:
-                raise ValueError(
-                    "theta blob union mixes DataSketches-format and "
-                    "engine-native sketches (incompatible hash domains)"
-                )
-            else:
-                acc = acc.union(s)
-        return acc_kind, acc
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __theta_union_blobs(arrs):
-        def run(lst):
-            kind, acc = _union_any_blobs(lst)
-            if acc is None:
-                return ThetaSketch(
-                    4096, 2**64, np.array([], dtype=np.uint64)
-                ).to_bytes()
-            return acc.serialize() if kind == "ds" else acc.to_bytes()
-
-        return pd.Series([run(lst) for lst in arrs])
-
-    @pandas_udf("bigint", PandasUDFType.SCALAR)
-    def __theta_filtered(expr, groups):
-        """DistinctCountThetaSketchAggregationFunction's filtered form:
-        $k = the union of the k-th predicate's sketches, combined with
-        SET_INTERSECT / SET_UNION / SET_DIFF post-aggregation."""
-
-        def parse(s: str, pos: int):
-            while pos < len(s) and s[pos].isspace():
-                pos += 1
-            if s.startswith("$", pos):
-                j = pos + 1
-                while j < len(s) and s[j].isdigit():
-                    j += 1
-                return ("ref", int(s[pos + 1 : j])), j
-            m = re.match(r"SET_(INTERSECT|UNION|DIFF)\s*\(", s[pos:], re.IGNORECASE)
-            if not m:
-                raise ValueError(f"bad theta post-aggregation expr at {s[pos:]!r}")
-            op = m.group(1).upper()
-            j = pos + m.end()
-            args = []
-            while True:
-                node, j = parse(s, j)
-                args.append(node)
-                while j < len(s) and s[j].isspace():
-                    j += 1
-                if j < len(s) and s[j] == ",":
-                    j += 1
-                    continue
-                if j < len(s) and s[j] == ")":
-                    return ("op", op, args), j + 1
-                raise ValueError(f"bad theta post-aggregation expr at {s[j:]!r}")
-
-        def run(e, gs):
-            sketches = []
-            fmt = None
-            for g in gs if gs is not None else []:
-                kind, acc = _union_any_blobs(g)
-                if kind is not None:
-                    fmt = kind
-                sketches.append(acc)
-            from pinot_spark.operators.ds_theta import DsThetaSketch
-
-            def empty():
-                return (
-                    DsThetaSketch.empty()
-                    if fmt == "ds"
-                    else ThetaSketch(4096, 2**64, np.array([], dtype=np.uint64))
-                )
-
-            def ev(node):
-                if node[0] == "ref":
-                    s = sketches[node[1] - 1]
-                    return s if s is not None else empty()
-                op, args = node[1], node[2]
-                acc = ev(args[0])
-                for a in args[1:]:
-                    rhs = ev(a)
-                    if op == "INTERSECT":
-                        acc = acc.intersect(rhs)
-                    elif op == "UNION":
-                        acc = acc.union(rhs)
-                    else:
-                        acc = acc.a_not_b(rhs)
-                return acc
-
-            tree, _ = parse(str(e), 0)
-            return int(round(ev(tree).estimate()))
-
-        return pd.Series(
-            [run(e, gs) for e, gs in zip(expr, groups)], dtype="Int64"
-        )
-
-    # --- clearspring RAW-HLL wire route (operators/cs_hll.py;
-    # functions/sketches.py series bodies) — the
-    # DISTINCTCOUNTRAWHLL[PLUS][MV] serialization -------
-
-    @pandas_udf("bigint", PandasUDFType.SCALAR)
-    def __cs_hll_pair(v, t, log2m):
-        from pinot_spark.functions.sketches import cs_hll_pair_series
-
-        return cs_hll_pair_series(
-            v,
-            str(t.iloc[0]) if len(t) else None,
-            int(log2m.iloc[0]) if len(log2m) else 8,
-        )
-
-    @pandas_udf("array<bigint>", PandasUDFType.SCALAR)
-    def __cs_hll_pairs_arr(arrs, t, log2m):
-        from pinot_spark.functions.sketches import cs_hll_pairs_arr_series
-
-        return cs_hll_pairs_arr_series(
-            arrs,
-            str(t.iloc[0]) if len(t) else None,
-            int(log2m.iloc[0]) if len(log2m) else 8,
-        )
-
-    @pandas_udf("bigint", PandasUDFType.SCALAR)
-    def __cs_hllpp_pair(v, t, p):
-        from pinot_spark.functions.sketches import cs_hllpp_pair_series
-
-        return cs_hllpp_pair_series(
-            v,
-            str(t.iloc[0]) if len(t) else None,
-            int(p.iloc[0]) if len(p) else 14,
-        )
-
-    @pandas_udf("bigint", PandasUDFType.SCALAR)
-    def __cs_hllpp_pair_long(hi, lo, p):
-        from pinot_spark.functions.sketches import cs_hllpp_pair_long_series
-
-        return cs_hllpp_pair_long_series(
-            hi, lo, int(p.iloc[0]) if len(p) else 14
-        )
-
-    @pandas_udf("array<bigint>", PandasUDFType.SCALAR)
-    def __cs_hllpp_pairs_arr(arrs, t, p):
-        from pinot_spark.functions.sketches import cs_hllpp_pairs_arr_series
-
-        return cs_hllpp_pairs_arr_series(
-            arrs,
-            str(t.iloc[0]) if len(t) else None,
-            int(p.iloc[0]) if len(p) else 14,
-        )
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __cs_hll_from_regs(arrs, log2m):
-        from pinot_spark.functions.sketches import cs_hll_from_pairs_series
-
-        return cs_hll_from_pairs_series(
-            arrs, int(log2m.iloc[0]) if len(log2m) else 8
-        )
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __cs_hllpp_from_regs(arrs, p, sp):
-        from pinot_spark.functions.sketches import cs_hllpp_from_pairs_series
-
-        return cs_hllpp_from_pairs_series(
-            arrs,
-            int(p.iloc[0]) if len(p) else 14,
-            int(sp.iloc[0]) if len(sp) else 0,
-        )
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __cs_hll_merge_blobs(arrs):
-        from pinot_spark.functions.sketches import cs_hll_merge_blobs_series
-
-        return cs_hll_merge_blobs_series(arrs)
-
-    @pandas_udf("binary", PandasUDFType.GROUPED_AGG)
-    def __cs_hll_mv_partial(pair_arrs, log2m):
-        from pinot_spark.operators.cs_hll import cs_hll_from_pairs
-
-        lm = int(log2m.iloc[0]) if len(log2m) else 8
-        pairs = []
-        for ps in pair_arrs:
-            if ps is not None and len(ps):
-                pairs.extend(int(x) for x in ps if x is not None)
-        return cs_hll_from_pairs(pairs, lm).serialize()
-
-    # --- DataSketches CPC write/union (round 11, operators/ds_cpc.py) --
-
-    @pandas_udf("bigint", PandasUDFType.SCALAR)
-    def __cpc_coupon(v, t, lgk):
-        from pinot_spark.functions.sketches import ds_cpc_coupon_series
-
-        return ds_cpc_coupon_series(
-            v,
-            str(t.iloc[0]) if len(t) else None,
-            int(lgk.iloc[0]) if len(lgk) else 12,
-        )
-
-    @pandas_udf("bigint", PandasUDFType.SCALAR)
-    def __cpc_coupon_long(hi, lo, lgk):
-        from pinot_spark.functions.sketches import ds_cpc_coupon_long_series
-
-        return ds_cpc_coupon_long_series(
-            hi, lo, int(lgk.iloc[0]) if len(lgk) else 12
-        )
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __cpc_from_coupons(arrs, lgk):
-        from pinot_spark.functions.sketches import ds_cpc_from_coupons_series
-
-        return ds_cpc_from_coupons_series(
-            arrs, int(lgk.iloc[0]) if len(lgk) else 12
-        )
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __ds_cpc_single(v, t, lgk):
-        from pinot_spark.functions.sketches import ds_cpc_single_series
-
-        return ds_cpc_single_series(
-            v,
-            str(t.iloc[0]) if len(t) else None,
-            int(lgk.iloc[0]) if len(lgk) else 12,
-        )
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __ds_cpc_single_long(hi, lo, lgk):
-        from pinot_spark.functions.sketches import ds_cpc_single_long_series
-
-        return ds_cpc_single_long_series(
-            hi, lo, int(lgk.iloc[0]) if len(lgk) else 12
-        )
-
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def __cpc_union(arrs):
-        from pinot_spark.functions.sketches import ds_cpc_union_series
-
-        return ds_cpc_union_series(arrs)
-
-    @pandas_udf("binary", PandasUDFType.GROUPED_AGG)
-    def __cs_hllpp_mv_partial(pair_arrs, p, sp):
-        from pinot_spark.operators.cs_hll import cs_hllpp_from_pairs
-
-        pp = int(p.iloc[0]) if len(p) else 14
-        spp = int(sp.iloc[0]) if len(sp) else 0
-        pairs = []
-        for ps in pair_arrs:
-            if ps is not None and len(ps):
-                pairs.extend(int(x) for x in ps if x is not None)
-        return cs_hllpp_from_pairs(pairs, pp, spp).serialize()
-
-    # every ``__``-prefixed local above is a UDF, registered under its own name
-    for name, udf in list(locals().items()):
-        if name.startswith("__"):
-            spark.udf.register(name, udf)
-    _THETA_UDF_SESSIONS.add(spark)
+    from pinot_spark.functions.sketches import SKETCH_UDFS, sketch_udf
+
+    for name in SKETCH_UDFS:
+        spark.udf.register(name, sketch_udf(name))
+    _SKETCH_UDF_SESSIONS.add(spark)
 
 
 @dataclass
@@ -6262,7 +5391,7 @@ class PinotEngine:
 
     def _register_groovy_calls(self, sql: str) -> str:
         """Compile each GROOVY('meta', 'script', args...) call (literal
-        metadata/script — GroovyFunctionEvaluator's shape) into a pandas
+        metadata/script — GroovyFunctionEvaluator's shape) into a Python
         UDF registered under a stable name, and rewrite the call to it,
         so PinotEngine.sql users get the same inline-transform subset as
         the Column registry (functions/groovy_expr.py)."""
@@ -6394,14 +5523,12 @@ class PinotEngine:
             ):
                 sql = rewrite_sketch_agg_filters(sql)
             if _THETA_BLOB_CALL_RE.search(sql):
-                _ensure_theta_sql_udfs(self.spark)
+                _ensure_sketch_udfs(self.spark)
                 sql = rewrite_theta_blob_calls(self.spark, sql)
             if _THETA_VALUE_CALL_RE.search(sql):
                 sql = rewrite_theta_value_calls(sql)
             if _RAW_THETA_CALL_RE.search(sql):
                 sql = rewrite_theta_carriers(self.spark, sql)
-            if _THETA_SQL_RE.search(sql):
-                _ensure_theta_sql_udfs(self.spark)
             if _search_outside_literals(_RAW_SKETCH_CALL_RE, sql):
                 if _GEO_SQL_RE.search(sql):
                     _ensure_geo_sql_udfs(self.spark)
@@ -6455,6 +5582,8 @@ class PinotEngine:
                 sql = apply_default_limit(
                     sql, int(options.get("limit", self.default_limit))
                 )
+            if _sketch_udf_call_re().search(sql):
+                _ensure_sketch_udfs(self.spark)
             return sql, options
         finally:
             _SCHEMA_MEMO.reset(memo_token)
@@ -6869,7 +5998,7 @@ class PinotEngine:
         # ...) — names _THETA_SQL_RE does not gate on, so register here
         # (idempotent per session) rather than rely on a prior query
         # having tripped the lazy registration
-        _ensure_theta_sql_udfs(self.spark)
+        _ensure_sketch_udfs(self.spark)
         stmt = _parse_canonical_stmt(sql2, allow_join=False)
         if stmt is None or stmt["group"] or stmt["having"]:
             raise NotImplementedError(
@@ -7120,7 +6249,7 @@ class PinotEngine:
             # the clearspring pair UDFs may appear INSIDE the mini
             # statement (non-integer MV elements) — register before
             # analysis or the route silently declines to the two-phase
-            _ensure_theta_sql_udfs(self.spark)
+            _ensure_sketch_udfs(self.spark)
 
             def translated(stmt_sql: str) -> str:
                 # the whole dialect under the statement's options, as
@@ -7299,7 +6428,7 @@ class PinotEngine:
             _ASOF_VIEW_SEQ[0] += 1
             view = f"__theta_zs_{_ASOF_VIEW_SEQ[0]}"
             partials.createOrReplaceTempView(view)
-            _ensure_theta_sql_udfs(self.spark)
+            _ensure_sketch_udfs(self.spark)
             return view
 
         sql = rewrite_quoted_identifiers(sql)

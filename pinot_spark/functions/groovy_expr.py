@@ -10,7 +10,7 @@ There is no JVM Groovy runtime here, so this module implements the
 SCRIPT SUBSET that covers realistic inline ingestion/projection
 transforms — parsed with a small recursive-descent parser (never
 Python ``eval``) and compiled to a row function executed in an
-Arrow-batched pandas UDF:
+Arrow-batched UDF:
 
 - arg references ``arg0..argN``; local variables (``def x = ...``,
   plain and compound assignment ``x += ...``)
@@ -64,8 +64,6 @@ import math
 import re
 from collections import ChainMap
 
-import pandas as _pd
-from pyspark.sql.functions import pandas_udf as _pandas_udf
 
 _TOKEN = re.compile(
     r"""[ \t]*(?:
@@ -958,7 +956,9 @@ _SPARK_TYPES = {
 
 
 def groovy_udf(metadata_json: str, script: str):
-    """Build the pandas UDF for ``groovy(metadata, script, args...)``."""
+    """Build the Spark UDF for ``groovy(metadata, script, args...)``."""
+    from pinot_spark.functions.scalar import arrow_rows_udf
+
     meta = json.loads(metadata_json)
     rt = _SPARK_TYPES.get(str(meta.get("returnType", "STRING")).upper())
     if rt is None:
@@ -968,18 +968,13 @@ def groovy_udf(metadata_json: str, script: str):
     row_fn = compile_groovy(script)
 
     def _isnull(a) -> bool:
-        try:
-            return a is None or bool(_pd.isna(a))
-        except (TypeError, ValueError):  # array-valued arg
-            return False
+        # a NaN argument reads as NULL, like a SQL NULL
+        return a is None or (isinstance(a, float) and math.isnan(a))
 
-    @_pandas_udf(rt)
-    def _udf(*cols: _pd.Series) -> _pd.Series:
-        n = len(cols[0]) if cols else 0
-        out = []
-        for i in range(n):
-            args = tuple(c.iloc[i] for c in cols)
-            out.append(None if any(_isnull(a) for a in args) else row_fn(args))
-        return _pd.Series(out, dtype="object")
-
-    return _udf
+    return arrow_rows_udf(
+        rt,
+        lambda *cols: [
+            None if any(_isnull(a) for a in args) else row_fn(args)
+            for args in zip(*cols)
+        ],
+    )

@@ -474,6 +474,8 @@ def _is_subnet_of(prefix, addr):
 # ---------------------------------------------------------------------------
 
 import pandas as _pd  # noqa: E402
+import pyarrow as pa  # noqa: E402
+import pyarrow.compute as _pc  # noqa: E402
 from pyspark.sql.functions import pandas_udf as _pandas_udf  # noqa: E402
 
 # pandas_udf needs an active SparkSession → build lazily, cache per-process
@@ -485,6 +487,52 @@ def _lazy_udf(key: str, factory: Callable[[], Callable]) -> Callable:
     if udf is None:
         udf = _UDF_CACHE[key] = factory()
     return udf
+
+
+_ARROW_TYPES = {
+    "binary": pa.binary(),
+    "string": pa.string(),
+    "boolean": pa.bool_(),
+    "int": pa.int32(),
+    "long": pa.int64(),
+    "bigint": pa.int64(),
+    "float": pa.float32(),
+    "double": pa.float64(),
+}
+
+
+def _arrow_type(ddl: str) -> pa.DataType:
+    if ddl.startswith("array<"):
+        return pa.list_(_arrow_type(ddl[6:-1]))
+    return _ARROW_TYPES[ddl]
+
+
+def _pylist(arr: pa.Array) -> list:
+    # timestamps as session-local wall-clock values, the form Spark's
+    # pandas conversion hands over, for bodies that format them
+    if pa.types.is_timestamp(arr.type) and arr.type.tz is not None:
+        arr = _pc.local_timestamp(arr)
+    return arr.to_pylist()
+
+
+def arrow_rows_udf(rtype: str, body: Callable, agg: bool = False):
+    """A type-hinted ``arrow_udf`` over plain Python values: ``body``
+    gets each argument of one Arrow batch as a list (NULL is None and a
+    BIGINT keeps all 64 bits, where a pandas Series of a nullable
+    integer column is float64) and returns a list for a scalar UDF, or
+    one value per group for a grouped aggregate (``agg``)."""
+    from pyspark.sql.functions import arrow_udf
+
+    if agg:
+        def f(*cols: pa.Array) -> object:
+            return body(*map(_pylist, cols))
+    else:
+        out_type = _arrow_type(rtype)
+
+        def f(*cols: pa.Array) -> pa.Array:
+            return pa.array(body(*map(_pylist, cols)), type=out_type)
+
+    return arrow_udf(f, rtype)
 
 
 def _make_adler32():

@@ -1279,20 +1279,17 @@ def embedding_quantize_int8(spark, sf_dir):
 def multimodal_gif_tiff_features(spark, sf_dir):
     """GIF + TIFF end-to-end under the driver gate (round 8): each
     document's first 48 printable bytes become 16 RGB pixels encoded as
-    a REAL interlaced GIF and a REAL PackBits TIFF (pandas UDF,
-    Arrow-batched), then decoded back through the generic image dispatch
+    a REAL interlaced GIF and a REAL PackBits TIFF (an Arrow-batched
+    UDF), then decoded back through the generic image dispatch
     and reduced to the integer-luma features. Both containers are
     LOSSLESS, so the decoded pixels equal the text bytes and the oracle
     recomputes the features from the text directly — the same
     SQL-checkable construction the PPM query uses, now proving the two
     round-8 codecs and their dispatch wiring."""
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
+    from pinot_spark.functions.scalar import arrow_rows_udf
     from pinot_spark.operators.multimodal import extract_features
 
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def _encode_payload(txt, fmt):
+    def _encode(txt, fmt):
         import numpy as np
 
         from pinot_spark.functions.gifcodec import encode_gif
@@ -1306,7 +1303,9 @@ def multimodal_gif_tiff_features(spark, sf_dir):
                 if f == "gif"
                 else encode_tiff(arr, packbits=True)
             )
-        return pd.Series(out)
+        return out
+
+    _encode_payload = arrow_rows_udf("binary", _encode)
 
     t = load_tables(spark, sf_dir)
     base = t["documents"].filter(F.col("doc_id") < 50).select(
@@ -1613,13 +1612,10 @@ def multimodal_webp_features(spark, sf_dir):
     integer-luma features. VP8L is lossless, so the decoded pixels
     equal the text bytes for every variant and the oracle recomputes
     the features from the text directly."""
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
+    from pinot_spark.functions.scalar import arrow_rows_udf
     from pinot_spark.operators.multimodal import extract_features
 
-    @pandas_udf("binary", PandasUDFType.SCALAR)
-    def _encode_payload(txt, fmt):
+    def _encode(txt, fmt):
         import numpy as np
 
         from pinot_spark.functions.webpcodec import encode_webp
@@ -1633,7 +1629,9 @@ def multimodal_webp_features(spark, sf_dir):
                 out.append(encode_webp(arr, predictor=7))
             else:
                 out.append(encode_webp(arr))
-        return pd.Series(out)
+        return out
+
+    _encode_payload = arrow_rows_udf("binary", _encode)
 
     t = load_tables(spark, sf_dir)
     base = t["documents"].filter(F.col("doc_id") < 40).select(

@@ -5,6 +5,10 @@ shape (pinot_spark/dialect.py; reference semantics per SURVEY.md §4.4).
 
 from __future__ import annotations
 
+import json
+import os
+import re
+
 import pytest
 import pyspark.sql.functions as F
 
@@ -516,41 +520,60 @@ def test_concurrent_translate_matches_serial(engine):
     assert parallel == serial
 
 
-# every UDF the sketch SQL rewrites call, listed here so the loop over
-# _ensure_theta_sql_udfs's ``__``-prefixed locals cannot drop one unnoticed
-_THETA_SQL_UDF_NAMES = [
-    "__cpc_coupon", "__cpc_coupon_long", "__cpc_estimate", "__cpc_from_coupons",
-    "__cpc_union", "__cs_hll_from_regs", "__cs_hll_merge_blobs",
-    "__cs_hll_mv_partial", "__cs_hll_pair", "__cs_hll_pairs_arr",
-    "__cs_hll_single", "__cs_hllpp_from_regs", "__cs_hllpp_mv_partial",
-    "__cs_hllpp_pair", "__cs_hllpp_pair_long", "__cs_hllpp_pairs_arr",
-    "__cs_hllpp_single", "__ds_cpc_single", "__ds_cpc_single_long",
-    "__ds_kll_merge", "__ds_kll_quantile", "__ds_kll_single",
-    "__ds_theta_single", "__ds_tuple_single", "__freq_long_estimate",
-    "__freq_long_merge", "__freq_long_partial", "__freq_str_estimate",
-    "__freq_str_merge", "__freq_str_partial", "__hll_estimate",
-    "__hll_union", "__json_all_keys",
-    "__tdigest_from_quantiles", "__tdigest_from_values", "__tdigest_merge",
-    "__tdigest_partial", "__tdigest_quantile", "__theta_diff",
-    "__theta_estimate", "__theta_filtered", "__theta_intersect",
-    "__theta_singleton", "__theta_to_string", "__theta_union",
-    "__theta_union_blobs", "__tuple_avg_value", "__tuple_estimate",
-    "__tuple_intersect", "__tuple_merge_sum", "__tuple_partial",
-    "__tuple_singleton", "__tuple_sum_values", "__tuple_union",
-    "__ull_estimate", "__ull_from_regs", "__ull_singleton",
-]
+_UDF_CALL_RE = re.compile(r"\b(__\w+)\s*\(")
 
 
-def test_theta_sql_udfs_all_registered(spark):
-    from pinot_spark.dialect import _ensure_theta_sql_udfs
+def test_golden_outputs_call_only_registered_udf_names(spark):
+    """Every ``__name(`` call translate emits in the golden snapshot is
+    a row of the sketch-UDF table, a geo UDF or a GROOVY UDF."""
+    from pinot_spark.dialect import _ensure_geo_sql_udfs
+    from pinot_spark.functions.sketches import SKETCH_UDFS
 
-    _ensure_theta_sql_udfs(spark)
-    missing = [n for n in _THETA_SQL_UDF_NAMES if not spark.catalog.functionExists(n)]
-    assert not missing
-    # theta builds are native (theta_sketch_agg): no engine-own build UDF
-    gone = ["__theta_from_hashes", "__theta_partial", "__theta_merge_blobs"]
-    assert not [n for n in gone if spark.catalog.functionExists(n)]
+    class _Registrar:
+        def __init__(self):
+            self.udf, self.names = self, set()
 
+        def register(self, name, _f):
+            self.names.add(name)
+
+    geo = _Registrar()
+    _ensure_geo_sql_udfs(geo)
+    with open(os.path.join(os.path.dirname(__file__), "data", "translate_golden.json")) as fh:
+        golden = json.load(fh)
+    called = {
+        m.group(1)
+        for records in golden.values()
+        for r in records
+        for m in _UDF_CALL_RE.finditer(r["output"])
+    }
+    assert called & set(SKETCH_UDFS) and called & geo.names
+    unknown = {
+        n for n in called - set(SKETCH_UDFS) - geo.names
+        if not re.fullmatch(r"__groovy_\d+", n)
+    }
+    assert not unknown
+
+
+def test_translate_registers_the_sketch_udfs_it_calls(spark):
+    """translate registers the sketch-UDF table in the session that runs
+    its output, computed from the output itself."""
+    from pinot_spark.functions.sketches import SKETCH_UDFS
+
+    fresh = spark.newSession()
+    fresh.createDataFrame([("a", 1, b"x")], "k string, v bigint, b binary").createOrReplaceTempView("reg_t")
+    assert not fresh.catalog.functionExists("__theta_estimate")
+    eng = PinotEngine(fresh)
+    for stmt in (
+        "SELECT GET_THETA_SKETCH_ESTIMATE(TO_THETA_SKETCH(k)) FROM reg_t",
+        "SELECT GET_CPC_SKETCH_ESTIMATE(TO_CPC_SKETCH(v)), GET_HLL_ESTIMATE(TOHLL(k)) FROM reg_t",
+        "SELECT DISTINCT_COUNT_RAW_HLL_PLUS(v) FROM reg_t",
+        "SELECT k, FREQUENT_STRINGS_SKETCH(k) FROM reg_t GROUP BY k",
+        "SELECT JSON_EXTRACT_KEY(k, '$..**') FROM reg_t",
+    ):
+        out, _ = eng.translate(stmt)
+        rows = {m.group(1) for m in _UDF_CALL_RE.finditer(out)} & set(SKETCH_UDFS)
+        assert rows and all(fresh.catalog.functionExists(n) for n in rows), (stmt, out)
+        fresh.sql(out).collect()
 
 def _upsert_engine(spark, view: str, rows, schema: str, keys: list[str]):
     spark.createDataFrame(rows, schema).createOrReplaceTempView(view)
