@@ -172,7 +172,10 @@ def test_bounded_loops_round12():
 
 
 def test_spark_udf_surface(spark):
-    df = spark.createDataFrame([(1, 10.0), (2, 20.0), (None, 5.0)], "a int, v double")
+    # one partition: the NULL shares the Arrow batch with the integers
+    df = spark.createDataFrame(
+        [(1, 10.0), (2, 20.0), (None, 5.0)], "a int, v double"
+    ).coalesce(1)
     out = df.select(
         call(
             "groovy",

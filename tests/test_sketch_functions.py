@@ -141,9 +141,128 @@ def test_geo_converters_identity(spark, kv):
 
 
 def test_datasketches_wire_boundary_raises():
-    for name in ("toull", "fromull", "cpcsketchtostring"):
+    for name in ("fromull", "cpcsketchtostring"):
         with pytest.raises(NotImplementedError, match="wire"):
             call(name, F.lit("x"))
+
+
+_BIG = 2**60 + 1  # not representable in float64
+
+
+def test_singleton_builders_keep_bigint_bits_with_null_in_batch(spark):
+    """A BIGINT past 2^53 builds the same singleton bytes whether or not
+    a NULL shares its Arrow batch (one partition, at any core count),
+    on both surfaces."""
+    from pinot_spark.dialect import PinotEngine
+
+    sql_exprs = {
+        "th": "TO_DATASKETCHES_THETA(v)",
+        "hll": "TOHLL(v)",
+        "hpp": "TO_CLEARSPRING_HLL_PLUS(v)",
+        "cpc": "TO_CPC_SKETCH(v)",
+    }
+    col_exprs = {
+        "th": call("todatasketchestheta", F.col("v")),
+        "hll": call("tohll", F.col("v")),
+        "cpc": call("tocpcsketch", F.col("v")),
+    }
+    eng = PinotEngine(spark)
+    got = []
+    for rows in ([(_BIG,)], [(_BIG,), (None,)]):
+        df = spark.createDataFrame(rows, "v bigint").coalesce(1)
+        df.createOrReplaceTempView("big_null_batch")
+        sql_row = eng.sql(
+            "SELECT " + ", ".join(f"{e} AS {n}" for n, e in sql_exprs.items())
+            + " FROM big_null_batch"
+        ).collect()[0]
+        col_row = df.select(*[c.alias(n) for n, c in col_exprs.items()]).collect()[0]
+        got.append((sql_row.asDict(), col_row.asDict()))
+    assert got[1] == got[0]
+    assert got[0][1] == {n: got[0][0][n] for n in col_exprs}
+
+
+def test_column_tuple_readers_take_datasketches_tuple_bytes(spark):
+    """The Column tuple readers detect DataSketches tuple bytes like the
+    SQL ones; modes those bytes do not carry raise by name."""
+    df = spark.createDataFrame([("a", 3)], "k string, v int")
+    ds = call("todatasketchestuple", F.col("k"), F.col("v"))
+    other = call("todatasketchestuple", F.lit("b"), F.lit(1))
+    row = df.select(
+        call("getinttuplesketchestimate", ds).alias("e"),
+        call("getinttuplesketchestimate", call("intsumtuplesketchunion", ds, other)).alias("u"),
+    ).collect()[0]
+    assert (row.e, row.u) == (1, 2)
+    with pytest.raises(Exception, match="union in min mode"):
+        df.select(call("intmintuplesketchunion", ds, other)).collect()
+
+
+def test_sketch_scalars_match_across_surfaces(spark):
+    """Every sketch scalar name both surfaces serve gives the same bytes
+    on the Column and the SQL surface, over a NULL and a BIGINT past
+    2^53 in one partition."""
+    from pinot_spark.dialect import FUNCTION_MAP, PinotEngine
+    from pinot_spark.functions import sketches
+    from pinot_spark.functions.scalar import SCALAR_FUNCTIONS
+
+    k, v, d, n = (F.col(c) for c in "kvdn")
+    cases = {
+        "tothetasketch": ("TO_THETA_SKETCH(v)", call("tothetasketch", v)),
+        "thetasketchtostring": (
+            "THETA_SKETCH_TO_STRING(TO_THETA_SKETCH(k))",
+            call("thetasketchtostring", call("tothetasketch", k)),
+        ),
+        "todatasketchestheta": ("TO_DATASKETCHES_THETA(d)", call("todatasketchestheta", d)),
+        "todatasketchestuple": ("TO_DATASKETCHES_TUPLE(v, n)", call("todatasketchestuple", v, n)),
+        "tointegersumtuplesketch": (
+            "TO_INTEGER_SUM_TUPLE_SKETCH(k, v)", call("tointegersumtuplesketch", k, v)
+        ),
+        "intsumtuplesketchunion": (
+            "INT_SUM_TUPLE_SKETCH_UNION(TO_INTEGER_SUM_TUPLE_SKETCH(k, v), "
+            "TO_INTEGER_SUM_TUPLE_SKETCH(v, n))",
+            call("intsumtuplesketchunion", call("tointegersumtuplesketch", k, v),
+                 call("tointegersumtuplesketch", v, n)),
+        ),
+        "intsumtuplesketchintersect": (
+            "INT_SUM_TUPLE_SKETCH_INTERSECT(TO_INTEGER_SUM_TUPLE_SKETCH(k, v), "
+            "TO_INTEGER_SUM_TUPLE_SKETCH(k, n))",
+            call("intsumtuplesketchintersect", call("tointegersumtuplesketch", k, v),
+                 call("tointegersumtuplesketch", k, n)),
+        ),
+        "getinttuplesketchestimate": (
+            "GET_INT_TUPLE_SKETCH_ESTIMATE(TO_DATASKETCHES_TUPLE(v, n))",
+            call("getinttuplesketchestimate", call("todatasketchestuple", v, n)),
+        ),
+        "tocpcsketch": ("TO_CPC_SKETCH(v)", call("tocpcsketch", v)),
+        "getcpcsketchestimate": (
+            "GET_CPC_SKETCH_ESTIMATE(TO_CPC_SKETCH(d))",
+            call("getcpcsketchestimate", call("tocpcsketch", d)),
+        ),
+        "cpcsketchunion": (
+            "CPC_SKETCH_UNION(TO_CPC_SKETCH(v), TO_CPC_SKETCH(k))",
+            call("cpcsketchunion", call("tocpcsketch", v), call("tocpcsketch", k)),
+        ),
+        "tohll": ("TOHLL(v)", call("tohll", v)),
+        "toull": ("TOULL(v)", call("toull", v)),
+    }
+    both = {
+        name
+        for name, fn in SCALAR_FUNCTIONS.items()
+        if fn.__module__ == sketches.__name__ and name in FUNCTION_MAP
+    }
+    assert set(cases) == both - {"fromull"}  # FROMULL raises on both
+    df = spark.createDataFrame(
+        [("a", _BIG, 1.5, 3), (None, None, None, None), ("b", 7, -2.0, 4)],
+        "k string, v bigint, d double, n int",
+    ).coalesce(1)
+    df.createOrReplaceTempView("sketch_parity_t")
+    names = list(cases)
+    sql_rows = PinotEngine(spark).sql(
+        "SELECT " + ", ".join(f"{cases[c][0]} AS {c}" for c in names)
+        + " FROM sketch_parity_t"
+    ).collect()
+    col_rows = df.select(*[cases[c][1].alias(c) for c in names]).collect()
+    assert [r.asDict() for r in col_rows] == [r.asDict() for r in sql_rows]
+    assert sql_rows[1].tothetasketch != sql_rows[0].tothetasketch
 
 
 def test_cpc_registry_functions_execute(spark):
