@@ -166,7 +166,7 @@ def _parse_one_domain(load, blobs, what: str):
     return (parsed[0][0] if parsed else None), [s for _, s in parsed]
 
 
-def _theta_bytes(domain, s) -> bytes:
+def _domain_bytes(domain, s) -> bytes:
     return s.serialize() if domain == "ds" else s.to_bytes()
 
 
@@ -178,7 +178,7 @@ def _theta_binop(op: str):
                 out.append(None)
                 continue
             d, (sa, sb) = _parse_one_domain(_load_any_theta, (x, y), "theta set operation")
-            out.append(_theta_bytes(d, getattr(sa, op)(sb)))
+            out.append(_domain_bytes(d, getattr(sa, op)(sb)))
         return out
 
     return body
@@ -328,7 +328,7 @@ def _tuple_binop(op: str, mode: str):
                 out.append(None)
                 continue
             d, (sa, sb) = _parse_one_domain(_load_any_tuple, (x, y), "tuple set operation")
-            out.append(_theta_bytes(d, _tuple_op(d, sa, op, sb, mode)))
+            out.append(_domain_bytes(d, _tuple_op(d, sa, op, sb, mode)))
         return out
 
     return body
@@ -340,7 +340,7 @@ def _tuple_union_all(blobs, what: str):
     acc = None
     for s in sketches:
         acc = s if acc is None else _tuple_op(d, acc, "union", s, "sum")
-    return None if acc is None else _theta_bytes(d, acc)
+    return None if acc is None else _domain_bytes(d, acc)
 
 
 def tuple_merge_sums(arrs: list) -> list:
@@ -373,7 +373,7 @@ def theta_union_blobs(arrs: list) -> list:
     out = []
     for lst in arrs:
         d, acc = _theta_union_all(lst, "theta blob union")
-        out.append(_empty_own_theta() if acc is None else _theta_bytes(d, acc))
+        out.append(_empty_own_theta() if acc is None else _domain_bytes(d, acc))
     return out
 
 

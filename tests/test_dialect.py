@@ -574,6 +574,10 @@ def test_translate_registers_the_sketch_udfs_it_calls(spark):
         rows = {m.group(1) for m in _UDF_CALL_RE.finditer(out)} & set(SKETCH_UDFS)
         assert rows and all(fresh.catalog.functionExists(n) for n in rows), (stmt, out)
         fresh.sql(out).collect()
+    # theta builds are native (theta_sketch_agg): no engine-own build UDF
+    gone = ["__theta_from_hashes", "__theta_partial", "__theta_merge_blobs"]
+    assert not [n for n in gone if fresh.catalog.functionExists(n)]
+
 
 def _upsert_engine(spark, view: str, rows, schema: str, keys: list[str]):
     spark.createDataFrame(rows, schema).createOrReplaceTempView(view)
