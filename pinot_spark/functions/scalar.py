@@ -508,9 +508,21 @@ def _arrow_type(ddl: str) -> pa.DataType:
 
 
 def _pylist(arr: pa.Array) -> list:
+    t = arr.type
+    # without NULLs a number, string or bytes column converts through
+    # numpy to the same Python values, an order of magnitude faster
+    # than to_pylist's per-element boxing
+    if arr.null_count == 0 and (
+        pa.types.is_integer(t)
+        or pa.types.is_floating(t)
+        or pa.types.is_boolean(t)
+        or pa.types.is_string(t)
+        or pa.types.is_binary(t)
+    ):
+        return arr.to_numpy(zero_copy_only=False).tolist()
     # timestamps as session-local wall-clock values, the form Spark's
     # pandas conversion hands over, for bodies that format them
-    if pa.types.is_timestamp(arr.type) and arr.type.tz is not None:
+    if pa.types.is_timestamp(t) and t.tz is not None:
         arr = _pc.local_timestamp(arr)
     return arr.to_pylist()
 

@@ -39,6 +39,22 @@ import numpy as np
 import pyspark.sql.functions as F
 
 from pinot_spark.functions.scalar import _c, _lazy_udf, _reg, arrow_rows_udf
+from pinot_spark.functions.scalar_ext import _murmur3_x64_128
+from pinot_spark.operators.cs_hll import (
+    CsHll,
+    CsHllPlus,
+    _java_double_str,
+    _java_float_str,
+    cs_hll_from_pairs,
+    cs_hllpp_from_pairs,
+    hash32_bytes,
+    hash32_long,
+    hash64_bytes,
+    hll_pair32,
+    hllpp_pair64,
+    is_cs_hll_bytes,
+    is_cs_hllpp_bytes,
+)
 
 _DEFAULT_K = 4096  # 2^DEFAULT_TUPLE_SKETCH_LGK (CommonConstants 16 → 65536 is
 # the reference tuple default; 4096 matches our theta default — engine-own
@@ -498,8 +514,6 @@ def cs_hll_singles(v: list, type_name: "str | None", log2m: int) -> list:
     MurmurHash.hash(Object) branch: numerics hash long/IEEE bits, so a
     true DOUBLE column must hash doubleToLongBits even for integral
     values; FLOAT hashes floatToIntBits (NOT the widened double)."""
-    from pinot_spark.operators.cs_hll import CsHll, hash32_bytes, hash32_long
-
     is_double_col = type_name == "double"
     is_float_col = type_name == "float"
 
@@ -535,8 +549,6 @@ def cs_hllpp_singles(v: list, type_name: "str | None", p: int, sp: int) -> list:
     hash64(Object) has NO numeric branch — every number hashes its Java
     ``toString()`` bytes (pinned by probes), so integral values format
     as Java longs and a DOUBLE column's values as Java Double.toString."""
-    from pinot_spark.operators.cs_hll import CsHllPlus, _java_float_str
-
     is_double_col = type_name == "double"
     is_float_col = type_name == "float"
 
@@ -563,12 +575,6 @@ def cs_hllpp_singles(v: list, type_name: "str | None", p: int, sp: int) -> list:
 def _load_any_hll(b: bytes):
     """(domain, sketch) for any HLL payload: clearspring HLL++
     ('cspp'), clearspring plain ('cs'), engine-own ('own')."""
-    from pinot_spark.operators.cs_hll import (
-        CsHll,
-        CsHllPlus,
-        is_cs_hll_bytes,
-        is_cs_hllpp_bytes,
-    )
     from pinot_spark.operators.hll import HllSketch
 
     if is_cs_hllpp_bytes(b):
@@ -885,8 +891,6 @@ def _cs_hash32_of(v, type_name: "str | None") -> int:
     semantics: int family (and boolean, stored as int in Pinot) hash
     hashLong; FLOAT hashes floatToIntBits, DOUBLE doubleToLongBits;
     string/binary hash their bytes."""
-    from pinot_spark.operators.cs_hll import hash32_bytes, hash32_long
-
     if type_name == "float":
         bits = struct.unpack("<i", struct.pack("<f", float(v)))[0]
         return hash32_long(bits)
@@ -909,12 +913,6 @@ def _cs_hash64_of(v, type_name: "str | None") -> int:
     """stream-lib MurmurHash.hash64(Object): numbers hash their Java
     toString() digits (Float.toString for FLOAT columns at float32
     precision), strings/bytes their bytes."""
-    from pinot_spark.operators.cs_hll import (
-        _java_double_str,
-        _java_float_str,
-        hash64_bytes,
-    )
-
     if type_name == "float":
         return hash64_bytes(_java_float_str(float(v)).encode())
     if type_name == "double":
@@ -934,8 +932,6 @@ def cs_hll_pairs(v: list, type_name: "str | None", log2m: int) -> list:
     """Per-value clearspring register pair (j*64+r, murmur-int domain)
     for the non-integer column types the JVM murmur expression can't
     reach (float/double/string/binary)."""
-    from pinot_spark.operators.cs_hll import hll_pair32
-
     return [
         None if x is None or _isnan(x) else hll_pair32(_cs_hash32_of(x, type_name), log2m)
         for x in v
@@ -945,8 +941,6 @@ def cs_hll_pairs(v: list, type_name: "str | None", log2m: int) -> list:
 def cs_hllpp_pairs(v: list, type_name: "str | None", p: int) -> list:
     """Per-value clearspring HLL++ NORMAL pair (murmur64-toString
     domain); BIGINT values arrive exact."""
-    from pinot_spark.operators.cs_hll import hllpp_pair64
-
     return [
         None if x is None or _isnan(x) else hllpp_pair64(_cs_hash64_of(x, type_name), p)
         for x in v
@@ -976,14 +970,10 @@ def _pair_arrays(pair_of):
 
 
 def _cs_hll_pair_of(x, type_name, log2m):
-    from pinot_spark.operators.cs_hll import hll_pair32
-
     return hll_pair32(_cs_hash32_of(x, type_name), log2m)
 
 
 def _cs_hllpp_pair_of(x, type_name, p):
-    from pinot_spark.operators.cs_hll import hllpp_pair64
-
     return hllpp_pair64(_cs_hash64_of(x, type_name), p)
 
 
@@ -1010,29 +1000,10 @@ def _mv_partial(build):
     return body
 
 
-def _cs_hll_from_pairs(pairs, log2m):
-    from pinot_spark.operators.cs_hll import cs_hll_from_pairs
-
-    return cs_hll_from_pairs(pairs, log2m)
-
-
-def _cs_hllpp_from_pairs(pairs, p, sp):
-    from pinot_spark.operators.cs_hll import cs_hllpp_from_pairs
-
-    return cs_hllpp_from_pairs(pairs, p, sp)
-
-
 def cs_hll_merge_blobs(arrs: list) -> list:
     """Merge a list of clearspring blobs (all-plain or all-plus; the
     engine-own domain and mixed domains raise loudly — registers from
     different hash functions must never max-merge)."""
-    from pinot_spark.operators.cs_hll import (
-        CsHll,
-        CsHllPlus,
-        is_cs_hll_bytes,
-        is_cs_hllpp_bytes,
-    )
-
     def run(lst):
         acc = None
         for b in lst or []:
@@ -1081,8 +1052,6 @@ def _cpc_hash_of(v, type_name: "str | None"):
     update(double) (0.0 canonicalized, NaN canonical bits), strings
     UTF-8 bytes, binary raw bytes; empty string/bytes are no-ops
     (returns None)."""
-    from pinot_spark.functions.scalar_ext import _murmur3_x64_128
-
     if type_name in ("float", "double") or (isinstance(v, float) and not v.is_integer()):
         d = float(v)
         if d == 0.0:
@@ -1243,11 +1212,11 @@ SKETCH_UDFS: dict[str, SketchUdf] = {
     "__cs_hllpp_pair": SketchUdf("bigint", _with_params(cs_hllpp_pairs, None, 14)),
     "__cs_hll_pairs_arr": SketchUdf("array<bigint>", _pair_arrays(_cs_hll_pair_of)),
     "__cs_hllpp_pairs_arr": SketchUdf("array<bigint>", _pair_arrays(_cs_hllpp_pair_of)),
-    "__cs_hll_from_regs": SketchUdf("binary", _from_pairs(_cs_hll_from_pairs)),
-    "__cs_hllpp_from_regs": SketchUdf("binary", _from_pairs(_cs_hllpp_from_pairs)),
+    "__cs_hll_from_regs": SketchUdf("binary", _from_pairs(cs_hll_from_pairs)),
+    "__cs_hllpp_from_regs": SketchUdf("binary", _from_pairs(cs_hllpp_from_pairs)),
     "__cs_hll_merge_blobs": SketchUdf("binary", cs_hll_merge_blobs),
-    "__cs_hll_mv_partial": SketchUdf("binary", _mv_partial(_cs_hll_from_pairs), agg=True),
-    "__cs_hllpp_mv_partial": SketchUdf("binary", _mv_partial(_cs_hllpp_from_pairs), agg=True),
+    "__cs_hll_mv_partial": SketchUdf("binary", _mv_partial(cs_hll_from_pairs), agg=True),
+    "__cs_hllpp_mv_partial": SketchUdf("binary", _mv_partial(cs_hllpp_from_pairs), agg=True),
     # CPC (DataSketches)
     "__cpc_coupon": SketchUdf("bigint", _with_params(ds_cpc_coupons, None, 12)),
     "__cpc_from_coupons": SketchUdf("binary", _with_params(ds_cpc_from_coupons, 12)),
