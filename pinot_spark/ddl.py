@@ -33,6 +33,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pinot_spark.session import local_dataframe
+
 _TYPE_MAP = {
     "INT": "int",
     "LONG": "bigint",
@@ -139,7 +141,7 @@ class DdlExecutor:
             if not m.group("cols"):
                 raise ValueError("CREATE without AS SELECT needs a column list")
             schema = self._schema_from_cols(m.group("cols"))
-            df = self.spark.createDataFrame([], schema)
+            df = local_dataframe(self.spark, [], schema)
             df.createOrReplaceTempView(name)
             return DdlResult(kind, name, 0, properties=props)
         if translate is not None:

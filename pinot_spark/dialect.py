@@ -50,6 +50,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from pinot_spark.session import local_dataframe
+
 
 class PinotSqlError(ValueError):
     pass
@@ -1914,6 +1916,11 @@ def _table_schema(spark: SparkSession, table: str) -> T.StructType:
     if memo is not None:
         memo[table] = schema
     return schema
+
+
+# session -> (its JVM SessionCatalog, {table: (base temp-view entry,
+# __nulldef_ view entry or None)}), the entries as of the last build
+_NULLDEF_VIEWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _substitute_views(sql: str, view_of: Callable[[str], str | None]) -> str:
@@ -4101,11 +4108,16 @@ def rewrite_distinct_window_aggs(sql: str) -> str:
     return out
 
 
-# native aggregates a statement may mix with raw-sketch calls; theta
-# builds are native too (theta_sketch_agg), so a statement mixing them
-# with a pandas-UDAF family takes the mixed split
+# native aggregates a statement may mix with raw-sketch calls.  Theta
+# builds (theta_sketch_agg) and the sketches rewrite_functions builds
+# from collect_set (HLL, HLL++, ULL, CPC, the percentile digests) are
+# native too, so a statement mixing them with a pandas-UDAF family
+# takes the mixed split.  The _MV families are not matched: the
+# trailing \s*\( needs the paren right after the name.
 _BASIC_AGG_CALL_RE = re.compile(
-    r"\b(?P<name>COUNT|SUM|MIN|MAX|AVG|DISTINCT_?COUNT_?(?:RAW_?)?THETA_?SKETCH)\s*\(",
+    r"\b(?P<name>COUNT|SUM|MIN|MAX|AVG"
+    r"|DISTINCT_?COUNT_?(?:RAW_?)?(?:THETA_?SKETCH|HLL(?:_?PLUS)?|ULL|CPC_?SKETCH)"
+    r"|PERCENTILE_?(?:RAW_?)?(?:EST|KLL|TDIGEST))\s*\(",
     re.IGNORECASE,
 )
 # scalar wrappers both raw-sketch allow-lists accept around a raw call:
@@ -5439,6 +5451,22 @@ class PinotEngine:
             allowed = TABLE_NAMES
         if table not in allowed or table.startswith("__"):
             return None
+        # reuse the view while neither it nor the base temp view was
+        # replaced or dropped (catalog entries compare by JVM identity)
+        if self.spark not in _NULLDEF_VIEWS:
+            _NULLDEF_VIEWS[self.spark] = (
+                self.spark._jsparkSession.sessionState().catalog(), {}
+            )
+        jcatalog, built = _NULLDEF_VIEWS[self.spark]
+        view = f"__nulldef_{table}"
+        base = jcatalog.getTempView(table)
+        hit = built.get(table)
+        if (
+            hit is not None
+            and hit[0].equals(base)
+            and (hit[1] is None or hit[1].equals(jcatalog.getTempView(view)))
+        ):
+            return None if hit[1] is None else view
         cols, changed = [], False
         for f_ in _table_schema(self.spark, table).fields:
             name = "`" + f_.name.replace("`", "``") + "`"
@@ -5451,11 +5479,11 @@ class PinotEngine:
                     f"{f_.dataType.simpleString()})) AS {name}"
                 )
                 changed = True
-        if not changed:
-            return None
-        view = f"__nulldef_{table}"
-        self.spark.sql(f"SELECT {', '.join(cols)} FROM `{table}`").createOrReplaceTempView(view)
-        return view
+        if changed:
+            self.spark.sql(f"SELECT {', '.join(cols)} FROM `{table}`").createOrReplaceTempView(view)
+        if base.isDefined():
+            built[table] = (base, jcatalog.getTempView(view) if changed else None)
+        return view if changed else None
 
     def register_upsert_table(
         self,
@@ -5682,7 +5710,8 @@ class PinotEngine:
                 return s, options
 
             r = self.ddl.execute(pinot_sql, translate=_translate_no_limit)
-            return self.spark.createDataFrame(
+            return local_dataframe(
+                self.spark,
                 [(r.operation, r.name, r.rows, r.rollup_registered)],
                 "operation string, name string, rows bigint, rollup_registered boolean",
             )
@@ -6454,8 +6483,8 @@ class PinotEngine:
             parent_id = parents[-1][1] if parents else -1
             rows.append((stripped or line.strip(), i, parent_id))
             parents.append((indent, i))
-        return self.spark.createDataFrame(
-            rows, "Operator string, Operator_Id int, Parent_Id int"
+        return local_dataframe(
+            self.spark, rows, "Operator string, Operator_Id int, Parent_Id int"
         )
 
     def _gapfill(self, pinot_sql: str) -> DataFrame:

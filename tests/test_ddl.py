@@ -84,3 +84,32 @@ def test_non_rollup_mv_is_view_only(engine, spark):
     ).collect()
     assert r.operation == "CREATE_MATERIALIZED_VIEW" and not r.rollup_registered
     assert spark.table("joined_mv").count() == 25
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_engine_result_rows_plan_as_local_scans(engine, spark):
+    """The DDL result row, the EXPLAIN rows and an empty column-list
+    table are driver-held rows: each plans as a LocalTableScan, not a
+    Scan ExistingRDD whose collect would start Python-worker tasks, and
+    keeps its declared schema."""
+    ddl = engine.sql("CREATE TABLE local_t (a INT, b STRING, c BIG_DECIMAL)")
+    explain = engine.sql("EXPLAIN PLAN FOR SELECT r_name FROM region")
+    for df in (ddl, explain, spark.table("local_t")):
+        assert "ExistingRDD" not in _plan(df)
+        assert "LocalTableScan" in _plan(df)
+    assert ddl.dtypes == [
+        ("operation", "string"), ("name", "string"),
+        ("rows", "bigint"), ("rollup_registered", "boolean"),
+    ]
+    assert [tuple(r) for r in ddl.collect()] == [("CREATE_TABLE", "local_t", 0, False)]
+    assert explain.dtypes == [
+        ("Operator", "string"), ("Operator_Id", "int"), ("Parent_Id", "int"),
+    ]
+    assert explain.collect()[0].Parent_Id == -1
+    assert spark.table("local_t").dtypes == [
+        ("a", "int"), ("b", "string"), ("c", "decimal(38,18)"),
+    ]
+    assert spark.table("local_t").collect() == []

@@ -54,6 +54,44 @@ def test_null_handling_absent_matches_pinot_default(spark, nv_view):
     assert bare == explicit
 
 
+def test_nulldef_view_reused_until_the_base_view_changes(spark, nv_view, monkeypatch):
+    """Default-value mode builds ``__nulldef_<table>`` once and reuses it
+    while the base temp view is unchanged; replacing the base view with
+    other rows is seen by the next statement."""
+    DataFrame = type(spark.range(0))  # the classic class overrides the method
+    builds = []
+    real = DataFrame.createOrReplaceTempView
+
+    def counting(df, name):
+        if name.startswith("__nulldef_"):
+            builds.append(name)
+        return real(df, name)
+
+    monkeypatch.setattr(DataFrame, "createOrReplaceTempView", counting)
+    eng = PinotEngine(spark, null_default_tables=frozenset({"events_nv_test"}))
+    first = eng.sql(STMT).collect()[0]
+    assert builds == ["__nulldef_events_nv_test"]
+    # a repeat statement, also from a new engine on the same session
+    assert eng.sql(STMT).collect()[0] == first
+    other = PinotEngine(spark, null_default_tables=frozenset({"events_nv_test"}))
+    assert other.sql(STMT).collect()[0] == first
+    assert len(builds) == 1
+
+    spark.sql(
+        "SELECT 'x' AS event_type, CAST(v AS DOUBLE) AS v "
+        "FROM VALUES (1.0), (NULL), (3.0) AS t(v)"
+    ).createOrReplaceTempView("events_nv_test")
+    row = eng.sql(STMT).collect()[0]
+    assert len(builds) == 2
+    assert (row.n_rows, row.n_vals) == (3, 3)  # the NULL became a default
+    assert row.avg_v == round(4.0 / 3, 4)
+
+    # dropping the engine's view is seen as well
+    spark.catalog.dropTempView("__nulldef_events_nv_test")
+    assert eng.sql(STMT).collect()[0] == row
+    assert len(builds) == 3
+
+
 def test_unknown_option_warns(spark, nv_view):
     with pytest.warns(UserWarning, match="unknown query option"):
         PinotEngine(spark).sql("SET fooBarBaz=1; " + STMT)

@@ -365,3 +365,33 @@ public class FM {
     g2 = m.merge(ghost)
     assert int(facts["goff"]) == g2.offset == m.offset
     assert int(facts["glen"]) == g2.stream_length == m.stream_length
+
+
+def test_freq_sketch_next_to_collect_set_raw_sketch(spark):
+    """A raw sketch that ``rewrite_functions`` builds from collect_set
+    (DISTINCT_COUNT_RAW_HLL_PLUS) next to a pandas-UDAF family
+    (FREQUENT_STRINGS_SKETCH) takes the mixed split: Spark cannot place
+    both in one aggregation (INVALID_PANDAS_UDF_PLACEMENT).  The
+    combined statement answers what each call answers alone."""
+    from pinot_spark.dialect import PinotEngine
+
+    spark.createDataFrame(
+        [(i % 3, f"s{i % 5}", i) for i in range(40)], "k int, s string, v bigint"
+    ).createOrReplaceTempView("freq_mix_cs")
+    eng = PinotEngine(spark)
+
+    def by_key(select: str) -> dict:
+        rows = eng.sql(f"SELECT k, {select} FROM freq_mix_cs GROUP BY k").collect()
+        return {r.k: r[1:] for r in rows}
+
+    def freq(blob) -> dict:
+        sk = DsFrequentSketch.parse(bytes(blob), strings=True)
+        return {f"s{j}": sk.estimate(f"s{j}") for j in range(5)}
+
+    both = by_key("DISTINCT_COUNT_RAW_HLL_PLUS(v) AS h, FREQUENT_STRINGS_SKETCH(s) AS f")
+    hll = by_key("DISTINCT_COUNT_RAW_HLL_PLUS(v) AS h")
+    fs = by_key("FREQUENT_STRINGS_SKETCH(s) AS f")
+    assert sorted(both) == sorted(hll) == sorted(fs) == [0, 1, 2]
+    for k, (h, f) in both.items():
+        assert bytes(h) == bytes(hll[k][0])
+        assert freq(f) == freq(fs[k][0])
