@@ -3773,7 +3773,7 @@ def _sketch_udf_call_re() -> re.Pattern:
 #
 # Both shapes take an optional view builder: PinotEngine's zero-shuffle
 # route passes one that builds partition-local partials in one
-# mapInPandas pass (operators/theta.grouped_sketch_partials), and the
+# mapInArrow pass (operators/theta.grouped_sketch_partials), and the
 # outer merge then reads that view instead of the bucketed inner level,
 # so no raw row is shuffled.
 #
@@ -3795,13 +3795,14 @@ def _sketch_udf_call_re() -> re.Pattern:
 
 @dataclass(frozen=True)
 class _RawFamily:
-    """One raw-sketch aggregation built by pandas UDAFs (the families
-    with no native Spark aggregate; theta has one and is not a record):
-    ``partial(a0, args)`` builds a group's partial blob, ``merge`` names
-    the UDF merging a collect_list of partial blobs, ``final`` wraps the
-    merged blob (``{}`` keeps it), ``zs(a0, args)`` is the zero-shuffle
-    descriptor (operators/theta.grouped_sketch_partials) or None when
-    the call has no partition-local build (``zs=None``: never has one),
+    """One raw-sketch aggregation built by Arrow grouped-aggregate UDFs
+    (the families with no native Spark aggregate; theta has one and is
+    not a record): ``partial(a0, args)`` builds a group's partial blob,
+    ``merge`` names the UDF merging a collect_list of partial blobs,
+    ``final`` wraps the merged blob (``{}`` keeps it), ``zs(a0, args)``
+    is the zero-shuffle descriptor (a call kind of the one mapInArrow
+    pass, operators/theta.grouped_sketch_partials) or None when the
+    call has no partition-local build (``zs=None``: never has one),
     and ``fanout`` is the bucket count of the bucketed inner level (None
     reads ``_RS_FANOUT``)."""
 
@@ -4160,14 +4161,6 @@ def _masked_hash_expr(a0: str) -> str:
     """xxhash64 of a value expression, NULL for a NULL value
     (xxhash64(NULL) is the seed)."""
     return f"CASE WHEN {a0} IS NULL THEN CAST(NULL AS BIGINT) ELSE xxhash64({a0}) END"
-
-
-def _split_hash_expr(a0: str) -> tuple[str, str]:
-    """NULL-masked xxhash64 of a value expression, SPLIT into hi/lo
-    32-bit halves — a nullable BIGINT reaches a pandas UDAF as float64,
-    which cannot hold a 64-bit hash exactly; the halves can."""
-    h = _masked_hash_expr(a0)
-    return f"shiftrightunsigned({h}, 32)", f"({h}) & 4294967295"
 
 
 _RS_CLAUSE_RE = re.compile(
@@ -5915,9 +5908,7 @@ class PinotEngine:
         per-value expressions REUSED from the grouped aggregation
         routes (same hash domain, same pair encoding), so a running
         blob over a whole partition is byte-identical to the grouped
-        route's blob for the same rows.  Full-range int64 tokens ride
-        as hi/lo halves (nullable BIGINT → pandas float64 is lossy
-        past 2^53)."""
+        route's blob for the same rows."""
         col = args[0]
         wrap = "{}"
         if canonical in (
@@ -5978,17 +5969,7 @@ class PinotEngine:
                 return (fam, (mm,), [col], False, wrap)
             if strings:
                 return ("freq_str", (mm,), [col], False, wrap)
-            base = (
-                f"CASE WHEN ({col}) IS NULL THEN CAST(NULL AS BIGINT) "
-                f"ELSE CAST({col} AS BIGINT) END"
-            )
-            return (
-                "freq_long",
-                (mm,),
-                [f"shiftright({base}, 32)", f"({base}) & 4294967295"],
-                False,
-                wrap,
-            )
+            return ("freq_long", (mm,), [f"CAST({col} AS BIGINT)"], False, wrap)
         if canonical in ("percentilerawest", "percentilerawkll", "percentilerawtdigest"):
             return ("tdigest", (), [f"CAST({col} AS DOUBLE)"], False, wrap)
         if canonical in (
@@ -6022,11 +6003,10 @@ class PinotEngine:
         (call, OVER body) pairs share one running column."""
         from pinot_spark.operators.running_sketch import attach_running
 
-        # the token expressions and spliced wrappers reference the
-        # internal sketch UDFs directly (__cs_hll_pair, __tuple_estimate,
-        # ...) — names _THETA_SQL_RE does not gate on, so register here
-        # (idempotent per session) rather than rely on a prior query
-        # having tripped the lazy registration
+        # the token expressions and spliced wrappers call internal
+        # sketch UDFs (__cs_hllpp_pairs_arr, __tuple_estimate, ...) that
+        # the statement as written does not name: register them up
+        # front (idempotent per session)
         _ensure_sketch_udfs(self.spark)
         stmt = _parse_canonical_stmt(sql2, allow_join=False)
         if stmt is None or stmt["group"] or stmt["having"]:
@@ -6241,7 +6221,7 @@ class PinotEngine:
         builder that executes the FROM/WHERE as a DataFrame (one
         translated mini-statement, so join trees, Pinot functions in
         WHERE, and null-default and upsert views all resolve), builds
-        partition-local per-group sketch partials in ONE mapInPandas
+        partition-local per-group sketch partials in ONE mapInArrow
         pass (operators/theta.grouped_sketch_partials — no row shuffle),
         and re-enters the dialect with the merge statement over a temp
         view of the partials: the only exchange moves
@@ -6249,12 +6229,10 @@ class PinotEngine:
         their split shape (native subquery null-safe-joined) with the
         sketch side reading the same zero-shuffle view.
 
-        BIGINT group keys (GROUP BY user_id — the dominant real sketch
-        shape) travel as split 32-bit halves and recombine JVM-side, the
-        same exactness trick the sketch hashes and tuple values use;
-        TIMESTAMP keys ride it through unix_micros, DECIMAL keys through
-        a canonical-string carrier (round 12) — every Pinot-typed group
-        key now has an exact carrier.
+        Group keys, sketch hashes and values reach the partials as
+        Arrow columns: BIGINT (GROUP BY user_id — the dominant real
+        sketch shape), TIMESTAMP and DECIMAL keys stay exact next to a
+        NULL, with no carrier column.
 
         Declines (returns None → the bounded SQL two-phase / bucketed
         split handles it) when the statement is not canonical, a raw
@@ -6272,9 +6250,9 @@ class PinotEngine:
             stmt: dict, keys: list[str], zs_calls: list[tuple]
         ) -> str | None:
             """Translate + analyze the FROM/WHERE once, hash each sketch
-            arg JVM-side (split 32-bit halves; tuple calls also carry an
-            exact BIGINT value column), build the mapInPandas grouped
-            partials, register the temp view."""
+            arg JVM-side (tuple calls also carry their BIGINT value
+            column), build the mapInArrow grouped partials, register the
+            temp view."""
             # the clearspring pair UDFs may appear INSIDE the mini
             # statement (non-integer MV elements) — register before
             # analysis or the route silently declines to the two-phase
@@ -6305,7 +6283,7 @@ class PinotEngine:
                         # clearspring murmur-domain pairs: pure-JVM
                         # expression for integer-element arrays, the
                         # Arrow-batched pair UDF otherwise (same bounded
-                        # domain, ≤ 2^log2m·64+64 — float64-exact)
+                        # domain)
                         sel += [
                             f"{_cs_hll_pairs_arr_sql(d[1], d[2])} AS __pa{i}"
                         ]
@@ -6330,128 +6308,35 @@ class PinotEngine:
                             if t != "string":
                                 return None
                             sel += [f"({d[1]}) AS __fs{i}"]
-                            op_calls.append(("freq_str", f"__fs{i}", d[2]))
                         else:
                             if t not in ("tinyint", "smallint", "int", "bigint"):
                                 return None
-                            vc = f"CAST({d[1]} AS BIGINT)"
-                            sel += [
-                                f"shiftright({vc}, 32) AS __fhi{i}",
-                                f"({vc} & 4294967295) AS __flo{i}",
-                            ]
-                            op_calls.append(
-                                ("freq_long", f"__fhi{i}", f"__flo{i}", d[2])
-                            )
+                            sel += [f"CAST({d[1]} AS BIGINT) AS __fs{i}"]
+                        op_calls.append((d[0], f"__fs{i}", d[2]))
                     else:  # tuple: (kind, keyexpr, valexpr, k)
-                        hi, lo = _split_hash_expr(d[1])
-                        # the value also splits into 32-bit halves — a
-                        # nullable BIGINT reaches pandas as float64,
-                        # which is lossy past 2^53 (arithmetic shift
-                        # keeps the sign in the hi half)
-                        vc = f"CAST({d[2]} AS BIGINT)"
                         sel += [
-                            f"{hi} AS __hi{i}", f"({lo}) AS __lo{i}",
-                            f"shiftright({vc}, 32) AS __vhi{i}",
-                            f"({vc} & 4294967295) AS __vlo{i}",
+                            f"{_masked_hash_expr(d[1])} AS __h{i}",
+                            f"CAST({d[2]} AS BIGINT) AS __v{i}",
                         ]
-                        op_calls.append(
-                            ("tuple", f"__hi{i}", f"__lo{i}", d[3],
-                             f"__vhi{i}", f"__vlo{i}")
-                        )
+                        op_calls.append(("tuple", f"__h{i}", d[3], f"__v{i}"))
                 mini = (
                     f"SELECT {', '.join(sel)} FROM {stmt['table']}"
                     + (f" WHERE {stmt['where']}" if stmt["where"] else "")
                 )
                 src = self.spark.sql(translated(mini))
+                # Arrow hands every Pinot-typed key to the partials
+                # exactly (BIGINT, TIMESTAMP and DECIMAL included);
+                # array/map/struct/binary keys decline
                 ok_key_types = ("string", "int", "smallint", "tinyint",
-                                "boolean", "date", "float", "double")
-                # BIGINT group keys (the dominant real sketch shape:
-                # GROUP BY user_id) ride as split 32-bit halves — the
-                # same trick sketch hashes and tuple values already use
-                # — because a nullable int64 loses exactness through
-                # Arrow→pandas float64; each half is exact in float64
-                # and the halves recombine JVM-side below.  TIMESTAMP
-                # keys (native-typed ingest; the dialect itself prefers
-                # epoch-millis BIGINT) ride the SAME trick through
-                # unix_micros — epoch-micros int64 is a lossless carrier
-                # — and recombine via timestamp_micros.  DECIMAL keys
-                # (round 12) ride a CANONICAL-STRING carrier:
-                # CAST(dec AS STRING) is exact and injective at any
-                # precision (fixed scale → one plain-form string per
-                # value, no float transit anywhere), and
-                # CAST(s AS DECIMAL(p,s)) restores the original type
-                # JVM-side — strings are already a supported pandas
-                # group key.
-                part_keys: list[str] = []
-                split_keys: dict[str, tuple[str, str | None, str]] = {}
-                for j, k in enumerate(keys):
+                                "boolean", "date", "float", "double",
+                                "bigint", "timestamp")
+                for k in keys:
                     t = src.schema[k].dataType.simpleString()
-                    if t in ("bigint", "timestamp"):
-                        split_keys[k] = (f"__khi{j}", f"__klo{j}", t)
-                        part_keys += [f"__khi{j}", f"__klo{j}"]
-                    elif t.startswith("decimal("):
-                        split_keys[k] = (f"__kd{j}", None, t)
-                        part_keys.append(f"__kd{j}")
-                    elif t in ok_key_types:
-                        part_keys.append(k)
-                    else:
+                    if t not in ok_key_types and not t.startswith("decimal("):
                         return None
-                if split_keys:
-                    key_sel = []
-                    for k in keys:
-                        if k in split_keys:
-                            khi, klo, t = split_keys[k]
-                            if klo is None:  # decimal → canonical string
-                                key_sel.append(
-                                    f"CAST(`{k}` AS STRING) AS `{khi}`"
-                                )
-                                continue
-                            base = (
-                                f"unix_micros(`{k}`)"
-                                if t == "timestamp"
-                                else f"`{k}`"
-                            )
-                            key_sel += [
-                                f"shiftright({base}, 32) AS `{khi}`",
-                                f"({base} & 4294967295) AS `{klo}`",
-                            ]
-                        else:
-                            key_sel.append(f"`{k}`")
-                    rest = [f"`{c}`" for c in src.columns if c not in keys]
-                    src = src.selectExpr(*key_sel, *rest)
                 from pinot_spark.operators.theta import grouped_sketch_partials
 
-                partials = grouped_sketch_partials(src, part_keys, op_calls)
-                if split_keys:
-                    # recombine halves into the original exact key type
-                    # (pure projection — no extra exchange); consumers of
-                    # the view see the original key names/types
-                    out_sel = []
-                    for k in keys:
-                        if k in split_keys:
-                            khi, klo, t = split_keys[k]
-                            if klo is None:  # decimal ← canonical string
-                                out_sel.append(
-                                    f"CAST(`{khi}` AS {t}) AS `{k}`"
-                                )
-                                continue
-                            whole = f"(shiftleft(`{khi}`, 32) | `{klo}`)"
-                            if t == "timestamp":
-                                out_sel.append(
-                                    f"CASE WHEN `{khi}` IS NULL THEN "
-                                    f"CAST(NULL AS TIMESTAMP) ELSE "
-                                    f"timestamp_micros({whole}) END AS `{k}`"
-                                )
-                            else:
-                                out_sel.append(
-                                    f"CASE WHEN `{khi}` IS NULL THEN "
-                                    f"CAST(NULL AS BIGINT) ELSE "
-                                    f"{whole} END AS `{k}`"
-                                )
-                        else:
-                            out_sel.append(f"`{k}`")
-                    out_sel += [f"__rs{i}" for i in range(len(op_calls))]
-                    partials = partials.selectExpr(*out_sel)
+                partials = grouped_sketch_partials(src, keys, op_calls)
             except Exception:
                 return None  # unresolvable source → SQL path
             _ASOF_VIEW_SEQ[0] += 1

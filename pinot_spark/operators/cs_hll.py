@@ -906,112 +906,52 @@ def grouped_cs_hll(df, keys: list[str], col: str, log2m: int = DEFAULT_LOG2M):
     deserialize them via ObjectSerDeUtils.HYPER_LOG_LOG_SER_DE).
 
     Same scale shape as the theta export (operators/ds_theta.
-    grouped_ds_theta): one mapInPandas pass builds partition-local
-    per-group register arrays in the stream-lib murmur-int domain, then
-    only fixed-size register blobs shuffle (O(groups x partitions), each
-    blob 8 + 4*ceil-ish(m/6) bytes) and register-wise max merges them.
-    Integer columns ride as 32-bit halves (nullable BIGINT reaches
-    pandas as float64, lossy past 2^53) and hash vectorized; string/
+    grouped_ds_theta, arrow_groups.grouped_export): one mapInArrow pass
+    builds partition-local per-group register arrays in the stream-lib
+    murmur-int domain, then only fixed-size register blobs shuffle
+    (O(groups x partitions), each blob 8 + 4*ceil-ish(m/6) bytes) and
+    register-wise max merges them.  Integer columns hash vectorized as
+    exact int64 (Arrow keeps all 64 bits next to a NULL); string/
     binary/double columns hash per value Python-side — an explicit
     export operator, not the engine's hot sketch path.
 
     Returns a DataFrame (keys..., cs_hll binary) where cs_hll is a
     byte-canonical stream-lib HyperLogLog payload.
     """
-    import pandas as pd
     import pyspark.sql.functions as F
+
+    from pinot_spark.operators.arrow_groups import grouped_export
 
     dtype = dict(df.dtypes)[col]
     is_int = dtype in ("tinyint", "smallint", "int", "bigint")
-    is_float = dtype == "float"
-    is_double = dtype == "double"
-    if is_int:
-        src = df.select(
-            *keys,
-            F.expr(
-                f"CASE WHEN `{col}` IS NULL THEN CAST(NULL AS BIGINT) "
-                f"ELSE shiftright(CAST(`{col}` AS BIGINT), 32) END"
-            ).alias("__vhi"),
-            F.expr(
-                f"CASE WHEN `{col}` IS NULL THEN CAST(NULL AS BIGINT) "
-                f"ELSE CAST(`{col}` AS BIGINT) & 4294967295 END"
-            ).alias("__vlo"),
-        )
-    else:
-        src = df.select(*keys, F.col(col).alias("__v"))
+    v = F.col(col).cast("bigint") if is_int else F.col(col)
+    src = df.select(*keys, v.alias("__v"))
 
-    key_fields = [src.schema[kc] for kc in keys]
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in key_fields]
-        + ["__cs binary"]
-    )
+    def fold(s, vals):
+        s = CsHll.empty(log2m) if s is None else s
+        if is_int:
+            s.offer_hashes32(hash32_longs(vals.to_numpy()))
+            return s
+        for v in vals.to_numpy(zero_copy_only=False):
+            if dtype == "float":
+                bits = struct.unpack("<i", struct.pack("<f", float(v)))[0]
+                s.offer_hash32(hash32_long(bits))
+            elif dtype == "double":
+                bits = struct.unpack("<q", struct.pack("<d", float(v)))[0]
+                s.offer_hash32(hash32_long(bits))
+            elif isinstance(v, (bytes, bytearray)):
+                s.offer_hash32(hash32_bytes(bytes(v)))
+            else:
+                s.offer_hash32(hash32_bytes(str(v).encode("utf-8")))
+        return s
 
-    def partials(batches):
-        acc: dict[tuple, CsHll] = {}
-        for pdf in batches:
-            for key_tuple, grp in pdf.groupby(keys, dropna=False, sort=False):
-                if not isinstance(key_tuple, tuple):
-                    key_tuple = (key_tuple,)
-                s = acc.get(key_tuple)
-                if s is None:
-                    s = acc[key_tuple] = CsHll.empty(log2m)
-                if is_int:
-                    hi = grp["__vhi"].dropna()
-                    lo = grp["__vlo"].loc[hi.index]
-                    if len(hi):
-                        vals = (
-                            hi.to_numpy(dtype=np.int64) << np.int64(32)
-                        ) | lo.to_numpy(dtype=np.int64)
-                        s.offer_hashes32(hash32_longs(vals))
-                else:
-                    for v in grp["__v"].dropna():
-                        if v is None:
-                            continue
-                        if is_float:
-                            bits = struct.unpack("<i", struct.pack("<f", float(v)))[0]
-                            s.offer_hash32(hash32_long(bits))
-                        elif is_double:
-                            bits = struct.unpack("<q", struct.pack("<d", float(v)))[0]
-                            s.offer_hash32(hash32_long(bits))
-                        elif isinstance(v, (bytes, bytearray)):
-                            s.offer_hash32(hash32_bytes(bytes(v)))
-                        else:
-                            s.offer_hash32(hash32_bytes(str(v).encode("utf-8")))
-        rows = [
-            list(key_tuple) + [s.serialize()] for key_tuple, s in acc.items()
-        ]
-        cols = keys + ["__cs"]
-        yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+    def merge(blobs) -> bytes:
+        out = CsHll.empty(log2m)
+        for b in blobs:
+            out = out.merge(CsHll.parse(b))
+        return out.serialize()
 
-    part = src.mapInPandas(partials, schema=out_schema)
-
-    def merge(pdf_iter):
-        import pandas as pd
-
-        for pdf in pdf_iter:
-            rows = []
-            for key_tuple, grp in pdf.groupby(keys, dropna=False, sort=False):
-                if not isinstance(key_tuple, tuple):
-                    key_tuple = (key_tuple,)
-                out = CsHll.empty(log2m)
-                for blob in grp["__blobs"].iloc[0]:
-                    out = out.merge(CsHll.parse(bytes(blob)))
-                rows.append(list(key_tuple) + [out.serialize()])
-            cols = keys + ["cs_hll"]
-            yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
-                {c: [] for c in cols}
-            )
-
-    import pyspark.sql.functions as F2
-
-    merged = part.groupBy(*keys).agg(F2.collect_list("__cs").alias("__blobs"))
-    final_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in key_fields]
-        + ["cs_hll binary"]
-    )
-    return merged.mapInPandas(merge, schema=final_schema)
+    return grouped_export(src, keys, fold, CsHll.serialize, merge, "cs_hll")
 
 
 # ---------------------------------------------------------------------------

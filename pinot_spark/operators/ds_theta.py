@@ -286,122 +286,53 @@ def grouped_ds_theta(df, keys: list[str], col: str, k: int = 4096):
     EXPORT path (reference emits DataSketches bytes from
     DISTINCT_COUNT_RAW_THETA_SKETCH; SketchFunctions.java:98-130).
 
-    Same scale shape as operators/theta.grouped_sketch_partials: one
-    mapInPandas pass builds partition-local per-group KMV partials in
-    the murmur-9001 update-hash domain, then only partial blobs shuffle
-    (O(groups x partitions)).  Integer columns ride as 32-bit halves
-    (nullable BIGINT reaches pandas as float64, lossy past 2^53);
-    string/binary columns hash per value Python-side — this is an
-    explicit export operator, not the engine's hot sketch path.
+    Same scale shape as operators/theta.grouped_sketch_partials
+    (arrow_groups.grouped_export): one mapInArrow pass builds
+    partition-local per-group KMV partials in the murmur-9001
+    update-hash domain, then only partial blobs shuffle
+    (O(groups x partitions)).  Integer columns hash vectorized as exact
+    int64 (Arrow keeps all 64 bits next to a NULL); other columns hash
+    per value Python-side — this is an explicit export operator, not
+    the engine's hot sketch path.
 
     Returns a DataFrame (keys..., ds_theta binary) where ds_theta is a
     compact ordered sketch the DataSketches library heapifies directly.
     """
-    import pandas as pd
     import pyspark.sql.functions as F
 
-    dtype = dict(df.dtypes)[col]
-    is_int = dtype in ("tinyint", "smallint", "int", "bigint")
-    if is_int:
-        src = df.select(
-            *keys,
-            F.expr(
-                f"CASE WHEN `{col}` IS NULL THEN CAST(NULL AS BIGINT) "
-                f"ELSE shiftright(CAST(`{col}` AS BIGINT), 32) END"
-            ).alias("__vhi"),
-            F.expr(
-                f"CASE WHEN `{col}` IS NULL THEN CAST(NULL AS BIGINT) "
-                f"ELSE CAST(`{col}` AS BIGINT) & 4294967295 END"
-            ).alias("__vlo"),
-        )
-    else:
-        src = df.select(*keys, F.col(col).alias("__v"))
+    from pinot_spark.operators.arrow_groups import grouped_export
 
-    key_fields = [src.schema[kc] for kc in keys]
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in key_fields]
-        + ["__ds binary"]
-    )
+    is_int = dict(df.dtypes)[col] in ("tinyint", "smallint", "int", "bigint")
+    v = F.col(col).cast("bigint") if is_int else F.col(col)
+    src = df.select(*keys, v.alias("__v"))
 
-    def partials(batches):
-        acc: dict[tuple, list] = {}
-        for pdf in batches:
-            for key_tuple, grp in pdf.groupby(keys, dropna=False, sort=False):
-                if not isinstance(key_tuple, tuple):
-                    key_tuple = (key_tuple,)
-                lst = acc.setdefault(key_tuple, [])
-                if is_int:
-                    hi = grp["__vhi"].dropna()
-                    lo = grp["__vlo"].loc[hi.index]
-                    if len(hi):
-                        vals = (
-                            hi.to_numpy(dtype=np.int64) << np.int64(32)
-                        ) | lo.to_numpy(dtype=np.int64)
-                        lst.append(hash_longs(vals))
-                else:
-                    # Java update(byte[]) is a no-op for EMPTY byte arrays:
-                    # encode first, then skip falsy bytes (len(str(b"")) is
-                    # 3, so a str-length guard never catches b"")
-                    hs = []
-                    for v in grp["__v"].dropna():
-                        if v is None:
-                            continue
-                        b = (
-                            bytes(v)
-                            if isinstance(v, (bytes, bytearray))
-                            else str(v).encode()
-                        )
-                        if b:
-                            hs.append(update_hash_bytes(b))
-                    if hs:
-                        lst.append(np.array(hs, dtype=np.uint64))
-        rows = []
-        for key_tuple, chunks in acc.items():
-            raw = (
-                np.concatenate(chunks) if chunks else np.array([], dtype=np.uint64)
-            )
-            # keep k+1 candidates: the (k+1)-th becomes theta downstream
-            h = np.unique(raw)
-            sk_bytes = struct.pack("<q", MAX_THETA if len(h) <= k else int(h[k]))
-            keep = h if len(h) <= k + 1 else h[: k + 1]
-            rows.append(
-                list(key_tuple) + [sk_bytes + keep.astype("<u8").tobytes()]
-            )
-        cols = keys + ["__ds"]
-        yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
-            {c: [] for c in cols}
-        )
+    def fold(chunks, vals):
+        chunks = [] if chunks is None else chunks
+        if is_int:
+            chunks.append(hash_longs(vals.to_numpy()))
+            return chunks
+        # Java update(byte[]) is a no-op for EMPTY byte arrays: encode
+        # first, then skip falsy bytes (len(str(b"")) is 3, so a
+        # str-length guard never catches b"")
+        hs = []
+        for v in vals.to_numpy(zero_copy_only=False):
+            b = bytes(v) if isinstance(v, (bytes, bytearray)) else str(v).encode()
+            if b:
+                hs.append(update_hash_bytes(b))
+        chunks.append(np.array(hs, dtype=np.uint64))
+        return chunks
 
-    part = src.mapInPandas(partials, schema=out_schema)
+    def partial(chunks) -> bytes:
+        h = np.unique(np.concatenate(chunks))
+        # keep k+1 candidates: the (k+1)-th becomes theta downstream
+        head = struct.pack("<q", MAX_THETA if len(h) <= k else int(h[k]))
+        return head + h[: k + 1].astype("<u8").tobytes()
 
-    def merge(pdf_iter):
-        for pdf in pdf_iter:
-            rows = []
-            for key_tuple, grp in pdf.groupby(keys, dropna=False, sort=False):
-                if not isinstance(key_tuple, tuple):
-                    key_tuple = (key_tuple,)
-                raw = []
-                for blob in grp["__blobs"].iloc[0]:
-                    b = bytes(blob)
-                    raw.append(np.frombuffer(b, dtype="<u8", offset=8))
-                h = (
-                    np.unique(np.concatenate(raw))
-                    if raw
-                    else np.array([], dtype=np.uint64)
-                )
-                sk = DsThetaSketch.from_hashes(h, k)
-                rows.append(list(key_tuple) + [sk.serialize()])
-            cols = keys + ["ds_theta"]
-            yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
-                {c: [] for c in cols}
-            )
+    def merge(blobs) -> bytes:
+        raw = [np.frombuffer(b, dtype="<u8", offset=8) for b in blobs]
+        return DsThetaSketch.from_hashes(np.unique(np.concatenate(raw)), k).serialize()
 
-    merged = part.groupBy(*keys).agg(F.collect_list("__ds").alias("__blobs"))
-    final_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in key_fields]
-        + ["ds_theta binary"]
-    )
-    return merged.mapInPandas(merge, schema=final_schema)
+    return grouped_export(src, keys, fold, partial, merge, "ds_theta")
 
 
 # ---------------------------------------------------------------------------

@@ -19,14 +19,13 @@ raise loudly by name at the dialect layer (``_parse_running_over``).
 
 SCALE SHAPE: one shuffle on the PARTITION BY keys — exactly what
 Spark's own WindowExec requires for any ordered window — then a single
-sequential pass per partition group inside one Arrow-batched
-applyInPandas stage.  The per-value hash/pair/coupon TOKENS are
-computed JVM-side in the derived view's projection, reusing the very
-SQL expressions the grouped aggregation routes use (dialect
-``_hll_pair_expr`` / ``_cs_hll_pair_sql`` / ``_cpc_coupon_sql``), so a
-running blob for a full partition is byte-identical to the grouped
-route's blob for the same rows: one hash domain, one accumulation
-rule, one serializer.  Accumulator state is sketch-bounded per group
+sequential pass per partition group inside one mapInArrow stage.  The
+per-value hash/pair/coupon TOKENS are computed JVM-side in the derived
+view's projection, reusing the very SQL expressions the grouped
+aggregation routes use (dialect ``_hll_pair_expr`` /
+``_cs_hll_pair_sql`` / ``_cpc_coupon_sql``), so a running blob for a
+full partition is byte-identical to the grouped route's blob for the
+same rows: one hash domain, one accumulation rule, one serializer.  Accumulator state is sketch-bounded per group
 (registers / merged tuple sketch / reverse-purge map / centroid list);
 only the emitted one-blob-per-row column scales with rows, which is the
 query's own output contract.
@@ -34,18 +33,15 @@ query's own output contract.
 Theta has no accumulator here: Spark computes ``theta_sketch_agg``
 over any window frame natively.
 
-Full-range int64 tokens (FREQUENTLONGS values) ride as split hi/lo
-32-bit halves: a nullable BIGINT column reaches pandas as float64,
-which is lossy past 2^53 (the repo-wide convention, see
-operators/ds_theta.grouped_ds_theta).
+Rows stay Arrow: keys and tokens reach Python as ``to_pylist`` values
+(a BIGINT keeps all 64 bits, NULL is None), and every pass-through
+column goes back out as the same Arrow array it came in as.
 """
 
 from __future__ import annotations
 
 import numpy as np
-
-def _missing(v) -> bool:
-    return v is None or (isinstance(v, float) and v != v)
+import pyarrow as pa
 
 
 class PairRegAcc:
@@ -58,9 +54,8 @@ class PairRegAcc:
 
     def push(self, vals):
         t = vals[0]
-        if _missing(t):
+        if t is None:
             return
-        t = int(t)
         j, r = t >> 6, t & 63
         if r > self.regs[j]:
             self.regs[j] = r
@@ -79,9 +74,8 @@ class PairSetAcc:
 
     def push(self, vals):
         t = vals[0]
-        if _missing(t):
-            return
-        self.pairs.add(int(t))
+        if t is not None:
+            self.pairs.add(t)
 
     def blob(self) -> bytes:
         arr = np.fromiter(self.pairs, dtype=np.int64, count=len(self.pairs))
@@ -137,38 +131,21 @@ class TupleAcc:
         return self.acc.serialize() if self.domain == "ds" else self.acc.to_bytes()
 
 
-class FreqLongAcc:
-    """Running DataSketches LongsSketch over hi/lo-split int64 values."""
+class FreqAcc:
+    """Running DataSketches frequent-items sketch: a LongsSketch over
+    int64 values, or an ItemsSketch<String> through the same str()
+    conversion the grouped ``__freq_str_partial`` fallback applies."""
 
-    def __init__(self, max_map_size: int):
+    def __init__(self, max_map_size: int, strings: bool):
         from pinot_spark.operators.ds_freq import DsFrequentSketch
 
-        self.s = DsFrequentSketch.empty(max_map_size)
-
-    def push(self, vals):
-        hi, lo = vals
-        if _missing(hi):
-            return
-        self.s.update((int(hi) << 32) | int(lo))
-
-    def blob(self) -> bytes:
-        return self.s.serialize()
-
-
-class FreqStrAcc:
-    """Running ItemsSketch<String>: the same str() conversion the
-    grouped ``__freq_str_partial`` fallback applies."""
-
-    def __init__(self, max_map_size: int):
-        from pinot_spark.operators.ds_freq import DsFrequentSketch
-
+        self.conv = str if strings else int
         self.s = DsFrequentSketch.empty(max_map_size)
 
     def push(self, vals):
         v = vals[0]
-        if _missing(v):
-            return
-        self.s.update(str(v))
+        if v is not None:
+            self.s.update(self.conv(v))
 
     def blob(self) -> bytes:
         return self.s.serialize()
@@ -207,9 +184,8 @@ class TDigestAcc:
 
     def push(self, vals):
         v = vals[0]
-        if _missing(v):
-            return
-        self.td.add([float(v)])
+        if v is not None and v == v:  # the digest skips NULL and NaN
+            self.td.add([v])
 
     def blob(self) -> bytes:
         return self.td.to_bytes()
@@ -272,12 +248,9 @@ def make_acc(family: str, params: tuple):
         return PairSetAcc(_cpc_fin)
     if family == "tuple":
         return TupleAcc()
-    if family == "freq_long":
+    if family in ("freq_long", "freq_str"):
         (mm,) = params
-        return FreqLongAcc(mm)
-    if family == "freq_str":
-        (mm,) = params
-        return FreqStrAcc(mm)
+        return FreqAcc(mm, strings=family == "freq_str")
     if family == "freq_blob_long":
         (mm,) = params
         return FreqBlobAcc(mm, strings=False)
@@ -290,6 +263,25 @@ def make_acc(family: str, params: tuple):
 
 
 _EMIT_CHUNK = 256  # output rows per Arrow batch: 256 x ~32 KB blob ≈ 8 MB
+_NAN = float("nan")
+
+
+def _row_keys(batch: pa.RecordBatch, cols: list[str]) -> list[tuple]:
+    """Per-row tuples of ``cols``.  None equals None, and every NaN is
+    the one ``_NAN`` object so NaN equals NaN: Spark puts all NULL keys
+    in one window partition and all NaN keys in another."""
+    vals = []
+    for c in cols:
+        v = batch.column(c).to_pylist()
+        if pa.types.is_floating(batch.schema.field(c).type):
+            v = [_NAN if x != x else x for x in v]
+        vals.append(v)
+    return list(zip(*vals)) if cols else [()] * batch.num_rows
+
+
+def _changes(keys: list[tuple], first: bool) -> np.ndarray:
+    """Row i starts a new run of ``keys`` (row 0: ``first``)."""
+    return np.array([first] + [keys[i] != keys[i - 1] for i in range(1, len(keys))])
 
 
 def attach_running(
@@ -318,10 +310,12 @@ def attach_running(
 
     STREAMING SHAPE: one hash shuffle on ``pcols`` + a JVM
     sortWithinPartitions (exactly Spark's own WindowExec requirement),
-    then ONE mapInPandas pass that carries the accumulator across
-    Arrow batches and yields output in small chunks.  groupBy().
-    applyInPandas would return each GROUP as a single Arrow batch —
-    with one ~32 KB sketch blob per row, a 30k-row partition is ~1 GB
+    then ONE mapInArrow pass that carries the accumulator across
+    Arrow batches and yields output in small chunks: each chunk is a
+    slice of the input batch, every column passed through as the Arrow
+    array it arrived as, plus the blob column.  A grouped map would
+    return each GROUP as a single Arrow batch — with one ~32 KB
+    sketch blob per row, a 30k-row partition is ~1 GB
     in one allocation, which blows the executor's direct-memory cap
     (hit at sf0.1 during validation).  Here memory is O(input batch +
     one pending peer block + sketch state): the only rows ever held
@@ -330,7 +324,6 @@ def attach_running(
     memory — at which point the value is constant and the unbounded
     frame is the right query.
     """
-    import pandas as pd
     from pyspark.sql import functions as F
     from pyspark.sql.types import BinaryType, StructField, StructType
 
@@ -344,7 +337,6 @@ def attach_running(
         df.schema.fields + [StructField(out_col, BinaryType(), True)]
     )
     ocols = [c for c, _, _ in order_spec]
-    cols = [f.name for f in df.schema.fields]
 
     sort_cols = [F.col(c).asc_nulls_first() for c in pcols]
     for c, asc, nf in order_spec:
@@ -363,106 +355,76 @@ def attach_running(
         part = part.sortWithinPartitions(*sort_cols)
 
     def fn(batches):
-        import numpy as np
         from collections import deque
 
         state = {"acc": None, "push": None, "gkey": None, "win": None}
-        hold: pd.DataFrame | None = None  # current unclosed peer block
-
-        def norm_key(vals):
-            # NULL numeric keys arrive as NaN; NaN != NaN would make
-            # the cross-batch comparison below spuriously reset the
-            # accumulator for a null-keyed partition spanning a batch
-            # boundary.  Mirror neq_mask's NaN-awareness by mapping
-            # every missing component to None first.
-            out = []
-            for v in vals:
-                try:
-                    if pd.isna(v):
-                        v = None
-                except (TypeError, ValueError):
-                    pass
-                out.append(v)
-            return tuple(out)
+        hold: pa.RecordBatch | None = None  # current unclosed peer block
 
         def reset_acc():
             a = make_acc(family, params)
             state["acc"] = a
             state["push"] = (ArrayAcc(a) if is_array else a).push
 
-        def process(pdf: pd.DataFrame, eof: bool):
+        def _row_tokens(batch):
+            return list(zip(*(batch.column(c).to_pylist() for c in token_cols)))
+
+        def emit(batch, blobs):
+            for i in range(0, batch.num_rows, _EMIT_CHUNK):
+                chunk = pa.array(blobs[i : i + _EMIT_CHUNK], pa.binary())
+                yield batch.slice(i, _EMIT_CHUNK).append_column(out_col, chunk)
+
+        def process(batch: pa.RecordBatch, eof: bool):
             nonlocal hold
-            if hold is not None and len(hold):
-                pdf = pd.concat([hold, pdf], ignore_index=True)
+            if hold is not None:
+                batch = pa.Table.from_batches([hold, batch]).combine_chunks()
+                batch = batch.to_batches()[0]
                 hold = None
-            n = len(pdf)
+            n = batch.num_rows
             if n == 0:
                 return
-
-            def neq_mask(kcols):
-                if not kcols:
-                    return np.zeros(n, dtype=bool)
-                cur = pdf[kcols].reset_index(drop=True)
-                prev = cur.shift(1)
-                return (
-                    (cur.ne(prev) & ~(cur.isna() & prev.isna()))
-                    .any(axis=1)
-                    .to_numpy()
-                )
-
-            gchange = neq_mask(pcols)
-            first_key = norm_key(pdf[c].iloc[0] for c in pcols)
-            gchange[0] = state["gkey"] is None or first_key != state["gkey"]
+            pkeys = _row_keys(batch, pcols)
+            gchange = _changes(
+                pkeys, state["gkey"] is None or pkeys[0] != state["gkey"]
+            )
             if sliding_w is not None:
                 # SLIDING frame: every row closes immediately — no peer
                 # blocks, no hold.  Each row's sketch REBUILDS from the
                 # ≤ W+1 buffered token tuples (sketches never retract),
                 # so work and carried state are bounded by the frame
                 # width the user asked for, never by partition size.
-                toks = (
-                    list(zip(*(pdf[c].tolist() for c in token_cols)))
-                    if token_cols
-                    else [()] * n
-                )
+                toks = _row_tokens(batch)
                 blobs: list = [None] * n
                 for i in range(n):
                     if gchange[i]:
                         state["win"] = deque(maxlen=sliding_w + 1)
-                        state["gkey"] = norm_key(
-                            pdf[c].iloc[i] for c in pcols
-                        )
+                        state["gkey"] = pkeys[i]
                     state["win"].append(toks[i])
                     acc = make_acc(family, params)
                     push = (ArrayAcc(acc) if is_array else acc).push
                     for t in state["win"]:
-                        if t:  # () only when token_cols is empty
-                            push(t)
+                        push(t)
                     blobs[i] = acc.blob()
-                out = pdf.copy()
-                out[out_col] = blobs
-                for i in range(0, n, _EMIT_CHUNK):
-                    yield out.iloc[i : i + _EMIT_CHUNK]
+                yield from emit(batch, blobs)
                 return
             if mode == "rows":
                 bstart = np.ones(n, dtype=bool)
             else:
-                bstart = gchange | neq_mask(ocols)
-                bstart[0] = True
+                bstart = gchange | _changes(_row_keys(batch, ocols), True)
             starts = np.flatnonzero(bstart).tolist()
             bounds = starts + [n]
             # the final block may continue into the next batch
             n_closed_blocks = len(starts) if (eof or mode == "rows") else len(starts) - 1
             closed_upto = bounds[n_closed_blocks]
             if closed_upto == 0:
-                hold = pdf.copy()
+                hold = batch
                 return
-            toks = list(zip(*(pdf[c].tolist() for c in token_cols))) if token_cols else []
-            blobs: list = [None] * closed_upto
+            toks = _row_tokens(batch)
+            blobs = [None] * closed_upto
             for bi in range(n_closed_blocks):
                 s, e = bounds[bi], bounds[bi + 1]
                 if gchange[s]:
                     reset_acc()
-                    state["gkey"] = norm_key(pdf[c].iloc[s] for c in pcols)
+                    state["gkey"] = pkeys[s]
                 push = state["push"]
                 for t in toks[s:e]:
                     push(t)
@@ -470,18 +432,13 @@ def attach_running(
                 for i in range(s, e):
                     blobs[i] = b
             if closed_upto < n:
-                hold = pdf.iloc[closed_upto:].copy()
-            out = pdf.iloc[:closed_upto].copy()
-            out[out_col] = blobs
-            for i in range(0, len(out), _EMIT_CHUNK):
-                yield out.iloc[i : i + _EMIT_CHUNK]
+                hold = batch.slice(closed_upto)
+            yield from emit(batch.slice(0, closed_upto), blobs)
 
-        for pdf in batches:
-            yield from process(pdf, eof=False)
-        if hold is not None and len(hold):
-            # flush without concat: an empty synthetic frame would
-            # perturb the held slice's dtypes
+        for batch in batches:
+            yield from process(batch, eof=False)
+        if hold is not None:
             tail, hold = hold, None
             yield from process(tail, eof=True)
 
-    return part.mapInPandas(fn, schema=out_schema)
+    return part.mapInArrow(fn, schema=out_schema)

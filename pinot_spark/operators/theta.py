@@ -173,6 +173,97 @@ def theta_sketch(df: DataFrame, col: str, k: int = 4096) -> ThetaSketch:
     return ThetaSketch.from_hashes(k, allh)
 
 
+def _partial_init(call: tuple):
+    """Empty partial state of one grouped_sketch_partials call."""
+    kind = call[0]
+    if kind in ("cs_hll", "cs_hllpp"):
+        return np.zeros(1 << call[2], np.uint8)
+    if kind == "tdigest":
+        from pinot_spark.operators.tdigest import TDigest
+
+        return TDigest()
+    if kind in ("freq_str", "freq_long"):
+        from pinot_spark.operators.ds_freq import DsFrequentSketch
+
+        return DsFrequentSketch.empty(call[2])
+    return np.array([], dtype=np.uint64), np.array([], dtype=np.int64)
+
+
+def _partial_update(state, call: tuple, g):
+    """Fold one group's rows (an Arrow record batch) into ``state``."""
+    import pyarrow.compute as pc
+
+    kind = call[0]
+    col = g.column(call[1])
+    if kind in ("cs_hll", "cs_hllpp"):
+        # max-rho registers: the HLL partial state is the fixed 2^log2m
+        # register array regardless of row count
+        p = pc.list_flatten(col).drop_null().to_numpy().astype(np.int64)
+        np.maximum.at(state, p >> 6, (p & 63).astype(np.uint8))
+        return state
+    if kind == "tdigest":
+        for vals in col.to_pylist():
+            if vals:
+                v = np.asarray(vals, dtype=np.float64)
+                v = v[~np.isnan(v)]
+                if len(v):
+                    state.add(v.tolist())
+        return state
+    if kind in ("freq_str", "freq_long"):
+        # batch-level exact pre-aggregation: one weighted update per
+        # distinct value
+        vals, cnts = np.unique(
+            col.drop_null().to_numpy(zero_copy_only=False), return_counts=True
+        )
+        conv = str if kind == "freq_str" else int
+        for v, c in zip(vals, cnts):
+            state.update(conv(v), int(c))
+        return state
+    # tuple: exact int64 per-hash sums ride along the KMV candidates
+    val = g.column(call[3])
+    ok = pc.and_(col.is_valid(), val.is_valid())
+    u = col.filter(ok).to_numpy().view(np.uint64) ^ np.uint64(1 << 63)
+    v = val.filter(ok).to_numpy()
+    u = np.concatenate([state[0], u])
+    v = np.concatenate([state[1], v])
+    if not len(u):
+        return state
+    order = np.argsort(u, kind="stable")
+    us, vs = u[order], v[order]
+    first = np.empty(len(us), dtype=bool)
+    first[0] = True
+    first[1:] = us[1:] != us[:-1]
+    starts = np.flatnonzero(first)
+    k = call[2]
+    return us[starts][: k + 1], np.add.reduceat(vs, starts)[: k + 1]
+
+
+def _partial_blob(state, call: tuple) -> bytes:
+    """The serialized partial of one call's state."""
+    kind = call[0]
+    if kind == "cs_hll":
+        from pinot_spark.operators.cs_hll import CsHll
+
+        return CsHll(call[2], state).serialize()
+    if kind == "cs_hllpp":
+        from pinot_spark.operators.cs_hll import NORMAL, CsHllPlus
+
+        return CsHllPlus(call[2], call[3], NORMAL, state, None).serialize()
+    if kind == "tdigest":
+        return state.to_bytes()
+    if kind in ("freq_str", "freq_long"):
+        return state.serialize()
+    from pinot_spark.functions.sketches import TupleSketch
+
+    k = call[2]
+    uh, sums = state
+    th = 2**64
+    if len(uh) > k:
+        th = int(uh[k])
+        uh, sums = uh[:k], sums[:k]
+    return TupleSketch(k, th, uh, sums).to_bytes()
+
+
 def grouped_sketch_partials(
     src: DataFrame, keys: list[str], calls: list[tuple]
 ) -> DataFrame:
@@ -183,28 +274,26 @@ def grouped_sketch_partials(
     ``theta_sketch_agg`` has its own partial aggregate.
 
     ``src`` must already carry the key columns plus each call's input
-    columns.  ``calls`` entries are
-    ("tuple", hi_col, lo_col, k, vhi_col, vlo_col) — the NULL-masked
-    xxhash64 of the key split into 32-bit halves (a nullable BIGINT
-    reaches pandas as float64, which cannot hold a 64-bit hash exactly;
-    the halves can — dialect._split_hash_expr) and the VALUE as 32-bit
-    halves too (arithmetic-shift hi keeps the sign); the integer-sum
-    tuple sketch accumulates exact int64 per-hash sums alongside the
-    KMV candidates —, ("cs_hll", pairs_col, log2m)
-    or ("cs_hllpp", pairs_col, p, sp) whose column holds clearspring
-    j*64+rho register pairs (dialect._cs_hll_pairs_arr_sql; values
-    < 2^log2m·64+64 so float64-exact, partial state is the fixed
-    register array), ("freq_str", col, max_map_size) or
-    ("freq_long", hi_col, lo_col, max_map_size) building a frequent-
-    items sketch, or ("tdigest", values_col) accumulating an engine-own
+    columns.  ``calls`` entries are ("tuple", hash_col, k, value_col) —
+    the NULL-masked xxhash64 of the key and the BIGINT value; the
+    integer-sum tuple sketch accumulates exact int64 per-hash sums
+    alongside the KMV candidates —, ("cs_hll", pairs_col, log2m) or
+    ("cs_hllpp", pairs_col, p, sp) whose column holds clearspring
+    j*64+rho register pairs (dialect._cs_hll_pairs_arr_sql; the partial
+    state is the fixed register array), ("freq_str", col, max_map_size)
+    or ("freq_long", col, max_map_size) building a frequent-items
+    sketch, or ("tdigest", values_col) accumulating an engine-own
     t-digest (bounded centroid count) per group.
 
-    One ``mapInPandas`` pass accumulates, per (key-tuple, call), the
-    bounded partial state across the partition's Arrow batches — for a
+    One ``mapInArrow`` pass groups each Arrow batch by key
+    (arrow_groups.batch_groups) and accumulates, per (key tuple, call),
+    the bounded partial state across the partition's batches — for a
     tuple call the ≤ k+1 smallest distinct hashes (k+1, not k: the
     (k+1)-th value BECOMES theta downstream — truncating to k silently
     flips the sketch into its "exact" regime) — then emits ONE row per
-    key per partition: (keys..., __rs0 blob, ...). The only shuffle
+    key per partition: (keys..., __rs0 blob, ...). Arrow hands int64,
+    timestamp and decimal keys and values to Python exactly, and NULL as
+    a validity bit, so no column needs a carrier. The only shuffle
     after this is of partial rows — O(groups × partitions × blob) —
     mirroring Pinot's segment-local sketch build + broker merge
     (AggregationFunction.java:63,86,132). Candidate truncation at k+1
@@ -214,210 +303,40 @@ def grouped_sketch_partials(
 
     Groups whose values are all NULL still emit (empty-sketch blob), so
     the group list matches the SQL GROUP BY exactly."""
-    from pinot_spark.functions.sketches import TupleSketch
+    import pyarrow as pa
+    from pyspark.sql.types import BinaryType, StructField, StructType
 
-    key_fields = [src.schema[k] for k in keys]
-    out_fields = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in key_fields]
-        + [f"__rs{i} binary" for i in range(len(calls))]
-    )
-
-    def _u64_of(g, hi_c, lo_c):
-        hi = g[hi_c].to_numpy(dtype="float64")
-        lo = g[lo_c].to_numpy(dtype="float64")
-        mask = ~np.isnan(hi)
-        u = (
-            hi[mask].astype(np.int64).astype(np.uint64) << np.uint64(32)
-        ) | lo[mask].astype(np.int64).astype(np.uint64)
-        u ^= np.uint64(1 << 63)  # signed hash → unsigned order
-        return u, mask
-
-    def _build(batches):
-        acc: dict[tuple, list] = {}
-        for pdf in batches:
-            groups = (
-                pdf.groupby(keys, dropna=False, sort=False)
-                if keys
-                else [((), pdf)]  # ungrouped: the partition is one group
-            )
-            for kt, g in groups:
-                if not isinstance(kt, tuple):
-                    kt = (kt,)
-                slot = acc.setdefault(kt, [None] * len(calls))
-                for i, call in enumerate(calls):
-                    kind = call[0]
-                    if kind in ("cs_hll", "cs_hllpp"):
-                        # accumulate max-rho registers per group — the
-                        # HLL partial state is the fixed 2^log2m register
-                        # array regardless of row count
-                        regs = slot[i]
-                        if regs is None:
-                            regs = slot[i] = np.zeros(1 << call[2], np.uint8)
-                        for ps in g[call[1]]:
-                            if ps is None or len(ps) == 0:
-                                continue
-                            p = np.asarray(ps, dtype=np.int64)
-                            np.maximum.at(regs, p >> 6, (p & 63).astype(np.uint8))
-                        continue
-                    if kind == "tdigest":
-                        from pinot_spark.operators.tdigest import TDigest
-
-                        td = slot[i]
-                        if td is None:
-                            td = slot[i] = TDigest()
-                        for vals in g[call[1]]:
-                            if vals is None or len(vals) == 0:
-                                continue
-                            v = np.asarray(vals, dtype=np.float64)
-                            v = v[~np.isnan(v)]
-                            if len(v):
-                                td.add(v.tolist())
-                        continue
-                    if kind == "freq_str":
-                        from pinot_spark.operators.ds_freq import DsFrequentSketch
-
-                        fs = slot[i]
-                        if fs is None:
-                            fs = slot[i] = DsFrequentSketch.empty(call[2])
-                        col = g[call[1]].dropna()
-                        if len(col):
-                            # batch-level exact pre-aggregation: one
-                            # weighted update per distinct value
-                            vals, cnts = np.unique(
-                                col.to_numpy(dtype=object), return_counts=True
-                            )
-                            for v, c in zip(vals, cnts):
-                                fs.update(str(v), int(c))
-                        continue
-                    if kind == "freq_long":
-                        from pinot_spark.operators.ds_freq import DsFrequentSketch
-
-                        fs = slot[i]
-                        if fs is None:
-                            fs = slot[i] = DsFrequentSketch.empty(call[3])
-                        u, _m = _u64_of(g, call[1], call[2])
-                        if len(u):
-                            # halves arrive hash-shifted by _u64_of; undo
-                            # the sign shift to recover the raw int64
-                            raw = (u ^ np.uint64(1 << 63)).view(np.int64)
-                            vals, cnts = np.unique(raw, return_counts=True)
-                            for v, c in zip(vals, cnts):
-                                fs.update(int(v), int(c))
-                        continue
-                    # tuple: exact int64 per-hash sums ride along
-                    k = call[3]
-                    u, mask = _u64_of(g, call[1], call[2])
-                    vhi = g[call[4]].to_numpy(dtype="float64")[mask]
-                    vlo = g[call[5]].to_numpy(dtype="float64")[mask]
-                    vmask = ~np.isnan(vhi)
-                    u = u[vmask]
-                    v = (
-                        vhi[vmask].astype(np.int64) << np.int64(32)
-                    ) | vlo[vmask].astype(np.int64)
-                    if slot[i] is not None:
-                        pu, pv = slot[i]
-                        u = np.concatenate([pu, u])
-                        v = np.concatenate([pv, v])
-                    if not len(u):
-                        continue
-                    order = np.argsort(u, kind="stable")
-                    us, vs = u[order], v[order]
-                    first = np.empty(len(us), dtype=bool)
-                    first[0] = True
-                    first[1:] = us[1:] != us[:-1]
-                    starts = np.flatnonzero(first)
-                    sums = np.add.reduceat(vs, starts)  # int64 exact
-                    uh = us[starts]
-                    slot[i] = (uh[: k + 1], sums[: k + 1])
-        if not acc:
-            return
-        rows = []
-        for kt, slots in acc.items():
-            row = [None if (v is None or v != v) else v for v in kt]
-            for i, call in enumerate(calls):
-                kind = call[0]
-                if kind == "cs_hll":
-                    from pinot_spark.operators.cs_hll import CsHll
-
-                    regs = slots[i]
-                    if regs is None:
-                        regs = np.zeros(1 << call[2], np.uint8)
-                    row.append(CsHll(call[2], regs).serialize())
-                    continue
-                if kind == "cs_hllpp":
-                    from pinot_spark.operators.cs_hll import NORMAL, CsHllPlus
-
-                    regs = slots[i]
-                    if regs is None:
-                        regs = np.zeros(1 << call[2], np.uint8)
-                    row.append(
-                        CsHllPlus(call[2], call[3], NORMAL, regs, None).serialize()
-                    )
-                    continue
-                if kind == "tdigest":
-                    from pinot_spark.operators.tdigest import TDigest
-
-                    td = slots[i] if slots[i] is not None else TDigest()
-                    row.append(td.to_bytes())
-                    continue
-                if kind == "freq_str":
-                    from pinot_spark.operators.ds_freq import DsFrequentSketch
-
-                    fs = slots[i]
-                    if fs is None:
-                        fs = DsFrequentSketch.empty(call[2])
-                    row.append(fs.serialize())
-                    continue
-                if kind == "freq_long":
-                    from pinot_spark.operators.ds_freq import DsFrequentSketch
-
-                    fs = slots[i]
-                    if fs is None:
-                        fs = DsFrequentSketch.empty(call[3])
-                    row.append(fs.serialize())
-                    continue
-                k = call[3]
-                if slots[i] is None:
-                    uh = np.array([], dtype=np.uint64)
-                    sums = np.array([], dtype=np.int64)
-                else:
-                    uh, sums = slots[i]
-                if len(uh) > k:
-                    th = int(uh[k])
-                    uh, sums = uh[:k], sums[:k]
-                else:
-                    th = 2**64
-                row.append(
-                    TupleSketch(
-                        k, th, uh.astype(np.uint64), sums.astype(np.int64)
-                    ).to_bytes()
-                )
-            rows.append(row)
-        out = pd.DataFrame(
-            rows, columns=keys + [f"__rs{i}" for i in range(len(calls))]
-        )
-        # integral key columns may have ridden through pandas as float64
-        # (null-carrying Arrow batches); hand them back as objects so the
-        # Arrow writer casts per the declared schema without float noise.
-        # bigint is safe here ONLY because 64-bit dialect keys arrive as
-        # split 32-bit halves (__khi/__klo) — each half is exact in
-        # float64, so int() cannot round
-        for f in key_fields:
-            if f.dataType.simpleString() in ("int", "smallint", "tinyint", "bigint"):
-                # v != v: pd.DataFrame turns None back into NaN when the
-                # column is otherwise numeric
-                out[f.name] = [
-                    None if (v is None or v != v) else int(v)
-                    for v in out[f.name]
-                ]
-        yield out
+    from pinot_spark.operators.arrow_groups import batch_groups, key_columns
 
     needed = list(keys)
     for call in calls:
-        if call[0] in ("cs_hll", "cs_hllpp", "tdigest", "freq_str"):
-            needed.append(call[1])
-            continue
-        needed += [call[1], call[2]]
-        if call[0] == "tuple":
-            needed += [call[4], call[5]]
-    return src.select(*needed).mapInPandas(_build, schema=out_fields)
+        needed += [call[1], call[3]] if call[0] == "tuple" else [call[1]]
+    src = src.select(*needed)
+    out_schema = StructType(
+        [src.schema[k] for k in keys]
+        + [StructField(f"__rs{i}", BinaryType()) for i in range(len(calls))]
+    )
+
+    def _build(batches):
+        acc: dict[tuple, list] = {}
+        key_types = None
+        for batch in batches:
+            key_types = [batch.schema.field(k).type for k in keys]
+            for kt, g in batch_groups(batch, keys):
+                slot = acc.get(kt)
+                if slot is None:
+                    slot = acc[kt] = [_partial_init(call) for call in calls]
+                for i, call in enumerate(calls):
+                    slot[i] = _partial_update(slot[i], call, g)
+        if not acc:
+            return
+        blobs = [
+            pa.array([_partial_blob(s[i], call) for s in acc.values()], pa.binary())
+            for i, call in enumerate(calls)
+        ]
+        yield pa.RecordBatch.from_arrays(
+            key_columns(list(acc), key_types) + blobs,
+            names=keys + [f"__rs{i}" for i in range(len(calls))],
+        )
+
+    return src.mapInArrow(_build, schema=out_schema)

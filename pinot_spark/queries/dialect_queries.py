@@ -10,6 +10,7 @@ import pyspark.sql.functions as F
 from pinot_spark.catalog import load_tables
 from pinot_spark.dialect import PinotEngine
 from pinot_spark.queries import query
+from pinot_spark.session import local_dataframe
 
 
 def _engine(spark, sf_dir):
@@ -739,12 +740,12 @@ def dialect_raw_theta_bigint_key(spark, sf_dir):
 def dialect_raw_mv_sketch_grouped(spark, sf_dir):
     """Grouped MV raw-sketch names on the round-10 zero-shuffle route:
     DISTINCTCOUNTRAWHLLMV and PERCENTILERAWTDIGESTMV partials now build
-    in the same ONE mapInPandas pass as the tuple sketch (HLL register
+    in the same ONE mapInArrow pass as the tuple sketch (HLL register
     arrays and t-digest centroids are fixed-size per group, so the
     partial state is sketch-bounded and only blobs cross the wire),
     retiring the bucketed GROUPED_AGG inner that shuffled O(rows) for
     these families. Mixed with native COUNT(*) so the split composes.
-    Plan-gated MapInPandas/no-pmod
+    Plan-gated MapInArrow/no-pmod
     (tests/test_plan_quality.py::test_raw_mv_families_zero_shuffle).
     Source cardinality per lang is tiny, so the log2m=12
     linear-counting estimate is exactly count(DISTINCT source)
@@ -788,7 +789,7 @@ def _ds_theta_oracle() -> str:
     expected values come from the pure-Python DsThetaSketch — itself
     byte-canonical against datasketches-java 6.2.0 golden vectors and a
     live Java round-trip (tests/test_ds_theta.py) — so this driver row
-    proves the Spark plumbing (mapInPandas export partials, SQL scalar
+    proves the Spark plumbing (mapInArrow export partials, SQL scalar
     surface, format auto-detection) reproduces those values on real
     tables."""
     import json
@@ -867,7 +868,7 @@ def _cs_hll_oracle() -> str:
     expected values come from the pure-Python CsHll/CsHllPlus — itself
     byte-canonical against stream-lib 2.9.8 golden vectors and a live
     Java round-trip (tests/test_cs_hll.py) — so this driver row proves
-    the Spark plumbing (mapInPandas export partials, SQL scalar surface,
+    the Spark plumbing (mapInArrow export partials, SQL scalar surface,
     per-argument format auto-detection) reproduces those values on real
     tables."""
     import json
@@ -1722,7 +1723,8 @@ def dialect_st_union_area(spark, sf_dir):
             "FROM events WHERE event_id < 2000"
         ).first().n
     )
-    return spark.createDataFrame(
+    return local_dataframe(
+        spark,
         [(round(float(area), 4), int(n_cells), float(area) == float(n_cells))],
         "union_area double, n_cells bigint, area_matches boolean",
     )
@@ -1825,7 +1827,8 @@ def dialect_uuid_skipupsert(spark, sf_dir):
         "SELECT COUNT(*) AS n FROM UuidCarrierT "
         f"WHERE u <> CAST('{dashed_upper}' AS UUID)"
     ).first().n
-    return spark.createDataFrame(
+    return local_dataframe(
+        spark,
         [(
             int(n_raw), int(n_latest), float(sum_latest),
             int(n_uuid_eq), int(n_uuid_ne),
@@ -1902,7 +1905,8 @@ def dialect_map_vector_options(spark, sf_dir):
         f"SELECT COUNT(*) AS n FROM embeddings "
         f"WHERE vectorSimilarity(embedding, {arr}, {n_emb}) LIMIT 1"
     ).first().n
-    return spark.createDataFrame(
+    return local_dataframe(
+        spark,
         [(int(n_map_rows), float(sum_v), int(n_missing_default), int(n_radius))],
         "n_map_rows bigint, sum_v double, n_missing_default bigint, "
         "n_radius bigint",

@@ -358,7 +358,7 @@ def test_raw_theta_tuple_two_phase_rewrite(spark, at):
     (dialect.rewrite_raw_sketch_two_phase — asserted on translate()
     output, the fallback when the engine route declines), while the
     ENGINE executes the zero-shuffle grouped-partials route since
-    round 9 (MapInPandas, no bucket column). Results must equal the
+    round 9 (MapInArrow, no bucket column). Results must equal the
     exact natives in the sub-nominal regime either way."""
     spark.range(0, 20000).selectExpr(
         "CAST(id % 4 AS INT) AS g",
@@ -382,10 +382,10 @@ def test_raw_theta_tuple_two_phase_rewrite(spark, at):
     ).collect()
     # 3000 distinct < nominalEntries → theta exact; sum-tuple exact here
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
-    # executed plan: the zero-shuffle route — grouped MapInPandas
+    # executed plan: the zero-shuffle route — grouped MapInArrow
     # partials, no bucketed row shuffle, no per-value collection
     plan = at.sql(q)._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "pmod" not in plan and "collect_set" not in plan
     # raw theta sits on the native side of the split
     assert "theta_sketch_estimate(theta_sketch_agg(u, 12)) AS __nat" in translated
@@ -563,7 +563,7 @@ def test_raw_theta_mixed_aggs_having_two_phase(spark, at):
     ))._jdf.queryExecution().executedPlan().toString()
     assert "collect_set" not in plan
     # round 9: zero-shuffle grouped partials (int key → route accepts)
-    assert "MapInPandas" in plan or "ArrowAggregatePython" in plan
+    assert "MapInArrow" in plan or "ArrowAggregatePython" in plan
 
 
 def test_raw_theta_mixed_expression_key_fallback_correct(spark, at):
@@ -617,7 +617,7 @@ def test_raw_theta_alias_and_expression_keys_normalized(spark, at):
     statements (round 8's per-value fallback class, and a latent
     unresolvable-SQL bug for the alias+mixed shape) normalize at the
     engine into a derived table with plain key columns, then take the
-    zero-shuffle route: correct values, MapInPandas partials, no
+    zero-shuffle route: correct values, MapInArrow partials, no
     per-value collection."""
     spark.createDataFrame(
         [("ab", 1), ("AB", 2), ("cd", 2), ("cd", 2), ("ef", 3)],
@@ -634,7 +634,7 @@ def test_raw_theta_alias_and_expression_keys_normalized(spark, at):
         assert [(r.u, r.n, r.dc) for r in df.collect()] == [("AB", 2, 2), ("CD", 2, 1)]
     plan = _plan(df)
     assert "collect_set" not in plan
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     # expression key, pure
     q2 = (
         "SELECT GET_THETA_SKETCH_ESTIMATE(DISTINCT_COUNT_RAW_THETA_SKETCH(v)) "
@@ -751,7 +751,7 @@ def test_raw_theta_expression_keys_case_and_space_insensitive(spark, at):
             ("A", 1, 1), ("a", 1, 1), ("c", 2, 1), ("e", 1, 1)
         ]
     plan = _plan(df)
-    assert "collect_set" not in plan and "MapInPandas" in plan
+    assert "collect_set" not in plan and "MapInArrow" in plan
     # alias key written in a different case than the GROUP BY token
     q2 = (
         "SELECT UPPER(s) AS U, COUNT(*) AS n, GET_THETA_SKETCH_ESTIMATE("

@@ -346,6 +346,32 @@ def test_sql_mixed_domain_union_raises(spark):
     assert row.e == 2
 
 
+def test_grouped_cs_hll_export_keeps_bigint_keys_and_values(spark):
+    """The export operator keeps BIGINT keys and values exact past 2^53
+    when a NULL shares their Arrow batch: keys {B, B+1, NULL} are three
+    groups, and each group's bytes equal the pure-Python build over its
+    exact values."""
+    from pinot_spark.operators.cs_hll import grouped_cs_hll
+
+    big = 2**60
+    rows = [
+        (big, big), (big + 1, big + 1), (None, big + 2),
+        (big + 1, None), (big, big + 3), (None, None),
+    ]
+    df = spark.createDataFrame(rows, "k bigint, v bigint").coalesce(1)
+    got = {
+        r.k: bytes(r.cs_hll)
+        for r in grouped_cs_hll(df, ["k"], "v", log2m=8).collect()
+    }
+    want = {
+        k: CsHll.build_from_longs(
+            [v for kk, v in rows if kk == k and v is not None], 8
+        ).serialize()
+        for k in (big, big + 1, None)
+    }
+    assert got == want
+
+
 def test_sql_hllplus_float_column_hashes_float_tostring(spark):
     """stream-lib hash64(Object) on a Float hashes Float.toString()
     (shortest at FLOAT32 precision) — NOT the widened double's digits.

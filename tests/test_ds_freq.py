@@ -243,7 +243,7 @@ def _plan(df) -> str:
 
 def test_freq_grouped_takes_zero_shuffle_route(spark, sf_dir):
     """Canonical FREQUENT_*_SKETCH statements ride the grouped-partials
-    mapInPandas route — no pmod bucket column, no GROUPED_AGG pandas
+    mapInArrow route — no pmod bucket column, no GROUPED_AGG pandas
     inner — pure AND mixed with native aggregates; values equal the
     bucketed path's (both exact below the purge threshold)."""
     from pinot_spark.catalog import load_tables
@@ -257,7 +257,7 @@ def test_freq_grouped_takes_zero_shuffle_route(spark, sf_dir):
         "FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus LIMIT 10"
     )
     p = _plan(df)
-    assert "MapInPandas" in p and "pmod" not in p, p
+    assert "MapInArrow" in p and "pmod" not in p, p
     assert "FlatMapGroupsInPandas" not in p, p
     exact = {
         r.o_orderstatus: r.u
@@ -275,7 +275,7 @@ def test_freq_grouped_takes_zero_shuffle_route(spark, sf_dir):
         "FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus LIMIT 10"
     )
     mp = _plan(mixed)
-    assert "MapInPandas" in mp and "pmod" not in mp, mp
+    assert "MapInArrow" in mp and "pmod" not in mp, mp
     assert len(mixed.collect()) == len(exact)
 
 

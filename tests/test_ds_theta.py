@@ -206,7 +206,16 @@ def test_grouped_ds_theta_export(spark):
         grouped_ds_theta(df, ["g"], "u", k=64)
         ._jdf.queryExecution().executedPlan().toString()
     )
-    assert "MapInPandas" in plan and "collect_set" not in plan
+    assert "MapInArrow" in plan and "collect_set" not in plan
+    # BIGINT keys past 2^53 next to a NULL key in one Arrow batch stay
+    # three groups
+    big = 2**60
+    bdf = spark.createDataFrame(
+        [(big, 1), (big + 1, 2), (None, 3), (big + 1, 4)], "k bigint, v bigint"
+    ).coalesce(1)
+    got = {r.k: DsThetaSketch.parse(bytes(r.ds_theta)).estimate()
+           for r in grouped_ds_theta(bdf, ["k"], "v", k=64).collect()}
+    assert got == {big: 1.0, big + 1: 2.0, None: 1.0}
 
 
 @pytest.mark.skipif(shutil.which("javac") is None, reason="no JDK")

@@ -205,7 +205,7 @@ def test_raw_sketch_sql_bounded_aggregation(spark, sf_dir):
 # Python-worker plan nodes: a native theta plan holds none of them
 _PY_NODES = (
     "ArrowEvalPython", "ArrowAggregatePython", "BatchEvalPython",
-    "MapInPandas", "FlatMapGroupsInPandas",
+    "MapInPandas", "MapInArrow", "FlatMapGroupsInPandas",
 )
 # an integer-sum tuple sketch with value 1 counts its keys exactly below
 # k, and takes every raw-sketch restructure shape; theta, a native
@@ -223,7 +223,7 @@ def test_raw_theta_two_phase_udaf_inner(spark, sf_dir):
     Spark's native theta aggregate: map-side partial, final merge, no
     Python worker.  The tuple sketch takes the ZERO-SHUFFLE route
     (round 9): partition-local grouped sketch
-    partials in one MapInPandas pass — NO (keys, bucket) row shuffle
+    partials in one MapInArrow pass — NO (keys, bucket) row shuffle
     (no pmod bucket column), NO collect_set of hashes — and the only
     exchange moves partial BLOB rows, whose collect_list even gets a
     map-side partial (partial_collect_list of ≤1 blob per group per
@@ -249,7 +249,7 @@ def test_raw_theta_two_phase_udaf_inner(spark, sf_dir):
     )
     plan = _plan(df)
     assert "collect_set" not in plan, plan
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
     assert "pmod" not in plan, plan  # no (keys, bucket) row shuffle
     # every exchange is over the partials' group keys only
     for line in plan.splitlines():
@@ -263,7 +263,7 @@ def test_raw_theta_under_join_no_per_value_collection(spark, sf_dir):
     """Raw theta under a JOIN is a native aggregate over the join.  The
     raw-sketch route for join trees (the FROM text executes as a
     DataFrame feeding zero-shuffle grouped partials, round 9) stays
-    covered by the tuple sketch: MapInPandas partials, NO collect_set of
+    covered by the tuple sketch: MapInArrow partials, NO collect_set of
     per-value state, no bucket column (VERDICT r7 #3)."""
     from pinot_spark.dialect import PinotEngine
 
@@ -281,7 +281,7 @@ def test_raw_theta_under_join_no_per_value_collection(spark, sf_dir):
     df = eng.sql(stmt.format(_TUPLE_DC.format("c_custkey")))
     plan = _plan(df)
     assert "collect_set" not in plan, plan
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
     assert "pmod" not in plan, plan
     assert df.collect() == theta.collect()
 
@@ -313,7 +313,7 @@ def test_raw_theta_mixed_under_join_bounded_native(spark, sf_dir):
     df = eng.sql(stmt.format(_TUPLE_DC.format("c_custkey")))
     plan = _plan(df)
     assert "collect_set" not in plan, plan
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
     assert "pmod" not in plan, plan
     assert "xxhash64" in plan, plan
     assert df.collect() == theta.collect()
@@ -341,7 +341,7 @@ def test_raw_theta_mixed_single_table_no_collect_set(spark, sf_dir):
     _assert_native_theta(_plan(theta))
     plan = _plan(eng.sql(stmt.format(_TUPLE_DC.format("l_partkey"))))
     assert "collect_set" not in plan, plan
-    assert "MapInPandas" in plan, plan  # zero-shuffle sketch side
+    assert "MapInArrow" in plan, plan  # zero-shuffle sketch side
     assert plan.count("HashAggregate") >= 2, plan  # native partial/final
 
 
@@ -349,7 +349,7 @@ def test_raw_theta_bigint_key_takes_zero_shuffle_route(spark, sf_dir):
     """BIGINT group keys (GROUP BY user_id — the dominant real sketch
     shape) take the zero-shuffle route since round 10: keys travel as
     split 32-bit halves (the sketch-hash exactness trick) and recombine
-    JVM-side, so plans show MapInPandas partials with NO pmod bucket
+    JVM-side, so plans show MapInArrow partials with NO pmod bucket
     column and NO collect_set — pure AND mixed — and exactness survives
     keys past 2^53 and NULL keys.  Raw theta is a native aggregate
     (no key carrier needed); the tuple sketch carries the route."""
@@ -381,7 +381,7 @@ def test_raw_theta_bigint_key_takes_zero_shuffle_route(spark, sf_dir):
     plan = _plan(df)
     assert "pmod" not in plan, plan  # zero-shuffle route, not bucketed SQL
     assert "collect_set" not in plan, plan
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
     assert [(r.g, r.dc) for r in df.collect()] == want
     mixed = eng.sql(
         f"SELECT g, COUNT(*) AS n, {_TUPLE_DC.format('v')} AS dc "
@@ -389,7 +389,7 @@ def test_raw_theta_bigint_key_takes_zero_shuffle_route(spark, sf_dir):
     )
     mplan = _plan(mixed)
     assert "collect_set" not in mplan, mplan
-    assert "MapInPandas" in mplan, mplan
+    assert "MapInArrow" in mplan, mplan
     assert [(r.g, r.n, r.dc) for r in mixed.collect()] == [
         (None, 2, 1), (-(big + 3), 1, 1),
         (big, 60, 13), (big + 1, 60, 13), (big + 2, 60, 13),
@@ -428,7 +428,7 @@ def test_raw_theta_decimal_key_takes_zero_shuffle_route(spark, sf_dir):
     plan = _plan(df)
     assert "pmod" not in plan, plan  # zero-shuffle route, not bucketed SQL
     assert "collect_set" not in plan, plan
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
     assert df.schema["g"].dataType.simpleString() == "decimal(20,0)"
     assert [(int(r.g), r.dc) for r in df.collect()] == [(0, 7), (1, 7), (2, 7)]
     # precision/NULL torture: unscaled values far past float64 exactness,
@@ -447,7 +447,7 @@ def test_raw_theta_decimal_key_takes_zero_shuffle_route(spark, sf_dir):
     mplan = _plan(mixed)
     assert "pmod" not in mplan, mplan
     assert "collect_set" not in mplan, mplan
-    assert "MapInPandas" in mplan, mplan
+    assert "MapInArrow" in mplan, mplan
     assert mixed.schema["g"].dataType.simpleString() == "decimal(38,10)"
     assert [(r.g, r.n, r.dc) for r in mixed.collect()] == [
         (None, 2, 1), (-big, 1, 1),
@@ -491,7 +491,7 @@ def test_quantize_int8_no_shuffle_pure_projection(spark, sf_dir):
 def test_raw_tuple_zero_shuffle_route(spark, sf_dir):
     """TO_INTEGER_SUM_TUPLE_SKETCH inside the raw tuple aggregates
     (pure, mixed, and alongside theta) takes the grouped-partials
-    route since round 9: one MapInPandas pass, no per-row
+    route since round 9: one MapInArrow pass, no per-row
     __tuple_singleton blob construction, no (keys, bucket) row
     shuffle, exact int64 per-hash sums in the partials."""
     from pinot_spark.dialect import PinotEngine
@@ -505,7 +505,7 @@ def test_raw_tuple_zero_shuffle_route(spark, sf_dir):
         "FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus LIMIT 10"
     )
     plan = _plan(df)
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
     assert "__tuple_singleton" not in plan, plan
     assert "pmod" not in plan, plan
     rows = df.collect()
@@ -519,7 +519,7 @@ def test_raw_tuple_zero_shuffle_route(spark, sf_dir):
         "FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus LIMIT 10"
     )
     bplan = _plan(both)
-    assert "MapInPandas" in bplan and "pmod" not in bplan, bplan
+    assert "MapInArrow" in bplan and "pmod" not in bplan, bplan
     assert all(r.dc == 5 for r in both.collect())
 
 
@@ -575,7 +575,7 @@ def test_raw_tuple_values_exact_past_float53(spark, sf_dir):
 def test_raw_mv_families_zero_shuffle(spark, sf_dir):
     """Grouped DISTINCTCOUNTRAWHLLMV / PERCENTILERAW*MV statements take
     the round-10 zero-shuffle route: register/centroid partials build in
-    the same ONE MapInPandas pass as theta (fixed-size partial state per
+    the same ONE MapInArrow pass as theta (fixed-size partial state per
     group), so the plan shows no pmod bucket column and no collect_set —
     pure AND mixed-with-native — and only partial blobs cross the wire.
     Values verified against exact computations on the same frame."""
@@ -594,7 +594,7 @@ def test_raw_mv_families_zero_shuffle(spark, sf_dir):
         "FROM mv_zs_t GROUP BY g ORDER BY g LIMIT 10"
     )
     plan = _plan(df)
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
     assert "pmod" not in plan, plan
     assert "collect_set" not in plan, plan
     rows = df.collect()
@@ -605,12 +605,12 @@ def test_raw_mv_families_zero_shuffle(spark, sf_dir):
         "AS dc FROM mv_zs_t GROUP BY g ORDER BY g LIMIT 10"
     )
     mplan = _plan(mixed)
-    assert "MapInPandas" in mplan, mplan
+    assert "MapInArrow" in mplan, mplan
     assert "pmod" not in mplan, mplan
     assert [(r.g, r.n, r.dc) for r in mixed.collect()] == [("a", 2, 4), ("b", 2, 1)]
     # the driver row composes both families mixed with COUNT(*)
     dplan = _plan(QUERIES["dialect_raw_mv_sketch_grouped"](spark, sf_dir))
-    assert "MapInPandas" in dplan and "pmod" not in dplan, dplan
+    assert "MapInArrow" in dplan and "pmod" not in dplan, dplan
 
 
 def test_raw_theta_timestamp_key_takes_zero_shuffle_route(spark, sf_dir):
@@ -618,7 +618,7 @@ def test_raw_theta_timestamp_key_takes_zero_shuffle_route(spark, sf_dir):
     prefers epoch-millis BIGINT) ride the zero-shuffle route since
     round 11: the key travels as unix_micros split into 32-bit halves
     (lossless int64 carrier) and recombines via timestamp_micros, so
-    plans show MapInPandas partials with no pmod and no collect_set,
+    plans show MapInArrow partials with no pmod and no collect_set,
     NULL keys survive, and sub-second precision round-trips exactly.
     Raw theta groups natively; the tuple sketch carries the route."""
     import datetime
@@ -653,7 +653,7 @@ def test_raw_theta_timestamp_key_takes_zero_shuffle_route(spark, sf_dir):
     plan = _plan(df)
     assert "pmod" not in plan, plan
     assert "collect_set" not in plan, plan
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
     got = [(r.ts, r.dc) for r in df.collect()]
     assert got == want, got
 

@@ -61,7 +61,7 @@ def _run_both(eng, stmt: str) -> dict[str, list]:
     assert "theta_sketch_agg" in plan, plan
     assert "Python" not in plan and "InPandas" not in plan, plan
     tup = eng.sql(tuple_stmt)
-    assert "MapInPandas" in _plan(tup)
+    assert "MapInArrow" in _plan(tup)
     return {"theta": theta.collect(), "tuple": tup.collect()}
 
 
@@ -98,7 +98,7 @@ def test_raw_theta_window_takes_zero_shuffle_subquery(spark, eng):
     theta_sketch_agg, with no Python worker.  The materialized
     partition subquery of the raw-sketch families rides the zero-shuffle
     grouped route: no collect_set of hashes, no pmod bucket column,
-    MapInPandas partials present."""
+    MapInArrow partials present."""
     theta = eng.sql(
         "SELECT n_name, GET_THETA_SKETCH_ESTIMATE("
         "DISTINCT_COUNT_RAW_THETA_SKETCH(n_nationkey) "
@@ -116,7 +116,7 @@ def test_raw_theta_window_takes_zero_shuffle_subquery(spark, eng):
     plan = _plan(df)
     assert "collect_set" not in plan, plan
     assert "pmod" not in plan, plan
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
     assert sorted(df.collect()) == sorted(theta.collect())
 
 
@@ -488,11 +488,12 @@ def test_running_desc_and_nulls(spark, eng):
 
 
 def test_running_null_numeric_key_spans_arrow_batches(spark, eng):
-    """A NULL numeric partition key arrives in pandas as NaN; the
-    cross-batch group-change check must not treat NaN != NaN as a new
-    group, or the accumulator resets mid-partition at every Arrow
-    batch boundary (silently-wrong running values at scale).  Force
-    tiny batches so the null-keyed partition definitely spans several.
+    """The cross-batch group-change check must treat a NULL partition
+    key as equal to the NULL before it, or the accumulator resets
+    mid-partition at every Arrow batch boundary (silently-wrong running
+    values at scale), and must tell BIGINT keys past 2^53 apart when a
+    NULL shares their batch.  Force tiny batches so each partition
+    definitely spans several.
     """
     n = 12
     rows_sql = ", ".join(
@@ -519,6 +520,44 @@ def test_running_null_numeric_key_spans_arrow_batches(spark, eng):
             spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
     for rows in both.values():
         assert [r.d for r in rows] == [float(i) for i in range(1, n + 1)]
+    # BIGINT partition keys past 2^53 next to a NULL key: each partition
+    # restarts its count, and the pass-through BIGINT columns (keys and
+    # a value with NULLs) keep all 64 bits
+    big = 2**60
+    rows_sql = ", ".join(
+        f"(CAST({'NULL' if t % 3 == 0 else big + t % 3} AS BIGINT), {t}, "
+        f"'v{t}', CAST({'NULL' if t % 4 == 0 else big + t} AS BIGINT))"
+        for t in range(1, n + 1)
+    )
+    spark.sql(
+        f"SELECT * FROM VALUES {rows_sql} AS t(k, ts, v, x)"
+    ).createOrReplaceTempView("rswin_bigkey")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
+    try:
+        both = _run_both(
+            eng,
+            "SELECT ts, k, x, GET_THETA_SKETCH_ESTIMATE("
+            "DISTINCT_COUNT_RAW_THETA_SKETCH(v) "
+            "OVER (PARTITION BY k ORDER BY ts "
+            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS d "
+            "FROM rswin_bigkey ORDER BY ts LIMIT 100",
+        )
+    finally:
+        if prev is None:
+            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+        else:
+            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+    want = [
+        (
+            t,
+            None if t % 3 == 0 else big + t % 3,
+            None if t % 4 == 0 else big + t,
+            float((t - 1) // 3 + 1),
+        )
+        for t in range(1, n + 1)
+    ]
+    for rows in both.values():
+        assert [(r.ts, r.k, r.x, r.d) for r in rows] == want
 
 
 def test_running_unbounded_both_frame_is_partition_value(eng):
@@ -693,11 +732,11 @@ def test_running_view_plan_single_hash_exchange(spark, eng):
     assert plan.count("Exchange") == 1, plan
     assert "SinglePartition" not in plan, plan
     assert "hashpartitioning" in plan, plan
-    # the STREAMING runner: one MapInPandas above a JVM Sort — NOT
+    # the STREAMING runner: one MapInArrow above a JVM Sort — NOT
     # FlatMapGroupsInPandas, which would materialize each group as a
     # single Arrow batch (~1 GB for a 30k-row partition of 32 KB blobs;
     # blew the direct-memory cap at sf0.1)
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
     assert "FlatMapGroupsInPandas" not in plan, plan
     assert "Sort " in plan or "Sort[" in plan or "+- Sort" in plan, plan
     assert "GlobalLimit" not in plan, plan

@@ -18,7 +18,7 @@ from pinot_spark.dialect import PinotEngine, PinotSqlError, _theta_lgk, rewrite_
 
 _PY_NODES = (
     "ArrowEvalPython", "ArrowAggregatePython", "BatchEvalPython",
-    "MapInPandas", "FlatMapGroupsInPandas",
+    "MapInPandas", "MapInArrow", "FlatMapGroupsInPandas",
 )
 
 # (Pinot statement, exact Spark twin); both ORDER BY every output column
