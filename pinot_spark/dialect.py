@@ -1065,7 +1065,7 @@ FUNCTION_MAP: dict[str, str | Callable[[list[str]], str]] = {
     # the set operations stay native over native expressions; over
     # anything else (stored BYTES columns, literals, TO_THETA_SKETCH)
     # the sketch UDFs PinotEngine registers lazily
-    # (_ensure_sketch_udfs) read either wire format and refuse to
+    # (_ensure_udfs) read either wire format and refuse to
     # mix hash domains. ---
     "distinctcountrawthetasketch": lambda a: (
         f"theta_sketch_agg({a[0]}, {_theta_lgk(a[1:])})"
@@ -1551,10 +1551,11 @@ _EXT_TEMPLATES: dict[str, str | Callable[[list[str]], str]] = {
     "hextobytes": "unhex",
     "longtohexdecimal": lambda a: f"lower(hex(CAST({a[0]} AS BIGINT)))",
     "hexdecimaltolong": lambda a: f"CAST(conv({a[0]}, 16, 10) AS BIGINT)",
-    # geospatial (Pinot-parity serialized-BYTES carrier since round 13 —
-    # functions/pinot_geometry.py; UDFs registered lazily by
-    # _ensure_geo_sql_udfs, which also sniffs this engine's legacy WKT
-    # text carrier per value)
+    # geospatial (Pinot serialized-BYTES carrier —
+    # functions/pinot_geometry.py): rows of the geometry-UDF table
+    # (functions/geo_udfs.GEO_UDFS), registered by _ensure_udfs as a
+    # statement calls them; each geometry argument is sniffed per value,
+    # so the Column surface's WKT text reads the same
     "stgeomfromtext": lambda a: f"__geo_from_text({a[0]}, false)",
     "stgeogfromtext": lambda a: f"__geo_from_text({a[0]}, true)",
     "stgeometrytype": lambda a: f"__geo_geometry_type({a[0]})",
@@ -1653,14 +1654,6 @@ _EXT_TEMPLATES["arraytostring"] = (
 for _k, _v in _EXT_TEMPLATES.items():
     FUNCTION_MAP.setdefault(_k, _v)
 
-
-_GEO_SQL_RE = re.compile(
-    r"\b(?:ST_?(?:POINT|POLYGON|GEOMFROMTEXT|GEOGFROMTEXT|GEOMFROMGEOJSON|"
-    r"GEOGFROMGEOJSON|GEOMFROMWKB|GEOGFROMWKB|DISTANCE|WITHIN|CONTAINS|"
-    r"EQUALS|AREA|ASTEXT|ASBINARY|ASGEOJSON|GEOMETRYTYPE|X|Y)|ST_?UNION|"
-    r"GEOTOH3|GRIDDISK|GRIDDISTANCE)\s*\(",
-    re.IGNORECASE,
-)
 
 _IDENT_CALL = re.compile(r"\b([A-Za-z_][A-Za-z0-9_]*)\s*\(")
 _KEYWORDS = {
@@ -3727,19 +3720,40 @@ def rewrite_unicode_literals(sql: str) -> str:
     return _U_AMP_LIT_RE.sub(decode, sql)
 
 
-# WeakSet of SparkSession, not id(): a GC'd session's id can be
-# reused by a new session, which would silently skip registration
-# (ADVICE r13)
-_SKETCH_UDF_SESSIONS: weakref.WeakSet = weakref.WeakSet()
+# session -> names of the UDF-table rows registered in it; weak keys,
+# not id(): a GC'd session's id can be reused by a new session, which
+# would silently skip registration (ADVICE r13)
+_UDF_SESSIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 @functools.cache
-def _sketch_udf_call_re() -> re.Pattern:
-    """A call to any row of the sketch-UDF table: translate registers
-    the table when its output holds one."""
+def _udf_rows() -> dict:
+    """Both UDF tables by name: the sketch rows
+    (functions/sketches.SKETCH_UDFS) and the geometry rows
+    (functions/geo_udfs.GEO_UDFS)."""
+    from pinot_spark.functions.geo_udfs import GEO_UDFS
     from pinot_spark.functions.sketches import SKETCH_UDFS
 
-    return re.compile(r"\b(?:" + "|".join(map(re.escape, SKETCH_UDFS)) + r")\s*\(")
+    return {**SKETCH_UDFS, **GEO_UDFS}
+
+
+@functools.cache
+def _udf_call_re() -> re.Pattern:
+    """A call to any row of either UDF table."""
+    names = sorted(_udf_rows(), key=len, reverse=True)
+    return re.compile(r"\b(" + "|".join(map(re.escape, names)) + r")\s*\(")
+
+
+def _ensure_udfs(spark: SparkSession, sql: str) -> None:
+    """Register in ``spark`` the UDF-table rows ``sql`` calls, each once
+    per session (a row takes milliseconds to register, so a statement
+    pays only for the rows it runs)."""
+    from pinot_spark.functions.scalar import row_udf
+
+    done = _UDF_SESSIONS.setdefault(spark, set())
+    for name in {m.group(1) for m in _udf_call_re().finditer(sql)} - done:
+        spark.udf.register(name, row_udf(name, _udf_rows()[name]))
+        done.add(name)
 
 
 # ---------------------------------------------------------------------------
@@ -4109,12 +4123,14 @@ def rewrite_distinct_window_aggs(sql: str) -> str:
     return out
 
 
-# native aggregates a statement may mix with raw-sketch calls.  Theta
+# native aggregates a raw-sketch expression may hold next to its raw
+# calls (the mixed split hoists them into its native subquery).  Theta
 # builds (theta_sketch_agg) and the sketches rewrite_functions builds
 # from collect_set (HLL, HLL++, ULL, CPC, the percentile digests) are
-# native too, so a statement mixing them with a pandas-UDAF family
-# takes the mixed split.  The _MV families are not matched: the
-# trailing \s*\( needs the paren right after the name.
+# native too.  An item with no raw call needs no list: any call outside
+# _RS_SCALAR_ALLOW makes it native (_calls_outside_allow).  The _MV
+# families are not matched: the trailing \s*\( needs the paren right
+# after the name.
 _BASIC_AGG_CALL_RE = re.compile(
     r"\b(?P<name>COUNT|SUM|MIN|MAX|AVG"
     r"|DISTINCT_?COUNT_?(?:RAW_?)?(?:THETA_?SKETCH|HLL(?:_?PLUS)?|ULL|CPC_?SKETCH)"
@@ -4147,6 +4163,20 @@ _RS_SCALAR_ALLOW = _RS_WRAPPERS | {
     "like", "is", "exists",
 }
 _RS_FANOUT = 256
+
+
+def _calls_outside_allow(item: str) -> bool:
+    """Does ``item``, holding no raw-sketch call, call a function outside
+    ``_RS_SCALAR_ALLOW``?  Such an item is native (DISTINCTCOUNT,
+    PERCENTILE, MODE, ... or any other function), so the statement takes
+    the mixed split, whose native subquery evaluates it verbatim: a
+    pandas UDAF cannot share a SELECT with a native aggregate."""
+    if _search_outside_literals(_RAW_SKETCH_CALL_RE, item):
+        return False
+    return any(
+        re.sub("_", "", cm.group(1)).lower() not in _RS_SCALAR_ALLOW
+        for cm in re.finditer(r"\b([A-Za-z_][A-Za-z0-9_]*)\s*\(", item)
+    )
 
 
 def _search_outside_literals(pattern: re.Pattern, s: str):
@@ -4426,12 +4456,13 @@ def rewrite_raw_sketch_two_phase(sql: str, view_builder=None) -> str:
     # statement (GROUPED_AGG partials, sketch-sized aggregation state);
     # statements that also aggregate natively split into two subqueries
     # joined on the group keys (no pandas/native mixing in one SELECT)
+    clauses = items + ([stmt["having"]] if stmt["having"] else [])
     has_basic = any(
         _search_outside_literals(
             _BASIC_AGG_CALL_RE, _sub_raw_calls(item, lambda name, args: "")
         )
-        for item in items + ([stmt["having"]] if stmt["having"] else [])
-    )
+        for item in clauses
+    ) or any(map(_calls_outside_allow, clauses))
     if has_basic:
         return _rewrite_mixed_split(sql, stmt, keys, items, view_builder)
     partials: list[str] = []
@@ -5145,217 +5176,6 @@ def rewrite_raw_sketch_setop(sql: str) -> str:
     return out + tail
 
 
-_GEO_UDF_SESSIONS: weakref.WeakSet = weakref.WeakSet()
-
-
-def _ensure_geo_sql_udfs(spark: SparkSession) -> None:
-    """Register the Pinot-parity geometry UDFs the FUNCTION_MAP
-    geo templates call (functions/pinot_geometry.py: GeometrySerializer
-    byte layout, JTS within/contains/equals, geography spherical area
-    and great-circle distance — see that module's reference citations).
-    Idempotent per SparkSession.
-
-    Carrier sniffing: every geometry argument arrives as BINARY (Spark
-    implicitly casts STRING → UTF-8 bytes), and the first byte decides
-    the form — Pinot type bytes are 0x00-0x06 (0x80 bit for geography)
-    while WKT text begins with an ASCII letter or space, so the sniff is
-    deterministic."""
-    if spark in _GEO_UDF_SESSIONS:
-        return
-    from pinot_spark.functions import pinot_geometry as pgeo
-    from pinot_spark.functions.scalar import arrow_rows_udf
-
-    def parse_any(v):
-        if v is None:
-            return None
-        if isinstance(v, str):
-            return pgeo.parse_wkt(v)
-        b = bytes(v)
-        if b and (b[0] & 0x7F) <= 6:
-            return pgeo.deserialize(b)
-        return pgeo.parse_wkt(b.decode("utf-8"))
-
-    def as_text(v):
-        return v if isinstance(v, str) else bytes(v).decode("utf-8")
-
-    def rowwise(out_type, fn):
-        return arrow_rows_udf(
-            out_type,
-            lambda *cols: [
-                None if any(v is None for v in vals) else fn(*vals)
-                for vals in zip(*cols)
-            ],
-        )
-
-    spark.udf.register(
-        "__geo_from_text",
-        rowwise("binary", lambda w, g: pgeo.serialize(pgeo.parse_wkt(as_text(w), geog=bool(g)))),
-    )
-    spark.udf.register(
-        "__geo_point",
-        rowwise("binary", lambda x, y, g: pgeo.serialize(("POINT", (float(x), float(y)), bool(g)))),
-    )
-    spark.udf.register("__geo_as_text", rowwise("string", lambda v: pgeo.format_wkt(parse_any(v))))
-    spark.udf.register(
-        "__geo_geometry_type", rowwise("string", lambda v: pgeo.geometry_type(parse_any(v)))
-    )
-    spark.udf.register("__geo_area", rowwise("double", lambda v: pgeo.area(parse_any(v))))
-    spark.udf.register(
-        "__geo_x",
-        rowwise("double", lambda v: None if parse_any(v)[1] is None else float(parse_any(v)[1][0])),
-    )
-    spark.udf.register(
-        "__geo_y",
-        rowwise("double", lambda v: None if parse_any(v)[1] is None else float(parse_any(v)[1][1])),
-    )
-    spark.udf.register(
-        "__geo_distance", rowwise("double", lambda a, b: pgeo.distance(parse_any(a), parse_any(b)))
-    )
-    spark.udf.register(
-        "__geo_within", rowwise("boolean", lambda a, b: pgeo.within(parse_any(a), parse_any(b)))
-    )
-    spark.udf.register(
-        "__geo_contains", rowwise("boolean", lambda a, b: pgeo.contains(parse_any(a), parse_any(b)))
-    )
-    spark.udf.register(
-        "__geo_equals", rowwise("boolean", lambda a, b: pgeo.equals(parse_any(a), parse_any(b)))
-    )
-
-    def from_wkt_carrier(wkt: str, geog: bool) -> bytes:
-        return pgeo.serialize(pgeo.parse_wkt(wkt, geog=geog))
-
-    def geojson_in(v, g):
-        from pinot_spark.functions.wkb import geojson_to_wkt
-
-        return from_wkt_carrier(geojson_to_wkt(as_text(v)), bool(g))
-
-    def geojson_out(v):
-        from pinot_spark.functions.wkb import wkt_to_geojson
-
-        return wkt_to_geojson(pgeo.format_wkt(parse_any(v)))
-
-    def wkb_in(v, g):
-        # input is OGC WKB by contract (no sniffing — a big-endian WKB
-        # header byte 0x00 collides with the Pinot POINT type byte)
-        from pinot_spark.functions.wkb import wkb_to_wkt
-
-        return from_wkt_carrier(wkb_to_wkt(bytes(v)), bool(g))
-
-    def wkb_out(v):
-        from pinot_spark.functions.wkb import wkt_to_wkb
-
-        return wkt_to_wkb(pgeo.format_wkt(parse_any(v)))
-
-    spark.udf.register("__geo_from_geojson", rowwise("binary", geojson_in))
-    spark.udf.register("__geo_as_geojson", rowwise("string", geojson_out))
-    spark.udf.register("__geo_from_wkb", rowwise("binary", wkb_in))
-    spark.udf.register("__geo_as_wkb", rowwise("binary", wkb_out))
-
-    from pinot_spark.functions import h3grid
-
-    spark.udf.register(
-        "__geo_to_h3_coords",
-        rowwise("long", lambda lng, lat, res: h3grid.geo_to_cell(float(lng), float(lat), int(res))),
-    )
-
-    def h3_point(v, res):
-        g = parse_any(v)
-        if g[0] != "POINT" or g[1] is None:
-            raise ValueError("geoToH3 needs a non-empty point")
-        return h3grid.geo_to_cell(float(g[1][0]), float(g[1][1]), int(res))
-
-    spark.udf.register("__geo_to_h3_point", rowwise("long", h3_point))
-    spark.udf.register(
-        "__h3_grid_distance",
-        rowwise("long", lambda a, b: h3grid.grid_distance(int(a), int(b))),
-    )
-    spark.udf.register(
-        "__h3_grid_disk",
-        rowwise("array<long>", lambda c, k: h3grid.grid_disk(int(c), int(k))),
-    )
-
-    def __geo_union_fold(groups):
-        """STUNION fold over collect_list(geometry): the ``stunion``
-        family's merge over ≤ 64 partials, and FUNCTION_MAP's
-        single-buffer fallback where no restructure applies (window
-        position, native aggregates in a non-canonical statement); the
-        DataFrame path is the executor-side tree fold in operators/geo.py
-        (one partial per partition, isqrt tree rounds)."""
-
-        def run(lst):
-            geoms = [parse_any(v) for v in lst if v is not None]
-            if not geoms:
-                return None
-            if all(g[0] in ("POINT", "MULTIPOINT") for g in geoms):
-                pts = sorted({p for g in geoms for p in ([g[1]] if g[0] == "POINT" else g[1]) if p})
-                kind = "POINT" if len(pts) == 1 else "MULTIPOINT"
-                return pgeo.serialize((kind, pts[0] if kind == "POINT" else pts, geoms[0][2]))
-            return pgeo.serialize(pgeo.union(geoms))
-
-        return [run(lst) for lst in groups]
-
-    spark.udf.register("__geo_union_fold", arrow_rows_udf("binary", __geo_union_fold))
-
-    def _union_chunk(acc, chunk):
-        """Fold ``chunk`` (parsed geometries) into accumulator ``acc``
-        (one geometry or None).  Pure-point runs stay on the sorted
-        set-union fast path; anything areal goes through the exact
-        overlay (pgeo.union).  Union is associative/commutative, so
-        chunked folding matches the one-shot fold bit-for-bit after
-        canonicalization (pinned by test_geo_st_union_golden)."""
-        geoms = ([acc] if acc is not None else []) + chunk
-        if all(g[0] in ("POINT", "MULTIPOINT") for g in geoms):
-            pts = sorted({p for g in geoms for p in ([g[1]] if g[0] == "POINT" else g[1]) if p})
-            kind = "POINT" if len(pts) == 1 else "MULTIPOINT"
-            return (kind, pts[0] if kind == "POINT" else pts, geoms[0][2])
-        return pgeo.union(geoms)
-
-    def __geo_union_agg(vals):
-        """Incremental STUNION fold — the aggregation state is ONE
-        geometry plus a ≤64-element parse buffer, never a group-sized
-        list (the reference accumulates a single growing union,
-        StUnionAggregationFunction.java aggregate()).  The partial of
-        the ``stunion`` raw-sketch family: the bucketed inner level runs
-        it over a hash-bucketed slice of each group, and
-        ``__geo_union_fold`` merges the ≤ 64 partials; non-canonical
-        statements run it in place over the whole group."""
-        acc, buf = None, []
-        # union is idempotent: skip byte-identical blobs (telemetry
-        # columns repeat shapes heavily — a grid-cell column has
-        # thousands of copies of each square).  The seen-set holds raw
-        # bytes only and is capped so a pathological all-distinct
-        # stream degrades to plain folding, never OOM.
-        seen: set[bytes] = set()
-        for v in vals:
-            if v is None or v in seen:
-                continue
-            if len(seen) < 4096:
-                seen.add(v)
-            buf.append(parse_any(v))
-            if len(buf) >= 64:
-                acc, buf = _union_chunk(acc, buf), []
-        if buf:
-            acc = _union_chunk(acc, buf)
-        return pgeo.serialize(acc) if acc is not None else None
-
-    spark.udf.register("__geo_union_agg", arrow_rows_udf("binary", __geo_union_agg, agg=True))
-    _GEO_UDF_SESSIONS.add(spark)
-
-
-def _ensure_sketch_udfs(spark: SparkSession) -> None:
-    """Register every row of the sketch-UDF table
-    (functions/sketches.SKETCH_UDFS) under its name: the sketch readers,
-    singletons, partials, merges and finals FUNCTION_MAP's rewrites
-    call.  Idempotent per SparkSession."""
-    if spark in _SKETCH_UDF_SESSIONS:
-        return
-    from pinot_spark.functions.sketches import SKETCH_UDFS, sketch_udf
-
-    for name in SKETCH_UDFS:
-        spark.udf.register(name, sketch_udf(name))
-    _SKETCH_UDF_SESSIONS.add(spark)
-
-
 @dataclass
 class PinotEngine:
     """``PinotEngine(spark).sql("SELECT ... FROM tbl")`` — the Pinot
@@ -5544,15 +5364,12 @@ class PinotEngine:
             ):
                 sql = rewrite_sketch_agg_filters(sql)
             if _THETA_BLOB_CALL_RE.search(sql):
-                _ensure_sketch_udfs(self.spark)
                 sql = rewrite_theta_blob_calls(self.spark, sql)
             if _THETA_VALUE_CALL_RE.search(sql):
                 sql = rewrite_theta_value_calls(sql)
             if _RAW_THETA_CALL_RE.search(sql):
                 sql = rewrite_theta_carriers(self.spark, sql)
             if _search_outside_literals(_RAW_SKETCH_CALL_RE, sql):
-                if _GEO_SQL_RE.search(sql):
-                    _ensure_geo_sql_udfs(self.spark)
                 # Safety net for the regex-based restructuring (VERDICT r7:
                 # parsing SQL with a regex is inherently fragile): a
                 # restructured statement that no longer PARSES degrades to
@@ -5603,8 +5420,7 @@ class PinotEngine:
                 sql = apply_default_limit(
                     sql, int(options.get("limit", self.default_limit))
                 )
-            if _sketch_udf_call_re().search(sql):
-                _ensure_sketch_udfs(self.spark)
+            _ensure_udfs(self.spark, sql)
             return sql, options
         finally:
             _SCHEMA_MEMO.reset(memo_token)
@@ -5700,6 +5516,7 @@ class PinotEngine:
                 s = rewrite_quoted_identifiers(s)
                 s = rewrite_functions(s)
                 s = rewrite_mv_predicates(self.spark, s)
+                _ensure_udfs(self.spark, s)
                 return s, options
 
             r = self.ddl.execute(pinot_sql, translate=_translate_no_limit)
@@ -5726,8 +5543,6 @@ class PinotEngine:
         routed = self._route_raw_sketch_zero_shuffle(pinot_sql)
         if routed is not None:
             return routed
-        if _GEO_SQL_RE.search(pinot_sql):
-            _ensure_geo_sql_udfs(self.spark)
         spark_sql, _options = self.translate(pinot_sql)
         try:
             return self.spark.sql(spark_sql)
@@ -6003,11 +5818,6 @@ class PinotEngine:
         (call, OVER body) pairs share one running column."""
         from pinot_spark.operators.running_sketch import attach_running
 
-        # the token expressions and spliced wrappers call internal
-        # sketch UDFs (__cs_hllpp_pairs_arr, __tuple_estimate, ...) that
-        # the statement as written does not name: register them up
-        # front (idempotent per session)
-        _ensure_sketch_udfs(self.spark)
         stmt = _parse_canonical_stmt(sql2, allow_join=False)
         if stmt is None or stmt["group"] or stmt["having"]:
             raise NotImplementedError(
@@ -6253,10 +6063,6 @@ class PinotEngine:
             arg JVM-side (tuple calls also carry their BIGINT value
             column), build the mapInArrow grouped partials, register the
             temp view."""
-            # the clearspring pair UDFs may appear INSIDE the mini
-            # statement (non-integer MV elements) — register before
-            # analysis or the route silently declines to the two-phase
-            _ensure_sketch_udfs(self.spark)
 
             def translated(stmt_sql: str) -> str:
                 # the whole dialect under the statement's options, as
@@ -6342,7 +6148,6 @@ class PinotEngine:
             _ASOF_VIEW_SEQ[0] += 1
             view = f"__theta_zs_{_ASOF_VIEW_SEQ[0]}"
             partials.createOrReplaceTempView(view)
-            _ensure_sketch_udfs(self.spark)
             return view
 
         sql = rewrite_quoted_identifiers(sql)
@@ -6434,6 +6239,7 @@ class PinotEngine:
 
         inner_sql = rewrite_mv_predicates(self.spark, rewrite_functions(f"SELECT * FROM {from_tail}"))
         inner_sql = self._substitute_upsert_views(inner_sql, options)
+        _ensure_udfs(self.spark, inner_sql)
         inner_df = self.spark.sql(inner_sql)
 
         if in_type == "EPOCH":

@@ -206,11 +206,9 @@ def distinct_count_mv_grouped(df, keys: list[str], col: str, alias: str = "dc_mv
 @_reg("stunion")
 def _st_union(c):
     """ST_UNION over POINT WKTs → canonical MULTIPOINT WKT (geometry
-    union of points = their distinct set; reference
-    StUnionAggregationFunction.java unions JTS geometries — this engine's
-    geometry domain is WKT text with point/simple-polygon algebra, so the
-    point union is exact and deterministic, sorted for stable output).
-    Non-point geometry unions need a geometry library (declared gap)."""
+    union of points = their distinct set, as a codegen'd Column
+    expression; reference StUnionAggregationFunction.java).  Polygon
+    columns fold with operators/geo.st_union_geoms."""
     pts = F.array_sort(
         F.collect_set(F.regexp_extract(_c(c), r"POINT \(([^)]*)\)", 1))
     )

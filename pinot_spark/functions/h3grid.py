@@ -23,17 +23,13 @@ with (q, r) axial hex coordinates at that resolution — 62 bits total so
 every cell id fits a SIGNED 64-bit column at every resolution (±2^28
 coordinate range ≥ 10x the res-15 maximum).
 
-All functions are pure-Python cores (property-tested without Spark)
-wrapped in Arrow-batched pandas UDFs.
+All functions are pure-Python cores (property-tested without Spark);
+functions/geo_udfs.py runs them as rows of its geometry-UDF table.
 """
 
 from __future__ import annotations
 
 import math
-
-import pandas as _pd
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf as _pandas_udf
 
 _SQRT3 = math.sqrt(3.0)
 _SQRT7 = math.sqrt(7.0)
@@ -128,9 +124,6 @@ def grid_disk(cell: int, k: int) -> list[int]:
     return out
 
 
-# --- pandas UDF wrappers + registry hookup ---------------------------------
-
-
 def geo_to_cell_np(lng, lat, res):
     """Vectorized geo_to_cell over numpy arrays (the Arrow-batch hot
     path: rotation + axial transform + cube rounding, no per-row
@@ -158,91 +151,3 @@ def geo_to_cell_np(lng, lat, res):
     q = rx.astype(np.int64)
     r = rz.astype(np.int64)
     return (np.int64(int(res)) << 58) | ((q + _OFF) << 29) | (r + _OFF)
-
-
-def _make_geo_to_h3():
-    @_pandas_udf("long")
-    def _udf(lng: _pd.Series, lat: _pd.Series, res: _pd.Series) -> _pd.Series:
-        import numpy as np
-
-        if res.nunique(dropna=True) == 1 and not lng.isna().any() and not lat.isna().any():
-            r0 = int(res.dropna().iloc[0])
-            return _pd.Series(geo_to_cell_np(lng.to_numpy(), lat.to_numpy(), r0), dtype="Int64")
-        return _pd.Series(
-            [
-                None if lo is None or la is None or (isinstance(lo, float) and np.isnan(lo))
-                else geo_to_cell(float(lo), float(la), int(rs))
-                for lo, la, rs in zip(lng, lat, res)
-            ],
-            dtype="Int64",
-        )
-
-    return _udf
-
-
-def _make_grid_distance():
-    @_pandas_udf("long")
-    def _udf(a: _pd.Series, b: _pd.Series) -> _pd.Series:
-        import numpy as np
-
-        if not a.isna().any() and not b.isna().any():
-            av = a.to_numpy(dtype=np.int64)
-            bv = b.to_numpy(dtype=np.int64)
-            if len(av) and ((av >> 58) != (bv >> 58)).any():
-                raise ValueError("gridDistance needs equal resolutions")
-            dq = ((av >> 29) & _MASK29) - ((bv >> 29) & _MASK29)
-            dr = (av & _MASK29) - (bv & _MASK29)
-            d = (np.abs(dq) + np.abs(dr) + np.abs(dq + dr)) // 2
-            return _pd.Series(d, dtype="Int64")
-        return _pd.Series(
-            [
-                None if x is None or y is None else grid_distance(int(x), int(y))
-                for x, y in zip(a, b)
-            ],
-            dtype="Int64",
-        )
-
-    return _udf
-
-
-def _make_grid_disk():
-    @_pandas_udf("array<long>")
-    def _udf(cell: _pd.Series, k: _pd.Series) -> _pd.Series:
-        return _pd.Series(
-            [
-                None if c is None else grid_disk(int(c), int(kk))
-                for c, kk in zip(cell, k)
-            ]
-        )
-
-    return _udf
-
-
-def register(reg, lazy_udf, col) -> None:
-    """Install the H3 surface into the scalar registry (called from
-    functions/scalar.py).  geoToH3 takes (lng, lat, res) like ST_Point's
-    x=lng convention, or (pointWkt, res)."""
-    import re as _re
-
-    def _geo_to_h3(*a):
-        if len(a) == 3:
-            lng, lat, res = a
-            return lazy_udf("geo_to_h3", _make_geo_to_h3)(
-                col(lng).cast("double"), col(lat).cast("double"), col(res).cast("int")
-            )
-        point, res = a
-        x = F.regexp_extract(col(point), _re.escape("POINT (") + r"([-0-9.eE]+) ", 1).cast("double")
-        y = F.regexp_extract(col(point), r"POINT \([-0-9.eE]+ ([-0-9.eE]+)\)", 1).cast("double")
-        return lazy_udf("geo_to_h3", _make_geo_to_h3)(x, y, col(res).cast("int"))
-
-    reg("geoToH3")(_geo_to_h3)
-    reg("gridDistance")(
-        lambda a, b: lazy_udf("grid_distance", _make_grid_distance)(
-            col(a).cast("long"), col(b).cast("long")
-        )
-    )
-    reg("gridDisk", "kRing")(
-        lambda c, k: lazy_udf("grid_disk", _make_grid_disk)(
-            col(c).cast("long"), col(k).cast("int")
-        )
-    )

@@ -847,8 +847,8 @@ def distance(a, b) -> float:
 
 
 # ---------------------------------------------------------------------------
-# Exact overlay union (handles touching / collinear / hole-bearing
-# inputs that Greiner-Hormann clipping rejects as degenerate)
+# Exact overlay union (touching / collinear / hole-bearing inputs
+# included): the one polygon union every STUnion surface folds with
 # ---------------------------------------------------------------------------
 
 
@@ -1091,16 +1091,15 @@ def canonical(g):
 
 
 def union(geoms: list):
-    """N-way union of puntal and areal geometries — the general STUnion
-    path when inputs touch/overlap degenerately (exact overlay for the
-    areal part).  JTS semantics for mixed inputs: points COVERED by the
+    """N-way union of puntal and areal geometries — the STUnion path
+    (exact overlay for the areal part).  JTS semantics for mixed inputs: points COVERED by the
     areal union (interior or boundary) are absorbed; uncovered points
     survive as a puntal component alongside the polygons
     (GEOMETRYCOLLECTION).  Lineal members raise by name (unchanged
     boundary — the reference's STUnion over linework has no driver
     usage and a wrong line union is worse than a loud one).  Purely
-    puntal unions stay on the fast set-union path in
-    functions/scalar.py."""
+    puntal folds take the set-union fast path in
+    functions/geo_udfs.union_chunk first."""
     if not geoms:
         raise ValueError("union of zero geometries")
     geog = is_geography(geoms[0])

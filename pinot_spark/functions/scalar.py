@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import functools
 from collections.abc import Callable
+from typing import NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column
@@ -40,8 +41,13 @@ SCALAR_FUNCTIONS: dict[str, Callable[..., Column]] = {}
 
 
 def _reg(*names):
+    """Register ``fn`` under each name; a name is registered once (a
+    second registration would silently shadow the first)."""
+
     def deco(fn):
         for n in names:
+            if _canon(n) in SCALAR_FUNCTIONS:
+                raise ValueError(f"scalar function {n!r} is already registered")
             SCALAR_FUNCTIONS[_canon(n)] = fn
         return fn
 
@@ -351,7 +357,7 @@ _reg("sha256")(lambda b: F.sha2(_c(b).cast("binary"), 256))
 _reg("sha512")(lambda b: F.sha2(_c(b).cast("binary"), 512))
 _reg("crc32")(lambda b: F.crc32(_c(b).cast("binary")))
 _reg("xxhash64")(lambda b: F.xxhash64(_c(b)))
-_reg("murmurhash3x64128", "murmurhash3bit64")(lambda b, seed=0: F.xxhash64(_c(b), F.lit(seed)))  # 64-bit stand-in
+_reg("murmurhash3x64128")(lambda b, seed=0: F.xxhash64(_c(b), F.lit(seed)))  # 64-bit stand-in
 _reg("hash")(lambda *xs: F.hash(*[_c(x) for x in xs]))
 
 # ---------------------------------------------------------------------------
@@ -527,6 +533,16 @@ def _pylist(arr: pa.Array) -> list:
     return arr.to_pylist()
 
 
+class UdfRow(NamedTuple):
+    """A row of a UDF table (sketches.SKETCH_UDFS, geo_udfs.GEO_UDFS):
+    Spark return type (DDL), body over one batch's argument lists, and
+    whether it is a grouped aggregate (one value per group)."""
+
+    rtype: str
+    body: Callable
+    agg: bool = False
+
+
 def arrow_rows_udf(rtype: str, body: Callable, agg: bool = False):
     """A type-hinted ``arrow_udf`` over plain Python values: ``body``
     gets each argument of one Arrow batch as a list (NULL is None and a
@@ -545,6 +561,11 @@ def arrow_rows_udf(rtype: str, body: Callable, agg: bool = False):
             return pa.array(body(*map(_pylist, cols)), type=out_type)
 
     return arrow_udf(f, rtype)
+
+
+def row_udf(name: str, row: UdfRow):
+    """Row ``name`` of a UDF table as a Spark UDF (built once per process)."""
+    return _lazy_udf(name, lambda: arrow_rows_udf(row.rtype, row.body, row.agg))
 
 
 def _make_adler32():
@@ -603,540 +624,8 @@ _reg("murmurhash2", "murmur2")(
     lambda s: _lazy_udf("murmur2", _make_murmur2)(_c(s).cast("string"))
 )
 
-# ---------------------------------------------------------------------------
-# geospatial (GeohashFunctions.java, ScalarFunctions ST_* —
-# TransformFunctionType:195-229). Points as (x, y) WKT text / struct;
-# planar + haversine distance as Column arithmetic. Full geometry algebra
-# (polygons, contains/within) is out of scope — documented stub.
-# ---------------------------------------------------------------------------
-
-_EARTH_RADIUS_M = 6371008.8
-
-
-@_reg("stPoint")
-def _st_point(x, y, *geog):
-    """ST_Point (StPointFunction.java): the 2-arg form stays on this
-    engine's WKT-text carrier (fast Column concat, used by the planar
-    point rows); the reference 3-arg form ST_Point(x, y, isGeog) emits
-    Pinot-serialized BYTES with the geography bit, byte-identical to
-    GeometrySerializer.serialize (tests/test_custom_suites.py goldens)."""
-    if geog:
-        return _lazy_udf("geo_point_bytes", _make_geo_point_bytes)(
-            _c(x).cast("double"), _c(y).cast("double"), _c(geog[0]).cast("boolean")
-        )
-    return F.concat(
-        F.lit("POINT ("), _c(x).cast("string"), F.lit(" "), _c(y).cast("string"), F.lit(")")
-    )
-
-
-def _wkt_x(p) -> Column:
-    return F.regexp_extract(_c(p), r"POINT \(([-0-9.eE]+) ([-0-9.eE]+)\)", 1).cast("double")
-
-
-def _wkt_y(p) -> Column:
-    return F.regexp_extract(_c(p), r"POINT \(([-0-9.eE]+) ([-0-9.eE]+)\)", 2).cast("double")
-
-
-_reg("stX")(_wkt_x)
-_reg("stY")(_wkt_y)
-_reg("stAsText")(lambda p: _c(p))
-
-
-@_reg("stDistance")
-def _st_distance(a, b):
-    """Planar euclidean distance between POINT WKTs (Pinot geometry mode)."""
-    dx = _wkt_x(a) - _wkt_x(b)
-    dy = _wkt_y(a) - _wkt_y(b)
-    return F.sqrt(dx * dx + dy * dy)
-
-
-@_reg("stDistanceHaversine", "haversineDistance")
-def _st_haversine(a, b):
-    """Great-circle metres between POINT(lng lat) WKTs (Pinot geography
-    mode of ST_Distance)."""
-    lng1, lat1 = F.radians(_wkt_x(a)), F.radians(_wkt_y(a))
-    lng2, lat2 = F.radians(_wkt_x(b)), F.radians(_wkt_y(b))
-    dlat, dlng = lat2 - lat1, lng2 - lng1
-    h = F.pow(F.sin(dlat / 2), 2) + F.cos(lat1) * F.cos(lat2) * F.pow(F.sin(dlng / 2), 2)
-    return F.lit(2.0 * _EARTH_RADIUS_M) * F.asin(F.sqrt(h))
-
-
-_GEOHASH32 = "0123456789bcdefghjkmnpqrstuvwxyz"
-
-
-def _make_geohash():
-    @_pandas_udf("string")
-    def _geohash_udf(lng: _pd.Series, lat: _pd.Series, precision: _pd.Series) -> _pd.Series:
-        def enc(lo, la, pr):
-            if lo is None or la is None:
-                return None
-            pr = int(pr)
-            lat_iv, lng_iv = [-90.0, 90.0], [-180.0, 180.0]
-            bits, ch, even, out = 0, 0, True, []
-            while len(out) < pr:
-                if even:
-                    mid = (lng_iv[0] + lng_iv[1]) / 2
-                    if lo >= mid:
-                        ch = (ch << 1) | 1
-                        lng_iv[0] = mid
-                    else:
-                        ch <<= 1
-                        lng_iv[1] = mid
-                else:
-                    mid = (lat_iv[0] + lat_iv[1]) / 2
-                    if la >= mid:
-                        ch = (ch << 1) | 1
-                        lat_iv[0] = mid
-                    else:
-                        ch <<= 1
-                        lat_iv[1] = mid
-                even = not even
-                bits += 1
-                if bits == 5:
-                    out.append(_GEOHASH32[ch])
-                    bits, ch = 0, 0
-            return "".join(out)
-
-        return _pd.Series([enc(lo, la, pr) for lo, la, pr in zip(lng, lat, precision)])
-
-    return _geohash_udf
-
-
-_reg("encodeGeohash", "stGeohash")(
-    lambda lng, lat, precision=7: _lazy_udf("geohash", _make_geohash)(
-        _c(lng).cast("double"), _c(lat).cast("double"), _c(precision).cast("int")
-    )
-)
-
-
-# Polygon algebra as pure math over WKT — even-odd ray-casting
-# containment and shoelace area, now covering POLYGON holes and
-# MULTIPOLYGON (reference StContainsFunction.java / StAreaFunction.java
-# planar mode).  The even-odd rule over ALL rings makes holes fall out
-# naturally: a point inside both shell and hole crosses an even number
-# of ring edges → outside.  Hole areas subtract from their shell.
-
-
-def _parse_rings(wkt: str):
-    """``POLYGON ((shell) [, (hole)…])`` / ``MULTIPOLYGON (((…)), …)``
-    WKT → list of polygons, each a list of rings (first = shell, rest =
-    holes), each ring a list of (x, y); None when not a (multi)polygon."""
-    import re as _re
-
-    m = _re.match(
-        r"\s*(POLYGON|MULTIPOLYGON)\s*\((.*)\)\s*$", wkt or "", _re.IGNORECASE | _re.DOTALL
-    )
-    if not m:
-        return None
-    kind, body = m.group(1).upper(), m.group(2)
-
-    def ring(txt: str):
-        pts = []
-        for pair in txt.split(","):
-            xy = pair.split()
-            pts.append((float(xy[0]), float(xy[1])))
-        return pts
-
-    def rings_of(txt: str):
-        out, depth, start = [], 0, 0
-        for i, ch in enumerate(txt):
-            if ch == "(":
-                if depth == 0:
-                    start = i + 1
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    out.append(txt[start:i])
-        return out
-
-    try:
-        if kind == "POLYGON":
-            return [[ring(r) for r in rings_of(body)]]
-        return [[ring(r) for r in rings_of(poly)] for poly in rings_of(body)]
-    except (ValueError, IndexError):
-        return None
-
-
-def _ring_crossing_parity(px: float, py: float, poly) -> bool:
-    inside = False
-    n = len(poly)
-    for i in range(n):
-        x1, y1 = poly[i]
-        x2, y2 = poly[(i + 1) % n]
-        if (y1 > py) != (y2 > py):
-            xint = x1 + (py - y1) * (x2 - x1) / (y2 - y1)
-            if px < xint:
-                inside = not inside
-    return inside
-
-
-def _point_in_rings(px: float, py: float, polys) -> bool:
-    """Even-odd containment across each polygon's rings (shell XOR
-    holes); MULTIPOLYGON = any member polygon contains the point."""
-    for rings in polys:
-        parity = False
-        for r in rings:
-            if _ring_crossing_parity(px, py, r):
-                parity = not parity
-        if parity:
-            return True
-    return False
-
-
-def _shoelace(ring) -> float:
-    s = 0.0
-    for i in range(len(ring)):
-        x1, y1 = ring[i]
-        x2, y2 = ring[(i + 1) % len(ring)]
-        s += x1 * y2 - x2 * y1
-    return abs(s) / 2.0
-
-
-def _rings_area(polys) -> float:
-    """Shell areas minus hole areas, summed over the multipolygon —
-    ring orientation-insensitive (WKT doesn't guarantee winding)."""
-    total = 0.0
-    for rings in polys:
-        if rings:
-            total += _shoelace(rings[0]) - sum(_shoelace(r) for r in rings[1:])
-    return total
-
-
-def _make_st_contains():
-    import re as _re
-
-    @_pandas_udf("boolean")
-    def _st_contains_udf(poly_wkt: _pd.Series, point_wkt: _pd.Series) -> _pd.Series:
-        # queries pass one literal polygon — memoize the parse per batch
-        # instead of re-parsing WKT per row (VERDICT r1 'What's wrong' #6)
-        poly_cache: dict[str, object] = {}
-
-        def cached_poly(pw):
-            poly = poly_cache.get(pw)
-            if poly is None and pw not in poly_cache:
-                poly = poly_cache[pw] = _parse_rings(pw)
-            return poly
-
-        pt_re = _re.compile(r"POINT \(([-0-9.eE]+) ([-0-9.eE]+)\)")
-
-        def one(pw, ptw):
-            poly = cached_poly(pw) if pw else None
-            m = pt_re.match(ptw or "")
-            if poly is None or not m:
-                return None
-            return _point_in_rings(float(m.group(1)), float(m.group(2)), poly)
-
-        return _pd.Series([one(a, b) for a, b in zip(poly_wkt, point_wkt)])
-
-    return _st_contains_udf
-
-
-def _make_st_area():
-    @_pandas_udf("double")
-    def _st_area_udf(poly_wkt: _pd.Series) -> _pd.Series:
-        def one(pw):
-            polys = _parse_rings(pw)
-            return None if polys is None else _rings_area(polys)
-
-        return _pd.Series([one(p) for p in poly_wkt])
-
-    return _st_area_udf
-
-
-@_reg("stPolygon")
-def _st_polygon(wkt):
-    return _c(wkt)
-
-
-_reg("stContains")(
-    lambda poly, pt: _lazy_udf("st_contains", _make_st_contains)(_c(poly), _c(pt))
-)
-_reg("stWithin")(
-    lambda pt, poly: _lazy_udf("st_contains", _make_st_contains)(_c(poly), _c(pt))
-)
-_reg("stArea")(lambda poly: _lazy_udf("st_area", _make_st_area)(_c(poly)))
-
-
-def _segments(ring):
-    return [(ring[i], ring[(i + 1) % len(ring)]) for i in range(len(ring))]
-
-
-def _segs_intersect(p1, p2, p3, p4) -> bool:
-    """Proper segment intersection (shared endpoints don't count)."""
-
-    def orient(a, b, c):
-        v = (b[0] - a[0]) * (c[1] - a[1]) - (b[1] - a[1]) * (c[0] - a[0])
-        return 0 if v == 0 else (1 if v > 0 else -1)
-
-    o1, o2 = orient(p1, p2, p3), orient(p1, p2, p4)
-    o3, o4 = orient(p3, p4, p1), orient(p3, p4, p2)
-    return o1 != o2 and o3 != o4 and 0 not in (o1, o2, o3, o4)
-
-
-def _polys_disjoint(a_rings, b_rings) -> bool:
-    """True when two polygons (ring lists) neither cross, TOUCH, nor
-    contain one another — the clipping-free ST_Union case.  Touch
-    detection is exact (rational arithmetic) so edge-sharing or
-    vertex-on-edge pairs are routed to a merge path instead of being
-    wrongly concatenated as separate MULTIPOLYGON members."""
-    from fractions import Fraction
-
-    from pinot_spark.functions.pinot_geometry import _segs_cross
-
-    def fr_seg(s):
-        (x1, y1), (x2, y2) = s
-        return ((Fraction(x1), Fraction(y1)), (Fraction(x2), Fraction(y2)))
-
-    for ra in a_rings:
-        for rb in b_rings:
-            for s1 in _segments(ra):
-                for s2 in _segments(rb):
-                    if _segs_cross(*fr_seg(s1), *fr_seg(s2)):
-                        return False
-    return not (
-        _point_in_rings(*a_rings[0][0], [b_rings])
-        or _point_in_rings(*b_rings[0][0], [a_rings])
-    )
-
-
-def st_union_wkt(a: str, b: str) -> str:
-    """Scalar ST_Union over this engine's WKT geometries
-    (StUnionFunction.java role): point/multipoint unions are exact set
-    unions; polygon/multipolygon unions merge overlapping members with
-    Greiner-Hormann boolean clipping (functions/polyclip.py) and
-    concatenate disjoint ones into a MULTIPOLYGON.  Exactly-degenerate
-    configurations (vertex-on-edge, collinear overlapping edges) and
-    hole-bearing OVERLAPPING inputs fall back to the exact-rational
-    planar overlay in functions/pinot_geometry.py (boundary RETIRED —
-    validated against the reference GeoSpatialTest STUnion byte golden,
-    whose five polygons touch collinearly and carry a hole)."""
-    from pinot_spark.functions.wkb import from_wkt, to_wkt
-
-    ga, gb = from_wkt(a), from_wkt(b)
-
-    def pts(g):
-        return [g[1]] if g[0] == "POINT" else g[1] if g[0] == "MULTIPOINT" else None
-
-    pa, pb = pts(ga), pts(gb)
-    if pa is not None and pb is not None:
-        merged = sorted(set(pa) | set(pb))
-        return to_wkt(("POINT", merged[0]) if len(merged) == 1 else ("MULTIPOINT", merged))
-
-    def polys(g):
-        return [g[1]] if g[0] == "POLYGON" else g[1] if g[0] == "MULTIPOLYGON" else None
-
-    qa, qb = polys(ga), polys(gb)
-    if qa is not None and qb is not None:
-        from pinot_spark.functions.polyclip import DegenerateGeometry, clip
-        from pinot_spark.functions.pinot_geometry import format_wkt, union_polygons
-
-        members = qa + qb
-        merged_any = True
-        while merged_any:
-            merged_any = False
-            for i in range(len(members)):
-                for j in range(i + 1, len(members)):
-                    try:
-                        disjoint = _polys_disjoint(members[i], members[j])
-                    except DegenerateGeometry:
-                        disjoint = False
-                    if disjoint:
-                        continue
-                    if len(members[i]) > 1 or len(members[j]) > 1:
-                        # hole-bearing overlap: exact overlay handles it
-                        return format_wkt(union_polygons(members))
-                    try:
-                        rings = clip(members[i][0], members[j][0], "union")
-                    except DegenerateGeometry:
-                        # touching/collinear configuration: exact overlay
-                        return format_wkt(union_polygons(members))
-                    outer, holes, extras = rings[0], [], []
-                    for r in rings[1:]:
-                        if _ring_crossing_parity(r[0][0], r[0][1], outer):
-                            holes.append(r)  # enclosed void → hole ring
-                        else:
-                            extras.append([r])
-                    members = (
-                        [m for k, m in enumerate(members) if k not in (i, j)]
-                        + [[outer, *holes]]
-                        + extras
-                    )
-                    merged_any = True
-                    break
-                if merged_any:
-                    break
-        return to_wkt(("POLYGON", members[0]) if len(members) == 1 else ("MULTIPOLYGON", members))
-    # MIXED point/polygon union (boundary retired round 13 — JTS absorbs
-    # points covered by the areal union, uncovered points survive as a
-    # GEOMETRYCOLLECTION member; lines still raise by name inside
-    # pinot_geometry.union)
-    from pinot_spark.functions import pinot_geometry as _pgeo
-
-    return _pgeo.format_wkt(_pgeo.union([_pgeo.parse_wkt(a), _pgeo.parse_wkt(b)]))
-
-
-def _make_st_union():
-    @_pandas_udf("string")
-    def _st_union_udf(a: _pd.Series, b: _pd.Series) -> _pd.Series:
-        def one(x, y):
-            if x is None or y is None:
-                return None
-            if isinstance(x, (bytes, bytearray)) or isinstance(y, (bytes, bytearray)):
-                # Pinot serialized-bytes carrier → exact overlay, WKT out
-                from pinot_spark.functions import pinot_geometry as pgeo
-
-                return pgeo.format_wkt(pgeo.union([_geo_parse(x), _geo_parse(y)]))
-            return st_union_wkt(x, y)
-
-        return _pd.Series([one(x, y) for x, y in zip(a, b)], dtype=object)
-
-    return _st_union_udf
-
-
-_reg("stUnion")(lambda a, b: _lazy_udf("st_union", _make_st_union)(_c(a), _c(b)))
-
-
-# ---------------------------------------------------------------------------
-# Pinot-parity geometry surface (functions/pinot_geometry.py): the
-# reference's serialized-BYTES geometry model (GeometrySerializer.java
-# byte layout, 0x80 geography bit), JTS within/contains/equals
-# semantics, geography spherical area and great-circle distance.  Every
-# function below DUAL-ACCEPTS this engine's WKT-text carrier (str) and
-# Pinot serialized bytes, dispatching geography semantics from the
-# value's geography bit exactly like StDistanceFunction/StAreaFunction.
-# These re-register the geo names above with the full-semantics forms
-# (the registry is last-write-wins).
-# ---------------------------------------------------------------------------
-
-
-def _geo_parse(v):
-    from pinot_spark.functions import pinot_geometry as pgeo
-
-    if v is None:
-        return None
-    if isinstance(v, (bytes, bytearray)):
-        return pgeo.deserialize(bytes(v))
-    return pgeo.parse_wkt(v)
-
-
-def _geo_rowwise(out_type: str, fn):
-    """Pandas-UDF factory: fn(geom...) over parsed geometry args."""
-
-    def make():
-        @_pandas_udf(out_type)
-        def _udf(*cols: _pd.Series) -> _pd.Series:
-            out = []
-            for vals in zip(*cols):
-                if any(v is None for v in vals):
-                    out.append(None)
-                else:
-                    out.append(fn(*[_geo_parse(v) for v in vals]))
-            return _pd.Series(out, dtype=object)
-
-        return _udf
-
-    return make
-
-
-def _make_geo_point_bytes():
-    from pinot_spark.functions import pinot_geometry as pgeo
-
-    @_pandas_udf("binary")
-    def _udf(x: _pd.Series, y: _pd.Series, geog: _pd.Series) -> _pd.Series:
-        return _pd.Series(
-            [
-                None
-                if xv is None or yv is None
-                else pgeo.serialize(("POINT", (float(xv), float(yv)), bool(gv)))
-                for xv, yv, gv in zip(x, y, geog)
-            ],
-            dtype=object,
-        )
-
-    return _udf
-
-
-def _make_geo_from_text(geog: bool):
-    from pinot_spark.functions import pinot_geometry as pgeo
-
-    def make():
-        @_pandas_udf("binary")
-        def _udf(wkt: _pd.Series) -> _pd.Series:
-            return _pd.Series(
-                [None if w is None else pgeo.serialize(pgeo.parse_wkt(w, geog=geog)) for w in wkt],
-                dtype=object,
-            )
-
-        return _udf
-
-    return make
-
-
-def _geo_impls():
-    from pinot_spark.functions import pinot_geometry as pgeo
-
-    return pgeo
-
-
-_reg("stGeomFromText")(
-    lambda w: _lazy_udf("geo_from_text", _make_geo_from_text(False))(_c(w))
-)
-_reg("stGeogFromText")(
-    lambda w: _lazy_udf("geog_from_text", _make_geo_from_text(True))(_c(w))
-)
-
-
-def _geo_unary(name: str, out_type: str, impl_name: str):
-    def fn(g):
-        pgeo = _geo_impls()
-        return getattr(pgeo, impl_name)(g)
-
-    return lambda c: _lazy_udf(name, _geo_rowwise(out_type, fn))(_c(c))
-
-
-def _geo_binary(name: str, out_type: str, impl_name: str):
-    def fn(a, b):
-        pgeo = _geo_impls()
-        return getattr(pgeo, impl_name)(a, b)
-
-    return lambda a, b: _lazy_udf(name, _geo_rowwise(out_type, fn))(_c(a), _c(b))
-
-
-_reg("stAsText")(_geo_unary("geo_as_text", "string", "format_wkt"))
-_reg("stGeometryType")(_geo_unary("geo_type", "string", "geometry_type"))
-_reg("stArea")(_geo_unary("geo_area", "double", "area"))
-_reg("stX")(
-    lambda c: _lazy_udf(
-        "geo_x", _geo_rowwise("double", lambda g: None if g[1] is None else float(g[1][0]))
-    )(_c(c))
-)
-_reg("stY")(
-    lambda c: _lazy_udf(
-        "geo_y", _geo_rowwise("double", lambda g: None if g[1] is None else float(g[1][1]))
-    )(_c(c))
-)
-_reg("stDistance")(_geo_binary("geo_distance", "double", "distance"))
-_reg("stWithin")(_geo_binary("geo_within", "boolean", "within"))
-_reg("stContains")(_geo_binary("geo_contains", "boolean", "contains"))
-_reg("stEquals")(_geo_binary("geo_equals", "boolean", "equals"))
-
-# H3-surface grid functions (geoToH3 / gridDisk / gridDistance) — pure-
-# math aperture-7 hex grid, engine-own cell ids (see functions/h3grid.py
-# wire-format note).
-from pinot_spark.functions import h3grid as _h3grid  # noqa: E402
-
-_h3grid.register(_reg, _lazy_udf, _c)
-
-# WKB / GeoJSON geometry constructors (StGeomFromWKBFunction.java,
-# StAsBinaryFunction.java, ConstructFromGeoJsonFunction.java) — pure
-# Python codecs over the public OGC WKB / RFC 7946 formats.
-from pinot_spark.functions import wkb as _wkb  # noqa: E402
-
-_wkb.register(_reg, _lazy_udf, _c)
-
-
 # Extended long-tail surface (typed array variants, MV datetime variants,
 # URL/IP/hash/UUID families, …) registers itself into SCALAR_FUNCTIONS.
 from pinot_spark.functions import scalar_ext  # noqa: E402,F401
 from pinot_spark.functions import sketches  # noqa: E402,F401
+from pinot_spark.functions import geo_udfs  # noqa: E402,F401

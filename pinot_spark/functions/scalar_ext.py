@@ -920,7 +920,6 @@ for _hname, _hkey in [
     ("crc32c", "crc32c"),
     ("sha224", "sha224"),
     ("cityhash32", "cityhash32"),  # exact CityHash v1.1 (cityhash.py)
-    ("cityhash64", "cityhash64"),
     ("cityhash128", "cityhash128"),
     ("md2", "md2"),  # exact RFC 1319 (md2.py)
 ]:
@@ -1321,73 +1320,7 @@ _reg("hexdecimaltolong")(lambda s: F.conv(_c(s), 16, 10).cast("long"))
 _reg("bigdecimaltobytes")(lambda d: _c(d).cast("decimal(38,18)").cast("string").cast("binary"))
 _reg("bytestobigdecimal")(lambda b: F.decode(_c(b), "utf-8").cast("decimal(38,18)"))
 
-# ---------------------------------------------------------------------------
-# geo extras (GeohashFunctions.java, ScalarFunctions ST_*) — geometry is
-# WKT text in this engine, so from/to-text constructors are near-identity
-# ---------------------------------------------------------------------------
-
-_reg("stgeomfromtext", "stgeogfromtext")(lambda wkt: _c(wkt))
-_reg("stgeometrytype")(lambda g: F.regexp_extract(_c(g), r"^\s*([A-Za-z]+)", 1))
-_reg("stequals")(
-    lambda a, b: F.regexp_replace(F.trim(_c(a)), r"\s+", " ")
-    == F.regexp_replace(F.trim(_c(b)), r"\s+", " ")
-)
-# stAsBinary / stGeomFromWKB / stAsGeoJson / stGeomFromGeoJson: real OGC
-# WKB + RFC 7946 GeoJSON codecs live in functions/wkb.py (registered from
-# functions/scalar.py), covering POINT/LINESTRING/POLYGON-with-holes/
-# MULTIPOINT/MULTIPOLYGON — not the former WKT-bytes/point-only stand-ins.
-
-
-def _make_geohash_decode(which: str):
-    def factory():
-        @_pandas_udf("double")
-        def _udf(s: _pd.Series) -> _pd.Series:
-            B32 = "0123456789bcdefghjkmnpqrstuvwxyz"
-
-            def one(gh):
-                if gh is None:
-                    return None
-                lat_iv, lng_iv = [-90.0, 90.0], [-180.0, 180.0]
-                even = True
-                for ch in gh:
-                    cd = B32.index(ch)
-                    for bit in (16, 8, 4, 2, 1):
-                        iv = lng_iv if even else lat_iv
-                        mid = (iv[0] + iv[1]) / 2
-                        if cd & bit:
-                            iv[0] = mid
-                        else:
-                            iv[1] = mid
-                        even = not even
-                return (
-                    (lat_iv[0] + lat_iv[1]) / 2 if which == "lat" else (lng_iv[0] + lng_iv[1]) / 2
-                )
-
-            return _pd.Series([one(v) for v in s], dtype="object")
-
-        return _udf
-
-    return factory
-
-
-_reg("decodegeohashlatitude", "decodegeohashlat")(
-    lambda gh: _lazy_udf("geohash_lat", _make_geohash_decode("lat"))(_c(gh).cast("string"))
-)
-_reg("decodegeohashlongitude", "decodegeohashlon")(
-    lambda gh: _lazy_udf("geohash_lng", _make_geohash_decode("lng"))(_c(gh).cast("string"))
-)
-_reg("decodegeohash")(
-    lambda gh: F.array(
-        _lazy_udf("geohash_lng", _make_geohash_decode("lng"))(_c(gh).cast("string")),
-        _lazy_udf("geohash_lat", _make_geohash_decode("lat"))(_c(gh).cast("string")),
-    )
-)
-
-
-# gridDisk/gridDistance/geoToH3 (TransformFunctionType:195-229) are
-# implemented by the pure-math aperture-7 grid in functions/h3grid.py,
-# registered from functions/scalar.py (engine-own cell ids — see the
-# wire-format note there).
+# geometry, geohash and H3 functions: functions/geo_udfs.py
 
 # ---------------------------------------------------------------------------
 # vector aliases (VectorFunctions.java:112-126)

@@ -6,9 +6,9 @@ and the Python side of the dialect's sketch aggregations.
 and gives its Spark return type, its kind (scalar, or grouped
 aggregate) and a plain-Python body over one Arrow batch's arguments as
 lists (``scalar.arrow_rows_udf``: NULL arrives as None and a BIGINT
-keeps all 64 bits).  The SQL surface registers every row under its name
-(``dialect._ensure_sketch_udfs``); the Column builders below call the
-same rows, so both surfaces build identical bytes.
+keeps all 64 bits).  The SQL surface registers the rows a translated
+statement calls (``dialect._ensure_udfs``); the Column builders below
+call the same rows, so both surfaces build identical bytes.
 
 Wire formats:
 
@@ -31,14 +31,12 @@ from __future__ import annotations
 import math
 import re
 import struct
-from collections.abc import Callable
 from dataclasses import dataclass
-from typing import NamedTuple
 
 import numpy as np
 import pyspark.sql.functions as F
 
-from pinot_spark.functions.scalar import _c, _lazy_udf, _reg, arrow_rows_udf
+from pinot_spark.functions.scalar import UdfRow, _c, _reg, row_udf
 from pinot_spark.functions.scalar_ext import _murmur3_x64_128
 from pinot_spark.operators.cs_hll import (
     CsHll,
@@ -89,33 +87,30 @@ class TupleSketch:
             return float(len(self.hashes))
         return len(self.hashes) / (self.theta_u64 / float(2**64))
 
-    def _combine(self, other: "TupleSketch", keep, mode) -> "TupleSketch":
-        th = min(self.theta_u64, other.theta_u64)
-        merged: dict[int, int] = {}
-        for h, v in zip(self.hashes.tolist(), self.values.tolist()):
-            merged[h] = v
-        for h, v in zip(other.hashes.tolist(), other.values.tolist()):
-            merged[h] = mode(merged[h], v) if h in merged else v
-        in_a = set(self.hashes.tolist())
-        in_b = set(other.hashes.tolist())
-        hs = sorted(h for h in merged if h < th and keep(h in in_a, h in in_b))
-        if len(hs) > self.k:
-            th = hs[self.k]
-            hs = hs[: self.k]
-        return TupleSketch(
-            self.k, th,
-            np.array(hs, dtype=np.uint64),
-            np.array([merged[h] for h in hs], dtype=np.int64),
-        )
+    def _combine(self, others, keep=None, mode=np.add) -> "TupleSketch":
+        from pinot_spark.operators.ds_theta import kmv_merge
 
-    def union(self, other: "TupleSketch", mode) -> "TupleSketch":
-        return self._combine(other, lambda a, b: True, mode)
+        sks = (self, *others)
+        th, hs, vs = kmv_merge(
+            [(s.hashes, s.values) for s in sks],
+            min(s.theta_u64 for s in sks),
+            self.k,
+            mode,
+            keep,
+        )
+        return TupleSketch(self.k, th, hs, vs)
+
+    def union(self, *others: "TupleSketch", mode=np.add) -> "TupleSketch":
+        """One merge of this sketch and ``others``: truncation at the
+        (k+1)-th hash is associative, so the bytes equal a pairwise
+        fold's."""
+        return self._combine(others, None, mode)
 
     def intersect(self, other: "TupleSketch", mode) -> "TupleSketch":
-        return self._combine(other, lambda a, b: a and b, mode)
+        return self._combine([other], np.logical_and, mode)
 
     def a_not_b(self, other: "TupleSketch") -> "TupleSketch":
-        return self._combine(other, lambda a, b: a and not b, lambda x, y: x)
+        return self._combine([other], lambda a, b: a & ~b)
 
     def to_bytes(self) -> bytes:
         th = self.theta_u64 if self.theta_u64 < 2**64 else 0
@@ -133,7 +128,8 @@ class TupleSketch:
         return cls(k, th if th != 0 else 2**64, hashes, values)
 
 
-_MODES = {"sum": lambda a, b: a + b, "min": min, "max": max}
+# how duplicate keys' values combine, as ufuncs (ds_theta.kmv_merge)
+_MODES = {"sum": np.add, "min": np.minimum, "max": np.maximum}
 
 
 def _first(xs: list, default=None):
@@ -351,12 +347,14 @@ def _tuple_binop(op: str, mode: str):
 
 
 def _tuple_union_all(blobs, what: str):
-    """Sum-mode union of tuple blobs in either format, or None for none."""
+    """Sum-mode union of tuple blobs in either format (one merge over
+    the whole list), or None for none.  A lone sketch passes through
+    untrimmed, as a pairwise fold leaves it."""
     d, sketches = _parse_one_domain(_load_any_tuple, blobs, what)
-    acc = None
-    for s in sketches:
-        acc = s if acc is None else _tuple_op(d, acc, "union", s, "sum")
-    return None if acc is None else _domain_bytes(d, acc)
+    if not sketches:
+        return None
+    acc = sketches[0].union(*sketches[1:]) if len(sketches) > 1 else sketches[0]
+    return _domain_bytes(d, acc)
 
 
 def tuple_merge_sums(arrs: list) -> list:
@@ -1159,99 +1157,89 @@ def cpc_estimates(blobs: list) -> list:
 # --- the sketch-UDF table -----------------------------------------------------
 
 
-class SketchUdf(NamedTuple):
-    """Spark return type (DDL), body over one batch's argument lists,
-    and whether it is a grouped aggregate (one value per group)."""
-
-    rtype: str
-    body: Callable
-    agg: bool = False
-
-
 def _with_params(body, *defaults):
     """``body(values, *params)`` for UDFs whose trailing arguments are
     literals: each param is its column's first value, or its default."""
     return lambda v, *ps: body(v, *(_first(p, d) for p, d in zip(ps, defaults)))
 
 
-SKETCH_UDFS: dict[str, SketchUdf] = {
+SKETCH_UDFS: dict[str, UdfRow] = {
     # theta (either wire format)
-    "__theta_singleton": SketchUdf("binary", theta_singletons),
-    "__ds_theta_single": SketchUdf("binary", _with_params(ds_theta_singles, None)),
-    "__theta_estimate": SketchUdf(
+    "__theta_singleton": UdfRow("binary", theta_singletons),
+    "__ds_theta_single": UdfRow("binary", _with_params(ds_theta_singles, None)),
+    "__theta_estimate": UdfRow(
         "bigint",
         lambda a: [None if x is None else round(_load_any_theta(bytes(x))[1].estimate()) for x in a],
     ),
-    "__theta_diff": SketchUdf("binary", _theta_binop("a_not_b")),
-    "__theta_union": SketchUdf("binary", _theta_binop("union")),
-    "__theta_intersect": SketchUdf("binary", _theta_binop("intersect")),
-    "__theta_to_string": SketchUdf("string", theta_to_strings),
-    "__theta_union_blobs": SketchUdf("binary", theta_union_blobs),
-    "__theta_filtered": SketchUdf("bigint", theta_filtered),
+    "__theta_diff": UdfRow("binary", _theta_binop("a_not_b")),
+    "__theta_union": UdfRow("binary", _theta_binop("union")),
+    "__theta_intersect": UdfRow("binary", _theta_binop("intersect")),
+    "__theta_to_string": UdfRow("string", theta_to_strings),
+    "__theta_union_blobs": UdfRow("binary", theta_union_blobs),
+    "__theta_filtered": UdfRow("bigint", theta_filtered),
     # integer tuple (either wire format; sum mode unless named)
-    "__tuple_singleton": SketchUdf("binary", tuple_singletons),
-    "__ds_tuple_single": SketchUdf("binary", ds_tuple_singles),
-    "__tuple_estimate": SketchUdf("bigint", _tuple_stat(lambda s: round(s.estimate()))),
-    "__tuple_sum_values": SketchUdf("bigint", _tuple_stat(lambda s: int(s.values.sum()))),
-    "__tuple_avg_value": SketchUdf("double", _tuple_stat(_tuple_avg)),
-    "__tuple_merge_sum": SketchUdf("binary", tuple_merge_sums),
-    "__tuple_partial": SketchUdf("binary", tuple_partial, agg=True),
-    "__tuple_union": SketchUdf("binary", _tuple_binop("union", "sum")),
-    "__tuple_intersect": SketchUdf("binary", _tuple_binop("intersect", "sum")),
-    "__tuple_diff": SketchUdf("binary", _tuple_binop("a_not_b", "sum")),
+    "__tuple_singleton": UdfRow("binary", tuple_singletons),
+    "__ds_tuple_single": UdfRow("binary", ds_tuple_singles),
+    "__tuple_estimate": UdfRow("bigint", _tuple_stat(lambda s: round(s.estimate()))),
+    "__tuple_sum_values": UdfRow("bigint", _tuple_stat(lambda s: int(s.values.sum()))),
+    "__tuple_avg_value": UdfRow("double", _tuple_stat(_tuple_avg)),
+    "__tuple_merge_sum": UdfRow("binary", tuple_merge_sums),
+    "__tuple_partial": UdfRow("binary", tuple_partial, agg=True),
+    "__tuple_union": UdfRow("binary", _tuple_binop("union", "sum")),
+    "__tuple_intersect": UdfRow("binary", _tuple_binop("intersect", "sum")),
+    "__tuple_diff": UdfRow("binary", _tuple_binop("a_not_b", "sum")),
     # ULL (engine-own)
-    "__ull_from_regs": SketchUdf("binary", ull_from_regs),
-    "__ull_singleton": SketchUdf("binary", ull_singletons),
-    "__ull_estimate": SketchUdf("bigint", ull_estimates),
+    "__ull_from_regs": UdfRow("binary", ull_from_regs),
+    "__ull_singleton": UdfRow("binary", ull_singletons),
+    "__ull_estimate": UdfRow("bigint", ull_estimates),
     # HLL (clearspring; engine-own blobs read)
-    "__hll_estimate": SketchUdf("bigint", hll_estimates),
-    "__hll_union": SketchUdf("binary", hll_unions),
-    "__cs_hll_single": SketchUdf("binary", _with_params(cs_hll_singles, None, 8)),
-    "__cs_hllpp_single": SketchUdf("binary", _with_params(cs_hllpp_singles, None, 14, 0)),
-    "__cs_hll_pair": SketchUdf("bigint", _with_params(cs_hll_pairs, None, 8)),
-    "__cs_hllpp_pair": SketchUdf("bigint", _with_params(cs_hllpp_pairs, None, 14)),
-    "__cs_hll_pairs_arr": SketchUdf("array<bigint>", _pair_arrays(_cs_hll_pair_of)),
-    "__cs_hllpp_pairs_arr": SketchUdf("array<bigint>", _pair_arrays(_cs_hllpp_pair_of)),
-    "__cs_hll_from_regs": SketchUdf("binary", _from_pairs(cs_hll_from_pairs)),
-    "__cs_hllpp_from_regs": SketchUdf("binary", _from_pairs(cs_hllpp_from_pairs)),
-    "__cs_hll_merge_blobs": SketchUdf("binary", cs_hll_merge_blobs),
-    "__cs_hll_mv_partial": SketchUdf("binary", _mv_partial(cs_hll_from_pairs), agg=True),
-    "__cs_hllpp_mv_partial": SketchUdf("binary", _mv_partial(cs_hllpp_from_pairs), agg=True),
+    "__hll_estimate": UdfRow("bigint", hll_estimates),
+    "__hll_union": UdfRow("binary", hll_unions),
+    "__cs_hll_single": UdfRow("binary", _with_params(cs_hll_singles, None, 8)),
+    "__cs_hllpp_single": UdfRow("binary", _with_params(cs_hllpp_singles, None, 14, 0)),
+    "__cs_hll_pair": UdfRow("bigint", _with_params(cs_hll_pairs, None, 8)),
+    "__cs_hllpp_pair": UdfRow("bigint", _with_params(cs_hllpp_pairs, None, 14)),
+    "__cs_hll_pairs_arr": UdfRow("array<bigint>", _pair_arrays(_cs_hll_pair_of)),
+    "__cs_hllpp_pairs_arr": UdfRow("array<bigint>", _pair_arrays(_cs_hllpp_pair_of)),
+    "__cs_hll_from_regs": UdfRow("binary", _from_pairs(cs_hll_from_pairs)),
+    "__cs_hllpp_from_regs": UdfRow("binary", _from_pairs(cs_hllpp_from_pairs)),
+    "__cs_hll_merge_blobs": UdfRow("binary", cs_hll_merge_blobs),
+    "__cs_hll_mv_partial": UdfRow("binary", _mv_partial(cs_hll_from_pairs), agg=True),
+    "__cs_hllpp_mv_partial": UdfRow("binary", _mv_partial(cs_hllpp_from_pairs), agg=True),
     # CPC (DataSketches)
-    "__cpc_coupon": SketchUdf("bigint", _with_params(ds_cpc_coupons, None, 12)),
-    "__cpc_from_coupons": SketchUdf("binary", _with_params(ds_cpc_from_coupons, 12)),
-    "__ds_cpc_single": SketchUdf("binary", _with_params(ds_cpc_singles, None, 12)),
-    "__cpc_union": SketchUdf("binary", ds_cpc_unions),
-    "__cpc_estimate": SketchUdf("bigint", cpc_estimates),
+    "__cpc_coupon": UdfRow("bigint", _with_params(ds_cpc_coupons, None, 12)),
+    "__cpc_from_coupons": UdfRow("binary", _with_params(ds_cpc_from_coupons, 12)),
+    "__ds_cpc_single": UdfRow("binary", _with_params(ds_cpc_singles, None, 12)),
+    "__cpc_union": UdfRow("binary", ds_cpc_unions),
+    "__cpc_estimate": UdfRow("bigint", cpc_estimates),
     # KLL (DataSketches) and t-digest (engine-own)
-    "__ds_kll_single": SketchUdf("binary", ds_kll_singles),
-    "__ds_kll_merge": SketchUdf("binary", ds_kll_merges),
-    "__ds_kll_quantile": SketchUdf("double", ds_kll_quantiles),
-    "__tdigest_from_values": SketchUdf("binary", tdigest_from_values),
-    "__tdigest_from_quantiles": SketchUdf("binary", tdigest_from_quantiles),
-    "__tdigest_merge": SketchUdf("binary", tdigest_merges),
-    "__tdigest_quantile": SketchUdf("double", tdigest_quantiles_any),
-    "__tdigest_partial": SketchUdf("binary", tdigest_partial, agg=True),
+    "__ds_kll_single": UdfRow("binary", ds_kll_singles),
+    "__ds_kll_merge": UdfRow("binary", ds_kll_merges),
+    "__ds_kll_quantile": UdfRow("double", ds_kll_quantiles),
+    "__tdigest_from_values": UdfRow("binary", tdigest_from_values),
+    "__tdigest_from_quantiles": UdfRow("binary", tdigest_from_quantiles),
+    "__tdigest_merge": UdfRow("binary", tdigest_merges),
+    "__tdigest_quantile": UdfRow("double", tdigest_quantiles_any),
+    "__tdigest_partial": UdfRow("binary", tdigest_partial, agg=True),
     # frequent items (DataSketches)
-    "__freq_long_partial": SketchUdf("binary", _freq_partial(strings=False), agg=True),
-    "__freq_str_partial": SketchUdf("binary", _freq_partial(strings=True), agg=True),
-    "__freq_long_merge": SketchUdf("binary", _freq_merge(strings=False)),
-    "__freq_str_merge": SketchUdf("binary", _freq_merge(strings=True)),
-    "__freq_long_estimate": SketchUdf("bigint", _freq_estimate(strings=False)),
-    "__freq_str_estimate": SketchUdf("bigint", _freq_estimate(strings=True)),
+    "__freq_long_partial": UdfRow("binary", _freq_partial(strings=False), agg=True),
+    "__freq_str_partial": UdfRow("binary", _freq_partial(strings=True), agg=True),
+    "__freq_long_merge": UdfRow("binary", _freq_merge(strings=False)),
+    "__freq_str_merge": UdfRow("binary", _freq_merge(strings=True)),
+    "__freq_long_estimate": UdfRow("bigint", _freq_estimate(strings=False)),
+    "__freq_str_estimate": UdfRow("bigint", _freq_estimate(strings=True)),
     # JSON_EXTRACT_KEY rides the same registration
-    "__json_all_keys": SketchUdf("array<string>", json_all_keys),
+    "__json_all_keys": UdfRow("array<string>", json_all_keys),
 }
 # the Column surface's min/max tuple modes (no SQL name emits them)
 for _op in ("union", "intersect"):
     for _mode in ("min", "max"):
-        SKETCH_UDFS[f"__tuple_{_op}_{_mode}"] = SketchUdf("binary", _tuple_binop(_op, _mode))
+        SKETCH_UDFS[f"__tuple_{_op}_{_mode}"] = UdfRow("binary", _tuple_binop(_op, _mode))
 
 
 def sketch_udf(name: str):
     """The table row ``name`` as a Spark UDF (built once per process)."""
-    row = SKETCH_UDFS[name]
-    return _lazy_udf(name, lambda: arrow_rows_udf(row.rtype, row.body, row.agg))
+    return row_udf(name, SKETCH_UDFS[name])
 
 
 # --- Column surface -----------------------------------------------------------

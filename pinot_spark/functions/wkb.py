@@ -19,9 +19,6 @@ import json
 import re
 import struct
 
-import pandas as _pd
-from pyspark.sql.functions import pandas_udf as _pandas_udf
-
 _WKB_POINT, _WKB_LINESTRING, _WKB_POLYGON = 1, 2, 3
 _WKB_MULTIPOINT, _WKB_MULTILINESTRING, _WKB_MULTIPOLYGON = 4, 5, 6
 
@@ -243,55 +240,3 @@ def wkt_to_geojson(wkt: str) -> str:
     else:
         coords = [[[[_jnum(x), _jnum(y)] for x, y in r] for r in rings] for rings in c]
     return json.dumps({"type": gj_type, "coordinates": coords}, separators=(",", ":"))
-
-
-# --- pandas UDF wrappers + registry hookup ---------------------------------
-
-
-def _series_map(fn, null_on_error: bool = False):
-    def apply(s: _pd.Series) -> _pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            try:
-                return fn(v)
-            except (ValueError, IndexError, KeyError, TypeError, struct.error):
-                if null_on_error:
-                    return None
-                raise
-
-        return _pd.Series([one(v) for v in s])
-
-    return apply
-
-
-def _make_from_wkb():
-    return _pandas_udf("string")(_series_map(wkb_to_wkt, null_on_error=True))
-
-
-def _make_as_binary():
-    return _pandas_udf("binary")(_series_map(wkt_to_wkb, null_on_error=True))
-
-
-def _make_from_geojson():
-    return _pandas_udf("string")(_series_map(geojson_to_wkt, null_on_error=True))
-
-
-def _make_as_geojson():
-    return _pandas_udf("string")(_series_map(wkt_to_geojson, null_on_error=True))
-
-
-def register(reg, lazy_udf, col) -> None:
-    """Install the WKB/GeoJSON surface into the scalar registry."""
-    reg("stGeomFromWKB", "stGeogFromWKB")(
-        lambda b: lazy_udf("geom_from_wkb", _make_from_wkb)(col(b).cast("binary"))
-    )
-    reg("stAsBinary")(
-        lambda g: lazy_udf("geom_as_binary", _make_as_binary)(col(g).cast("string"))
-    )
-    reg("stGeomFromGeoJson", "stGeogFromGeoJson")(
-        lambda s: lazy_udf("geom_from_geojson", _make_from_geojson)(col(s).cast("string"))
-    )
-    reg("stAsGeoJson")(
-        lambda g: lazy_udf("geom_as_geojson", _make_as_geojson)(col(g).cast("string"))
-    )

@@ -363,6 +363,43 @@ def is_ds_tuple_bytes(b: bytes) -> bool:
     )
 
 
+def kmv_merge(parts, theta: int, k: int | None, reduce=np.add, keep=None):
+    """Merge KMV hash sets that carry an int64 summary per hash, the
+    tuple-sketch set operations' one kernel.  ``parts`` is a list of
+    (hashes, values); hashes at or above ``theta`` (2**64 for none)
+    drop; a hash held by several parts folds its values with ``reduce``
+    (a ufunc, or a binary Python function); ``keep(in_first,
+    in_second)`` (boolean arrays over the distinct hashes of a pair)
+    filters them; more than ``k`` survivors keep the ``k`` smallest,
+    and the (k+1)-th becomes theta.  Returns (theta, sorted uint64
+    hashes, int64 values)."""
+    h = np.concatenate([np.asarray(p[0], dtype=np.uint64) for p in parts])
+    v = np.concatenate([np.asarray(p[1], dtype=np.int64) for p in parts])
+    src = np.repeat(np.arange(len(parts)), [len(p[0]) for p in parts])
+    if theta < 2**64:
+        below = h < np.uint64(theta)
+        h, v, src = h[below], v[below], src[below]
+    order = np.argsort(h, kind="stable")
+    h, v, src = h[order], v[order], src[order]
+    if len(h):
+        starts = np.flatnonzero(np.r_[True, h[1:] != h[:-1]])
+        if isinstance(reduce, np.ufunc):
+            v = reduce.reduceat(v, starts)
+        else:
+            v = np.frompyfunc(reduce, 2, 1).reduceat(v, starts).astype(np.int64)
+        h = h[starts]
+        if keep is not None:
+            sel = keep(
+                np.logical_or.reduceat(src == 0, starts),
+                np.logical_or.reduceat(src == 1, starts),
+            )
+            h, v = h[sel], v[sel]
+    if k is not None and len(h) > k:
+        theta = int(h[k])
+        h, v = h[:k], v[:k]
+    return theta, h, v
+
+
 @dataclass
 class DsTupleSketch:
     """Parsed DataSketches integer-tuple sketch (Sum mode): sorted uint64
@@ -411,21 +448,6 @@ class DsTupleSketch:
             off += 13
         order = np.argsort(hashes)
         return cls(theta, hashes[order], values[order])
-
-    @classmethod
-    def _parse_compressed(cls, b: bytes) -> "DsThetaSketch":
-        """Serial version 4 (module docstring): unpack the bit-packed
-        deltas into 64-bit words, then sum them back into hashes."""
-        bits, width = b[3], b[4]
-        theta, off = MAX_THETA, 8
-        if b[0] & 0x3F == 2:
-            theta, off = struct.unpack_from("<q", b, 8)[0], 16
-        n = int.from_bytes(b[off : off + width], "little")
-        packed = np.unpackbits(np.frombuffer(b, dtype=np.uint8, offset=off + width))
-        words = np.zeros((n, 64), dtype=np.uint8)
-        words[:, 64 - bits :] = packed[: n * bits].reshape(n, bits)
-        deltas = np.packbits(words, axis=1).view(">u8").ravel()
-        return cls(theta, np.cumsum(deltas, dtype=np.uint64))
 
     def serialize(self) -> bytes:
         n = len(self.hashes)
@@ -489,28 +511,20 @@ class DsTupleSketch:
     def sum_values(self) -> int:
         return int(self.values.sum())
 
-    def union(self, other: "DsTupleSketch", k: int | None = 4096) -> "DsTupleSketch":
-        th = min(self.theta, other.theta)
-        agg: dict[int, int] = {}
-        for sk in (self, other):
-            for h, v in zip(sk.hashes, sk.values):
-                if int(h) < th:
-                    agg[int(h)] = int(np.int32(agg.get(int(h), 0) + int(v)))
-        hashes = np.array(sorted(agg), dtype=np.uint64)
-        values = np.array([agg[int(h)] for h in hashes], dtype=np.int64)
-        if k is not None and len(hashes) > k:
-            th = int(hashes[k])
-            hashes, values = hashes[:k], values[:k]
-        return DsTupleSketch(th, hashes, values)
+    def union(self, *others: "DsTupleSketch", k: int | None = 4096) -> "DsTupleSketch":
+        """Sum-mode union of this sketch and ``others`` (int32 wrap-sum
+        summaries, IntegerSummary.Mode.Sum) in one merge."""
+        sks = (self, *others)
+        th, hashes, values = kmv_merge(
+            [(s.hashes, s.values) for s in sks], min(s.theta for s in sks), k
+        )
+        return DsTupleSketch(th, hashes, values.astype(np.int32).astype(np.int64))
 
     def intersect(self, other: "DsTupleSketch") -> "DsTupleSketch":
-        th = min(self.theta, other.theta)
-        mine = {int(h): int(v) for h, v in zip(self.hashes, self.values)}
-        agg = {
-            int(h): int(np.int32(mine[int(h)] + int(v)))
-            for h, v in zip(other.hashes, other.values)
-            if int(h) in mine and int(h) < th
-        }
-        hashes = np.array(sorted(agg), dtype=np.uint64)
-        values = np.array([agg[int(h)] for h in hashes], dtype=np.int64)
-        return DsTupleSketch(th, hashes, values)
+        th, hashes, values = kmv_merge(
+            [(self.hashes, self.values), (other.hashes, other.values)],
+            min(self.theta, other.theta),
+            None,
+            keep=np.logical_and,
+        )
+        return DsTupleSketch(th, hashes, values.astype(np.int32).astype(np.int64))

@@ -88,7 +88,7 @@ class TupleAcc:
     including the loud mixed-hash-domain guard."""
 
     def __init__(self):
-        from pinot_spark.functions.sketches import TupleSketch, _MODES
+        from pinot_spark.functions.sketches import TupleSketch
         from pinot_spark.operators.ds_theta import (
             DsTupleSketch,
             is_ds_tuple_bytes,
@@ -97,7 +97,6 @@ class TupleAcc:
         self._own = TupleSketch
         self._ds = DsTupleSketch
         self._is_ds = is_ds_tuple_bytes
-        self._sum = _MODES["sum"]
         self.acc = None
         self.domain = None
 
@@ -118,12 +117,8 @@ class TupleAcc:
                 "(murmur-9001) and engine-native (xxhash64) sketches — "
                 "the hash domains are incompatible"
             )
-        if self.acc is None:
-            self.acc = s
-        elif d == "ds":
-            self.acc = self.acc.union(s)
-        else:
-            self.acc = self.acc.union(s, mode=self._sum)
+        # both formats' union is sum-mode
+        self.acc = s if self.acc is None else self.acc.union(s)
 
     def blob(self) -> bytes:
         if self.acc is None:

@@ -713,8 +713,9 @@ def dialect_raw_theta_bigint_key(spark, sf_dir):
     dominant real-world sketch shape), mixed with native COUNT(*).
     Theta is a native aggregate (theta_sketch_agg), so the bigint key
     groups in the JVM with no key carrier and no Python worker; the
-    zero-shuffle route's split 32-bit key halves serve the pandas-UDAF
-    families (tests/test_plan_quality.py::
+    pandas-UDAF families take the zero-shuffle route, whose mapInArrow
+    partials read the BIGINT key exactly from Arrow
+    (tests/test_plan_quality.py::
     test_raw_theta_bigint_key_takes_zero_shuffle_route checks both).
     Per-group event_type cardinality is far under the nominal entries,
     so the theta sketch is EXACT and the oracle mirrors
@@ -1347,9 +1348,10 @@ def dialect_raw_theta_timestamp_key(spark, sf_dir):
     """Raw theta grouped by a native TIMESTAMP key, mixed with
     COUNT(*).  Theta is a native aggregate (theta_sketch_agg), so the
     timestamp key groups in the JVM: one partial/final aggregation, no
-    key carrier, no Python worker.  The zero-shuffle route's
-    unix_micros key halves serve the pandas-UDAF families (round 11;
-    test_raw_theta_timestamp_key_takes_zero_shuffle_route checks both).
+    key carrier, no Python worker.  The pandas-UDAF families take the
+    zero-shuffle route, whose mapInArrow partials read the TIMESTAMP
+    key exactly from Arrow
+    (test_raw_theta_timestamp_key_takes_zero_shuffle_route checks both).
     Hourly user cardinalities stay far under k=4096, so estimates equal
     the oracle's exact distinct counts.  Reference: the segment-local
     sketch build + broker merge contract
@@ -1381,10 +1383,10 @@ def dialect_raw_theta_decimal_key(spark, sf_dir):
     """Raw theta grouped by a DECIMAL key, mixed with COUNT(*).  Theta
     is a native aggregate (theta_sketch_agg), so the decimal key groups
     in the JVM with no key carrier and no Python worker.  The
-    zero-shuffle route's canonical-string key carrier (round 12) serves
-    the pandas-UDAF families (test_raw_theta_decimal_key_takes_zero_
-    shuffle_route checks both, with DECIMAL(38,10) magnitudes past
-    float64 and NULL keys).  Per-quantity part cardinalities stay far
+    pandas-UDAF families take the zero-shuffle route, whose mapInArrow
+    partials read the DECIMAL key exactly from Arrow
+    (test_raw_theta_decimal_key_takes_zero_shuffle_route checks both,
+    with DECIMAL(38,10) magnitudes past float64 and NULL keys).  Per-quantity part cardinalities stay far
     under k=4096, so estimates equal the oracle's exact distinct
     counts.  Reference: BIG_DECIMAL-typed
     group-by keys (pinot-spi FieldSpec BIG_DECIMAL;

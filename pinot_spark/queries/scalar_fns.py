@@ -620,7 +620,7 @@ def fn_binary_conversion(spark, sf_dir):
 def fn_geo_point_family(spark, sf_dir):
     """Geospatial point functions (TransformFunctionType:195-229 subset):
     ST_Point WKT construction, planar ST_Distance, haversine geography
-    distance. Polygon algebra is stubbed (no geometry lib in env)."""
+    distance."""
     t = load_tables(spark, sf_dir)
     lng = (F.col("user_id") % 360 - 180).cast("double") / 2
     lat = (F.col("event_id") % 180 - 90).cast("double") / 2
@@ -682,12 +682,13 @@ def fn_map_family(spark, sf_dir):
 )
 def fn_geo_contains(spark, sf_dir):
     """ST_Contains / ST_Within point-in-polygon (geospatial transform
-    functions, TransformFunctionType:195-229): ray-casting UDF verified
-    against the independent range-predicate formulation (the polygon is
-    a rectangle so the oracle needs no geometry library)."""
+    functions, TransformFunctionType:195-229): the exact-rational JTS
+    predicate (functions/pinot_geometry.py) verified against the
+    independent range-predicate formulation (the polygon is a rectangle
+    so the oracle needs no geometry library)."""
     t = load_tables(spark, sf_dir)
     # bounds sit off the 0.1 grid so boundary-inclusion semantics can't
-    # differ between ray casting and the oracle's range predicates
+    # differ between the JTS predicate and the oracle's range predicates
     rect = F.lit("POLYGON ((1.95 0.95, 7.45 0.95, 7.45 7.95, 1.95 7.95, 1.95 0.95))")
     x = (F.col("user_id") % 100).cast("double") / 10
     y = (F.col("event_id") % 100).cast("double") / 10

@@ -525,19 +525,11 @@ _UDF_CALL_RE = re.compile(r"\b(__\w+)\s*\(")
 
 def test_golden_outputs_call_only_registered_udf_names(spark):
     """Every ``__name(`` call translate emits in the golden snapshot is
-    a row of the sketch-UDF table, a geo UDF or a GROOVY UDF."""
-    from pinot_spark.dialect import _ensure_geo_sql_udfs
+    a row of the sketch-UDF table, of the geometry-UDF table or a
+    GROOVY UDF."""
+    from pinot_spark.functions.geo_udfs import GEO_UDFS
     from pinot_spark.functions.sketches import SKETCH_UDFS
 
-    class _Registrar:
-        def __init__(self):
-            self.udf, self.names = self, set()
-
-        def register(self, name, _f):
-            self.names.add(name)
-
-    geo = _Registrar()
-    _ensure_geo_sql_udfs(geo)
     with open(os.path.join(os.path.dirname(__file__), "data", "translate_golden.json")) as fh:
         golden = json.load(fh)
     called = {
@@ -546,9 +538,9 @@ def test_golden_outputs_call_only_registered_udf_names(spark):
         for r in records
         for m in _UDF_CALL_RE.finditer(r["output"])
     }
-    assert called & set(SKETCH_UDFS) and called & geo.names
+    assert called & set(SKETCH_UDFS) and called & set(GEO_UDFS)
     unknown = {
-        n for n in called - set(SKETCH_UDFS) - geo.names
+        n for n in called - set(SKETCH_UDFS) - set(GEO_UDFS)
         if not re.fullmatch(r"__groovy_\d+", n)
     }
     assert not unknown
@@ -579,6 +571,28 @@ def test_translate_registers_the_sketch_udfs_it_calls(spark):
     assert not [n for n in gone if fresh.catalog.functionExists(n)]
 
 
+def test_fresh_session_registers_the_geo_rows_it_calls(spark):
+    """A fresh session's first statement registers the geometry rows its
+    translation calls, whichever FUNCTION_MAP spelling named them, and
+    so does a DDL statement's defining SELECT."""
+    from pinot_spark.functions.h3grid import geo_to_cell
+
+    fresh = spark.newSession()
+    eng = PinotEngine(fresh)
+    assert eng.sql("SELECT GEO_TO_H3(8.5, 47.4, 7) AS c").first().c == geo_to_cell(8.5, 47.4, 7)
+    assert (
+        eng.sql("SELECT ST_AS_TEXT(ST_GEOM_FROM_TEXT('POINT (1 2)')) AS t").first().t
+        == "POINT (1 2)"
+    )
+    fresh.createDataFrame(
+        [(1, "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))")], "id int, w string"
+    ).createOrReplaceTempView("ddl_geo_src")
+    eng.sql("CREATE TABLE ddl_geo_t AS SELECT id, ST_AREA(ST_GEOM_FROM_TEXT(w)) AS a FROM ddl_geo_src")
+    assert [tuple(r) for r in fresh.table("ddl_geo_t").collect()] == [(1, 4.0)]
+    # only the rows the statements called
+    assert not fresh.catalog.functionExists("__geo_union_agg")
+
+
 def _upsert_engine(spark, view: str, rows, schema: str, keys: list[str]):
     spark.createDataFrame(rows, schema).createOrReplaceTempView(view)
     eng = PinotEngine(spark)
@@ -607,6 +621,31 @@ def test_zero_shuffle_sketch_route_reads_the_upsert_view(spark):
     ]
     raw = eng.sql("SET skipUpsert=true; " + mixed).collect()
     assert [(r.k, r.n, r.e) for r in raw] == [(0, 3, 3), (1, 3, 3), (2, 3, 3)]
+
+
+@pytest.mark.parametrize(
+    "agg",
+    [
+        "DISTINCTCOUNT(v)", "PERCENTILE(v, 50)", "MODE(v)", "DISTINCTSUM(v)",
+        "MINMAXRANGE(v)", "DISTINCTCOUNTSMARTHLL(v)", "PERCENTILESMARTTDIGEST(v, 50)",
+    ],
+)
+def test_native_aggregate_next_to_pandas_udaf_family(spark, agg):
+    """A native aggregate next to a pandas-UDAF raw family takes the
+    mixed split (Spark refuses the two in one SELECT), whatever its
+    name: the statement equals its two halves run apart."""
+    spark.createDataFrame(
+        [(f"k{i % 3}", i % 7, f"s{i % 5}") for i in range(40)],
+        "k string, v bigint, s string",
+    ).createOrReplaceTempView("nat_udaf_t")
+    eng = PinotEngine(spark)
+
+    def run(items: str) -> list:
+        return eng.sql(f"SELECT k, {items} FROM nat_udaf_t GROUP BY k ORDER BY k").collect()
+
+    both = run(f"{agg} AS a, FREQUENT_STRINGS_SKETCH(s) AS f")
+    halves = zip(run(f"{agg} AS a"), run("FREQUENT_STRINGS_SKETCH(s) AS f"))
+    assert [(r.k, r.a, r.f) for r in both] == [(n.k, n.a, f.f) for n, f in halves]
 
 
 def test_zero_shuffle_sketch_route_translates_its_source(engine, spark):

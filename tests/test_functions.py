@@ -237,6 +237,10 @@ def test_geohash_encode(one):
     assert ev(
         one, call("encodeGeohash", F.lit(-74.006), F.lit(40.7128), F.lit(7))
     ) == "dr5regw"
+    # a NULL coordinate next to a value in one Arrow batch stays NULL
+    df = one.sparkSession.createDataFrame([(-5.6,), (None,)], "lng double").coalesce(1)
+    got = df.select(call("encodeGeohash", F.col("lng"), F.lit(42.6), F.lit(5)).alias("g"))
+    assert [r.g for r in got.collect()] == ["ezs42", None]
 
 
 def test_geo_points(one):
@@ -249,6 +253,13 @@ def test_geo_points(one):
     q = call("stDistanceHaversine", call("stPoint", F.lit(0.0), F.lit(0.0)),
              call("stPoint", F.lit(0.0), F.lit(90.0)))
     assert abs(ev(one, q) - 10_007_543) < 1_000
+    # the 3-arg (Pinot bytes) form: NULL coordinates next to a value
+    # in one Arrow batch give NULL, not a POINT (NaN NaN)
+    df = one.sparkSession.createDataFrame([(1.0, 2.0), (None, None)], "x double, y double")
+    got = df.coalesce(1).select(
+        call("stAsText", call("stPoint", F.col("x"), F.col("y"), F.lit(True))).alias("p")
+    )
+    assert [r.p for r in got.collect()] == ["POINT (1 2)", None]
 
 
 def test_geo_polygon_ops(one):
@@ -299,60 +310,167 @@ def test_st_union_points_and_disjoint_polygons(one):
 
 
 def test_st_union_overlapping_polygons(one):
-    """Overlapping polygon union via Greiner-Hormann clipping: area is
-    the inclusion-exclusion value, containment matches in-A-or-in-B."""
-    from pinot_spark.functions.scalar import _parse_rings, _point_in_rings, _rings_area, st_union_wkt
-
+    """Overlapping polygon union (exact overlay): area is the
+    inclusion-exclusion value, containment matches in-A-or-in-B."""
     a = "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))"
     b = "POLYGON ((2 2, 6 2, 6 6, 2 6, 2 2))"     # crosses a; overlap 2x2
-    u = st_union_wkt(a, b)
-    pu = _parse_rings(u)
-    assert abs(_rings_area(pu) - (16 + 16 - 4)) < 1e-9
-    for (px, py, want) in [(1, 1, True), (5, 5, True), (3, 3, True), (5, 1, False), (1.5, 5.5, False)]:
-        assert _point_in_rings(px, py, pu) == want, (px, py)
+    u = call("stUnion", F.lit(a), F.lit(b))
+    pts = [(1, 1, True), (5, 5, True), (3, 3, True), (5, 1, False), (1.5, 5.5, False)]
     # containment: union of a and a contained polygon = the outer
     c = "POLYGON ((1 1, 2 1, 2 2.5, 1 2.5, 1 1))"
-    assert abs(_rings_area(_parse_rings(st_union_wkt(a, c))) - 16) < 1e-9
     # concave: L-shape u rect (analytic 20 + 16 - 7 = 29)
     L = "POLYGON ((0 0, 6 0, 6 2, 2 2, 2 6, 0 6, 0 0))"
     R = "POLYGON ((1 1, 5 1, 5 5, 1 5, 1 1))"
-    assert abs(_rings_area(_parse_rings(st_union_wkt(L, R))) - 29) < 1e-9
+    row = one.select(
+        call("stArea", u).alias("area"),
+        *[
+            call("stContains", u, call("stPoint", F.lit(float(px)), F.lit(float(py)), F.lit(False)))
+            .alias(f"in{i}")
+            for i, (px, py, _) in enumerate(pts)
+        ],
+        call("stArea", call("stUnion", F.lit(a), F.lit(c))).alias("area_ac"),
+        call("stArea", call("stUnion", F.lit(L), F.lit(R))).alias("area_lr"),
+    ).collect()[0]
+    assert abs(row.area - (16 + 16 - 4)) < 1e-9
+    for i, (px, py, want) in enumerate(pts):
+        assert row[f"in{i}"] == want, (px, py)
+    assert abs(row.area_ac - 16) < 1e-9
+    assert abs(row.area_lr - 29) < 1e-9
+    # every ring of the union is closed (first vertex == last)
+    from pinot_spark.functions.pinot_geometry import parse_wkt
+
+    sq = ev(one, call(
+        "stUnion",
+        F.lit("POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))"),
+        F.lit("POLYGON ((1 1, 3 1, 3 3, 1 3, 1 1))"),
+    ))
+    kind, rings, _ = parse_wkt(sq)
+    assert kind == "POLYGON" and all(r[0] == r[-1] for r in rings), sq
 
 
-def test_st_union_degenerate_exact_overlay():
+def test_st_union_degenerate_exact_overlay(one):
     """Exact degeneracy (shared edges / vertex-on-edge / collinear
-    overlap) routes to the exact-rational overlay in
-    functions/pinot_geometry.py — boundary RETIRED round 13 (previously
-    raised NotImplementedError)."""
+    overlap) goes through the exact-rational overlay in
+    functions/pinot_geometry.py."""
     from pinot_spark.functions.pinot_geometry import parse_wkt, planar_area
-    from pinot_spark.functions.scalar import st_union_wkt
 
     a = "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))"
-    # triangle with a vertex exactly ON a's bottom edge, crossing into a:
-    # areas 16 + 8, overlap ∫₂⁴ 0.5(x−2) dx = 1 → union 23
-    vertex_on_edge = "POLYGON ((2 0, 6 -2, 6 2, 2 0))"
-    u = parse_wkt(st_union_wkt(a, vertex_on_edge))
+    pairs = [
+        # triangle with a vertex exactly ON a's bottom edge, crossing
+        # into a: areas 16 + 8, overlap ∫₂⁴ 0.5(x−2) dx = 1 → union 23
+        (a, "POLYGON ((2 0, 6 -2, 6 2, 2 0))"),
+        # edge-sharing squares merge into ONE polygon (JTS semantics),
+        # not a two-member MULTIPOLYGON
+        ("POLYGON ((0 0, 0 1, 1 1, 1 0, 0 0))", "POLYGON ((1 0, 1 1, 2 1, 2 0, 1 0))"),
+        # point-touching triangles stay a valid two-member MULTIPOLYGON
+        ("POLYGON ((0 0, 2 0, 1 1, 0 0))", "POLYGON ((1 1, 2 2, 0 2, 1 1))"),
+        # hole-bearing overlapping input: hole filled by the second polygon
+        (
+            "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (4 4, 6 4, 6 6, 4 6, 4 4))",
+            "POLYGON ((3 3, 7 3, 7 7, 3 7, 3 3))",
+        ),
+    ]
+    row = one.select(
+        *[call("stUnion", F.lit(x), F.lit(y)).alias(f"u{i}") for i, (x, y) in enumerate(pairs)]
+    ).collect()[0]
+    u, u2, u3, u4 = (parse_wkt(row[f"u{i}"]) for i in range(4))
     assert planar_area(u) == 23.0
-
-    # edge-sharing squares merge into ONE polygon (JTS semantics), not a
-    # two-member MULTIPOLYGON
-    u2 = parse_wkt(st_union_wkt(
-        "POLYGON ((0 0, 0 1, 1 1, 1 0, 0 0))", "POLYGON ((1 0, 1 1, 2 1, 2 0, 1 0))"
-    ))
     assert u2[0] == "POLYGON" and planar_area(u2) == 2.0
-
-    # point-touching triangles stay a valid two-member MULTIPOLYGON
-    u3 = parse_wkt(st_union_wkt(
-        "POLYGON ((0 0, 2 0, 1 1, 0 0))", "POLYGON ((1 1, 2 2, 0 2, 1 1))"
-    ))
     assert u3[0] == "MULTIPOLYGON" and planar_area(u3) == 2.0
-
-    # hole-bearing overlapping input: hole filled by the second polygon
-    u4 = parse_wkt(st_union_wkt(
-        "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (4 4, 6 4, 6 6, 4 6, 4 4))",
-        "POLYGON ((3 3, 7 3, 7 7, 3 7, 3 3))",
-    ))
     assert u4[0] == "POLYGON" and planar_area(u4) == 100.0
+
+
+# One case list per geo name that both surfaces serve.  An argument is a
+# column of ``geo_parity_t``, ``g:<col>`` for ST_GeomFromText(<col>), or
+# an integer literal.  The flag marks a geometry output.
+_GEO_PARITY_CASES = {
+    "stpoint": [(["x", "y"], True), (["x", "y", 1], True)],
+    "stpolygon": [(["poly"], True)],
+    "stgeomfromtext": [(["poly"], True)],
+    "stgeogfromtext": [(["pt"], True)],
+    "stgeomfromwkb": [(["wkb"], True)],
+    "stgeogfromwkb": [(["wkb"], True)],
+    "stgeomfromgeojson": [(["gj"], True)],
+    "stgeogfromgeojson": [(["gj"], True)],
+    "stastext": [(["g:poly"], False)],
+    "stasbinary": [(["g:poly"], False)],
+    "stasgeojson": [(["g:poly"], False)],
+    "stgeometrytype": [(["g:poly"], False), (["g:pt"], False)],
+    "starea": [(["g:poly"], False)],
+    "stx": [(["g:pt"], False)],
+    "sty": [(["g:pt"], False)],
+    "stdistance": [(["g:pt", "g:poly2"], False)],
+    "stcontains": [(["g:poly", "g:pt"], False)],
+    "stwithin": [(["g:pt", "g:poly"], False)],
+    "stequals": [(["g:poly", "g:poly2"], False), (["g:poly", "g:poly"], False)],
+    "geotoh3": [(["x", "y", 5], False), (["g:pt", 5], False)],
+    "griddistance": [(["cell", "cell2"], False)],
+    "griddisk": [(["cell", 1], False)],
+}
+
+
+def test_geo_column_and_sql_surfaces_agree(spark):
+    """Every geo name the Column registry and FUNCTION_MAP both serve
+    (``stunion`` is an aggregate in SQL) returns the same values on
+    both surfaces, over one partition that holds a NULL row.  Geometry
+    outputs are compared as ST_AsText of their Pinot-bytes form: the
+    Column forms that return WKT text keep the input's ring order,
+    where Pinot bytes orient shells clockwise."""
+    from pinot_spark.dialect import FUNCTION_MAP, PinotEngine
+    from pinot_spark.functions import geo_udfs
+    from pinot_spark.functions.h3grid import geo_to_cell
+    from pinot_spark.functions.wkb import wkt_to_geojson, wkt_to_wkb
+
+    names = {
+        n for n, f in SCALAR_FUNCTIONS.items() if f.__module__ == geo_udfs.__name__
+    } & set(FUNCTION_MAP) - {"stunion"}
+    assert names == set(_GEO_PARITY_CASES)
+
+    sq = "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))"
+    rows = [
+        (1, 1.5, 2.5, "POINT (1.5 2.5)", sq, "POLYGON ((4 0, 4 4, 0 4, 0 0, 4 0))",
+         wkt_to_wkb(sq), wkt_to_geojson(sq), geo_to_cell(1.5, 2.5, 5), geo_to_cell(9.0, 9.0, 5)),
+        (2, None, None, None, None, None, None, None, None, None),
+        (3, 7.25, -3.0, "POINT (7.25 -3)", "POLYGON ((5 5, 6 5, 6 7, 5 5))",
+         "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))", wkt_to_wkb("POINT (7.25 -3)"),
+         wkt_to_geojson("POINT (7.25 -3)"), geo_to_cell(7.25, -3.0, 5), geo_to_cell(7.0, -3.0, 5)),
+    ]
+    spark.createDataFrame(
+        rows,
+        "id int, x double, y double, pt string, poly string, poly2 string, "
+        "wkb binary, gj string, cell bigint, cell2 bigint",
+    ).coalesce(1).createOrReplaceTempView("geo_parity_t")
+
+    def col_arg(a):
+        if isinstance(a, int):
+            return F.lit(a)
+        if a.startswith("g:"):
+            return call("stgeomfromtext", F.col(a[2:]))
+        return F.col(a)
+
+    def sql_arg(a):
+        if isinstance(a, int):
+            return str(a)
+        return f"STGEOMFROMTEXT({a[2:]})" if a.startswith("g:") else a
+
+    cols, sqls = [], []
+    for name in sorted(names):
+        for i, (args, geom) in enumerate(_GEO_PARITY_CASES[name]):
+            c = call(name, *map(col_arg, args))
+            q = f"{name.upper()}({', '.join(map(sql_arg, args))})"
+            if geom:
+                c = call("stastext", call("stgeomfromtext", call("stastext", c)))
+                q = f"STASTEXT(STGEOMFROMTEXT(STASTEXT({q})))"
+            cols.append(c.alias(f"{name}_{i}"))
+            sqls.append(f"{q} AS {name}_{i}")
+    by_column = spark.table("geo_parity_t").select("id", *cols).orderBy("id").collect()
+    by_sql = (
+        PinotEngine(spark)
+        .sql(f"SELECT id, {', '.join(sqls)} FROM geo_parity_t ORDER BY id")
+        .collect()
+    )
+    assert [r.asDict() for r in by_column] == [r.asDict() for r in by_sql]
+    assert by_column[1].asDict() == {k: (2 if k == "id" else None) for k in by_column[1].asDict()}
 
 
 def test_datetime_convert_column(one):

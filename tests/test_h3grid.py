@@ -101,6 +101,19 @@ def test_spark_udf_surface(spark):
     ).collect()[0]
     assert r3.d == grid_distance(geo_to_cell(0.0, 0.0, 5), geo_to_cell(1.0, 1.0, 5))
     assert r3.n == 19
+    # NULL cells and coordinates next to values in one Arrow batch give
+    # NULL, as the SQL surface does
+    nulls = spark.createDataFrame(
+        [(geo_to_cell(0.0, 0.0, 5), geo_to_cell(1.0, 1.0, 5), 0.0, 0.0), (None, None, None, None)],
+        "a long, b long, lng double, lat double",
+    ).coalesce(1)
+    r4 = nulls.select(
+        call("gridDistance", F.col("a"), F.col("b")).alias("d"),
+        call("gridDisk", F.col("a"), F.lit(2)).alias("disk"),
+        call("geoToH3", F.col("lng"), F.col("lat"), F.lit(5)).alias("cell"),
+    ).collect()
+    assert (r4[0].d, len(r4[0].disk), r4[0].cell) == (r3.d, 19, geo_to_cell(0.0, 0.0, 5))
+    assert (r4[1].d, r4[1].disk, r4[1].cell) == (None, None, None)
 
 
 @given(

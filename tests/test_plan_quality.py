@@ -347,11 +347,10 @@ def test_raw_theta_mixed_single_table_no_collect_set(spark, sf_dir):
 
 def test_raw_theta_bigint_key_takes_zero_shuffle_route(spark, sf_dir):
     """BIGINT group keys (GROUP BY user_id — the dominant real sketch
-    shape) take the zero-shuffle route since round 10: keys travel as
-    split 32-bit halves (the sketch-hash exactness trick) and recombine
-    JVM-side, so plans show MapInArrow partials with NO pmod bucket
-    column and NO collect_set — pure AND mixed — and exactness survives
-    keys past 2^53 and NULL keys.  Raw theta is a native aggregate
+    shape) take the zero-shuffle route: the mapInArrow partials read the
+    key exactly from Arrow (no carrier column), so plans show MapInArrow
+    partials with NO pmod bucket column and NO collect_set — pure AND
+    mixed — and exactness survives keys past 2^53 and NULL keys.  Raw theta is a native aggregate
     (no key carrier needed); the tuple sketch carries the route."""
     from pinot_spark.dialect import PinotEngine
 
@@ -398,11 +397,10 @@ def test_raw_theta_bigint_key_takes_zero_shuffle_route(spark, sf_dir):
 
 
 def test_raw_theta_decimal_key_takes_zero_shuffle_route(spark, sf_dir):
-    """DECIMAL group keys take the zero-shuffle route since round 12:
-    keys travel as the canonical plain-form string (CAST(dec AS STRING)
-    is exact and injective at fixed scale — no float transit) and
-    recombine JVM-side via CAST back to the original DECIMAL(p,s).
-    Exactness must survive >2^53 unscaled values and NULL keys.  Raw
+    """DECIMAL group keys take the zero-shuffle route: the mapInArrow
+    partials read the key exactly from Arrow as a Python Decimal (no
+    float transit, no carrier column).  Exactness must survive >2^53
+    unscaled values and NULL keys.  Raw
     theta groups natively; the tuple sketch carries the route."""
     import decimal
 
@@ -615,11 +613,11 @@ def test_raw_mv_families_zero_shuffle(spark, sf_dir):
 
 def test_raw_theta_timestamp_key_takes_zero_shuffle_route(spark, sf_dir):
     """TIMESTAMP group keys (native-typed ingest — the dialect itself
-    prefers epoch-millis BIGINT) ride the zero-shuffle route since
-    round 11: the key travels as unix_micros split into 32-bit halves
-    (lossless int64 carrier) and recombines via timestamp_micros, so
-    plans show MapInArrow partials with no pmod and no collect_set,
-    NULL keys survive, and sub-second precision round-trips exactly.
+    prefers epoch-millis BIGINT) ride the zero-shuffle route: the
+    mapInArrow partials read the key exactly from Arrow (no carrier
+    column), so plans show MapInArrow partials with no pmod and no
+    collect_set, NULL keys survive, and sub-second precision
+    round-trips exactly.
     Raw theta groups natively; the tuple sketch carries the route."""
     import datetime
 
@@ -841,7 +839,7 @@ def _st_union_eq_fixture(spark) -> dict:
     ``st_union_eq_t``; returns the single-buffer
     reference union per group, computed from the fallback SQL itself
     (every geometry of a group in one collect_list)."""
-    from pinot_spark.dialect import _ensure_geo_sql_udfs
+    from pinot_spark.dialect import _ensure_udfs
 
     rows = []
     for i in range(9):
@@ -853,14 +851,12 @@ def _st_union_eq_fixture(spark) -> dict:
     spark.createDataFrame(rows, "k int, wkt string").createOrReplaceTempView(
         "st_union_eq_t"
     )
-    _ensure_geo_sql_udfs(spark)
-    return {
-        r.k: r.u
-        for r in spark.sql(
-            "SELECT k, __geo_as_text(__geo_union_fold(collect_list("
-            "__geo_from_text(wkt, false)))) AS u FROM st_union_eq_t GROUP BY k"
-        ).collect()
-    }
+    fallback = (
+        "SELECT k, __geo_as_text(__geo_union_fold(collect_list("
+        "__geo_from_text(wkt, false)))) AS u FROM st_union_eq_t GROUP BY k"
+    )
+    _ensure_udfs(spark, fallback)
+    return {r.k: r.u for r in spark.sql(fallback).collect()}
 
 
 def test_st_union_two_phase_matches_fallback(spark, sf_dir):

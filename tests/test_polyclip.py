@@ -1,44 +1,43 @@
-"""Greiner-Hormann boolean clipping (functions/polyclip.py): analytic
-rectangle identities, point-sampling equivalence (the strongest oracle:
-containment in the clipped result must equal the boolean of the input
-containments), and loud degeneracy."""
+"""Polygon union (functions/pinot_geometry.union, the exact-rational
+overlay every STUnion surface folds with): analytic rectangle
+identities, point-sampling equivalence (the strongest oracle:
+containment in the union must equal the OR of the input
+containments), hole formation, and the distributed fold in
+operators/geo.py."""
 
 from __future__ import annotations
 
-import pytest
-from hypothesis import assume, given, settings, strategies as st
+from hypothesis import given, settings, strategies as st
 
-from pinot_spark.functions.polyclip import DegenerateGeometry, _area, clip
-from pinot_spark.functions.scalar import _point_in_rings
+from pinot_spark.functions import pinot_geometry as pg
 
 
 def _rect(x0, y0, w, h):
     return [(x0, y0), (x0 + w, y0), (x0 + w, y0 + h), (x0, y0 + h)]
 
 
+def _poly(*rings):
+    return ("POLYGON", [list(r) + [r[0]] for r in rings], False)
+
+
+def _union(a, b):
+    return pg.union([_poly(a), _poly(b)])
+
+
 _coord = st.floats(-50, 50).map(lambda v: round(v, 3))
 _size = st.floats(1, 40).map(lambda v: round(v, 3))
 
 
-def _nondegenerate(a, b):
-    """Rect pair shares no x or y coordinate → no collinear/touching."""
-    ax = {round(p[0], 9) for p in a} | {round(p[1], 9) for p in a}
-    bx = {round(p[0], 9) for p in b} | {round(p[1], 9) for p in b}
-    return not (ax & bx)
-
-
 @given(x0=_coord, y0=_coord, w0=_size, h0=_size, x1=_coord, y1=_coord, w1=_size, h1=_size)
 @settings(max_examples=300, deadline=None)
-def test_rect_union_intersection_analytic(x0, y0, w0, h0, x1, y1, w1, h1):
+def test_rect_union_analytic(x0, y0, w0, h0, x1, y1, w1, h1):
+    """Inclusion-exclusion area, touching and collinear pairs included
+    (the overlay is exact on them)."""
     a, b = _rect(x0, y0, w0, h0), _rect(x1, y1, w1, h1)
-    assume(_nondegenerate(a, b))
     ox = max(0.0, min(x0 + w0, x1 + w1) - max(x0, x1))
     oy = max(0.0, min(y0 + h0, y1 + h1) - max(y0, y1))
     overlap = ox * oy
-    inter = clip(a, b, "intersection")
-    assert abs(sum(abs(_area(r)) for r in inter) - overlap) < 1e-6
-    uni = clip(a, b, "union")
-    assert abs(sum(abs(_area(r)) for r in uni) - (w0 * h0 + w1 * h1 - overlap)) < 1e-6
+    assert abs(pg.planar_area(_union(a, b)) - (w0 * h0 + w1 * h1 - overlap)) < 1e-6
 
 
 @given(
@@ -48,12 +47,10 @@ def test_rect_union_intersection_analytic(x0, y0, w0, h0, x1, y1, w1, h1):
 )
 @settings(max_examples=150, deadline=None)
 def test_point_sampling_equivalence(x0, y0, w0, h0, x1, y1, w1, h1, samples):
-    """For sampled points p: p ∈ union ⇔ p∈A or p∈B, and
-    p ∈ intersection ⇔ p∈A and p∈B — catches any traversal bug."""
+    """For sampled points p: p ∈ union ⇔ p∈A or p∈B — catches any
+    traversal bug."""
     a, b = _rect(x0, y0, w0, h0), _rect(x1, y1, w1, h1)
-    assume(_nondegenerate(a, b))
-    uni = clip(a, b, "union")
-    inter = clip(a, b, "intersection")
+    uni = _union(a, b)
     lo_x, hi_x = min(x0, x1) - 1, max(x0 + w0, x1 + w1) + 1
     lo_y, hi_y = min(y0, y1) - 1, max(y0 + h0, y1 + h1) + 1
     for fx, fy in samples:
@@ -65,20 +62,8 @@ def test_point_sampling_equivalence(x0, y0, w0, h0, x1, y1, w1, h1, samples):
             continue
         if any(abs(py - v) < 1e-9 for v in (y0, y0 + h0, y1, y1 + h1)):
             continue
-        # union rings: [outer, holes...] grouping per overlapping merge —
-        # for two rects union is one outer (overlap) or two (disjoint)
-        in_union = _point_in_rings(px, py, [[r] for r in uni])
+        in_union = pg.contains(uni, ("POINT", (px, py), False))
         assert in_union == (in_a or in_b), (px, py)
-        in_inter = _point_in_rings(px, py, [[r] for r in inter])
-        assert in_inter == (in_a and in_b), (px, py)
-
-
-def test_degenerate_raises():
-    a = _rect(0, 0, 4, 4)
-    with pytest.raises(DegenerateGeometry):
-        clip(a, _rect(4, 0, 4, 4), "intersection")  # shared edge
-    with pytest.raises(DegenerateGeometry):
-        clip(a, [(2, 0), (6, -2), (6, 2)], "union")  # vertex on edge
 
 
 def test_concave_hole_formation():
@@ -86,21 +71,19 @@ def test_concave_hole_formation():
     must come back as a hole ring (negative contribution to area)."""
     u_shape = [(0, 0), (6, 0), (6, 5), (4, 5), (4, 2), (2, 2), (2, 5), (0, 5)]
     cap = [(-1, 3), (7, 3), (7, 4.5), (-1, 4.5)]
-    rings = clip(u_shape, cap, "union")
+    u = _union(u_shape, cap)
     # u area = 6*5 - 2*3 = 24; cap = 8*1.5 = 12; overlap = strips of the
     # two 2-wide columns x:[0,2],[4,6] over y:[3,4.5] → 2*(2*1.5) = 6
     # union NET area (outer minus enclosed hole) analytic:
     # covered = 24 + 12 - 6 = 30; the hole x:[2,4] y:[2,3] (area 2) is void
-    total = sum(abs(_area(r)) for r in rings[:1]) - sum(abs(_area(r)) for r in rings[1:])
-    assert abs(total - 30) < 1e-9
-    assert len(rings) == 2  # outer + one hole
+    assert abs(pg.planar_area(u) - 30) < 1e-9
+    assert u[0] == "POLYGON" and len(u[1]) == 2  # outer + one hole
 
 
 def test_st_union_geoms_aggregate(spark):
-    """Distributed WKT union fold (operators/geo.py ←
+    """Distributed union fold (operators/geo.py ←
     StUnionAggregationFunction): partition-count independent, correct
     area for a mix of overlapping and disjoint members."""
-    from pinot_spark.functions.scalar import _parse_rings, _rings_area
     from pinot_spark.operators.geo import st_union_geoms
 
     rows = [
@@ -113,7 +96,7 @@ def test_st_union_geoms_aggregate(spark):
         df = spark.createDataFrame(rows, "wkt string").repartition(n_parts)
         u = st_union_geoms(df, "wkt")
         assert u is not None and u.startswith("MULTIPOLYGON")
-        assert abs(_rings_area(_parse_rings(u)) - (16 + 16 - 4 + 9)) < 1e-9
+        assert abs(pg.planar_area(pg.parse_wkt(u)) - (16 + 16 - 4 + 9)) < 1e-9
 
 
 def test_st_union_driver_payload_bounded(spark):

@@ -89,7 +89,7 @@ def test_array_pushback_elementat_0based(spark, vals, v):
 
 from hypothesis import assume
 
-from pinot_spark.functions.scalar import _parse_rings, _point_in_rings, _rings_area
+from pinot_spark.functions import pinot_geometry as pg
 
 
 @given(
@@ -108,8 +108,8 @@ def test_rect_with_hole_containment_property(x0, y0, w, h, px, py):
         f"POLYGON (({x0} {y0}, {x0 + w} {y0}, {x0 + w} {y0 + h}, {x0} {y0 + h}, {x0} {y0}), "
         f"({hx0} {hy0}, {hx1} {hy0}, {hx1} {hy1}, {hx0} {hy1}, {hx0} {hy0}))"
     )
-    polys = _parse_rings(wkt)
-    assert polys is not None and len(polys) == 1 and len(polys[0]) == 2
+    poly = pg.parse_wkt(wkt)
+    assert poly[0] == "POLYGON" and len(poly[1]) == 2
     # keep clear of ring boundaries — edge behavior is unspecified
     eps = 1e-6
     near = (
@@ -119,9 +119,9 @@ def test_rect_with_hole_containment_property(x0, y0, w, h, px, py):
     assume(not near)
     in_shell = x0 < px < x0 + w and y0 < py < y0 + h
     in_hole = hx0 < px < hx1 and hy0 < py < hy1
-    assert _point_in_rings(px, py, polys) == (in_shell and not in_hole)
+    assert pg.contains(poly, ("POINT", (px, py), False)) == (in_shell and not in_hole)
     expected_area = w * h - (hx1 - hx0) * (hy1 - hy0)
-    assert abs(_rings_area(polys) - expected_area) <= 1e-6 * max(1.0, expected_area)
+    assert abs(pg.planar_area(poly) - expected_area) <= 1e-6 * max(1.0, expected_area)
 
 
 # ---------------------------------------------------------------------------
