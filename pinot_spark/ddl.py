@@ -33,7 +33,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pinot_spark.session import local_dataframe
+from pinot_spark.session import local_dataframe, parquet_schema
 
 _TYPE_MAP = {
     "INT": "int",
@@ -174,7 +174,7 @@ class DdlExecutor:
         path = os.path.join(self.storage_dir, name)
         df = self.spark.sql(select)
         df.write.mode("overwrite").parquet(path)
-        out = self.spark.read.parquet(path)
+        out = self.spark.read.schema(parquet_schema(df.schema)).parquet(path)
         out.createOrReplaceTempView(name)
         self._mv_sql[name] = select
         rollup = False

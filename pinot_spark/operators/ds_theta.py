@@ -62,6 +62,9 @@ import numpy as np
 DS_SEED = 9001
 DS_SEED_HASH = 37836  # ThetaUtil.computeSeedHash(9001)
 MAX_THETA = (1 << 63) - 1
+# CommonConstants.Helix.DEFAULT_TUPLE_SKETCH_LGK = 16: the nominal entries
+# a Pinot-built tuple sketch carries, so a union keeps that many
+TUPLE_NOMINAL_ENTRIES = 1 << 16
 _SER_VER = 3
 _SER_VER_COMPRESSED = 4
 _FAMILY_COMPACT = 3
@@ -511,7 +514,9 @@ class DsTupleSketch:
     def sum_values(self) -> int:
         return int(self.values.sum())
 
-    def union(self, *others: "DsTupleSketch", k: int | None = 4096) -> "DsTupleSketch":
+    def union(
+        self, *others: "DsTupleSketch", k: int | None = TUPLE_NOMINAL_ENTRIES
+    ) -> "DsTupleSketch":
         """Sum-mode union of this sketch and ``others`` (int32 wrap-sum
         summaries, IntegerSummary.Mode.Sum) in one merge."""
         sks = (self, *others)

@@ -10,9 +10,12 @@ Reference semantics:
   (pinot-segment-local/.../dedup/ConcurrentMapPartitionDedupMetadataManager.java).
 
 Spark-first design: these are window/groupBy views over the raw table —
-`row_number() OVER (PARTITION BY pk ORDER BY cmp DESC) = 1`. One shuffle
-on the pk; at 100 TB the pk partitioning of the underlying storage makes
-this shuffle-free with storage-partitioned reads.
+`row_number() OVER (PARTITION BY pk ORDER BY cmp DESC) = 1`, one shuffle
+on the pk each time a view is read.  The realtime sink does not pay it
+per read: its micro-batch writer runs ``upsert_view`` once per batch over
+the previous snapshot plus the batch and commits the result, and readers
+scan that snapshot (streaming/ingest.py), as Pinot's upsert metadata
+manager resolves keys at ingest.
 """
 
 from __future__ import annotations

@@ -22,6 +22,9 @@ from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from pinot_spark.session import parquet_schema
 
 # measure → (partial columns stored, final re-aggregation)
 _SUPPORTED = ("count", "sum", "min", "max", "avg")
@@ -34,11 +37,12 @@ _SUPPORTED = ("count", "sum", "min", "max", "avg")
 _MV_DF_CACHE: dict[tuple[int, str], DataFrame] = {}
 
 
-def _read_mv(spark: SparkSession, path: str) -> DataFrame:
-    key = (id(spark), path)
+def _read_mv(spark: SparkSession, mv: "AggregateMV") -> DataFrame:
+    key = (id(spark), mv.path)
     df = _MV_DF_CACHE.get(key)
     if df is None:
-        df = spark.read.parquet(path)
+        reader = spark.read if mv.schema is None else spark.read.schema(mv.schema)
+        df = reader.parquet(mv.path)
         _MV_DF_CACHE[key] = df
     return df
 
@@ -46,12 +50,15 @@ def _read_mv(spark: SparkSession, path: str) -> DataFrame:
 @dataclass
 class AggregateMV:
     """One materialized rollup: ``dims`` group-by columns and per-measure
-    partial aggregates over ``measure_cols``."""
+    partial aggregates over ``measure_cols``.  ``schema`` is the rollup
+    table's as read back (``session.parquet_schema``), recorded at build
+    so a read skips parquet schema inference; None infers it."""
 
     name: str
     path: str
     dims: list[str]
     measure_cols: list[str]
+    schema: StructType | None = None
 
     def partial_name(self, agg: str, col: str) -> str:
         return f"__{agg}_{col}"
@@ -75,8 +82,13 @@ def create_aggregate_mv(
             F.min(c).alias(mv.partial_name("min", c)),
             F.max(c).alias(mv.partial_name("max", c)),
         ]
-    df.groupBy(*dims).agg(*aggs).write.mode("overwrite").parquet(path)
+    _write_rollup(mv, df.groupBy(*dims).agg(*aggs))
     return mv
+
+
+def _write_rollup(mv: AggregateMV, rollup: DataFrame) -> None:
+    rollup.write.mode("overwrite").parquet(mv.path)
+    mv.schema = parquet_schema(rollup.schema)
 
 
 def mv_answers(mv: AggregateMV, dims: list[str], aggs: list[tuple[str, str]]) -> bool:
@@ -104,7 +116,7 @@ def query_rollup(
     constraint: predicates must be on tree dimensions)."""
     if not mv_answers(mv, dims, [(a, c) for a, c, _ in aggs]):
         raise ValueError(f"rollup {mv.name} cannot answer dims={dims} aggs={aggs}")
-    df = _read_mv(spark, mv.path)
+    df = _read_mv(spark, mv)
     if filter_expr is not None:
         df = df.filter(filter_expr)
     out = []
@@ -202,7 +214,7 @@ def create_aggregate_mv_ext(
                 mv.partial_name("summv", c)
             ),
         ]
-    df.groupBy(*dims).agg(*aggs).write.mode("overwrite").parquet(path)
+    _write_rollup(mv, df.groupBy(*dims).agg(*aggs))
     mv.set_cols = list(set_cols or [])  # type: ignore[attr-defined]
     mv.mv_cols = list(mv_cols or [])  # type: ignore[attr-defined]
     return mv
@@ -223,7 +235,7 @@ def query_rollup_ext(
     the group's distinct count like the reference's bitmap);
     COUNTMV/SUMMV = sums of the stored element counts/sums,
     AVGMV = SUMMV/COUNTMV."""
-    df = _read_mv(spark, mv.path)
+    df = _read_mv(spark, mv)
     if filter_expr is not None:
         df = df.filter(filter_expr)
     out = []

@@ -41,6 +41,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 DEFAULT_CONFS = {
     # Adaptive execution: replaces Pinot's exchange-placement rules.
@@ -109,6 +110,27 @@ def get_spark(app_name: str = "pinot-spark", extra_confs: dict | None = None) ->
     return builder.getOrCreate()
 
 
+def parquet_schema(schema: StructType) -> StructType:
+    """The schema Spark reads back from parquet it wrote from a frame of
+    ``schema``: the writer marks every field, array element and map value
+    nullable.  ``spark.read.schema(parquet_schema(df.schema))`` reads
+    such output without the footer-inference job a bare
+    ``spark.read.parquet`` launches."""
+
+    def nullable(dt: DataType) -> DataType:
+        if isinstance(dt, StructType):
+            return StructType(
+                [StructField(f.name, nullable(f.dataType), True, f.metadata) for f in dt.fields]
+            )
+        if isinstance(dt, ArrayType):
+            return ArrayType(nullable(dt.elementType), True)
+        if isinstance(dt, MapType):
+            return MapType(nullable(dt.keyType), nullable(dt.valueType), True)
+        return dt
+
+    return nullable(schema)
+
+
 def local_dataframe(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
     """A DataFrame over driver-held ``rows`` of the DDL ``schema`` that
     plans as a ``LocalTableScan``.  ``createDataFrame`` on a list plans
@@ -117,7 +139,6 @@ def local_dataframe(spark: SparkSession, rows: list[tuple], schema: str) -> Data
     and runs none."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
 
     struct = StructType.fromDDL(schema)
     arrow = to_arrow_schema(struct)

@@ -1,7 +1,8 @@
 """Small-file sidecar IO through the Hadoop FileSystem API.
 
-Persisted-index metadata (LSH banding params, the IVF-PQ model JSON)
-must land on WHATEVER filesystem the dataset directory lives on —
+Persisted-index metadata (LSH banding params, the IVF-PQ model JSON) and
+the realtime sink's upsert snapshots and commit records must land on
+WHATEVER filesystem the dataset directory lives on —
 HDFS / S3A / file: — not the driver's local disk: a plain ``open()``
 write silently breaks the persisted-index story the moment the index
 path is a cluster URI (round-14 verdict item 4).  These helpers route
@@ -53,3 +54,29 @@ def read_text(spark: SparkSession, path: str) -> str:
 def exists(spark: SparkSession, path: str) -> bool:
     fs, hpath = _fs(spark, path)
     return bool(fs.exists(hpath))
+
+
+def publish_text(spark: SparkSession, path: str, text: str) -> None:
+    """Write a small text file that readers see whole or not at all: the
+    text goes to a hidden temp name in the same directory, which is then
+    renamed to ``path``."""
+    fs, hpath = _fs(spark, path)
+    tmp = spark._jvm.org.apache.hadoop.fs.Path(hpath.getParent(), "." + hpath.getName() + ".tmp")
+    write_text(spark, tmp.toString(), text)
+    if not fs.rename(tmp, hpath):
+        fs.delete(tmp, False)
+        raise OSError(f"could not publish {path}: rename refused")
+
+
+def list_names(spark: SparkSession, dir_path: str) -> list[str]:
+    """Names of a directory's entries, or [] when it does not exist."""
+    fs, hpath = _fs(spark, dir_path)
+    if not fs.exists(hpath):
+        return []
+    return [st.getPath().getName() for st in fs.listStatus(hpath)]
+
+
+def delete(spark: SparkSession, path: str) -> None:
+    """Delete a file or a whole directory; a missing path is no error."""
+    fs, hpath = _fs(spark, path)
+    fs.delete(hpath, True)

@@ -9,7 +9,11 @@ Reference semantics:
   pulsar} → `spark.readStream.format("kafka")` etc. Tests use file
   streams (deterministic, no broker in this container).
 - Upsert at ingest (UpsertConfig.java:36): latest row per PK queryable.
-  Spark: foreachBatch merge keeping max-comparison row per key.
+  Pinot's partition upsert metadata manager resolves a key as its rows
+  arrive, so a query reads only valid rows.  Spark: each foreachBatch
+  merges the batch into the previous snapshot of latest rows per key
+  and commits the new snapshot; a read scans the newest committed
+  snapshot, with no window or shuffle.
 - Dedup at ingest (dedup/ConcurrentMapPartitionDedupMetadataManager.java):
   `dropDuplicates` within the watermark.
 - Ingestion-time aggregation (AggregationConfig): watermarked windowed
@@ -19,11 +23,17 @@ Reference semantics:
 
 from __future__ import annotations
 
+import json
+import re
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from pinot_spark.operators.upsert import upsert_view
+from pinot_spark.session import parquet_schema
+from pinot_spark.sources import fsutil
 
 
 def stream_source(
@@ -111,17 +121,25 @@ def start_realtime_ingest(
     """Consume a stream into a queryable parquet table.
 
     Without keys: plain append (the OFFLINE-segment-commit analog).
-    With keys+comparison: upsert semantics — each micro-batch is reduced
-    to latest-per-key before append; readers apply the same upsert_view
-    for cross-batch resolution (batch-boundary consistency; Pinot's
-    consistent-view delta documented in SURVEY.md §7 risks).
+    With keys (and ``comparison``, default ``keys``): upsert FULL
+    semantics resolved at ingest — each micro-batch is merged into a new
+    snapshot of the latest row per key and committed
+    (``write_upsert_batch``), so ``realtime_table`` reads whole committed
+    batches and never resolves a key itself.  A keyed sink belongs to
+    one checkpoint: its commit records are keyed by batch id, so a new
+    checkpoint over an old sink would take its batches as replays.
+
+    Trade-off: every keyed batch rewrites the realtime table
+    (copy-on-write), so a batch costs in proportion to that table.  The
+    realtime half of a hybrid table holds only rows past the time
+    boundary, and each read it spares paid the same full-table shuffle.
     """
 
     def _write_batch(batch: DataFrame, batch_id: int) -> None:
-        out = batch
         if keys:
-            out = upsert_view(batch, keys=keys, comparison=comparison or keys)
-        out.write.mode("append").parquet(path)
+            write_upsert_batch(batch, batch_id, path, keys, comparison or keys)
+        else:
+            batch.write.mode("append").parquet(path)
 
     writer = stream.writeStream.foreachBatch(_write_batch).option("checkpointLocation", checkpoint)
     if available_now:
@@ -131,12 +149,102 @@ def start_realtime_ingest(
     return writer.start()
 
 
+# A keyed sink holds snapshot directories ``_snapshots/v<batch id>`` and,
+# under ``_commits``, one record ``<batch id>.json`` per committed
+# snapshot.  The leading underscores hide both from a plain
+# ``spark.read.parquet(path)``; the snapshot directory's own name has
+# none, since Spark warns on every read of a hidden root path.
+_COMMITS = "_commits"
+_RECORD_RE = re.compile(r"^(\d+)\.json$")
+_BATCH_RANK = "__upsert_batch_rank"
+
+
+def _record_path(path: str, batch_id: int) -> str:
+    return fsutil.sidecar_path(fsutil.sidecar_path(path, _COMMITS), f"{batch_id}.json")
+
+
+def _snapshot_name(batch_id: int) -> str:
+    return f"_snapshots/v{batch_id}"
+
+
+def _committed_ids(spark: SparkSession, path: str) -> list[int]:
+    names = fsutil.list_names(spark, fsutil.sidecar_path(path, _COMMITS))
+    return sorted(int(m.group(1)) for m in map(_RECORD_RE.match, names) if m)
+
+
+def _read_snapshot(spark: SparkSession, path: str, batch_id: int) -> tuple[dict, DataFrame]:
+    record = json.loads(fsutil.read_text(spark, _record_path(path, batch_id)))
+    schema = StructType.fromJson(record["schema"])
+    snapshot = fsutil.sidecar_path(path, record["snapshot"])
+    return record, spark.read.schema(schema).parquet(snapshot)
+
+
+def write_upsert_batch(
+    batch: DataFrame, batch_id: int, path: str, keys: list[str], comparison: list[str]
+) -> None:
+    """Merge micro-batch ``batch_id`` into the keyed sink at ``path``.
+
+    The previous snapshot is the newest committed one below
+    ``batch_id``.  ``upsert_view`` over it and the batch keeps each key's
+    latest row; on an equal comparison value the batch's row wins (the
+    snapshot's rows rank below it on one more, dropped, comparison
+    column), as Pinot's metadata manager replaces a record when the new
+    comparison value is greater or equal.  The result is written to
+    ``_snapshots/v<batch_id>``; only after that job has committed is the
+    batch's record published (atomically) naming the snapshot, its
+    schema, keys and comparison.  Snapshots older than the previous one are then
+    deleted: two stay, so a reader that resolved the older one still
+    finds its files.  A failed batch replays onto the same directory from
+    the same input; a replay of a committed batch writes nothing, its
+    snapshot already holds the merge.  All IO goes through the Hadoop
+    FileSystem API, so HDFS and S3A sinks behave like local ones."""
+    spark = batch.sparkSession
+    committed = _committed_ids(spark, path)
+    if batch_id in committed:
+        return
+    older = [i for i in committed if i < batch_id]
+    merged, ranked = batch, comparison
+    if older:
+        _, previous = _read_snapshot(spark, path, older[-1])
+        merged = previous.withColumn(_BATCH_RANK, F.lit(0)).unionByName(
+            batch.withColumn(_BATCH_RANK, F.lit(1))
+        )
+        ranked = [*comparison, _BATCH_RANK]
+    snapshot = _snapshot_name(batch_id)
+    out = upsert_view(merged, keys=keys, comparison=ranked).drop(_BATCH_RANK)
+    out.write.mode("overwrite").parquet(fsutil.sidecar_path(path, snapshot))
+    record = {
+        "snapshot": snapshot,
+        "schema": parquet_schema(out.schema).jsonValue(),
+        "keys": list(keys),
+        "comparison": list(comparison),
+    }
+    fsutil.publish_text(spark, _record_path(path, batch_id), json.dumps(record))
+    for stale in older[:-1]:
+        fsutil.delete(spark, _record_path(path, stale))
+        fsutil.delete(spark, fsutil.sidecar_path(path, _snapshot_name(stale)))
+
+
 def realtime_table(spark: SparkSession, path: str, keys=None, comparison=None) -> DataFrame:
-    """Queryable view over the realtime sink; applies upsert resolution
-    across micro-batches when keys are given."""
-    df = spark.read.parquet(path)
-    if keys:
-        df = upsert_view(df, keys=keys, comparison=comparison or keys)
+    """Queryable view over the realtime sink.  A keyed sink reads its
+    newest committed snapshot with the recorded schema: no window,
+    shuffle or schema-inference job.  ``keys``/``comparison`` (default
+    ``keys``), when given, must match the ingest's; an unkeyed sink is
+    read as appended and takes no keys."""
+    committed = _committed_ids(spark, path)
+    if not committed:
+        if keys:
+            raise ValueError(
+                f"{path} holds no committed upsert snapshot: it is not a keyed sink, "
+                "or no batch has committed yet"
+            )
+        return spark.read.parquet(path)
+    record, df = _read_snapshot(spark, path, committed[-1])
+    if keys and (list(keys), list(comparison or keys)) != (record["keys"], record["comparison"]):
+        raise ValueError(
+            f"{path} was ingested with keys={record['keys']} comparison={record['comparison']}, "
+            f"not keys={list(keys)} comparison={list(comparison or keys)}"
+        )
     return df
 
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import math
 import os
+import uuid
 
 import duckdb
 import pytest
@@ -41,6 +42,28 @@ def duck():
             con.sql(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
     yield con
     con.close()
+
+
+def launched_jobs(spark, fn):
+    """Run ``fn()`` under a fresh job group; return ``(its result, the
+    jobs it launched as [(job id, job name)])``.  Ids come from the
+    status tracker, names from the status store, after the listener bus
+    has drained."""
+    sc = spark.sparkContext
+    group = f"launched-jobs-{uuid.uuid4().hex}"
+    props = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    previous = {k: sc.getLocalProperty(k) for k in props}
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        for k, v in previous.items():
+            sc.setLocalProperty(k, v)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    ids = sorted(sc.statusTracker().getJobIdsForGroup(group))
+    return result, [(j, store.job(j).name()) for j in ids]
 
 
 def _norm(v):

@@ -113,3 +113,23 @@ def test_engine_result_rows_plan_as_local_scans(engine, spark):
         ("a", "int"), ("b", "string"), ("c", "decimal(38,18)"),
     ]
     assert spark.table("local_t").collect() == []
+
+
+def test_mv_reads_back_with_the_written_schema(engine, spark):
+    """The MV's parquet is read back with the schema of the frame that
+    wrote it.  An inferring read launches one job, named after its
+    ``parquet`` call; the statement launches no such job, and its view
+    holds the rows and schema the inferring read gives."""
+    from conftest import launched_jobs
+
+    _, jobs = launched_jobs(spark, lambda: engine.sql(
+        "CREATE MATERIALIZED VIEW flag_qty AS "
+        "SELECT l_returnflag, count(*) AS n, sum(l_quantity) AS qty FROM lineitem GROUP BY l_returnflag"
+    ).collect())
+    inferred, inferring_jobs = launched_jobs(
+        spark, lambda: spark.read.parquet(str(engine.ddl.storage_dir) + "/flag_qty"))
+    assert [name.split(" at ")[0] for _, name in inferring_jobs] == ["parquet"]
+    assert not [name for _, name in jobs if name.startswith("parquet at")], jobs
+    view = spark.table("flag_qty")
+    assert view.schema == inferred.schema
+    assert sorted(view.collect()) == sorted(inferred.collect())

@@ -438,3 +438,24 @@ def test_to_ds_theta_double_column_hashes_ieee_bits(spark):
         "WHERE d IS NULL LIMIT 1"
     ).collect()[0]
     assert DsThetaSketch.parse(bytes(empt.sd)).estimate() == 0.0
+
+
+def test_tuple_union_keeps_the_reference_nominal_entries():
+    """Pinot builds tuple sketches at lgK 16, so a union of two disjoint
+    3,000-entry exact sketches stays exact: 6,000 entries, theta at its
+    maximum (the union used to trim to 4,096 and lower theta)."""
+    from pinot_spark.functions.sketches import tuple_merge_sums
+    from pinot_spark.operators.ds_theta import MAX_THETA, DsTupleSketch
+    from pinot_spark.operators.running_sketch import TupleAcc
+
+    a = DsTupleSketch.build_from_pairs(range(3000), [1] * 3000, k=4096).serialize()
+    b = DsTupleSketch.build_from_pairs(range(3000, 6000), [2] * 3000, k=4096).serialize()
+    running = TupleAcc()
+    running.push([a])
+    running.push([b])
+    for blob in (tuple_merge_sums([[a, b]])[0], running.blob()):
+        u = DsTupleSketch.parse(blob)
+        assert len(u.hashes) == 6000
+        assert u.theta == MAX_THETA
+        assert u.estimate() == 6000.0
+        assert u.sum_values() == 3000 * 1 + 3000 * 2

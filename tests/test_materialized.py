@@ -114,3 +114,19 @@ def test_catalog_routing(spark, mv):
         for r in li.groupBy("l_returnflag").agg(F.sum("l_quantity").alias("sq")).collect()
     }
     assert got == exp
+
+
+def test_rollup_read_skips_schema_inference(spark, tmp_path):
+    """A rollup records the schema it wrote, so building its first read
+    launches no job (an inferring read launches one) and the rows match."""
+    from conftest import launched_jobs
+
+    from pinot_spark.plans.materialized import _read_mv
+
+    li = load_tables(spark, SF_DIR)["lineitem"]
+    rollup = create_aggregate_mv(li, "li_by_status", str(tmp_path / "r"), ["l_linestatus"], ["l_quantity"])
+    df, jobs = launched_jobs(spark, lambda: _read_mv(spark, rollup))
+    inferred, inferring_jobs = launched_jobs(spark, lambda: spark.read.parquet(rollup.path))
+    assert (len(jobs), len(inferring_jobs)) == (0, 1)
+    assert df.schema == inferred.schema
+    assert sorted(df.collect()) == sorted(inferred.collect())

@@ -242,3 +242,122 @@ def test_await_sink_times_out_when_short(spark, tmp_path):
             _await_sink_rows(spark, q, sink, want=500, timeout_s=3)
     finally:
         q.stop()
+
+
+# -- upsert snapshots: cross-batch resolution at ingest ----------------------
+
+_KV = "pk BIGINT, v STRING, ts BIGINT"
+
+
+def _upsert(spark, sink, batch_id, rows, keys=("pk",), comparison=("ts",)):
+    from pinot_spark.streaming.ingest import write_upsert_batch
+
+    write_upsert_batch(spark.createDataFrame(rows, _KV), batch_id, sink, list(keys), list(comparison))
+
+
+def _visible(spark, sink):
+    return {r["pk"]: r["v"] for r in realtime_table(spark, sink, keys=["pk"], comparison=["ts"]).collect()}
+
+
+def test_upsert_later_batch_with_older_comparison_keeps_earlier_row(spark, tmp_path):
+    sink = str(tmp_path / "sink")
+    _upsert(spark, sink, 0, [(1, "newer", 20), (2, "b", 5)])
+    _upsert(spark, sink, 1, [(1, "late-but-older", 10), (3, "c", 1)])
+    assert _visible(spark, sink) == {1: "newer", 2: "b", 3: "c"}
+
+
+def test_upsert_comparison_tie_across_batches_keeps_later_batch(spark, tmp_path):
+    sink = str(tmp_path / "sink")
+    _upsert(spark, sink, 0, [(1, "first", 7)])
+    _upsert(spark, sink, 1, [(1, "second", 7)])
+    _upsert(spark, sink, 2, [(2, "other", 1)])
+    assert _visible(spark, sink) == {1: "second", 2: "other"}
+
+
+def test_upsert_replayed_batch_leaves_same_rows(spark, tmp_path):
+    sink = str(tmp_path / "sink")
+    _upsert(spark, sink, 0, [(1, "a", 1), (2, "b", 1)])
+    _upsert(spark, sink, 1, [(1, "a2", 2)])
+    before = _visible(spark, sink)
+    _upsert(spark, sink, 1, [(1, "a2", 2)])
+    assert _visible(spark, sink) == before == {1: "a2", 2: "b"}
+
+
+def test_upsert_keeps_at_most_two_snapshots(spark, tmp_path):
+    import os
+
+    sink = str(tmp_path / "sink")
+    for b in range(5):
+        _upsert(spark, sink, b, [(b, f"v{b}", b), (0, f"zero{b}", b)])
+    assert sorted(os.listdir(os.path.join(sink, "_snapshots"))) == ["v3", "v4"]
+    assert sorted(n for n in os.listdir(os.path.join(sink, "_commits")) if n.endswith(".json")) == [
+        "3.json", "4.json"]
+    assert _visible(spark, sink) == {0: "zero4", 1: "v1", 2: "v2", 3: "v3", 4: "v4"}
+
+
+def test_upsert_snapshot_without_commit_record_is_not_read(spark, tmp_path):
+    sink = str(tmp_path / "sink")
+    _upsert(spark, sink, 0, [(1, "committed", 1)])
+    # a batch whose write job ran but whose record was never published
+    spark.createDataFrame([(1, "uncommitted", 9)], _KV).write.parquet(str(tmp_path / "sink" / "_snapshots" / "v1"))
+    assert _visible(spark, sink) == {1: "committed"}
+    # the batch's replay merges onto the committed snapshot, not the stray one
+    _upsert(spark, sink, 1, [(2, "replayed", 2)])
+    assert _visible(spark, sink) == {1: "committed", 2: "replayed"}
+
+
+def test_realtime_table_rejects_keys_other_than_the_ingest(spark, tmp_path):
+    import pytest
+
+    sink = str(tmp_path / "sink")
+    _upsert(spark, sink, 0, [(1, "a", 1)])
+    with pytest.raises(ValueError, match="ingested with keys"):
+        realtime_table(spark, sink, keys=["v"], comparison=["ts"])
+    with pytest.raises(ValueError, match="ingested with keys"):
+        realtime_table(spark, sink, keys=["pk"], comparison=["v"])
+    plain = str(tmp_path / "plain")
+    spark.createDataFrame([(1, "a", 1)], _KV).write.parquet(plain)
+    with pytest.raises(ValueError, match="not a keyed sink"):
+        realtime_table(spark, plain, keys=["pk"])
+    assert realtime_table(spark, plain).count() == 1
+
+
+def test_realtime_upsert_read_scans_one_snapshot(spark, tmp_path):
+    """Plan pin: a keyed read is a scan of the committed snapshot, with no
+    Window and no Exchange below the partial aggregate, and building it
+    launches no job (no schema inference)."""
+    from conftest import launched_jobs
+
+    sink = str(tmp_path / "sink")
+    _upsert(spark, sink, 0, [(1, "a", 1), (2, "b", 1)])
+    _upsert(spark, sink, 1, [(1, "a2", 2)])
+
+    def build():
+        df = realtime_table(spark, sink, keys=["pk"], comparison=["ts"]).agg(F.count("*").alias("n"))
+        return df, df._jdf.queryExecution().executedPlan().toString()
+
+    (df, plan), jobs = launched_jobs(spark, build)
+    assert jobs == []
+    assert "Window" not in plan
+    lines = plan.splitlines()
+    partial = next(i for i, ln in enumerate(lines) if "partial_count" in ln)
+    assert not [ln for ln in lines[partial:] if "Exchange" in ln], plan
+    assert df.collect()[0]["n"] == 2
+
+
+def test_realtime_upsert_ingest_across_micro_batches(spark, tmp_path):
+    """Two stream runs on one checkpoint land two micro-batches; the
+    second batch's rows resolve against the first batch's snapshot."""
+    src, sink, ckpt = (str(tmp_path / n) for n in ("src", "sink", "ckpt"))
+    stream = None
+    for rows in (
+        [(1, "old", "2024-01-01 00:00:00"), (2, "keep", "2024-01-01 00:01:00")],
+        [(1, "new", "2024-01-01 00:05:00"), (2, "stale", "2024-01-01 00:00:30")],
+    ):
+        _write_input(spark, src, rows)
+        stream = spark.readStream.schema("pk BIGINT, v STRING, ts TIMESTAMP").parquet(src)
+        q = start_realtime_ingest(stream, sink, ckpt, keys=["pk"], comparison=["ts"], available_now=True)
+        q.awaitTermination(120)
+        assert q.exception() is None
+    out = {r["pk"]: r["v"] for r in realtime_table(spark, sink, keys=["pk"], comparison=["ts"]).collect()}
+    assert out == {1: "new", 2: "keep"}
