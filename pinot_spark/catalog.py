@@ -13,9 +13,12 @@ replace Pinot's broker/server segment pruners
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+_log = logging.getLogger("pinot_spark")
 
 TABLE_NAMES = (
     "region",
@@ -77,9 +80,10 @@ def load_tables(
     """Load every parquet table under ``sf_dir`` and register temp views.
 
     Returns {name: DataFrame}. Missing tables are skipped so the loader
-    works on partial fixture dirs; an unreadable table is likewise skipped
-    (failure isolation: a corrupt file must not break queries that never
-    touch that table).
+    works on partial fixture dirs; an unreadable table is likewise skipped,
+    with a WARNING on the ``pinot_spark`` logger that carries the error
+    (failure isolation: a
+    corrupt file must not break queries that never touch that table).
     """
     ensure_runtime_confs(spark)
     key = (id(spark), os.path.abspath(sf_dir))
@@ -93,7 +97,7 @@ def load_tables(
             try:
                 cached[name] = _normalize_nanos(spark.read.parquet(path))
             except Exception:
-                continue
+                _log.warning("load_tables: skipping unreadable table %s (%s)", name, path, exc_info=True)
         _TABLE_CACHE[key] = cached
     if register and _REGISTERED.get(id(spark)) != key:
         for name, df in cached.items():

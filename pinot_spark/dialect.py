@@ -42,6 +42,7 @@ from __future__ import annotations
 
 import contextvars
 import functools
+import logging
 import re
 import weakref
 from collections.abc import Callable
@@ -51,6 +52,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from pinot_spark.session import local_dataframe
+
+_log = logging.getLogger("pinot_spark")
 
 
 class PinotSqlError(ValueError):
@@ -1359,8 +1362,10 @@ FUNCTION_MAP: dict[str, str | Callable[[list[str]], str]] = {
     # LATERAL VIEW explode with map-side partials) cannot handle —
     # per-row array_distinct(array_compact(...)) bounds what collect_set
     # buffers to already-deduped arrays.
+    # (the fallback count is BIGINT and the rewrite's DISTINCT sum
+    # DOUBLE, so either shape returns one type)
     "distinctcountmv": lambda a: (
-        f"size(array_distinct(flatten(collect_set(array_distinct(array_compact({a[0]}))))))"
+        f"CAST(size({_MV_DISTINCT_FLAT.format(a[0])}) AS BIGINT)"
     ),
     "distinctsummv": lambda a: (
         "("
@@ -1812,6 +1817,19 @@ def rewrite_cast_types(sql: str) -> str:
     )
 
 
+def expand_function(canon: str, args: list[str]) -> str:
+    """Spark SQL text for one call of FUNCTION_MAP's ``canon`` over the
+    argument texts ``args``.  ``rewrite_functions`` expands every call
+    with it, and the Column surface builds its aggregates from it
+    (functions/aggregate.agg_call), so one name has one definition."""
+    tpl = FUNCTION_MAP[canon]
+    if callable(tpl):
+        return tpl(args)
+    if "{" in tpl:
+        return tpl.format(*args)
+    return f"{tpl}({', '.join(args)})"
+
+
 def rewrite_functions(sql: str) -> str:
     """Rewrite Pinot-registry function calls into Spark SQL equivalents.
 
@@ -1837,16 +1855,8 @@ def rewrite_functions(sql: str) -> str:
             continue
         close_idx = _find_matching(sql, open_idx)
         inner = rewrite_functions(sql[open_idx + 1 : close_idx])
-        args = _split_args(inner)
-        tpl = FUNCTION_MAP[canon]
-        if callable(tpl):
-            repl = tpl(args)
-        elif "{" in tpl:
-            repl = tpl.format(*args)
-        else:
-            repl = f"{tpl}({', '.join(args)})"
         out.append(sql[i : m.start()])
-        out.append(repl)
+        out.append(expand_function(canon, _split_args(inner)))
         i = close_idx + 1
     return "".join(out)
 
@@ -2928,7 +2938,7 @@ _MVD_RE = re.compile(
 
 _MVD_AGG = {
     "distinctcountmv": ("count(DISTINCT __mv_v)", True),
-    "distinctsummv": ("sum(DISTINCT __mv_v)", False),
+    "distinctsummv": ("CAST(sum(DISTINCT __mv_v) AS DOUBLE)", False),
     "distinctavgmv": ("avg(DISTINCT __mv_v)", False),
 }
 
@@ -5381,6 +5391,7 @@ class PinotEngine:
                                 rewrite_raw_sketch_inexpr_udaf):
                     cand = rewrite(sql)
                     if cand != sql and not self._syntax_ok(cand):
+                        _log.info("%s output does not parse; statement kept without it", rewrite.__name__)
                         continue
                     sql = cand
             if re.search(r"\bGROOVY\s*\(", sql, re.IGNORECASE):

@@ -12,10 +12,18 @@ Spark Column — JVM-side, codegen-friendly. Python UDFs exist only for
 the handful of functions with no Spark expression equivalent
 (functions/udfs.py), and those are vectorized pandas UDFs.
 
+Aggregates share the SQL dialect's table: ``agg_call`` builds every name
+that ``FUNCTION_MAP`` maps from the same template, so a Column aggregate
+returns what the SQL statement returns.  An argument is a Column, a
+column name, or a literal (a number, or a string that is not a name).
+
 Usage:
     from pinot_spark.functions import call, agg_call
     df.select(call("datetrunc", F.lit("hour"), F.col("ts")))
-    df.groupBy(...).agg(agg_call("distinctcounthll", F.col("x")))
+    df.groupBy(...).agg(
+        agg_call("distinctcounthll", F.col("x")),
+        agg_call("distinctcountrawthetasketch", "x", "nominalEntries=1024"),
+    )
 """
 
 from pinot_spark.functions.scalar import SCALAR_FUNCTIONS, call

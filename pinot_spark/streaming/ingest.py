@@ -126,8 +126,9 @@ def start_realtime_ingest(
     snapshot of the latest row per key and committed
     (``write_upsert_batch``), so ``realtime_table`` reads whole committed
     batches and never resolves a key itself.  A keyed sink belongs to
-    one checkpoint: its commit records are keyed by batch id, so a new
-    checkpoint over an old sink would take its batches as replays.
+    one checkpoint: every commit record names the streaming query id
+    Spark keeps in ``<checkpoint>/metadata``, and a batch of another
+    checkpoint raises instead of being taken as a replay.
 
     Trade-off: every keyed batch rewrites the realtime table
     (copy-on-write), so a batch costs in proportion to that table.  The
@@ -197,15 +198,32 @@ def write_upsert_batch(
     finds its files.  A failed batch replays onto the same directory from
     the same input; a replay of a committed batch writes nothing, its
     snapshot already holds the merge.  All IO goes through the Hadoop
-    FileSystem API, so HDFS and S3A sinks behave like local ones."""
+    FileSystem API, so HDFS and S3A sinks behave like local ones.
+
+    Each record names the streaming query whose checkpoint numbers the
+    batches: the id Spark keeps in ``<checkpoint>/metadata`` and sets as
+    the ``sql.streaming.queryId`` local property while it runs a batch.
+    A batch of another query raises before the replay check: its batch
+    ids restart at 0, and taken as replays its rows would be lost.  A
+    record without a query id (written before records carried one, or
+    by a direct call outside a stream) binds nothing: the next writer
+    adopts the sink."""
     spark = batch.sparkSession
+    query_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
     committed = _committed_ids(spark, path)
+    newest = _read_snapshot(spark, path, committed[-1]) if committed else None
+    owner = newest[0].get("query_id") if newest else None
+    if owner is not None and owner != query_id:
+        raise ValueError(
+            f"{path} is the keyed sink of streaming query {owner}, not {query_id}: "
+            "each keyed sink belongs to one checkpoint"
+        )
     if batch_id in committed:
         return
     older = [i for i in committed if i < batch_id]
     merged, ranked = batch, comparison
     if older:
-        _, previous = _read_snapshot(spark, path, older[-1])
+        _, previous = newest if older[-1] == committed[-1] else _read_snapshot(spark, path, older[-1])
         merged = previous.withColumn(_BATCH_RANK, F.lit(0)).unionByName(
             batch.withColumn(_BATCH_RANK, F.lit(1))
         )
@@ -218,6 +236,7 @@ def write_upsert_batch(
         "schema": parquet_schema(out.schema).jsonValue(),
         "keys": list(keys),
         "comparison": list(comparison),
+        "query_id": query_id,
     }
     fsutil.publish_text(spark, _record_path(path, batch_id), json.dumps(record))
     for stale in older[:-1]:

@@ -323,6 +323,24 @@ def test_mv_distinct_scale_rewrite(engine, spark):
     assert "collect_list" not in gplan and "collect_set" not in gplan
 
 
+def test_mv_distinct_aggregates_one_type_in_every_shape(engine, spark):
+    """DISTINCTCOUNTMV is BIGINT and DISTINCTSUMMV DOUBLE whether the
+    statement takes the structural explode rewrite or, behind a table
+    alias it cannot rewrite, the FUNCTION_MAP fallback."""
+    spark.createDataFrame(
+        [("g1", [1, 2, None, 2]), ("g1", [2, 3]), ("g2", [5]), ("g2", None)],
+        "g string, vals array<bigint>",
+    ).createOrReplaceTempView("mvd_shape_t")
+    select = "SELECT g, DISTINCTCOUNTMV(vals) AS dc, DISTINCTSUMMV(vals) AS ds"
+    rewritten = engine.sql(f"{select} FROM mvd_shape_t GROUP BY g ORDER BY g")
+    fallback = engine.sql(f"{select} FROM mvd_shape_t m GROUP BY g ORDER BY g")
+    assert "__mv_v" in engine.translate(f"{select} FROM mvd_shape_t GROUP BY g")[0]
+    assert "__mv_v" not in engine.translate(f"{select} FROM mvd_shape_t m GROUP BY g")[0]
+    for df in (rewritten, fallback):
+        assert [f.dataType.simpleString() for f in df.schema.fields] == ["string", "bigint", "double"]
+    assert rewritten.collect() == fallback.collect() == [("g1", 3, 6.0), ("g2", 1, 5.0)]
+
+
 def test_gapfill_aggregation_over(engine, spark):
     """Pinot's two-stage aggregation-over-gapfill: the outer statement
     aggregates the gapfilled derived table (GapfillProcessor post-agg

@@ -473,6 +473,146 @@ def test_geo_column_and_sql_surfaces_agree(spark):
     assert by_column[1].asDict() == {k: (2 if k == "id" else None) for k in by_column[1].asDict()}
 
 
+# One case list per aggregate name that both surfaces serve.  An argument
+# is a column of ``agg_parity_t`` or a literal (a ``str`` in quotes is a
+# string literal).  ``mv`` is a bigint MV array with NULL elements and
+# NULL arrays, ``dmv`` a double one; ``tup`` holds integer-sum tuple
+# sketches.
+_D, _B, _MV, _DMV = ["d"], ["b"], ["mv"], ["dmv"]
+_AGG_PARITY_CASES = {
+    "sumint": [_B], "sumlong": [_B], "minlong": [_B, _D], "maxlong": [_B, _D],
+    "minstring": [["s"], _B], "maxstring": [["s"]], "sumprecision": [_D, _B],
+    "minmaxrange": [_D, _B], "anyvalue": [["g"]],
+    "firstwithtime": [["s", "t", "'STRING'"]], "lastwithtime": [["d", "t", "'DOUBLE'"]],
+    "exprmin": [["s", "t"]], "exprmax": [["b", "t"]],
+    "distinctcount": [_B, ["s"]], "distinctcountbitmap": [_B],
+    "distinctcountoffheap": [_B], "segmentpartitioneddistinctcount": [_B],
+    "distinctsum": [_B, _D], "distinctavg": [_D],
+    "distinctcounthll": [_B], "distinctcounthllplus": [_B], "distinctcountull": [_B],
+    "distinctcountsmarthll": [_B], "distinctcountrawhll": [_B, ["s"]],
+    "distinctcountrawhllplus": [_B, ["s"]], "distinctcountcpcsketch": [_B, ["s"]],
+    "distinctcounttuplesketch": [["tup"]],
+    "distinctcountrawthetasketch": [_B, ["b", "'nominalEntries=100'"]],
+    "distinctcountthetasketch": [_B],
+    "percentile": [["d", 50]], "percentileest": [["d", 90]],
+    "percentiletdigest": [["d", 50]], "percentilekll": [["b", 25]],
+    "percentilesmarttdigest": [["d", 50]], "percentilerawtdigest": [["d", 50]],
+    "percentilerawkll": [["b", 50]], "percentilerawest": [["d", 50]],
+    "fourthmoment": [_D], "arrayagg": [["d", "'DOUBLE'"]], "idset": [_B],
+    "sumarraylong": [_MV], "sumarraydouble": [_DMV],
+    "frequentstringssketch": [["s"]], "frequentlongssketch": [_B],
+    "countmv": [_MV], "summv": [_MV, _DMV], "minmv": [_MV, _DMV], "maxmv": [_MV, _DMV],
+    "avgmv": [_MV, _DMV], "minmaxrangemv": [_MV, _DMV],
+    "distinctcountmv": [_MV, _DMV], "distinctcounthllmv": [_MV],
+    "distinctsummv": [_MV, _DMV],
+}
+
+
+def test_aggregate_column_and_sql_surfaces_agree(spark):
+    """Every aggregate name that AGG_FUNCTIONS and FUNCTION_MAP both
+    serve gives, grouped over two groups, the same values (RAW sketches
+    byte for byte) and the same Spark type as the SQL statement.
+    Frequent-items sketches are compared parsed: their bytes may list
+    items in another order.  ``stunion`` is left out: its Column form
+    returns WKT text and its SQL form geometry bytes (see its
+    docstring)."""
+    from pinot_spark.dialect import FUNCTION_MAP, PinotEngine
+    from pinot_spark.operators.ds_freq import DsFrequentSketch
+
+    assert set(AGG_FUNCTIONS) & set(FUNCTION_MAP) - {"stunion"} == set(_AGG_PARITY_CASES)
+
+    rows = [
+        (
+            i,
+            "ab"[i % 2],
+            None if i % 7 == 3 else i * 1.5,
+            None if i % 5 == 4 else i * 3 % 17,
+            None if i % 9 == 2 else f"s{i % 6}",
+            None if i % 11 == 5 else 1000 + 37 * i % 40,
+            None if i % 8 == 6 else [i % 4, None, i % 3] if i % 3 else [],
+            None if i % 10 == 1 else [i * 0.5, (i % 5) * 1.0],
+        )
+        for i in range(40)
+    ]
+    df = (
+        spark.createDataFrame(
+            rows,
+            "i int, g string, d double, b bigint, s string, t bigint, "
+            "mv array<bigint>, dmv array<double>",
+        )
+        .withColumn("tup", call("tointegersumtuplesketch", F.col("s"), F.col("i")))
+        .coalesce(1)
+        .localCheckpoint()
+    )
+    df.createOrReplaceTempView("agg_parity_t")
+    engine = PinotEngine(spark, null_default_tables=frozenset())
+
+    def col_arg(a):
+        if isinstance(a, str) and a.startswith("'"):
+            return a.strip("'")
+        return a
+
+    def value(v, name):
+        if name.startswith("frequent"):
+            return DsFrequentSketch.parse(bytes(v), strings=name == "frequentstringssketch")
+        return bytes(v) if isinstance(v, (bytes, bytearray)) else v
+
+    def grouped(frame, name):
+        rows = sorted(frame.collect(), key=lambda r: r.g)
+        return [(r.g, value(r.v, name)) for r in rows], frame.schema["v"].dataType
+
+    diffs = []
+    for name, cases in sorted(_AGG_PARITY_CASES.items()):
+        for args in cases:
+            sql = engine.sql(
+                f"SELECT g, {name.upper()}({', '.join(map(str, args))}) AS v "
+                "FROM agg_parity_t GROUP BY g"
+            )
+            col = df.groupBy("g").agg(agg_call(name, *map(col_arg, args)).alias("v"))
+            got, want = grouped(col, name), grouped(sql, name)
+            if got != want:
+                diffs.append((name, args, got, want))
+    assert diffs == []
+
+
+def test_rollup_string_argument_names_any_column(spark):
+    """A str argument names a column whatever its spelling; only a
+    ``key=value`` params string is a literal."""
+    from pinot_spark.sources import IngestionPipeline
+
+    df = spark.createDataFrame(
+        [("a", 1, 2, 3), ("a", 2, 2, 3), ("b", 3, 4, 4)], ["k", "user-id", "a b", "1col"]
+    )
+    rollup = IngestionPipeline(rollup=(["k"], {
+        "users": ("distinctcount", "user-id"),
+        "spaced": ("distinctcount", "a b"),
+        "digit": ("distinctcountthetasketch", "1col"),
+    }))
+    rows = {r["k"]: (r["users"], r["spaced"], r["digit"]) for r in rollup.apply(df).collect()}
+    assert rows == {"a": (2, 1, 1), "b": (1, 1, 1)}
+    raw = df.agg(agg_call("distinctcountrawthetasketch", "user-id", "nominalEntries=16").alias("r"))
+    assert raw.schema["r"].dataType.simpleString() == "binary"
+
+
+def test_sumarray_rejects_a_width(spark):
+    """SUMARRAY takes the array alone, as in Pinot: a width argument
+    would be ignored, so it fails instead."""
+    with pytest.raises(TypeError, match="sum_array_grouped"):
+        agg_call("sumArrayDouble", "arr", 4)
+
+
+def test_column_stunion_rejects_non_points(spark):
+    """Column STUNION folds POINT WKT only: a polygon row fails the query
+    instead of vanishing from the MULTIPOINT."""
+    df = spark.createDataFrame(
+        [("POLYGON ((0 0, 0 1, 1 1, 1 0, 0 0))",), ("POINT (1 2)",), (None,)], "w string"
+    )
+    with pytest.raises(Exception, match="operators/geo.st_union_geoms"):
+        df.agg(agg_call("stUnion", "w")).collect()
+    points = df.filter(F.col("w").startswith("POINT") | F.col("w").isNull())
+    assert points.agg(agg_call("stUnion", "w").alias("u")).collect()[0].u == "MULTIPOINT ((1 2))"
+
+
 def test_datetime_convert_column(one):
     # 2024-01-02T03:00:00Z epoch millis → epoch days and back to a string
     ms = 1704164400000

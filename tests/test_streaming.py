@@ -361,3 +361,38 @@ def test_realtime_upsert_ingest_across_micro_batches(spark, tmp_path):
         assert q.exception() is None
     out = {r["pk"]: r["v"] for r in realtime_table(spark, sink, keys=["pk"], comparison=["ts"]).collect()}
     assert out == {1: "new", 2: "keep"}
+
+
+def test_keyed_sink_belongs_to_one_checkpoint(spark, tmp_path):
+    """A stream under a second checkpoint fails on a keyed sink instead
+    of taking its batches as replays; the owning checkpoint still
+    replays a batch cleanly and goes on ingesting."""
+    import os
+
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    src, sink, ckpt_a, ckpt_b = (str(tmp_path / n) for n in ("src", "sink", "ckpt_a", "ckpt_b"))
+
+    def run(ckpt, rows=()):
+        if rows:
+            _write_input(spark, src, rows)
+        stream = spark.readStream.schema("pk BIGINT, v STRING, ts TIMESTAMP").parquet(src)
+        q = start_realtime_ingest(stream, sink, ckpt, keys=["pk"], comparison=["ts"], available_now=True)
+        q.awaitTermination(120)
+        return q
+
+    run(ckpt_a, [(1, "a0", "2024-01-01 00:00:00"), (2, "b0", "2024-01-01 00:00:00")])
+    run(ckpt_a, [(1, "a1", "2024-01-01 00:01:00")])
+    want = {1: "a1", 2: "b0"}
+    assert _visible(spark, sink) == want
+    with pytest.raises(StreamingQueryException, match="belongs to one checkpoint"):
+        run(ckpt_b)
+    assert _visible(spark, sink) == want
+    # a lost commit-log entry makes the owner replay its last batch
+    for name in ("1", ".1.crc"):
+        os.remove(os.path.join(ckpt_a, "commits", name))
+    assert run(ckpt_a).exception() is None
+    assert _visible(spark, sink) == want
+    run(ckpt_a, [(2, "b2", "2024-01-01 00:02:00")])
+    assert _visible(spark, sink) == {1: "a1", 2: "b2"}
