@@ -6,9 +6,13 @@ dataset registered as a (temp) view; OFFLINE/REALTIME hybrid pairs are a
 UNION-by-time-boundary view (see operators.hybrid).
 
 Scale notes: at 100 TB each table is a partitioned parquet/Delta dataset;
-``spark.read.parquet`` plus partition pruning and row-group min/max stats
-replace Pinot's broker/server segment pruners
+partition pruning and row-group min/max stats replace Pinot's
+broker/server segment pruners
 (reference: pinot-broker/.../routing/segmentpruner/, SURVEY.md §3.1 step 4).
+A table's schema comes from one parquet footer read on the driver
+(``sources.fsutil.read_parquet``: the file Spark's schema inference would
+read), the way a Pinot server opens a segment from its metadata: loading
+the catalog launches no Spark job.
 """
 
 from __future__ import annotations
@@ -17,6 +21,9 @@ import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from pinot_spark.session import SessionCache
+from pinot_spark.sources.fsutil import read_parquet
 
 _log = logging.getLogger("pinot_spark")
 
@@ -62,7 +69,8 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
     which is not worth weakening the driver-session guarantee for.
 
     Static confs cannot reach a foreign session: ``spark.conf.set`` on
-    one raises, and the loop below swallows that.  So a caller's
+    one raises, and the loop below logs that at DEBUG on the
+    ``pinot_spark`` logger and goes on.  So a caller's
     vanilla session keeps Spark's 100-entry generated-class cache;
     ``spark.sql.codegen.cache.maxEntries`` stays in
     ``session.DEFAULT_CONFS`` and out of ``_RUNTIME_CONFS``."""
@@ -70,8 +78,8 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
         try:
             if spark.conf.get(k, None) != v:
                 spark.conf.set(k, v)
-        except Exception:  # a static conf on some Spark build: keep going
-            pass
+        except Exception as e:  # a static conf on some Spark build: keep going
+            _log.debug("ensure_runtime_confs: cannot set %s=%s (%s)", k, v, e)
 
 
 def load_tables(
@@ -86,8 +94,9 @@ def load_tables(
     corrupt file must not break queries that never touch that table).
     """
     ensure_runtime_confs(spark)
-    key = (id(spark), os.path.abspath(sf_dir))
-    cached = _TABLE_CACHE.get(key)
+    key = os.path.abspath(sf_dir)
+    tables = _TABLE_CACHE.of(spark)
+    cached = tables.get(key)
     if cached is None:
         cached = {}
         for name in TABLE_NAMES:
@@ -95,23 +104,24 @@ def load_tables(
             if not os.path.exists(path):
                 continue
             try:
-                cached[name] = _normalize_nanos(spark.read.parquet(path))
+                cached[name] = _normalize_nanos(read_parquet(spark, path))
             except Exception:
                 _log.warning("load_tables: skipping unreadable table %s (%s)", name, path, exc_info=True)
-        _TABLE_CACHE[key] = cached
-    if register and _REGISTERED.get(id(spark)) != key:
+        tables[key] = cached
+    registered = _REGISTERED.of(spark)
+    if register and registered.get("dataset") != key:
         for name, df in cached.items():
             df.createOrReplaceTempView(name)
-        _REGISTERED[id(spark)] = key
+        registered["dataset"] = key
     return dict(cached)
 
 
 # One catalog resolution per (session, dataset): a real deployment
-# registers tables once in a metastore; re-listing parquet footers per
+# registers tables once in a metastore; re-reading parquet footers per
 # query would repeat that work on every request.
-_TABLE_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
-# which dataset's views are currently registered per session
-_REGISTERED: dict[int, tuple[int, str]] = {}
+_TABLE_CACHE = SessionCache("tables")
+# which dataset's views are currently registered in each session
+_REGISTERED = SessionCache("registered")
 
 
 _NANO_TS_COLUMNS = {"ts", "event_ts", "updated_at"}
@@ -135,4 +145,4 @@ def _normalize_nanos(df: DataFrame) -> DataFrame:
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load a single table by name."""
     ensure_runtime_confs(spark)
-    return _normalize_nanos(spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")))
+    return _normalize_nanos(read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet")))

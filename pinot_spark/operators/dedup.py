@@ -733,7 +733,7 @@ def dedup_against_lsh_index(
     size — r14 verdict weak); nothing ever rescans corpus text."""
     import json
 
-    from pinot_spark.sources.fsutil import read_text, sidecar_path
+    from pinot_spark.sources.fsutil import read_parquet, read_text, sidecar_path
 
     p = json.loads(
         read_text(spark, sidecar_path(index_path, "_lsh_params.json"))
@@ -741,7 +741,7 @@ def dedup_against_lsh_index(
     new_bands = _lsh_bands(
         new_docs, text_col, id_col, p["num_hashes"], p["bands"], p["shingle_n"]
     )
-    index = spark.read.parquet(index_path)
+    index = read_parquet(spark, index_path)
     flagged = (
         new_bands.alias("n")
         .join(

@@ -381,11 +381,11 @@ def topk_ivfpq_indexed(
     """Query a build_ivfpq_index output: the bucket filter inside
     ivfpq_score lands on the PARTITION column, so non-probed inverted
     lists never reach the scan."""
-    from pinot_spark.sources.fsutil import exists, read_text, sidecar_path
+    from pinot_spark.sources.fsutil import exists, read_parquet, read_text, sidecar_path
 
     side = sidecar_path(index_path, "_ivfpq_model.json")
     if not exists(spark, side):  # pre-r15 indexes used the bare name
         side = sidecar_path(index_path, "ivfpq_model.json")
     model = IvfPqModel.from_json(read_text(spark, side))
-    df = spark.read.parquet(index_path)
+    df = read_parquet(spark, index_path)
     return topk_ivfpq(df, model, query_vec, id_col, k=k, nprobe=nprobe, **kw)

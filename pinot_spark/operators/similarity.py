@@ -223,6 +223,8 @@ def topk_cosine_ivf_indexed(
     import json
     import os
 
+    from pinot_spark.sources.fsutil import read_parquet
+
     with open(os.path.join(index_path, "centroids.json")) as f:
         centroids = json.load(f)
     order = sorted(
@@ -230,7 +232,7 @@ def topk_cosine_ivf_indexed(
         key=lambda i: sum((a - b) ** 2 for a, b in zip(centroids[i], query_vec)),
     )
     probe = order[:nprobe]
-    df = spark.read.parquet(index_path).filter(F.col("bucket").isin(probe))
+    df = read_parquet(spark, index_path).filter(F.col("bucket").isin(probe))
     return topk_cosine(df, vec_col, id_col, query_vec, k)
 
 

@@ -815,7 +815,7 @@ def save_classifier_weights(weights_df: DataFrame, path: str) -> None:
 
 
 def load_classifier_weights(spark, path: str) -> DataFrame:
-    from pinot_spark.sources.fsutil import exists, read_text, sidecar_path
+    from pinot_spark.sources.fsutil import exists, read_parquet, read_text, sidecar_path
     import json
 
     side = sidecar_path(path, "_classifier_meta.json")
@@ -823,4 +823,4 @@ def load_classifier_weights(spark, path: str) -> DataFrame:
         meta = json.loads(read_text(spark, side))
         if meta.get("format") != "hashed-linear":
             raise ValueError(f"unknown classifier format {meta.get('format')!r}")
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)

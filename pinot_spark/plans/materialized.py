@@ -24,7 +24,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from pinot_spark.session import parquet_schema
+from pinot_spark.session import SessionCache, parquet_schema
+from pinot_spark.sources.fsutil import read_parquet
 
 # measure → (partial columns stored, final re-aggregation)
 _SUPPORTED = ("count", "sum", "min", "max", "avg")
@@ -34,16 +35,18 @@ _SUPPORTED = ("count", "sum", "min", "max", "avg")
 # metastore once, not by re-listing parquet footers on every routed
 # query (round-17 optimization; guide §6 file listing).  Plan-level
 # cache only: every query still computes from the parquet files.
-_MV_DF_CACHE: dict[tuple[int, str], DataFrame] = {}
+_MV_DF_CACHE = SessionCache("mv_frames")
 
 
 def _read_mv(spark: SparkSession, mv: "AggregateMV") -> DataFrame:
-    key = (id(spark), mv.path)
-    df = _MV_DF_CACHE.get(key)
+    frames = _MV_DF_CACHE.of(spark)
+    df = frames.get(mv.path)
     if df is None:
-        reader = spark.read if mv.schema is None else spark.read.schema(mv.schema)
-        df = reader.parquet(mv.path)
-        _MV_DF_CACHE[key] = df
+        if mv.schema is None:
+            df = read_parquet(spark, mv.path)
+        else:
+            df = spark.read.schema(mv.schema).parquet(mv.path)
+        frames[mv.path] = df
     return df
 
 
@@ -52,7 +55,8 @@ class AggregateMV:
     """One materialized rollup: ``dims`` group-by columns and per-measure
     partial aggregates over ``measure_cols``.  ``schema`` is the rollup
     table's as read back (``session.parquet_schema``), recorded at build
-    so a read skips parquet schema inference; None infers it."""
+    so a read needs no parquet footer; None reads the schema from one
+    (``sources.fsutil.read_parquet``)."""
 
     name: str
     path: str

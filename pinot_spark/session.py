@@ -39,6 +39,7 @@ Scale notes (100 TB design intent):
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
@@ -129,6 +130,31 @@ def parquet_schema(schema: StructType) -> StructType:
         return dt
 
     return nullable(schema)
+
+
+class SessionCache:
+    """One memo per SparkSession: ``of(spark)`` is that session's dict.
+
+    The dicts hang off the session object itself (one mapping, attribute
+    ``_pinot_spark``, from cache name to dict), not off ``id(spark)``:
+    Python reuses an id once a stopped session is collected, so an
+    id-keyed table could hand a dead session's frames to a new one.  A
+    session also drops its entries with itself, although its cached
+    frames reference it; a ``WeakKeyDictionary`` would keep such a
+    session alive through its own values.  ``clear()`` empties this
+    cache in every live session."""
+
+    def __init__(self, name: str) -> None:
+        self.name = name
+        self._sessions: weakref.WeakSet = weakref.WeakSet()
+
+    def of(self, spark: SparkSession) -> dict:
+        self._sessions.add(spark)
+        return spark.__dict__.setdefault("_pinot_spark", {}).setdefault(self.name, {})
+
+    def clear(self) -> None:
+        for spark in list(self._sessions):
+            spark.__dict__.get("_pinot_spark", {}).pop(self.name, None)
 
 
 def local_dataframe(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:

@@ -8,11 +8,19 @@ write silently breaks the persisted-index story the moment the index
 path is a cluster URI (round-14 verdict item 4).  These helpers route
 through ``org.apache.hadoop.fs.FileSystem`` resolved FROM the path, so
 the same code works for local test dirs and object-store prefixes.
+
+``read_parquet`` opens a parquet path the way ``spark.read.parquet``
+does, but reads on the driver the one footer Spark's schema inference
+would read in a job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+import json
+from urllib.parse import unquote
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _fs(spark: SparkSession, path: str):
@@ -68,15 +76,90 @@ def publish_text(spark: SparkSession, path: str, text: str) -> None:
         raise OSError(f"could not publish {path}: rename refused")
 
 
-def list_names(spark: SparkSession, dir_path: str) -> list[str]:
-    """Names of a directory's entries, or [] when it does not exist."""
+def list_modified(spark: SparkSession, dir_path: str) -> dict[str, int]:
+    """A directory's entries by name, each with its modification time
+    (ms since the epoch); {} when the directory does not exist."""
     fs, hpath = _fs(spark, dir_path)
     if not fs.exists(hpath):
-        return []
-    return [st.getPath().getName() for st in fs.listStatus(hpath)]
+        return {}
+    return {st.getPath().getName(): st.getModificationTime() for st in fs.listStatus(hpath)}
 
 
 def delete(spark: SparkSession, path: str) -> None:
     """Delete a file or a whole directory; a missing path is no error."""
     fs, hpath = _fs(spark, path)
     fs.delete(hpath, True)
+
+
+# Spark's inference reads these summary files before any data file.
+_SUMMARY_RANK = {"_common_metadata": 0, "_metadata": 1}
+
+
+def read_parquet(spark: SparkSession, *paths: str, base_path: str | None = None) -> DataFrame:
+    """``spark.read.parquet(*paths)``, with option ``basePath`` when
+    ``base_path`` is given, without the Spark job that infers its schema.
+
+    A Pinot server opens a segment from its metadata and never scans
+    data to learn a schema.  Spark's non-merging inference
+    (``ParquetUtils.inferSchema``) launches a job whose one task reads one
+    footer: of the leaf files sorted by path, ``_common_metadata``, else
+    ``_metadata``, else the first data file.  This reads that footer here
+    on the driver, converts it with the function that task runs
+    (``ParquetFileFormat.readSchemaFromFooter`` under the session's
+    ``SQLConf``) and opens the paths with the result, so the frame's
+    schema, partition columns included, is the one inference gives.
+
+    With ``spark.sql.parquet.mergeSchema`` on Spark merges every footer,
+    and with no file to read it raises its own error: both cases take
+    ``spark.read.parquet`` as is.  A directory whose files also store a
+    column of its partition directories is left to Spark too, since a
+    given schema places such a column after the data columns where
+    inference keeps its stored position."""
+
+    def reader():  # a fresh one each time: .schema() changes a reader in place
+        return spark.read if base_path is None else spark.read.option("basePath", base_path)
+
+    state = spark._jsparkSession.sessionState()
+    if state.conf().isParquetSchemaMergingEnabled():
+        return reader().parquet(*paths)
+    jvm = spark._jvm
+    conf = state.newHadoopConf()
+    path, partitions = _footer_path(spark, paths, reader, conf)
+    if path is None:
+        return reader().parquet(*paths)
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    footer = pq.ParquetFooterReader.readFooter(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    schema = pq.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(path, footer),
+        pq.ParquetToSparkSchemaConverter(state.conf()),
+    )
+    schema = StructType.fromJson(json.loads(schema.json()))
+    if partitions & {f.name.lower() for f in schema.fields}:
+        return reader().parquet(*paths)
+    return reader().schema(schema).parquet(*paths)
+
+
+def _footer_path(spark: SparkSession, paths: tuple[str, ...], reader, conf):
+    """The Hadoop path of the file whose footer Spark's inference reads
+    (None when there is none) and the lower-cased names of the partition
+    columns Spark finds.  A lone file needs no listing; anything else is
+    listed by Spark's own file index, through a frame opened with a
+    throwaway schema."""
+    jvm = spark._jvm
+    if len(paths) == 1:
+        hpath = jvm.org.apache.hadoop.fs.Path(paths[0])
+        if hpath.getFileSystem(conf).isFile(hpath):
+            hidden = jvm.org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(hpath.getName())
+            return (None if hidden else hpath), set()
+    listing = reader().schema("`__pinot_spark_listing` int").parquet(*paths)
+
+    def rank(uri: str) -> tuple[int, str]:
+        path = unquote(uri)  # the Path string Spark sorts by
+        return _SUMMARY_RANK.get(path.rsplit("/", 1)[-1], 2), path
+
+    picked = min(listing.inputFiles(), key=rank, default=None)
+    partitions = {c.lower() for c in listing.columns[1:]}
+    return (None if picked is None else jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(picked))), partitions

@@ -20,6 +20,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from pinot_spark.sources.fsutil import read_parquet
+
 
 def write_segments(
     df: DataFrame,
@@ -60,8 +62,9 @@ def write_segments(
 
 
 def read_segments(spark, path: str) -> DataFrame:
-    """Read a segment dir back (partition columns restored)."""
-    return spark.read.parquet(path)
+    """Read a segment dir back (partition columns restored), its schema
+    from one footer read on the driver (``fsutil.read_parquet``)."""
+    return read_parquet(spark, path)
 
 
 def compact_segments(
@@ -87,7 +90,7 @@ def compact_segments(
     files; periodic compaction keeps scan task counts and footer
     overheads bounded. Returns the number of output rows.
     """
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     if rollup:
         bucket = (
             F.date_trunc(coarser_bucket, F.col(time_col)).cast("date").alias(time_col)
@@ -108,8 +111,7 @@ def compact_segments(
         .partitionBy(time_col)
         .parquet(out_path)
     )
-    out = spark.read.parquet(out_path)
-    return out.count()
+    return read_parquet(spark, out_path).count()
 
 
 def write_bucketed_table(
@@ -172,7 +174,7 @@ def sample_segments(spark, path: str, num_segments: int) -> DataFrame:
     if not files:
         raise ValueError(f"no segment files under {path}")
     picked = files[: min(num_segments, len(files))]
-    return spark.read.option("basePath", path).parquet(*picked)
+    return read_parquet(spark, *picked, base_path=path)
 
 
 def segment_compression_stats(path: str) -> dict:

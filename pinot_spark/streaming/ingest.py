@@ -32,7 +32,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from pinot_spark.operators.upsert import upsert_view
-from pinot_spark.session import parquet_schema
+from pinot_spark.session import SessionCache, parquet_schema
 from pinot_spark.sources import fsutil
 
 
@@ -168,9 +168,12 @@ def _snapshot_name(batch_id: int) -> str:
     return f"_snapshots/v{batch_id}"
 
 
-def _committed_ids(spark: SparkSession, path: str) -> list[int]:
-    names = fsutil.list_names(spark, fsutil.sidecar_path(path, _COMMITS))
-    return sorted(int(m.group(1)) for m in map(_RECORD_RE.match, names) if m)
+def _commits(spark: SparkSession, path: str) -> list[tuple[int, int]]:
+    """(batch id, record modification time) of each committed batch,
+    oldest first.  The pair identifies a commit: a sink deleted and
+    re-created at the same path numbers its batches from 0 again."""
+    records = fsutil.list_modified(spark, fsutil.sidecar_path(path, _COMMITS))
+    return sorted((int(m.group(1)), t) for n, t in records.items() if (m := _RECORD_RE.match(n)))
 
 
 def _read_snapshot(spark: SparkSession, path: str, batch_id: int) -> tuple[dict, DataFrame]:
@@ -178,6 +181,22 @@ def _read_snapshot(spark: SparkSession, path: str, batch_id: int) -> tuple[dict,
     schema = StructType.fromJson(record["schema"])
     snapshot = fsutil.sidecar_path(path, record["snapshot"])
     return record, spark.read.schema(schema).parquet(snapshot)
+
+
+# per session: sink path -> (commit, record, frame) of its newest commit read
+_SNAPSHOTS = SessionCache("realtime_snapshots")
+
+
+def _newest_snapshot(spark: SparkSession, path: str, commit: tuple[int, int]) -> tuple[dict, DataFrame]:
+    """``_read_snapshot`` of ``commit``, the sink's newest, reused while no
+    newer commit exists: a committed snapshot stays whole until two newer
+    ones do, and the caller's listing of ``_commits`` decides which is
+    newest."""
+    snapshots = _SNAPSHOTS.of(spark)
+    hit = snapshots.get(path)
+    if hit is None or hit[0] != commit:
+        hit = snapshots[path] = (commit, *_read_snapshot(spark, path, commit[0]))
+    return hit[1], hit[2]
 
 
 def write_upsert_batch(
@@ -210,8 +229,9 @@ def write_upsert_batch(
     adopts the sink."""
     spark = batch.sparkSession
     query_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
-    committed = _committed_ids(spark, path)
-    newest = _read_snapshot(spark, path, committed[-1]) if committed else None
+    commits = _commits(spark, path)
+    committed = [i for i, _ in commits]
+    newest = _newest_snapshot(spark, path, commits[-1]) if commits else None
     owner = newest[0].get("query_id") if newest else None
     if owner is not None and owner != query_id:
         raise ValueError(
@@ -247,18 +267,20 @@ def write_upsert_batch(
 def realtime_table(spark: SparkSession, path: str, keys=None, comparison=None) -> DataFrame:
     """Queryable view over the realtime sink.  A keyed sink reads its
     newest committed snapshot with the recorded schema: no window,
-    shuffle or schema-inference job.  ``keys``/``comparison`` (default
+    shuffle or schema-inference job.  Each call lists the commit records;
+    the frame of the newest commit is opened once per session and reused
+    until a newer commit appears.  ``keys``/``comparison`` (default
     ``keys``), when given, must match the ingest's; an unkeyed sink is
     read as appended and takes no keys."""
-    committed = _committed_ids(spark, path)
-    if not committed:
+    commits = _commits(spark, path)
+    if not commits:
         if keys:
             raise ValueError(
                 f"{path} holds no committed upsert snapshot: it is not a keyed sink, "
                 "or no batch has committed yet"
             )
-        return spark.read.parquet(path)
-    record, df = _read_snapshot(spark, path, committed[-1])
+        return fsutil.read_parquet(spark, path)
+    record, df = _newest_snapshot(spark, path, commits[-1])
     if keys and (list(keys), list(comparison or keys)) != (record["keys"], record["comparison"]):
         raise ValueError(
             f"{path} was ingested with keys={record['keys']} comparison={record['comparison']}, "

@@ -28,6 +28,19 @@ def spark():
     yield spark
 
 
+@pytest.fixture()
+def new_session(spark):
+    """Factory of further sessions on ``spark``'s context.  Building a
+    SparkSession points pyspark's ``RDD.toDF`` at it (and so keeps it
+    alive); the fixture points it back afterwards, so a later test's
+    ``rdd.toDF()`` still lands in ``spark``."""
+    from pyspark import RDD
+
+    to_df = RDD.toDF
+    yield spark.newSession
+    RDD.toDF = to_df
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

@@ -28,3 +28,24 @@ def test_unparsable_raw_sketch_restructure_is_logged(spark, caplog, monkeypatch)
     messages = [r.getMessage() for r in caplog.records if r.name == "pinot_spark"]
     assert any("rewrite_raw_sketch_two_phase" in m for m in messages), messages
     assert all(r.levelno == logging.INFO for r in caplog.records if r.name == "pinot_spark")
+
+
+def test_runtime_conf_that_cannot_be_set_is_logged(caplog):
+    class _Conf:
+        def get(self, key, default=None):
+            return default
+
+        def set(self, key, value):
+            raise RuntimeError(f"CANNOT_MODIFY_CONFIG {key}")
+
+    class _Session:
+        conf = _Conf()
+
+    from pinot_spark.catalog import _RUNTIME_CONFS, ensure_runtime_confs
+
+    caplog.set_level(logging.DEBUG, logger="pinot_spark")
+    ensure_runtime_confs(_Session())
+    records = [r for r in caplog.records if r.name == "pinot_spark"]
+    assert [r.levelno for r in records] == [logging.DEBUG] * len(_RUNTIME_CONFS)
+    for key, rec in zip(_RUNTIME_CONFS, records):
+        assert key in rec.getMessage() and f"CANNOT_MODIFY_CONFIG {key}" in rec.getMessage()

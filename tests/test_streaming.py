@@ -396,3 +396,25 @@ def test_keyed_sink_belongs_to_one_checkpoint(spark, tmp_path):
     assert _visible(spark, sink) == want
     run(ckpt_a, [(2, "b2", "2024-01-01 00:02:00")])
     assert _visible(spark, sink) == {1: "a1", 2: "b2"}
+
+
+def test_realtime_table_reuses_the_newest_commit_frame(spark, tmp_path):
+    """Reads between commits share one frame; a sink deleted and
+    re-ingested at the same path (its batches numbered from 0 again), or
+    a new commit, is read afresh."""
+    import shutil
+
+    sink = str(tmp_path / "sink")
+    read = lambda: realtime_table(spark, sink, keys=["pk"], comparison=["ts"])  # noqa: E731
+    _upsert(spark, sink, 0, [(1, "a", 1), (2, "b", 1)])
+    first = read()
+    assert read() is first
+    assert _visible(spark, sink) == {1: "a", 2: "b"}
+    shutil.rmtree(sink)
+    _upsert(spark, sink, 0, [(9, "fresh", 1)])
+    again = read()
+    assert again is not first
+    assert _visible(spark, sink) == {9: "fresh"}
+    _upsert(spark, sink, 1, [(9, "fresher", 2), (3, "c", 1)])
+    assert read() is not again
+    assert _visible(spark, sink) == {9: "fresher", 3: "c"}
